@@ -139,7 +139,7 @@ def ingest_batch_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``test.properties:25`` prod default): rows are grouped per key
     into consecutive batches of 20 in event-time order and each batch
     aggregated. The true streaming count-window lives in
-    ``streaming/count_window.py``; this oracle-checked twin pins the
+    ``streaming/count_window_jvm.py``; this oracle-checked twin pins the
     batch-assignment semantics."""
     ev = _t(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()

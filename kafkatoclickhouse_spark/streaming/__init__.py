@@ -11,10 +11,12 @@ Modules:
 - ``source``: Kafka reader (R1+R2) and a file-backed test source of
   identical shape.
 - ``pipeline``: the streaming ingest chain (R2–R6).
-- ``count_window``: per-key count window via
-  ``applyInPandasWithState`` (R5) with a timeout flush for partial
-  windows (fixing the reference's stuck-partial-window semantics,
-  SURVEY §4.3).
+- ``count_window_jvm``: per-key count window (R5) run inside
+  ``foreachBatch`` as pure JVM operations over versioned state
+  snapshots, with a timeout flush for partial windows (fixing the
+  reference's stuck-partial-window semantics, SURVEY §4.3).
+- ``job`` / ``curation``: the reference topology and the curation
+  topology, each wired to the count window and a retrying sink.
 - ``windows``: event-time tumbling/sliding/session windows +
   watermark + streaming dedup (SURVEY §2.2 [EXT]).
 - ``sink``: ``foreachBatch`` JDBC sink with bounded retry (R7) —

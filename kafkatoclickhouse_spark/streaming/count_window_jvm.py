@@ -1,16 +1,18 @@
-"""R5 per-key count window, JVM-only hot path (VERDICT r8 #1).
+"""R5 per-key count window: the engine's one stateful window operator.
 
-The grouped-UDF implementation (``count_window.keyed_count_window``)
-is protocol-bound: the measured floor is ~0.9 ms per key per
-micro-batch of Arrow transfer + pandas UDF dispatch, independent of
-what the transition function does (BASELINE.md r8 attribution — an
-identity ``applyInPandas`` costs the same as the full window stage).
-This module computes the SAME emission — per-key tumbling count
-windows of N rows, tails carried across batches
-(`KafakToClickhouse.scala:57-61`), including the OPTIONAL
-partial-window timeout flush (``timeout_ms``, SURVEY §4.3's fix for
-the reference's forever-stuck quiet keys; VERDICT r9 #3 carried it
-to this path) — with zero Python in the hot path and exactly ONE
+Reference semantics (`KafakToClickhouse.scala:57-61`,
+`MyWindowFunction.scala:32-56`): buffer N records per ``essCode``;
+when the N-th arrives, fire the window with exactly those N records
+(the reference then renders them into one multi-row INSERT). The
+reference's partial windows never fire, so quiet keys buffer forever
+(SURVEY §4.3); this module adds an OPTIONAL partial-window timeout
+flush (``timeout_ms``) that fires such tails with ``flush_reason =
+'timeout'``.
+
+Spark has no native count window. A grouped pandas UDF
+(``applyInPandasWithState``) is protocol-bound at ~0.9 ms per key per
+micro-batch (BASELINE.md r8 attribution), so the window runs inside
+``foreachBatch`` with zero Python in the hot path and exactly ONE
 Spark job per micro-batch:
 
     foreachBatch(micro-batch):
@@ -36,23 +38,23 @@ foreachBatch idempotence pattern: batch ``b`` always loads snapshot
 bit-identical output (the ordering below is total); published files
 overwrite their own deterministic names, so the topology is
 effectively exactly-once into a file sink and at-least-once into
-others — same contracts as the grouped-UDF path (job.py docstring).
+others (job.py docstring).
 
-Ordering: the grouped-UDF path consumes rows in Arrow arrival order;
-a JVM recomputation needs an EXPLICIT total order to be replay-safe,
-so this path orders each key's rows by (counter phantom first, then
-carried tail in buffered order, then ``order_col``) — with the Kafka
-source that is ``topicOffset``, which is exactly Kafka's
-per-partition arrival order, i.e. the same order the reference's
-FIFO keyed buffers see.
+Ordering: a recomputation needs an EXPLICIT total order to be
+replay-safe, so each key's rows are ordered by (counter phantom
+first, then carried tail in buffered order, then ``order_col``) —
+with the Kafka source that is ``topicOffset``, which is exactly
+Kafka's per-partition arrival order, i.e. the same order the
+reference's FIFO keyed buffers see.
 
 Schema trick that keeps the published files contract-exact: all
 three partitions share one schema (cols, window_id, window_pos,
 flush_reason); ``window_pos`` doubles as the tail's buffer position,
 ``window_id`` doubles as the ctr row's next-window counter, and
 ``_part`` is the partition column (not in the files) — so the fired
-partition's files carry EXACTLY the ``keyed_count_window`` output
-schema and can be linked into the landing zone untouched.
+partition's files carry EXACTLY the output schema (batch columns +
+window_id/window_pos/flush_reason) and can be linked into the
+landing zone untouched.
 
 Scale: per batch the only data-sized work is one shuffle + one
 partitioned write of the batch itself; carried state is one counter
@@ -66,15 +68,14 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kafkatoclickhouse_spark.streaming.count_window import (
-    DEFAULT_WINDOW_SIZE,
-)
+DEFAULT_WINDOW_SIZE = 20  # reference prod default, KafakToClickhouse.scala:57
 
 _OK = "_OK"  # snapshot commit marker, written last
 
@@ -162,7 +163,7 @@ def apply_count_window_batch(
     """One micro-batch of the JVM count window: commits the successor
     state snapshot (one partitioned write — the batch's only job) and
     returns the FIRED rows (batch columns + window_id/window_pos/
-    flush_reason — the ``keyed_count_window`` output contract) as a
+    flush_reason — the output contract) as a
     scan over the snapshot's fired partition. A failure anywhere
     replays the batch, which deterministically recomputes the
     identical snapshot and fired rows from ``s{b-1}``.
@@ -175,23 +176,21 @@ def apply_count_window_batch(
     batch_bytes / 64 MB on a real deployment; None keeps the session
     value.
 
-    ``timeout_ms`` carries the grouped-UDF path's partial-flush
-    contract (SURVEY §4.3 — the fix for the reference's forever-stuck
-    partial windows) to the JVM path (VERDICT r9 #3): the ctr row's
-    otherwise-unused ``flush_reason`` slot stores the key's
+    ``timeout_ms`` enables the partial-window flush (SURVEY §4.3 — the
+    fix for the reference's forever-stuck partial windows): the ctr
+    row's otherwise-unused ``flush_reason`` slot stores the key's
     last-activity clock (the "doubles-as" packing the schema trick in
     the module docstring already uses for window_id/window_pos), and a
     key that receives NO rows in this batch while
     ``batch_time_ms − last_activity ≥ timeout_ms`` fires its buffered
     tail as one partial window (``flush_reason='timeout'``, positions
-    0..len−1) and drops its state — exactly
-    ``make_count_window_fn``'s timed-out branch, including the
-    window-counter reset on the next arrival. ``batch_time_ms`` is the
-    batch's clock (required when ``timeout_ms`` is set); with a
-    deterministic clock (e.g. max event-time of the batch) replays
-    stay bit-identical, with wall clock a replay may flush at a
-    different boundary — the same at-least-once caveat as the legacy
-    path's processing-time timers."""
+    0..len−1) at its current counter and drops its state, so its
+    window counter restarts at 0 on the next arrival.
+    ``batch_time_ms`` is the batch's clock (required when
+    ``timeout_ms`` is set); with a deterministic clock (e.g. max
+    event-time of the batch) replays stay bit-identical, with wall
+    clock a replay may flush at a different boundary — the
+    at-least-once caveat of any processing-time timer."""
     if timeout_ms is not None and batch_time_ms is None:
         raise ValueError("timeout_ms requires batch_time_ms")
     spark = batch_df.sparkSession
@@ -215,8 +214,7 @@ def apply_count_window_batch(
                 # last-activity clock, packed into the ctr row's
                 # flush_reason slot by the previous batch (NULL on
                 # snapshots written before timeouts were enabled —
-                # such keys never expire until their next arrival,
-                # like a legacy key whose timer was never set)
+                # such keys never expire until their next arrival)
                 F.col("flush_reason").cast("long").alias("_ctr_ts"),
             )
         )
@@ -283,12 +281,11 @@ def apply_count_window_batch(
     is_fired = idx < fired_rows
     next_window = F.col("_base") + (n_data / n).cast("long")
     is_ctr = F.col("_role") == "c"
-    # Timeout expiry (VERDICT r9 #3): a key is expired iff it saw no
-    # batch rows AND its last-activity clock is old enough. Expired
-    # keys fire their whole tail as ONE partial window at the base
-    # counter (positions = buffered order) and mint NO ctr row —
-    # state removed, counter resets on the next arrival, exactly the
-    # legacy timed-out branch.
+    # Timeout expiry: a key is expired iff it saw no batch rows AND
+    # its last-activity clock is old enough. Expired keys fire their
+    # whole tail as ONE partial window at the base counter (positions
+    # = buffered order) and mint NO ctr row — state removed, counter
+    # resets on the next arrival.
     if timeout_ms is None:
         expired = F.lit(False)
         ctr_ts = F.lit(None).cast("string")
@@ -423,7 +420,6 @@ def run_count_window_jvm(
     publish_dir: str | None = None,
     shuffle_partitions: int | None = None,
     timeout_ms: int | None = None,
-    clock_fn: Callable[[DataFrame, int], int] | None = None,
 ):
     """Wire the JVM count window into a streaming query: the clean
     ingest stream drains through ``foreachBatch`` where each batch is
@@ -438,22 +434,17 @@ def run_count_window_jvm(
     back), and the total ordering makes the recomputation — fired
     rows included — bit-identical, so a file sink converges to
     exactly-once (deterministic published names) and other sinks see
-    at-least-once delivery of identical rows (same contract as the
-    grouped-UDF topology; pair with an idempotent sink).
+    at-least-once delivery of identical rows (pair with an
+    idempotent sink).
 
-    ``timeout_ms`` enables the partial-window flush on this path too
-    (VERDICT r9 #3 — the 2.2× path must not silently revert to the
-    reference's stuck-partial semantics): each batch's clock comes
-    from ``clock_fn(batch_df, batch_id)`` (default: wall clock).
-    Pass a deterministic ``clock_fn`` (e.g. the batch's max event
-    time in ms) to keep replays bit-identical; with wall clock a
-    replay may flush at a different boundary — the same
-    at-least-once caveat as the legacy path's processing-time
-    timers. Unlike the grouped-UDF path, timeouts here are safe
-    under ``availableNow``: flushes piggyback on data batches
-    instead of timer-driven empty batches, so finite drains still
-    terminate (a quiet key's partial flushes on the NEXT batch that
-    arrives after the deadline, or stays in state if the drain
+    ``timeout_ms`` enables the partial-window flush; each batch's
+    clock is the wall clock when the batch starts. With wall clock a
+    replay may flush at a different boundary than the first attempt
+    — the at-least-once caveat of any processing-time timer. Timeouts
+    are safe under ``availableNow``: flushes piggyback on data
+    batches instead of timer-driven empty batches, so finite drains
+    still terminate (a quiet key's partial flushes on the NEXT batch
+    that arrives after the deadline, or stays in state if the drain
     ends first)."""
     if (write_fn is None) == (publish_dir is None):
         raise ValueError("pass exactly one of write_fn / publish_dir")
@@ -461,13 +452,7 @@ def run_count_window_jvm(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_time_ms = None
         if timeout_ms is not None:
-            import time as _time
-
-            batch_time_ms = (
-                clock_fn(batch_df, batch_id)
-                if clock_fn is not None
-                else int(_time.time() * 1000)
-            )
+            batch_time_ms = int(time.time() * 1000)
         fired = apply_count_window_batch(
             batch_df,
             batch_id,

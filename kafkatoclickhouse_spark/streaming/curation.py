@@ -27,6 +27,7 @@ fingerprint rule) is pinned in tests/test_streaming.py.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kafkatoclickhouse_spark.functions import textfns
-from kafkatoclickhouse_spark.streaming import count_window, sink
+from kafkatoclickhouse_spark.streaming import count_window_jvm, sink
 from kafkatoclickhouse_spark.streaming import windows as sw
 from kafkatoclickhouse_spark.streaming.classifier import (
     streaming_classifier_score,
@@ -125,21 +126,15 @@ def start_curation(
     window_size: int = 20,
     max_retries: int = 3,
     available_now: bool = False,
-    engine: str = "jvm",
     decontam_mode: str = "bloom",
 ) -> StreamingQuery:
     """Curated stream → per-``window_key`` count window → retrying
     sink, one running query. The count window is the reference R5
     operator reused verbatim on the curation stream (fixed-size write
-    batches per source). ``engine`` follows ``job.start``'s r11
-    production default: ``"jvm"`` runs the measured-2.2× foreachBatch
-    JVM path (`count_window_jvm`; timeout flush stays armed even
-    under ``availableNow`` there — flushes piggyback on data
-    batches); ``"grouped_udf"`` keeps the applyInPandasWithState
-    topology, whose partial-window timeout must disarm on finite
-    drains (the ``job.build_topology`` rule)."""
-    if engine not in ("jvm", "grouped_udf"):
-        raise ValueError(f"unknown engine {engine!r}")
+    batches per source, ordered by ``doc_id``), on the same
+    foreachBatch JVM path as ``job.start``: the 60 s partial-window
+    timeout stays armed even under ``availableNow`` (flushes
+    piggyback on data batches, see ``run_count_window_jvm``)."""
     curated = curation_topology(
         docs_stream,
         spark,
@@ -149,23 +144,6 @@ def start_curation(
         ts_col=ts_col,
         decontam_mode=decontam_mode,
     )
-    if engine == "grouped_udf":
-        windowed = count_window.keyed_count_window(
-            curated,
-            key=window_key,
-            n=window_size,
-            timeout_ms=None if available_now else 60_000,
-        )
-        writer = windowed.writeStream.foreachBatch(
-            sink.foreach_batch_writer(write_fn, max_retries=max_retries)
-        ).option("checkpointLocation", checkpoint_dir)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    import os
-
-    from kafkatoclickhouse_spark.streaming import count_window_jvm
 
     def sink_write(fired: DataFrame) -> None:
         sink.write_with_retry(write_fn, fired, max_retries=max_retries)

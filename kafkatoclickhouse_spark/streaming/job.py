@@ -7,8 +7,9 @@ reference user's config file ports over unchanged):
 
     Kafka source (R1)  →  parse/validate/enrich/project (R2–R6)
       →  per-key count window (R5)  →  retrying batched sink (R7)
-    with checkpointing (R9) and a dead-letter stream (R3, upgraded
-    from the reference's stdout print).
+    with checkpointing (R9). The dead-letter split (R3, upgraded from
+    the reference's stdout print) is ``pipeline.streaming_ingest``'s
+    second output.
 
 Execution semantics vs the reference (SURVEY §4.3, deliberate):
 at-least-once into an idempotent sink (micro-batch replay from the
@@ -26,50 +27,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from kafkatoclickhouse_spark.config import PipelineConfig
 from kafkatoclickhouse_spark.streaming import (
-    count_window,
     count_window_jvm,
     pipeline,
     sink,
     sink_catalog,
     source,
 )
-
-
-def build_topology(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    raw: DataFrame | None = None,
-    finite: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """(windowed output stream, dead-letter stream). Pass ``raw`` to
-    substitute the Kafka source (tests use the file-backed double;
-    the shapes are identical — see ``source.RAW_SCHEMA``).
-
-    ``finite=True`` (availableNow drains) disables the partial-window
-    timeout flush — with a processing-time timer pending, Spark keeps
-    scheduling no-data micro-batches and the query never terminates
-    (see ``count_window.keyed_count_window``); tails stay in
-    checkpointed state for the next run."""
-    if raw is None:
-        raw = source.kafka_raw_stream(
-            spark,
-            cfg.kafka_bootstrap_servers,
-            ",".join(cfg.kafka_topics),
-            group_id=cfg.kafka_group_id,
-            starting_offsets=cfg.kafka_starting_offsets,
-        )
-    clean, dirty = pipeline.streaming_ingest(
-        raw,
-        group_id=cfg.kafka_group_id,
-        check_fields=tuple(cfg.check_fields),
-    )
-    windowed = count_window.keyed_count_window(
-        clean,
-        key="essCode",
-        n=cfg.window_size,
-        timeout_ms=None if finite else 60_000,
-    )
-    return windowed, dirty
 
 
 def start(
@@ -79,20 +42,17 @@ def start(
     raw: DataFrame | None = None,
     available_now: bool = False,
     catalog: list[tuple[str, str]] | None = None,
-    engine: str = "jvm",
 ) -> StreamingQuery:
     """Wire the topology to the retry sink and start it.
 
-    ``engine`` selects the count-window implementation (VERDICT r10
-    #5): ``"jvm"`` (default) runs the foreachBatch JVM-only path —
-    measured 2.2× the grouped-UDF throughput, row-identical output,
-    timeout parity since r10 (``count_window_jvm``); ``"grouped_udf"``
-    keeps the legacy ``applyInPandasWithState`` topology. Both carry
-    the 60 s partial-window timeout in infinite mode; on the JVM path
-    the timeout also stays armed under ``availableNow`` (flushes
-    piggyback on data batches, so finite drains still terminate —
-    see ``run_count_window_jvm``).
+    The count window is the foreachBatch JVM-only path
+    (``count_window_jvm``) with the 60 s partial-window timeout armed
+    in every mode: flushes piggyback on data batches, so
+    ``availableNow`` drains still terminate (see
+    ``run_count_window_jvm``).
 
+    ``raw`` substitutes the Kafka source (tests use the file-backed
+    double; the shapes are identical — see ``source.RAW_SCHEMA``).
     ``write_fn`` defaults to the JDBC writer built from the config's
     clickhouse.* keys; any ``(DataFrame) -> None`` substitutes (tests
     pass a parquet writer). ``catalog`` — (name, type) pairs from the
@@ -101,8 +61,6 @@ def start(
     output to exactly the sink's columns before writing: extras
     dropped, missing NULLed, values cast, honoring the config's
     string-type list (`MyWindowFunction.scala:71-88`)."""
-    if engine not in ("jvm", "grouped_udf"):
-        raise ValueError(f"unknown engine {engine!r}")
     if write_fn is None:
         write_fn = sink.jdbc_writer(
             cfg.jdbc_url,
@@ -110,26 +68,6 @@ def start(
             user=cfg.jdbc_user or None,
             password=cfg.jdbc_password or None,
         )
-
-    if engine == "grouped_udf":
-        windowed, _dirty = build_topology(
-            spark, cfg, raw=raw, finite=available_now
-        )
-        if catalog is not None:
-            windowed = sink_catalog.project_to_catalog(
-                windowed, catalog, string_types=cfg.string_types
-            )
-        writer = (
-            windowed.writeStream.foreachBatch(
-                sink.foreach_batch_writer(
-                    write_fn, max_retries=cfg.max_retries
-                )
-            )
-            .option("checkpointLocation", cfg.checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     if raw is None:
         raw = source.kafka_raw_stream(

@@ -1,10 +1,11 @@
 """Event-time sessionization on Spark 4's transformWithState —
 typed keyed state + EVENT-TIME TIMERS, the full arbitrary-state API.
 
-The count window (`count_window.keyed_count_window_tws`) showed the
-ValueState surface; sessionization is the canonical operator that
-also needs TIMERS: a session is closed not by an arriving record but
-by the WATERMARK proving no in-gap event can still arrive. Built-in
+Plain keyed buffers such as the count window need no typed state
+(``count_window_jvm`` runs them as JVM operations inside
+``foreachBatch``); sessionization is the canonical operator that
+needs typed state AND TIMERS: a session is closed not by an arriving
+record but by the WATERMARK proving no in-gap event can still arrive. Built-in
 ``F.session_window`` covers plain time-gap sessions declaratively
 (``streaming/windows.py``); this processor is the escape hatch for
 session semantics the built-in cannot express (value-reset

@@ -1,17 +1,16 @@
 """Running per-key counters on transformWithState MapState.
 
-Completes the typed-state API coverage alongside the ValueState
-count window (`count_window.keyed_count_window_tws`) and the
-ListState+timer sessionizer (`sessions_tws.py`): a per-user map of
-event_type → running total, updated per micro-batch and emitted as
-versioned snapshots. This is the streaming form of
+Completes the typed-state API coverage alongside the ListState+timer
+sessionizer (`sessions_tws.py`) with MapState and state TTL: a
+per-user map of event_type → running total, updated per micro-batch
+and emitted as versioned snapshots. This is the streaming form of
 ``groupBy(user_id, event_type).count()`` when the consumer needs the
 CURRENT totals continuously (a feature store / monitoring counter),
 not a watermark-final aggregate — and the MapState layout is the
 point: per (key, map-entry) storage in RocksDB, so a user with 5
 event types costs 5 small entries, updated surgically, instead of
-one blob rewritten per record (what the pickled-pandas legacy path
-does).
+one blob rewritten per record (what a pickled ValueState would
+do).
 
 Emission: one row per (user, type) TOUCHED in the batch, stamped
 with a per-key monotone ``seq`` (ValueState) — downstream dedups to

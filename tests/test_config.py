@@ -138,7 +138,7 @@ def test_explicit_database_key_wins_over_url_path():
 def test_kafka_reader_option_map_pins_reference_contract(tmp_path):
     """The r3-brief option-map contract: loading the reference's own
     properties spelling and wiring it into the Kafka source (exactly
-    as streaming.job.build_topology does) must yield THIS option
+    as streaming.job.start does) must yield THIS option
     dict, byte for byte. Pins: topic subscription, group-id
     passthrough under the ``kafka.``-prefix, auto.offset.reset →
     startingOffsets, failOnDataLoss=false, and — critically —

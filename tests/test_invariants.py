@@ -3,7 +3,7 @@ truth, and hypothesis property tests for the portable primitives."""
 
 from __future__ import annotations
 
-import pandas as pd
+import cw_model
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from kafkatoclickhouse_spark import registry
 from kafkatoclickhouse_spark.operators import ingest
-from kafkatoclickhouse_spark.streaming import count_window as cw
 
 # -- dirty-data routing (R3: every record lands exactly once) ---------------
 
@@ -98,60 +97,75 @@ def test_ann_recall_and_score_exactness(spark, sf_dir, ann_name):
 # -- hypothesis: portable primitives ---------------------------------------
 
 
-@settings(max_examples=25, deadline=None)
+@settings(max_examples=50, deadline=None)
 @given(
-    st.lists(
-        st.integers(min_value=0, max_value=9), min_size=1, max_size=40
-    ),
-    st.integers(min_value=2, max_value=7),
+    st.lists(st.sampled_from("EFG"), min_size=1, max_size=40),
+    st.lists(st.integers(min_value=0, max_value=40), max_size=4),
+    st.integers(min_value=1, max_value=7),
+    st.booleans(),
 )
-def test_count_window_conservation(values, n):
-    """Under ANY split of the input into micro-batches, emitted full
-    windows + retained tail exactly partition the input in order."""
-    fn = cw.make_count_window_fn(n=n, timeout_ms=1000)
+def test_count_window_conservation(keys, cuts, n, reverse):
+    """Under ANY split of the input into micro-batches (rows of a batch
+    in any arrival order), each key's emitted windows followed by its
+    retained tail partition its input exactly, in order; every window
+    is full (positions 0..n-1) with dense ids from 0. A timeout flush
+    after the drain then fires each tail as one partial window at the
+    key's next id and leaves no state."""
+    rows = list(enumerate(keys))  # (offset, key)
+    bounds = [0, *sorted(cuts), len(rows)]
+    batches = [
+        (0, rows[a:b][::-1] if reverse else rows[a:b])
+        for a, b in zip(bounds, bounds[1:])
+    ]
+    fired, held = cw_model.count_window(batches, n, key=1, order=0)
+    for k in set(keys):
+        mine = sorted(
+            (w, p, off) for kk, off, w, p, _ in fired if kk == k
+        )
+        win, tail = held[k]
+        assert [off for _, _, off in mine] + tail == [
+            off for off, kk in rows if kk == k
+        ]
+        assert [(w, p) for w, p, _ in mine] == [
+            (i // n, i % n) for i in range(win * n)
+        ]
+        assert len(tail) < n
+    assert {r[-1] for r in fired} <= {"count"}
 
-    class S:
-        exists = False
-        hasTimedOut = False
-        _v = None
+    flushed, left = cw_model.count_window(
+        batches + [(1_000, [])], n, timeout_ms=1_000, key=1, order=0
+    )
+    assert left == {}
+    assert sorted(flushed) == sorted(
+        fired
+        + [
+            (k, off, win, i, "timeout")
+            for k, (win, tail) in held.items()
+            for i, off in enumerate(tail)
+        ]
+    )
 
-        @property
-        def get(self):
-            return self._v
 
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-        def remove(self):
-            self.exists = False
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-    st_ = S()
-    emitted = []
-    # split input into two arbitrary chunks
-    cut = len(values) // 2
-    for chunk in (values[:cut], values[cut:]):
-        if not chunk:
-            continue
-        pdf = pd.DataFrame({"essCode": ["E"] * len(chunk), "v": chunk})
-        for out in fn(("E",), [pdf], st_):
-            emitted.extend(out["v"].tolist())
-            # only full windows fire on data; consecutive windows
-            # arrive as ONE vectorized frame (window_id delimits)
-            assert len(out) % n == 0 and len(out) > 0
-            ids = out["window_id"].tolist()
-            assert ids == sorted(ids)
-            assert out["window_pos"].tolist() == list(range(n)) * (
-                len(out) // n
-            )
-    st_.hasTimedOut = True
-    for out in fn(("E",), [], st_):
-        emitted.extend(out["v"].tolist())
-        assert len(out) < n or n == 1  # timeout flushes the partial
-    assert emitted == values  # order-preserving, lossless
+def test_count_window_timeout_restarts_counter():
+    """A key idle for timeout_ms flushes its tail as one 'timeout'
+    window at its current counter and loses its state, so its next
+    arrival starts again at window 0; a key idle for less keeps its
+    buffer, and a key that gets rows never expires."""
+    n, tmo = 5, 60_000
+    batches = [
+        (0, [("E", i) for i in range(7)] + [("G", 20)]),
+        (1_000, [("F", 10), ("G", 21)]),
+        # E idle exactly tmo → expires; F idle 59 s → kept
+        (60_000, [("G", 22)]),
+        (60_001, [("E", 30 + i) for i in range(6)]),
+    ]
+    fired, held = cw_model.count_window(batches, n, timeout_ms=tmo)
+    assert sorted(fired) == sorted(
+        [("E", i, 0, i, "count") for i in range(5)]
+        + [("E", 5, 1, 0, "timeout"), ("E", 6, 1, 1, "timeout")]
+        + [("E", 30 + i, 0, i, "count") for i in range(5)]
+    )
+    assert held == {"E": (1, [35]), "F": (0, [10]), "G": (0, [20, 21, 22])}
 
 
 @settings(max_examples=10, deadline=None)

@@ -9,15 +9,16 @@ one definition, two execution modes.
 
 from __future__ import annotations
 
-import pickle
+import os
 
+import cw_model
 import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
 
 from kafkatoclickhouse_spark.operators import ingest
-from kafkatoclickhouse_spark.streaming import count_window as cw
+from kafkatoclickhouse_spark.streaming import count_window_jvm as cwj
 from kafkatoclickhouse_spark.streaming import pipeline, sink, source
 from kafkatoclickhouse_spark.streaming import windows as sw
 from kafkatoclickhouse_spark.tables import load_table
@@ -66,19 +67,63 @@ def test_streaming_dedup_within_watermark(spark, raw_feed_dir, tmp_path):
     assert total > 0
 
 
+def _clean_rows(spark, feed, cols=("essCode", "topicOffset"), **kw):
+    """The feed's clean rows (``cols``), parsed by the same ingest
+    chain the streams run, as one static batch."""
+    raw = spark.read.schema(source.RAW_SCHEMA).parquet(feed)
+    clean, _ = pipeline.streaming_ingest(raw, **kw)
+    return [tuple(r) for r in clean.select(*cols).collect()]
+
+
+def _held_state(spark, state_dir, key="essCode", order="topicOffset"):
+    """The count window's carried state in its newest committed
+    snapshot, shaped like ``cw_model.count_window``'s: per key, (next
+    window id, tail ``order`` values in buffer order)."""
+    last = max(
+        int(d[1:])
+        for d in os.listdir(state_dir)
+        if os.path.exists(os.path.join(state_dir, d, "_OK"))
+    )
+    rows = spark.read.parquet(
+        os.path.join(state_dir, f"s{last}", "rows")
+    ).collect()
+    held = {r[key]: (r["window_id"], []) for r in rows if r["_part"] == "ctr"}
+    tail = sorted(
+        (r for r in rows if r["_part"] == "tail"),
+        key=lambda r: (r[key], r["window_pos"]),
+    )
+    for r in tail:
+        held[r[key]][1].append(r[order])
+    return held
+
+
+WINDOW_COLS = [
+    "essCode", "topicOffset", "window_id", "window_pos", "flush_reason"
+]
+
+
 def test_streaming_count_window(spark, raw_feed_dir, tmp_path):
     """Count-fired windows have exactly N rows with positions 0..N-1;
-    with the timeout timer disabled (the finite-run mode) no partial
-    can flush, so every emitted window is full and the held-back tails
+    with the timeout disabled (``timeout_ms=None``) no partial can
+    flush, so every emitted window is full and the held-back tails
     are exactly input − emitted (the reference's count-only trigger
-    semantics — and the availableNow query actually terminates)."""
+    semantics). The emitted rows and the carried state equal the
+    model of the reference window on the same feed."""
     n = 20
     raw = source.file_raw_stream(spark, raw_feed_dir)
     clean, _ = pipeline.streaming_ingest(raw)
-    windowed = cw.keyed_count_window(
-        clean, key="essCode", n=n, timeout_ms=None
+    out = str(tmp_path / "cw_out")
+    state = str(tmp_path / "cw_state")
+    q = cwj.run_count_window_jvm(
+        clean,
+        write_fn=sink.parquet_writer(out),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        state_dir=state,
+        n=n,
+        available_now=True,
     )
-    got = run_stream(windowed, "cw_stream", tmp_path / "ckpt").cache()
+    q.awaitTermination(300)
+    got = spark.read.parquet(out).cache()
 
     sizes = got.groupBy("essCode", "window_id").count().collect()
     assert sizes, "no windows fired"
@@ -104,6 +149,13 @@ def test_streaming_count_window(spark, raw_feed_dir, tmp_path):
             .collect()
         )
     )
+    want, held = cw_model.count_window(
+        [(0, _clean_rows(spark, raw_feed_dir))], n
+    )
+    assert sorted(map(tuple, got.select(WINDOW_COLS).collect())) == sorted(
+        want
+    )
+    assert _held_state(spark, state) == held
 
 
 def test_streaming_tumbling_window_agg(spark, sf_dir, raw_feed_dir, tmp_path):
@@ -157,86 +209,6 @@ def test_streaming_interval_join_equals_batch(spark, sf_dir, tmp_path):
     )
 
 
-# -- direct unit tests of the state-transition fn (timeout path) -----------
-
-
-class FakeState:
-    def __init__(self):
-        self.exists = False
-        self.hasTimedOut = False
-        self._v = None
-        self.removed = False
-        self.timeout_ms = None
-
-    @property
-    def get(self):
-        if not self.exists:
-            raise ValueError("no state")
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.exists = True
-
-    def remove(self):
-        self.exists = False
-        self.removed = True
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_ms = ms
-
-
-def _pdf(k: int):
-    return pd.DataFrame({"essCode": ["E"] * k, "v": list(range(k))})
-
-
-def test_count_window_fn_buffers_below_n():
-    fn = cw.make_count_window_fn(n=5, timeout_ms=1000)
-    st = FakeState()
-    out = list(fn(("E",), [_pdf(3)], st))
-    assert out == []
-    assert st.exists and st.timeout_ms == 1000
-    nxt, raw = st.get
-    assert nxt == 0 and len(pickle.loads(raw)) == 3
-
-
-def test_count_window_fn_emits_full_windows_keeps_tail():
-    fn = cw.make_count_window_fn(n=5, timeout_ms=1000)
-    st = FakeState()
-    out = list(fn(("E",), [_pdf(12)], st))
-    # full windows arrive as ONE vectorized frame per key-batch
-    # (window boundaries are in the window_id/window_pos columns,
-    # not in frame boundaries — the per-window-copy loop was the
-    # measured hot spot, see module docstring)
-    assert [len(o) for o in out] == [10]
-    assert list(out[0]["window_id"]) == [0] * 5 + [1] * 5
-    assert list(out[0]["window_pos"]) == list(range(5)) * 2
-    nxt, raw = st.get
-    assert nxt == 2 and len(pickle.loads(raw)) == 2
-
-
-def test_count_window_fn_timeout_flushes_partial():
-    fn = cw.make_count_window_fn(n=5, timeout_ms=1000)
-    st = FakeState()
-    list(fn(("E",), [_pdf(3)], st))
-    st.hasTimedOut = True
-    out = list(fn(("E",), [], st))
-    assert len(out) == 1 and len(out[0]) == 3
-    assert set(out[0]["flush_reason"]) == {"timeout"}
-    assert st.removed
-
-
-def test_count_window_fn_accumulates_across_invocations():
-    fn = cw.make_count_window_fn(n=5, timeout_ms=1000)
-    st = FakeState()
-    assert list(fn(("E",), [_pdf(3)], st)) == []
-    st.hasTimedOut = False
-    out = list(fn(("E",), [_pdf(4)], st))
-    assert [len(o) for o in out] == [5]
-    nxt, raw = st.get
-    assert nxt == 1 and len(pickle.loads(raw)) == 2
-
-
 # -- retry sink -------------------------------------------------------------
 
 
@@ -267,8 +239,7 @@ def test_write_with_retry_reraises_after_exhaustion():
 def test_full_job_from_properties(spark, sf_dir, raw_feed_dir, tmp_path):
     """The reference topology end-to-end from a .properties file:
     config → source → validate → count window → retry sink, with
-    checkpointing — on the DEFAULT engine, which since r11 is the
-    2.2× JVM foreachBatch count window (VERDICT r10 #5). An
+    checkpointing — on the JVM foreachBatch count window. An
     availableNow drain terminates (JVM-path timeouts piggyback on
     data batches, no timer-driven empty batches); every count-fired
     window batch is full-size and grouped per key."""
@@ -304,12 +275,14 @@ def test_full_job_from_properties(spark, sf_dir, raw_feed_dir, tmp_path):
 def test_full_job_engines_land_identical_windows(
     spark, sf_dir, raw_feed_dir, tmp_path
 ):
-    """The legacy grouped-UDF engine stays selectable behind
-    ``engine="grouped_udf"`` and lands the SAME (key, window_id, row)
-    multiset as the JVM default — the topology-level twin of the
-    count_window_jvm row-identity pin. Feed staged offset-ordered
-    (``_jvm_feed``) so the two engines' ordering contracts agree —
-    arrival order (grouped-UDF) vs explicit topicOffset order (JVM)."""
+    """The whole job (``job.start``: config → source → validate →
+    count window → retry sink) lands exactly the (key, window_id,
+    window_pos, row) multiset of the model of the reference window —
+    the topology-level twin of the count_window_jvm pin. Feed staged
+    offset-ordered (``_jvm_feed``), one micro-batch, so no partial
+    window can time out."""
+    from collections import Counter
+
     from kafkatoclickhouse_spark import config as cfgmod
     from kafkatoclickhouse_spark.streaming import job
 
@@ -317,28 +290,33 @@ def test_full_job_engines_land_identical_windows(
         cfgmod.load_properties("configs/example.properties")
     )
     feed = _jvm_feed(spark, raw_feed_dir, str(tmp_path / "ord_feed"))
-    landed = {}
-    for engine in ("jvm", "grouped_udf"):
-        cfg.checkpoint_dir = str(tmp_path / f"ckpt_{engine}")
-        out_dir = str(tmp_path / f"landed_{engine}")
-        q = job.start(
-            spark,
-            cfg,
-            write_fn=sink.parquet_writer(out_dir),
-            raw=source.file_raw_stream(spark, feed),
-            available_now=True,
-            engine=engine,
-        )
-        q.awaitTermination(300)
-        df = spark.read.parquet(out_dir)
-        landed[engine] = {
-            tuple(r)
-            for r in df.select(
-                "essCode", "window_id", "cTime", "flush_reason"
-            ).collect()
-        }
-    assert landed["jvm"] == landed["grouped_udf"]
-    assert landed["jvm"]
+    cfg.checkpoint_dir = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "landed")
+    q = job.start(
+        spark,
+        cfg,
+        write_fn=sink.parquet_writer(out_dir),
+        raw=source.file_raw_stream(spark, feed),
+        available_now=True,
+    )
+    q.awaitTermination(300)
+    landed = Counter(
+        tuple(r)
+        for r in spark.read.parquet(out_dir)
+        .select(*WINDOW_COLS, "cTime")
+        .collect()
+    )
+    rows = _clean_rows(
+        spark,
+        feed,
+        cols=("essCode", "topicOffset", "cTime"),
+        check_fields=tuple(cfg.check_fields),
+    )
+    c_time = {(k, off): t for k, off, t in rows}
+    fired, _ = cw_model.count_window([(0, rows)], cfg.window_size)
+    want = Counter(w + (c_time[w[:2]],) for w in fired)
+    assert landed == want
+    assert landed
 
 
 def test_foreach_batch_parquet_roundtrip(spark, sf_dir, raw_feed_dir, tmp_path):
@@ -478,52 +456,6 @@ def test_checkpoint_restart_resumes_exactly_once(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, landed.select(*events.columns).collect())) == (
         sorted(map(tuple, events.collect()))
     )
-
-
-def test_count_window_transform_with_state_matches_legacy(
-    spark, raw_feed_dir, tmp_path
-):
-    """The transformWithState (Spark 4 API, RocksDB state store)
-    count window must emit exactly the same windows as the
-    applyInPandasWithState implementation on the same feed.
-
-    Gated: transformWithState's state-server protocol needs
-    protobuf, which this container lacks (the operator itself is
-    plain PySpark — on any cluster with protobuf installed this test
-    runs)."""
-    pytest.importorskip("google.protobuf")
-    n = 20
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        raw = source.file_raw_stream(spark, raw_feed_dir)
-        clean, _ = pipeline.streaming_ingest(raw)
-        windowed = cw.keyed_count_window_tws(clean, key="essCode", n=n)
-        got = run_stream(windowed, "tws_stream", tmp_path / "tws_ckpt")
-        rows = got.select(
-            "essCode", "topicOffset", "window_id", "window_pos",
-            "flush_reason",
-        ).collect()
-    finally:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", prev
-        )
-    assert rows, "no windows fired"
-
-    raw2 = source.file_raw_stream(spark, raw_feed_dir)
-    clean2, _ = pipeline.streaming_ingest(raw2)
-    legacy = run_stream(
-        cw.keyed_count_window(clean2, key="essCode", n=n, timeout_ms=None),
-        "tws_legacy_stream",
-        tmp_path / "tws_legacy_ckpt",
-    ).select(
-        "essCode", "topicOffset", "window_id", "window_pos", "flush_reason"
-    )
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, legacy.collect()))
 
 
 def test_watermark_drops_late_data_across_restarts(spark, sf_dir, tmp_path):
@@ -1256,10 +1188,10 @@ def test_type_counts_tws_running_totals(spark, sf_dir, tmp_path):
 
 def _jvm_feed(spark, raw_feed_dir, path, slices=1):
     """Stage the raw feed as `slices` sequential files, each internally
-    sorted by offset and covering a contiguous offset range — so both
-    arrival order (what the grouped-UDF path consumes) and explicit
-    offset order (what the JVM path sorts by) agree, making the two
-    implementations exactly comparable."""
+    sorted by offset and covering a contiguous offset range — so
+    arrival order and explicit offset order (what the count window
+    sorts by) agree, and a ``maxFilesPerTrigger=1`` drain reads one
+    slice per micro-batch in offset order."""
     raw = spark.read.parquet(raw_feed_dir).orderBy("offset").collect()
     step = (len(raw) + slices - 1) // slices
     for i in range(slices):
@@ -1274,12 +1206,13 @@ def _jvm_feed(spark, raw_feed_dir, path, slices=1):
 
 
 def test_count_window_jvm_matches_legacy(spark, raw_feed_dir, tmp_path):
-    """VERDICT r8 #1 parity pin: the JVM-only count window (foreachBatch
-    + row_number modular windowing + versioned state table, zero Python
-    in the hot path) emits EXACTLY the rows of keyed_count_window
-    (timeout_ms=None) on the same single-batch feed."""
-    from kafkatoclickhouse_spark.streaming import count_window_jvm as cwj
-
+    """Parity pin against the reference (legacy Flink job) window: the
+    JVM-only count window (foreachBatch + row_number modular windowing
+    + versioned state table, zero Python in the hot path) emits
+    EXACTLY the rows of the pure-Python model of
+    countWindow(N) + MyWindowFunction (``tests/cw_model.py``, no
+    timeout) on the same single-batch feed, through the hardlink
+    publish sink."""
     n = 20
     feed = _jvm_feed(spark, raw_feed_dir, str(tmp_path / "jvm_feed"))
     raw = source.file_raw_stream(spark, feed)
@@ -1294,18 +1227,13 @@ def test_count_window_jvm_matches_legacy(spark, raw_feed_dir, tmp_path):
         publish_dir=out,  # the zero-copy hardlink-publish file sink
     )
     q.awaitTermination(300)
-    cols = ["essCode", "topicOffset", "window_id", "window_pos", "flush_reason"]
-    got = sorted(map(tuple, spark.read.parquet(out).select(cols).collect()))
+    got = sorted(
+        map(tuple, spark.read.parquet(out).select(WINDOW_COLS).collect())
+    )
     assert got, "no windows fired"
 
-    raw2 = source.file_raw_stream(spark, feed)
-    clean2, _ = pipeline.streaming_ingest(raw2)
-    legacy = run_stream(
-        cw.keyed_count_window(clean2, key="essCode", n=n, timeout_ms=None),
-        "jvm_pin_legacy",
-        tmp_path / "jvm_legacy_ckpt",
-    )
-    assert got == sorted(map(tuple, legacy.select(cols).collect()))
+    want, _ = cw_model.count_window([(0, _clean_rows(spark, feed))], n)
+    assert got == sorted(want)
 
 
 def test_count_window_jvm_multi_batch_carryover(spark, raw_feed_dir, tmp_path):
@@ -1314,8 +1242,6 @@ def test_count_window_jvm_multi_batch_carryover(spark, raw_feed_dir, tmp_path):
     the windows the closed-form batch rule predicts — per key ordered
     by offset, row i fires in window i//n at position i%n iff its
     key's cumulative count at its batch boundary reached past it."""
-    from kafkatoclickhouse_spark.streaming import count_window_jvm as cwj
-
     n = 20
     feed = _jvm_feed(spark, raw_feed_dir, str(tmp_path / "mb_feed"), slices=4)
     raw = spark.readStream.schema(source.RAW_SCHEMA).option(
@@ -1368,15 +1294,13 @@ def test_count_window_jvm_multi_batch_carryover(spark, raw_feed_dir, tmp_path):
 
 
 def test_count_window_jvm_timeout_flush_matches_legacy(spark, tmp_path):
-    """VERDICT r9 #3: the JVM path's ``timeout_ms`` contract is
-    row-identical to the legacy grouped-UDF transition fn — idle keys
-    past the deadline flush their tail as one 'timeout' partial
-    window and reset their counter; active or fresh keys do not. The
-    same 4-batch sequence (with an explicit deterministic clock) is
-    driven through apply_count_window_batch AND simulated against
-    make_count_window_fn with stubbed per-key timers."""
-    from kafkatoclickhouse_spark.streaming import count_window_jvm as cwj
-
+    """The ``timeout_ms`` contract matches the model of the reference
+    window with its partial-window timeout (``tests/cw_model.py``):
+    idle keys past the deadline flush their tail as one 'timeout'
+    partial window and reset their counter; active or fresh keys do
+    not. The same 4-batch sequence (with an explicit deterministic
+    clock) is driven through apply_count_window_batch and through the
+    model; fired rows and the carried state must be identical."""
     n, tmo = 5, 60_000
     schema = "essCode string, topicOffset long, payload string"
     batches = [
@@ -1405,55 +1329,121 @@ def test_count_window_jvm_timeout_flush_matches_legacy(spark, tmp_path):
             timeout_ms=tmo,
             batch_time_ms=clock,
         )
-        got += [tuple(r) for r in fired.select(
-            "essCode", "topicOffset", "window_id", "window_pos",
-            "flush_reason",
-        ).collect()]
+        got += [tuple(r) for r in fired.select(WINDOW_COLS).collect()]
 
-    # legacy simulation: one FakeState + transition fn per key; a
-    # key's timer fires in batch b iff it gets no rows and
-    # clock − last-activity ≥ timeout — processing-time timer
-    # semantics under an explicit clock.
-    fns, states, last_act, expect = {}, {}, {}, []
-    for clock, rows in batches:
-        by_key: dict[str, list] = {}
-        for k, off, pay in sorted(rows, key=lambda r: r[1]):
-            by_key.setdefault(k, []).append((k, off, pay))
-        for k in list(states):
-            if (
-                k not in by_key
-                and states[k].exists
-                and clock - last_act[k] >= tmo
-            ):
-                states[k].hasTimedOut = True
-                for out in fns[k]((k,), [], states[k]):
-                    expect += list(
-                        out[
-                            ["essCode", "topicOffset", "window_id",
-                             "window_pos", "flush_reason"]
-                        ].itertuples(index=False, name=None)
-                    )
-                states[k].hasTimedOut = False
-        for k, krows in by_key.items():
-            if k not in fns:
-                fns[k] = cw.make_count_window_fn(n=n, timeout_ms=tmo)
-                states[k] = FakeState()
-            last_act[k] = clock
-            pdf = pd.DataFrame(
-                krows, columns=["essCode", "topicOffset", "payload"]
-            )
-            for out in fns[k]((k,), [pdf], states[k]):
-                expect += list(
-                    out[
-                        ["essCode", "topicOffset", "window_id",
-                         "window_pos", "flush_reason"]
-                    ].itertuples(index=False, name=None)
-                )
-
+    expect, held = cw_model.count_window(batches, n, timeout_ms=tmo)
     assert sorted(got) == sorted(expect)
+    assert _held_state(spark, state) == held
     # the sequence exercised both flush kinds
     reasons = {r[-1] for r in got}
     assert reasons == {"timeout", "count"}
+
+
+def test_count_window_jvm_rejects_missing_predecessor_snapshot(
+    spark, tmp_path
+):
+    """The checkpoint/state divergence guard: batch b must find a
+    committed snapshot s{b-1}. A missing one, or one without its _OK
+    commit marker, raises instead of silently restarting every key's
+    windows at 0 — and writes no snapshot for b."""
+    df = spark.createDataFrame(
+        [("E", 1, "e1")], "essCode string, topicOffset long, payload string"
+    )
+    state = str(tmp_path / "state")
+    with pytest.raises(ValueError, match="checkpoint/state divergence"):
+        cwj.apply_count_window_batch(df, 3, state, n=5)
+    assert not os.path.exists(os.path.join(state, "s3"))
+
+    cwj.apply_count_window_batch(df, 0, state, n=5)
+    os.remove(os.path.join(state, "s0", "_OK"))  # crashed mid-rewrite
+    with pytest.raises(ValueError, match="checkpoint/state divergence"):
+        cwj.apply_count_window_batch(df, 1, state, n=5)
+    assert not os.path.exists(os.path.join(state, "s1"))
+
+
+def test_count_window_jvm_crash_before_offset_commit(
+    spark, raw_feed_dir, tmp_path, monkeypatch
+):
+    """Crash/restart of the whole job between the state write and the
+    offset commit: batch k's snapshot s{k} is committed and its fired
+    rows have reached the sink, then the sink write raises, so Spark
+    never commits batch k's offsets. A restart on the same checkpoint
+    replays k from s{k-1}; with an idempotent sink
+    (``overwrite_by_batch_parquet_writer``) the landed rows equal the
+    model's output exactly once, and the carried tails and counters in
+    the final snapshot equal the model's state. The model is fed the
+    batches and clocks the window actually ran with, so a 60 s timeout
+    flush on a slow run is modelled, not a flake."""
+    from pyspark.errors import StreamingQueryException
+
+    from kafkatoclickhouse_spark import config as cfgmod
+    from kafkatoclickhouse_spark.streaming import job
+
+    k = 2
+    cfg = cfgmod.PipelineConfig.from_properties(
+        cfgmod.load_properties("configs/example.properties")
+    )
+    cfg.checkpoint_dir = str(tmp_path / "ckpt")
+    cfg.max_retries = 1  # one failed write fails the micro-batch
+    state = os.path.join(cfg.checkpoint_dir, "jvm_window_state")
+    feed = _jvm_feed(spark, raw_feed_dir, str(tmp_path / "feed"), slices=4)
+    out = str(tmp_path / "landed")
+    land = sink.overwrite_by_batch_parquet_writer(out)
+
+    ran = []  # (batch_id, clock, input rows) per window call
+    real_apply = cwj.apply_count_window_batch
+
+    def recording_apply(batch_df, batch_id, state_dir, **kw):
+        rows = [tuple(r) for r in batch_df.select(*WINDOW_COLS[:2]).collect()]
+        ran.append((batch_id, kw["batch_time_ms"], rows))
+        return real_apply(batch_df, batch_id, state_dir, **kw)
+
+    monkeypatch.setattr(cwj, "apply_count_window_batch", recording_apply)
+
+    def run(write_fn):
+        raw = (
+            spark.readStream.schema(source.RAW_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
+        )
+        return job.start(
+            spark, cfg, write_fn=write_fn, raw=raw, available_now=True
+        )
+
+    def crash_after_landing(df):
+        batch_id = ran[-1][0]
+        land(df, batch_id)
+        if batch_id == k:
+            raise RuntimeError("injected crash before offset commit")
+
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run(crash_after_landing).awaitTermination(300)
+    assert [b for b, _, _ in ran] == list(range(k + 1))
+    assert os.path.exists(os.path.join(state, f"s{k}", "_OK"))
+    assert os.path.exists(os.path.join(cfg.checkpoint_dir, "offsets", str(k)))
+    assert not os.path.exists(
+        os.path.join(cfg.checkpoint_dir, "commits", str(k))
+    )
+    assert os.path.isdir(os.path.join(out, f"batch_id={k}"))
+
+    run(lambda df: land(df, ran[-1][0])).awaitTermination(300)
+    assert [b for b, _, _ in ran] == list(range(k + 1)) + list(range(k, 4))
+    replays = [rows for b, _, rows in ran if b == k]
+    assert sorted(replays[0]) == sorted(replays[1])  # same offsets replayed
+
+    batches = {b: (clock, rows) for b, clock, rows in ran}  # last run wins
+    assert sorted(r for _, rows in batches.values() for r in rows) == sorted(
+        _clean_rows(spark, feed, check_fields=tuple(cfg.check_fields))
+    )
+    want, held = cw_model.count_window(
+        [batches[b] for b in sorted(batches)],
+        cfg.window_size,
+        timeout_ms=60_000,
+    )
+    landed = spark.read.parquet(out).select(WINDOW_COLS).collect()
+    assert sorted(map(tuple, landed)) == sorted(want)
+    assert _held_state(spark, state) == held
+    assert any(tail for _, tail in held.values())
 
 
 @pytest.mark.slow
@@ -1718,21 +1708,12 @@ def test_curation_cli_smoke(spark, sf_dir, tmp_path):
     assert max(per_window.values()) <= 5
 
 
-@pytest.mark.slow
-def test_curation_engines_row_identical(spark, sf_dir, tmp_path):
-    """r12: the curation topology's two count-window engines (JVM
-    foreachBatch default vs legacy grouped-UDF) must emit identical
-    fired rows on a doc_id-ordered feed — the same topology-level
-    engine-identity pin job.start carries for the event chain. Runs
-    the STATELESS gate stages (score + decontam): they preserve
-    arrival order, so grouped-UDF arrival order and the JVM path's
-    explicit doc_id order coincide and the pin covers window_id AND
-    window_pos exactly. (The dedup stage's dropDuplicates state store
-    re-orders its output, so after it only membership is
-    contract-stable — pinned separately below.)"""
+def _curation_feed(spark, sf_dir, path):
+    """The documents fixture as a one-file doc_id-ordered feed (one
+    micro-batch under availableNow) plus the eval shingles of the
+    decontam stage."""
     from kafkatoclickhouse_spark.functions import hashing
     from kafkatoclickhouse_spark.operators import decontam as bd
-    from kafkatoclickhouse_spark.streaming.curation import start_curation
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -1743,8 +1724,7 @@ def test_curation_engines_row_identical(spark, sf_dir, tmp_path):
         .orderBy("doc_id")
         .coalesce(1)
     )
-    feed = tmp_path / "eng_feed"
-    docs.write.parquet(str(feed))
+    docs.write.parquet(str(path))
     evals = (
         docs.where(F.col("doc_id") % bd.EVAL_MOD == 0)
         .select(
@@ -1754,103 +1734,112 @@ def test_curation_engines_row_identical(spark, sf_dir, tmp_path):
         )
         .distinct()
     )
-    outs = {}
-    for engine in ("jvm", "grouped_udf"):
-        out_dir = tmp_path / f"out_{engine}"
-        rows_sink = []
+    return docs.schema, evals
 
-        def write_fn(df, _sink=rows_sink):
-            _sink.extend(df.collect())
 
-        stream = spark.readStream.schema(docs.schema).parquet(str(feed))
-        q = start_curation(
-            spark,
-            sf_dir,
-            stream,
-            write_fn=write_fn,
-            checkpoint_dir=str(tmp_path / f"ckpt_{engine}"),
-            stages=("score", "decontam"),
-            eval_shingles=evals,
-            window_size=5,
-            available_now=True,
-            engine=engine,
-        )
-        q.awaitTermination(300)
-        outs[engine] = sorted(
-            (r["doc_id"], r["window_id"], r["window_pos"])
-            for r in rows_sink
-        )
-    assert outs["jvm"] == outs["grouped_udf"]
-    assert len(outs["jvm"]) > 0
+def _drain_curation(spark, sf_dir, stream, ckpt, **kw):
+    """start_curation into an in-memory list of fired rows."""
+    from kafkatoclickhouse_spark.streaming.curation import start_curation
+
+    rows_sink = []
+    q = start_curation(
+        spark,
+        sf_dir,
+        stream,
+        write_fn=lambda df: rows_sink.extend(df.collect()),
+        checkpoint_dir=str(ckpt),
+        available_now=True,
+        **kw,
+    )
+    q.awaitTermination(300)
+    return rows_sink
 
 
 @pytest.mark.slow
-def test_curation_engines_same_membership_with_dedup(
-    spark, sf_dir, tmp_path
-):
+def test_curation_window_matches_model(spark, sf_dir, tmp_path):
+    """The curation topology's per-source count window emits exactly
+    the model's windows (``tests/cw_model.py``, key ``source``, order
+    ``doc_id``) over the curated stream drained without a window.
+    Runs the STATELESS gate stages (score + decontam) so the curated
+    set is the same in both drains; the pin covers window_id AND
+    window_pos exactly."""
+    from kafkatoclickhouse_spark.streaming.curation import curation_topology
+
+    feed = tmp_path / "eng_feed"
+    schema, evals = _curation_feed(spark, sf_dir, feed)
+    stages = ("score", "decontam")
+    fired = _drain_curation(
+        spark,
+        sf_dir,
+        spark.readStream.schema(schema).parquet(str(feed)),
+        tmp_path / "ckpt",
+        stages=stages,
+        eval_shingles=evals,
+        window_size=5,
+    )
+    curated = run_stream(
+        curation_topology(
+            spark.readStream.schema(schema).parquet(str(feed)),
+            spark,
+            sf_dir,
+            stages=stages,
+            eval_shingles=evals,
+        ),
+        "curation_nowindow",
+        tmp_path / "plain_ckpt",
+    ).select("source", "doc_id").collect()
+    want, _ = cw_model.count_window([(0, curated)], 5)
+    got = sorted(
+        (r["source"], r["doc_id"], r["window_id"], r["window_pos"],
+         r["flush_reason"])
+        for r in fired
+    )
+    assert got == sorted(want)
+    assert got
+
+
+@pytest.mark.slow
+def test_curation_window_membership_with_dedup(spark, sf_dir, tmp_path):
     """With the stateful dedup stage on, the state store's output
-    order is engine-visible, so the cross-engine contract weakens to
-    MEMBERSHIP: both engines fire the same multiset of curated
-    doc_ids. window_size=1 so no partial tails exist — with tails,
-    WHICH docs land in the never-fired tail depends on the state
-    store's order, and the two engines' finite-drain timeout
-    contracts differ by design (JVM keeps the flush armed)."""
+    order is not a contract, so the pin is MEMBERSHIP: with
+    window_size=1 every curated doc fires exactly once, as a
+    one-row count window — the same doc_id multiset as the curated
+    stream drained without a window."""
     from collections import Counter
 
-    from kafkatoclickhouse_spark.functions import hashing
-    from kafkatoclickhouse_spark.operators import decontam as bd
-    from kafkatoclickhouse_spark.streaming.curation import start_curation
+    from kafkatoclickhouse_spark.streaming.curation import curation_topology
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .withColumn(
-            "ingest_ts",
-            F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id")),
-        )
-        .orderBy("doc_id")
-        .coalesce(1)
-    )
     feed = tmp_path / "memb_feed"
-    docs.write.parquet(str(feed))
-    evals = (
-        docs.where(F.col("doc_id") % bd.EVAL_MOD == 0)
-        .select(
-            F.explode(
-                hashing.word_shingles(F.col("text"), bd.DECONTAM_N)
-            ).alias("shingle")
-        )
-        .distinct()
+    schema, evals = _curation_feed(spark, sf_dir, feed)
+    fired = _drain_curation(
+        spark,
+        sf_dir,
+        spark.readStream.schema(schema).parquet(str(feed)),
+        tmp_path / "mckpt",
+        eval_shingles=evals,
+        ts_col="ingest_ts",
+        window_size=1,
     )
-    fired = {}
-    for engine in ("jvm", "grouped_udf"):
-        rows_sink = []
-
-        def write_fn(df, _sink=rows_sink):
-            _sink.extend(df.collect())
-
-        stream = spark.readStream.schema(docs.schema).parquet(str(feed))
-        q = start_curation(
+    curated = run_stream(
+        curation_topology(
+            spark.readStream.schema(schema).parquet(str(feed)),
             spark,
             sf_dir,
-            stream,
-            write_fn=write_fn,
-            checkpoint_dir=str(tmp_path / f"mckpt_{engine}"),
             eval_shingles=evals,
             ts_col="ingest_ts",
-            window_size=1,
-            available_now=True,
-            engine=engine,
-        )
-        q.awaitTermination(300)
-        fired[engine] = rows_sink
-        sizes = Counter(
-            (r["source"], r["window_id"]) for r in rows_sink
-        )
-        assert sizes and max(sizes.values()) <= 1, engine
-    assert Counter(r["doc_id"] for r in fired["jvm"]) == Counter(
-        r["doc_id"] for r in fired["grouped_udf"]
+        ),
+        "curation_dedup_nowindow",
+        tmp_path / "plain_mckpt",
+    ).collect()
+    sizes = Counter((r["source"], r["window_id"]) for r in fired)
+    assert sizes and set(sizes.values()) == {1}
+    assert {(r["window_pos"], r["flush_reason"]) for r in fired} == {
+        (0, "count")
+    }
+    assert Counter(r["doc_id"] for r in fired) == Counter(
+        r["doc_id"] for r in curated
     )
-    assert fired["jvm"]
+    assert fired
 
 
 @pytest.mark.slow

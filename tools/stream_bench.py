@@ -4,21 +4,20 @@ sink) drained end-to-end with an availableNow trigger.
 
 The reference publishes no throughput numbers (BASELINE.md), so this
 records OUR side of the comparison: sustained rows/sec through the
-full streaming topology — source decode, JSON parse, dirty-split,
-stateful count window (applyInPandasWithState), sink projection and
-the foreachBatch retry wrapper — not a bare source-to-noop pass.
+full streaming topology (``job.start``) — source decode, JSON parse,
+dirty-split, the stateful count window (``count_window_jvm``, run
+inside foreachBatch), sink projection and the retry wrapper — not a
+bare source-to-noop pass.
 
 Usage: python tools/stream_bench.py [sf_dir] [window_size]
 Prints ONE JSON line:
   {"metric": "stream_ingest_rows_per_sec", "value": N,
    "rows": R, "wall_sec": W, "window_size": K, "sf": ...}
 
-``--breakdown`` (VERDICT r6 #9) additionally drains ABLATED
-topologies so cost attributes to stages by differencing: source →
-sink alone; + JSON parse/validate; + the count window on the legacy
-applyInPandasWithState path; + the count window on the Spark-4
-transformWithState path (runnable since the r7 protobuf shim) —
-the direct measurement of whether a tws rewrite matters at 100×.
+``--breakdown`` additionally drains ABLATED topologies so cost
+attributes to stages by differencing: source → sink alone; + JSON
+parse/validate; + the count window (publishing its fired files
+straight into the landing dir).
 """
 
 from __future__ import annotations
@@ -45,67 +44,40 @@ def breakdown(spark, feed: str, n_rows: int, work: str, window_size: int):
     """rows/sec for each ablated topology (warm + timed drain each;
     fresh checkpoint per drain). Differences between consecutive
     stages attribute the cost."""
-    from kafkatoclickhouse_spark.streaming import count_window, pipeline
+    from kafkatoclickhouse_spark.streaming import pipeline
 
-    def variant(name, transform, extra_conf=None):
+    def variant(name, transform):
         """warm drain + median of 3 timed drains (single drains were
         ±20% on this box — the median keeps round-over-round
         attribution honest)."""
         import statistics
 
-        prev = {}
-        for k, v in (extra_conf or {}).items():
-            prev[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
         walls = []
-        try:
-            for rnd in ("warm", "t0", "t1", "t2"):
-                ckpt = os.path.join(work, f"bk_{name}_{rnd}_ckpt")
-                out = os.path.join(work, f"bk_{name}_{rnd}_out")
-                raw = source.file_raw_stream(spark, feed)
-                t0 = time.perf_counter()
-                q = (
-                    transform(raw)
-                    .writeStream.foreachBatch(
-                        sink.foreach_batch_writer(sink.parquet_writer(out))
-                    )
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
+        for rnd in ("warm", "t0", "t1", "t2"):
+            ckpt = os.path.join(work, f"bk_{name}_{rnd}_ckpt")
+            out = os.path.join(work, f"bk_{name}_{rnd}_out")
+            raw = source.file_raw_stream(spark, feed)
+            t0 = time.perf_counter()
+            q = (
+                transform(raw)
+                .writeStream.foreachBatch(
+                    sink.foreach_batch_writer(sink.parquet_writer(out))
                 )
-                q.awaitTermination(600)
-                if rnd != "warm":
-                    walls.append(time.perf_counter() - t0)
-        finally:
-            for k, v in prev.items():
-                if v is not None:
-                    spark.conf.set(k, v)
-                else:
-                    # prior value None means the key was UNSET before
-                    # this variant; restore that, or the variant's
-                    # conf (e.g. the RocksDB provider) leaks into
-                    # every later variant / session user.
-                    spark.conf.unset(k)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(600)
+            if rnd != "warm":
+                walls.append(time.perf_counter() - t0)
         return round(n_rows / statistics.median(walls), 1)
 
     def parse_only(raw):
         clean, _ = pipeline.streaming_ingest(raw)
         return clean
 
-    def with_legacy_window(raw):
-        clean, _ = pipeline.streaming_ingest(raw)
-        return count_window.keyed_count_window(
-            clean, key="essCode", n=window_size, timeout_ms=None
-        )
-
-    def with_tws_window(raw):
-        clean, _ = pipeline.streaming_ingest(raw)
-        return count_window.keyed_count_window_tws(
-            clean, key="essCode", n=window_size
-        )
-
     def jvm_variant():
-        """The VERDICT r8 #1 path: foreachBatch + row_number modular
+        """The count window: foreachBatch + row_number modular
         windowing + versioned state table — no Python in the hot
         path. Runs its own query wiring (the window happens inside
         foreachBatch, not as a stream transform). Same warm + 3-timed
@@ -139,26 +111,11 @@ def breakdown(spark, feed: str, n_rows: int, work: str, window_size: int):
                 walls.append(time.perf_counter() - t0)
         return round(n_rows / statistics.median(walls), 1)
 
-    out = {
+    return {
         "source_sink": variant("src", lambda raw: raw),
         "parse_validate": variant("parse", parse_only),
-        "window_legacy": variant("legacy", with_legacy_window),
         "window_jvm": jvm_variant(),
     }
-    try:
-        out["window_tws"] = variant(
-            "tws",
-            with_tws_window,
-            extra_conf={
-                "spark.sql.streaming.stateStore.providerClass": (
-                    "org.apache.spark.sql.execution.streaming.state."
-                    "RocksDBStateStoreProvider"
-                )
-            },
-        )
-    except Exception as exc:  # noqa: BLE001 — protobuf/env-gated
-        out["window_tws"] = f"unavailable: {type(exc).__name__}"
-    return out
 
 
 def curate_breakdown(spark, sf_dir: str, work: str, window_size: int):
