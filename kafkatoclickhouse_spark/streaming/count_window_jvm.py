@@ -12,8 +12,8 @@ flush (``timeout_ms``) that fires such tails with ``flush_reason =
 Spark has no native count window. A grouped pandas UDF
 (``applyInPandasWithState``) is protocol-bound at ~0.9 ms per key per
 micro-batch (BASELINE.md r8 attribution), so the window runs inside
-``foreachBatch`` with zero Python in the hot path and exactly ONE
-Spark job per micro-batch:
+``foreachBatch`` with zero Python in the hot path and one
+shuffle + one partitioned write per micro-batch:
 
     foreachBatch(micro-batch):
       state rows (per-key counter row + ≤N−1 tail rows) ∪ batch rows
@@ -31,6 +31,13 @@ Spark job per micro-batch:
           write-then-commit pattern, zero second data pass;
           other sinks (JDBC): the fired partition scans out through
           ``write_fn``.
+
+Through ``job.start`` (the ``write_fn`` path) that is three Spark jobs
+per micro-batch, as read from the status store in a traced
+``perfbench`` ``stream_trickle`` run (``spark.jobs_per_op = 3.0``):
+AQE's shuffle-map job (scan of carried state + batch, shuffle write),
+the partitioned write (its map stage skipped as already run), and the
+sink's scan of the fired partition. The publish path skips the third.
 
 State snapshots are versioned BY MICRO-BATCH ID — the standard
 foreachBatch idempotence pattern: batch ``b`` always loads snapshot
@@ -161,7 +168,7 @@ def apply_count_window_batch(
     batch_time_ms: int | None = None,
 ) -> DataFrame:
     """One micro-batch of the JVM count window: commits the successor
-    state snapshot (one partitioned write — the batch's only job) and
+    state snapshot (one shuffle + one partitioned write) and
     returns the FIRED rows (batch columns + window_id/window_pos/
     flush_reason — the output contract) as a
     scan over the snapshot's fired partition. A failure anywhere
@@ -186,13 +193,13 @@ def apply_count_window_batch(
     tail as one partial window (``flush_reason='timeout'``, positions
     0..len−1) at its current counter and drops its state, so its
     window counter restarts at 0 on the next arrival.
-    ``batch_time_ms`` is the batch's clock (required when
+    ``batch_time_ms`` is the batch's clock in ms ≥ 0 (required when
     ``timeout_ms`` is set); with a deterministic clock (e.g. max
     event-time of the batch) replays stay bit-identical, with wall
     clock a replay may flush at a different boundary — the
     at-least-once caveat of any processing-time timer."""
-    if timeout_ms is not None and batch_time_ms is None:
-        raise ValueError("timeout_ms requires batch_time_ms")
+    if timeout_ms is not None and (batch_time_ms is None or batch_time_ms < 0):
+        raise ValueError("timeout_ms requires batch_time_ms >= 0")
     spark = batch_df.sparkSession
     cols = batch_df.columns
     pending, ctr = _load_state(spark, state_dir, batch_id, batch_df.schema)
@@ -248,25 +255,23 @@ def apply_count_window_batch(
     whole = ordered.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    ann = (
-        unioned.withColumn("_rn", F.row_number().over(ordered))
-        .withColumn("_cnt", F.count(F.lit(1)).over(whole))
-        .withColumn(
-            "_nph", F.sum((F.col("_src") == -1).cast("int")).over(whole)
-        )
-        .withColumn(
-            "_base", F.coalesce(F.max("_ctr_val").over(whole), F.lit(0))
-        )
-        .withColumn(
-            "_new", F.max((F.col("_src") == 1).cast("int")).over(whole)
-        )
-        .withColumn("_last_ts", F.max("_ctr_ts").over(whole))
-    )
-    # The counter row is MINTED by exploding each key's last row into
-    # a data role + a counter role — row duplication without a second
-    # pass over the shuffle (the union-two-filters alternative costs
-    # a full extra WindowExec + sort).
-    ann = ann.withColumn(
+    # The window annotations are one select (chained withColumn calls
+    # re-analyse the whole plan once each). The counter row is MINTED
+    # in a second projection — a generator cannot take window
+    # expressions — by exploding each key's last row into a data role
+    # + a counter role: row duplication without a second pass over the
+    # shuffle (the union-two-filters alternative costs a full extra
+    # WindowExec + sort).
+    ann = unioned.select(
+        *cols,
+        "_src",
+        F.row_number().over(ordered).alias("_rn"),
+        F.count(F.lit(1)).over(whole).alias("_cnt"),
+        F.sum((F.col("_src") == -1).cast("int")).over(whole).alias("_nph"),
+        F.coalesce(F.max("_ctr_val").over(whole), F.lit(0)).alias("_base"),
+        F.max((F.col("_src") == 1).cast("int")).over(whole).alias("_new"),
+        F.max("_ctr_ts").over(whole).alias("_last_ts"),
+    ).withColumn(
         "_role",
         F.explode(
             F.when(
@@ -286,19 +291,34 @@ def apply_count_window_batch(
     # whole tail as ONE partial window at the base counter (positions
     # = buffered order) and mint NO ctr row — state removed, counter
     # resets on the next arrival.
+    #
+    # The clock enters the plan only as STRING literals. Spark inlines
+    # long literals into the generated Java, and the codegen cache is
+    # keyed on the generated source text, so a long clock (or a cast
+    # of a string one, which constant folding turns back into a long)
+    # would compile new classes on every batch; string literals are
+    # passed by reference, so steady batches reuse the same classes.
+    # Zero-padded to 20 characters, clocks ≥ 0 compare as strings in
+    # numeric order, and a negative deadline's leading '-' sorts below
+    # every padded clock.
     if timeout_ms is None:
         expired = F.lit(False)
         ctr_ts = F.lit(None).cast("string")
     else:
+        last_ts = F.col("_last_ts").cast("string")
+        # last_ts ≤ batch_time_ms − timeout_ms
         expired = (
             (F.col("_new") == 0)
             & F.col("_last_ts").isNotNull()
-            & (F.lit(batch_time_ms) - F.col("_last_ts") >= timeout_ms)
+            & (
+                F.lpad(last_ts, 20, "0")
+                <= F.lit(f"{batch_time_ms - timeout_ms:020d}")
+            )
         )
         # activity clock forward: reset on data, carried while idle
         ctr_ts = F.when(
-            F.col("_new") == 1, F.lit(batch_time_ms)
-        ).otherwise(F.col("_last_ts")).cast("string")
+            F.col("_new") == 1, F.lit(str(batch_time_ms))
+        ).otherwise(last_ts)
 
     rows = ann.filter(
         (is_ctr & ~expired) | (~is_ctr & (F.col("_src") >= 0))
@@ -335,19 +355,13 @@ def apply_count_window_batch(
         os.remove(os.path.join(snap, _OK))
     except FileNotFoundError:
         pass
-    # THE job: one shuffle on the key, ONE sort, one partitioned write
-    # splitting fired/tail/ctr. Nothing else runs per batch.
+    # One shuffle on the key, ONE sort, one partitioned write
+    # splitting fired/tail/ctr (AQE runs the shuffle as its own job).
     # Concurrent output writers skip FileFormatWriter's extra sort on
     # the partition column (only 3 values). Conf churn is safe here:
     # foreachBatch handlers run serially within the query.
     tune = {
         "spark.sql.maxConcurrentOutputFileWriters": "4",
-        # v2 commit: task files move at task commit, not in a serial
-        # driver-side job-commit rename pass — per-batch latency win;
-        # safe here because the _OK marker (written after the job
-        # returns) is the real commit point, so a partial v2 write is
-        # never observed as committed state.
-        "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
     }
     if shuffle_partitions is not None:
         tune["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

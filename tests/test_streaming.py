@@ -1293,32 +1293,12 @@ def test_count_window_jvm_multi_batch_carryover(spark, raw_feed_dir, tmp_path):
     assert got.filter(F.col("flush_reason") != "count").count() == 0
 
 
-def test_count_window_jvm_timeout_flush_matches_legacy(spark, tmp_path):
-    """The ``timeout_ms`` contract matches the model of the reference
-    window with its partial-window timeout (``tests/cw_model.py``):
-    idle keys past the deadline flush their tail as one 'timeout'
-    partial window and reset their counter; active or fresh keys do
-    not. The same 4-batch sequence (with an explicit deterministic
-    clock) is driven through apply_count_window_batch and through the
-    model; fired rows and the carried state must be identical."""
-    n, tmo = 5, 60_000
+def _window_batches(spark, state, batches, n, tmo):
+    """Run ``(clock, rows)`` batches through apply_count_window_batch,
+    yielding the fired rows so far after each one; by then those rows
+    and the held state have been checked against the model's on the
+    same prefix."""
     schema = "essCode string, topicOffset long, payload string"
-    batches = [
-        (
-            1_000,
-            [("E", i, f"e{i}") for i in range(3)]
-            + [("F", i, f"f{i}") for i in range(2)],
-        ),
-        # E idle but NOT yet expired (29s < 60s); F active again
-        (30_000, [("F", 10, "f10")]),
-        # E expired (last activity 1s), F expired too (30s + 60s ≤
-        # 120s); G arrives fresh
-        (120_000, [("G", i, f"g{i}") for i in range(2)]),
-        # E returns AFTER its flush: counter restarted at window 0;
-        # G idle but fresh (10s) — stays buffered
-        (130_000, [("E", 100 + i, f"e{100 + i}") for i in range(7)]),
-    ]
-    state = str(tmp_path / "tmo_state")
     got = []
     for bid, (clock, rows) in enumerate(batches):
         fired = cwj.apply_count_window_batch(
@@ -1330,13 +1310,98 @@ def test_count_window_jvm_timeout_flush_matches_legacy(spark, tmp_path):
             batch_time_ms=clock,
         )
         got += [tuple(r) for r in fired.select(WINDOW_COLS).collect()]
+        expect, held = cw_model.count_window(
+            batches[: bid + 1], n, timeout_ms=tmo
+        )
+        assert sorted(got) == sorted(expect), f"batch {bid}"
+        assert _held_state(spark, state) == held, f"batch {bid}"
+        yield got
 
-    expect, held = cw_model.count_window(batches, n, timeout_ms=tmo)
-    assert sorted(got) == sorted(expect)
-    assert _held_state(spark, state) == held
+
+def _rows(key, offsets):
+    return [(key, i, f"{key.lower()}{i}") for i in offsets]
+
+
+def test_count_window_jvm_timeout_flush_matches_legacy(spark, tmp_path):
+    """The ``timeout_ms`` contract matches the model of the reference
+    window with its partial-window timeout (``tests/cw_model.py``):
+    idle keys past the deadline flush their tail as one 'timeout'
+    partial window and reset their counter; active or fresh keys do
+    not. Batch sequences with an explicit deterministic clock are
+    driven through apply_count_window_batch and through the model;
+    fired rows and the carried state must be identical after every
+    batch."""
+    n, tmo = 5, 60_000
+    batches = [
+        (1_000, _rows("E", range(3)) + _rows("F", range(2))),
+        # E idle but NOT yet expired (29s < 60s); F active again
+        (30_000, _rows("F", [10])),
+        # E expired (last activity 1s), F expired too (30s + 60s ≤
+        # 120s); G arrives fresh
+        (120_000, _rows("G", range(2))),
+        # E returns AFTER its flush: counter restarted at window 0;
+        # G idle but fresh (10s) — stays buffered
+        (130_000, _rows("E", range(100, 107))),
+    ]
+    *_, got = _window_batches(
+        spark, str(tmp_path / "tmo_state"), batches, n, tmo
+    )
     # the sequence exercised both flush kinds
-    reasons = {r[-1] for r in got}
-    assert reasons == {"timeout", "count"}
+    assert {r[-1] for r in got} == {"timeout", "count"}
+
+    # The boundary: the engine compares clocks as zero-padded strings
+    # (count_window_jvm), so pin the exact deadline, a negative
+    # deadline and clocks of different digit widths.
+    boundary = [
+        (500, _rows("A", range(2)) + _rows("B", [0])),
+        # deadline 59_999 − 60_000 < 0: idle A and B are kept
+        (59_999, _rows("C", [0])),
+        # A fills window 0 (empty tail); B idle 99_499 expires
+        (99_999, _rows("A", range(2, 5)) + _rows("D", range(2))),
+        # 5 → 6 digit clocks; C idle 40_001 is kept
+        (100_000, _rows("E", range(3))),
+        # A and D idle exactly 60_000 expire, C expires; E (6-digit
+        # last activity against a 5-digit deadline) idle 59_999 is kept
+        (159_999, _rows("F", [0])),
+        # E idle exactly 60_000 expires; F idle 1 ms is kept
+        (160_000, []),
+    ]
+    *_, got = _window_batches(
+        spark, str(tmp_path / "edge_state"), boundary, n, tmo
+    )
+    _, held = cw_model.count_window(boundary, n, timeout_ms=tmo)
+    assert set(held) == {"F"}
+    timed_out = {r[0] for r in got if r[-1] == "timeout"}
+    assert timed_out == {"B", "C", "D", "E"}
+    _, held = cw_model.count_window(boundary[:5], n, timeout_ms=tmo)
+    assert set(held) == {"E", "F"}
+
+
+def test_count_window_jvm_steady_batches_compile_nothing(spark, tmp_path):
+    """A steady micro-batch compiles no new code. With the timeout
+    armed, every batch has a new clock; if the clock reached the plan
+    as a value Spark inlines into the generated Java (a long literal),
+    each batch would compile new classes. After two warm-up batches
+    (the first has no state to union), Janino's compile counter must
+    not move over four more batches, their fired rows collected and
+    checked against the model."""
+    n, tmo = 5, 60_000
+    counter = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = counter.METRIC_COMPILATION_TIME().getCount
+    # a new clock every batch; every key gets a row, K0 or K1 three more
+    batches = [
+        (
+            10_000 + 7_919 * b,
+            _rows(f"K{b % 2}", range(30 * b, 30 * b + 3))
+            + [(f"K{i}", 30 * b + 10 + i, "p") for i in range(7)],
+        )
+        for b in range(6)
+    ]
+    counts = [
+        compiles()
+        for _ in _window_batches(spark, str(tmp_path / "state"), batches, n, tmo)
+    ]
+    assert counts[2:] == [counts[1]] * 4, counts
 
 
 def test_count_window_jvm_rejects_missing_predecessor_snapshot(
