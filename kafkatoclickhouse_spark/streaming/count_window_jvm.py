@@ -32,6 +32,16 @@ shuffle + one partitioned write per micro-batch:
           other sinks (JDBC): the fired partition scans out through
           ``write_fn``.
 
+Everything from the union to the ``_part`` column is ONE generated
+``spark.sql`` statement over temp views of the batch and the two
+state partitions (``_window_sql``), so the driver parses and analyses
+the plan once per micro-batch, where a chain of DataFrame calls
+analyses every intermediate Dataset again; on a small batch that
+driver work is a large share of the latency. Column names are
+backtick-quoted into the text, and the
+batch clock enters it only as string literals, so a steady batch
+compiles no new code (see the timeout comment in ``_window_sql``).
+
 Through ``job.start`` (the ``write_fn`` path) that is three Spark jobs
 per micro-batch, as read from the status store in a traced
 ``perfbench`` ``stream_trickle`` run (``spark.jobs_per_op = 3.0``):
@@ -63,9 +73,9 @@ partition's files carry EXACTLY the output schema (batch columns +
 window_id/window_pos/flush_reason) and can be linked into the
 landing zone untouched.
 
-Scale: per batch the only data-sized work is one shuffle + one
-partitioned write of the batch itself; carried state is one counter
-row plus ≤N−1 tail rows per key — megabytes at millions of keys. At
+Scale: carried state is one counter row plus ≤N−1 tail rows per
+key — megabytes at millions of keys — but every batch shuffles and
+rewrites all of it, not only the keys the batch touched. At
 100 TB the snapshot dir lives on the object store (same parquet
 writes; publish-by-rename is the object-store commit pattern); GC
 keeps exactly two versions.
@@ -76,10 +86,10 @@ from __future__ import annotations
 import os
 import shutil
 import time
+import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 DEFAULT_WINDOW_SIZE = 20  # reference prod default, KafakToClickhouse.scala:57
@@ -95,14 +105,16 @@ def _committed(path: str) -> bool:
     return os.path.exists(os.path.join(path, _OK))
 
 
-def _rows_schema(batch_schema: T.StructType) -> T.StructType:
+def _out_schema(batch_schema: T.StructType) -> T.StructType:
+    """The schema of every snapshot partition's files: the batch
+    columns plus window_id/window_pos/flush_reason (``_part`` lives in
+    the directory names, not in the files)."""
     return T.StructType(
         list(batch_schema.fields)
         + [
             T.StructField("window_id", T.LongType()),
             T.StructField("window_pos", T.IntegerType()),
             T.StructField("flush_reason", T.StringType()),
-            T.StructField("_part", T.StringType()),
         ]
     )
 
@@ -111,10 +123,10 @@ def _read_part(
     spark: SparkSession,
     snap: str,
     part: str,
-    rows_schema: T.StructType,
-) -> DataFrame:
-    """One `_part=` partition of a snapshot (empty frame if the
-    partition wrote no rows and hence no directory)."""
+    schema: T.StructType,
+) -> DataFrame | None:
+    """One ``_part=`` partition of a snapshot read with ``schema``, or
+    None if the partition wrote no rows and hence no directory."""
     part_dir = os.path.join(snap, "rows", f"_part={part}")
     if not os.path.isdir(part_dir):
         # None (not an empty frame): a bare createDataFrame([], schema)
@@ -122,11 +134,7 @@ def _read_part(
         # cores-many no-op tasks to every downstream union stage —
         # callers skip the union branch instead.
         return None
-    return (
-        spark.read.schema(rows_schema)
-        .option("basePath", os.path.join(snap, "rows"))
-        .parquet(part_dir)
-    )
+    return spark.read.schema(schema).parquet(part_dir)
 
 
 def _load_state(
@@ -134,14 +142,13 @@ def _load_state(
     state_dir: str,
     batch_id: int,
     batch_schema: T.StructType,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame | None, DataFrame | None]:
     """(pending tail rows — buffer position in ``window_pos``, counter
     rows — next window id in ``window_id``) as of BEFORE ``batch_id``.
     Batch 0 starts empty; any later batch must find the committed
     predecessor snapshot — a missing one means the state dir diverged
     from the checkpoint, which silently restarting windows from zero
     would corrupt, so raise instead."""
-    rows_schema = _rows_schema(batch_schema)
     if batch_id == 0:
         return None, None
     prev = _snap(state_dir, batch_id - 1)
@@ -150,10 +157,155 @@ def _load_state(
             f"no committed state snapshot {prev} for batch {batch_id} "
             "(checkpoint/state divergence)"
         )
+    schema = _out_schema(batch_schema)
     return (
-        _read_part(spark, prev, "tail", rows_schema),
-        _read_part(spark, prev, "ctr", rows_schema),
+        _read_part(spark, prev, "tail", schema),
+        _read_part(spark, prev, "ctr", schema),
     )
+
+
+def _q(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _window_sql(
+    cols: list[str],
+    key: str,
+    n: int,
+    order_col: str,
+    batch: str,
+    tail: str | None,
+    ctr: str | None,
+    timeout_ms: int | None,
+    batch_time_ms: int | None,
+) -> str:
+    """The whole window step as one statement over the views ``batch``,
+    ``tail`` and ``ctr`` (None: the partition is absent). Its rows are
+    the successor snapshot: batch columns + window_id/window_pos/
+    flush_reason + ``_part``."""
+    data = ", ".join(_q(c) for c in cols)
+    # Total per-key order: counter phantom first (_src −1), carried
+    # tail next in buffered order (_src 0), then this batch's rows by
+    # order_col (_src 1) — replay-deterministic. The phantom carries
+    # the key's next-window counter in _ctr_val and its last-activity
+    # clock, packed into the ctr row's flush_reason slot by the
+    # previous batch, in _ctr_ts (NULL on snapshots written before
+    # timeouts were enabled — such keys never expire until their next
+    # arrival); data rows carry nulls. An absent state partition
+    # contributes NO union branch, so batch 0 scans only the batch.
+    branches = []
+    if ctr is not None:
+        branches.append(
+            f"SELECT {data}, -1 AS _src, CAST(-1 AS BIGINT) AS _ord,"
+            " window_id AS _ctr_val,"
+            f" CAST(flush_reason AS BIGINT) AS _ctr_ts FROM {ctr}"
+        )
+    if tail is not None:
+        branches.append(
+            f"SELECT {data}, 0 AS _src, CAST(window_pos AS BIGINT) AS _ord,"
+            " CAST(NULL AS BIGINT) AS _ctr_val,"
+            f" CAST(NULL AS BIGINT) AS _ctr_ts FROM {tail}"
+        )
+    branches.append(
+        f"SELECT {data}, 1 AS _src, CAST({_q(order_col)} AS BIGINT) AS _ord,"
+        " CAST(NULL AS BIGINT) AS _ctr_val,"
+        f" CAST(NULL AS BIGINT) AS _ctr_ts FROM {batch}"
+    )
+    unioned = "\n  UNION ALL\n  ".join(branches)
+
+    n = int(n)
+    idx = "(_rn - 1 - _nph)"
+    n_data = "(_cnt - _nph)"
+    fired_rows = f"(CAST({n_data} / {n} AS BIGINT) * {n})"
+    is_fired = f"({idx} < {fired_rows})"
+    next_window = f"(_base + CAST({n_data} / {n} AS BIGINT))"
+    is_ctr = "(_role = 'c')"
+    # Timeout expiry: a key is expired iff it saw no batch rows AND
+    # its last-activity clock is old enough. Expired keys fire their
+    # whole tail as ONE partial window at the base counter (positions
+    # = buffered order) and mint NO ctr row — state removed, counter
+    # resets on the next arrival.
+    #
+    # The clock enters the statement only as STRING literals. Spark
+    # inlines long literals into the generated Java, and the codegen
+    # cache is keyed on the generated source text, so a long clock (or
+    # a cast of a string one, which constant folding turns back into a
+    # long) would compile new classes on every batch; string literals
+    # are passed by reference, so steady batches reuse the same
+    # classes. Zero-padded to 20 characters, clocks ≥ 0 compare as
+    # strings in numeric order, and a negative deadline's leading '-'
+    # sorts below every padded clock.
+    if timeout_ms is None:
+        expired = "false"
+        ctr_ts = "CAST(NULL AS STRING)"
+    else:
+        deadline = f"{int(batch_time_ms) - int(timeout_ms):020d}"
+        # _last_ts ≤ batch_time_ms − timeout_ms
+        expired = (
+            "(_new = 0 AND _last_ts IS NOT NULL"
+            f" AND lpad(CAST(_last_ts AS STRING), 20, '0') <= '{deadline}')"
+        )
+        # activity clock forward: reset on data, carried while idle
+        ctr_ts = (
+            f"CASE WHEN _new = 1 THEN '{int(batch_time_ms)}'"
+            " ELSE CAST(_last_ts AS STRING) END"
+        )
+    partition = f"PARTITION BY {_q(key)} ORDER BY _src, _ord"
+    # ALL window functions share one (partition, order) spec — the
+    # whole-partition aggregates use an explicit unbounded frame so
+    # they ride the same WindowExec (hence the same single sort) as
+    # row_number. The counter row is MINTED after the window, in its
+    # own CTE — Spark rejects a generator over window expressions in
+    # one projection — by exploding each key's last row into a data
+    # role + a counter role: row duplication without a second pass
+    # over the shuffle (the union-two-filters alternative costs a full
+    # extra WindowExec + sort).
+    return f"""
+WITH unioned AS (
+  {unioned}
+), annotated AS (
+  SELECT {data}, _src,
+    row_number() OVER w AS _rn,
+    count(1) OVER whole AS _cnt,
+    sum(CAST(_src = -1 AS INT)) OVER whole AS _nph,
+    coalesce(max(_ctr_val) OVER whole, 0) AS _base,
+    max(CAST(_src = 1 AS INT)) OVER whole AS _new,
+    max(_ctr_ts) OVER whole AS _last_ts
+  FROM unioned
+  WINDOW w AS ({partition}),
+    whole AS ({partition}
+      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+), roles AS (
+  SELECT * FROM annotated
+  LATERAL VIEW explode(
+    CASE WHEN _rn = _cnt THEN array('d', 'c') ELSE array('d') END
+  ) minted AS _role
+)
+SELECT {data},
+  -- window_id doubles as the ctr row's next-window counter
+  CASE WHEN {is_ctr} THEN {next_window}
+    WHEN {expired} THEN _base
+    WHEN {is_fired} THEN _base + CAST({idx} / {n} AS BIGINT)
+  END AS window_id,
+  -- window_pos doubles as the tail's buffer position (0..n−2)
+  CAST(CASE WHEN {is_ctr} THEN -1
+    WHEN {expired} THEN {idx}
+    WHEN {is_fired} THEN {idx} % {n}
+    ELSE {idx} - {fired_rows}
+  END AS INT) AS window_pos,
+  -- flush_reason doubles as the ctr row's last-activity clock
+  CASE WHEN NOT {is_ctr} AND {expired} THEN 'timeout'
+    WHEN NOT {is_ctr} AND {is_fired} THEN 'count'
+    WHEN {is_ctr} THEN {ctr_ts}
+  END AS flush_reason,
+  CASE WHEN {is_ctr} THEN 'ctr'
+    WHEN {expired} OR {is_fired} THEN 'fired'
+    ELSE 'tail'
+  END AS _part
+FROM roles
+WHERE ({is_ctr} AND NOT {expired}) OR (NOT {is_ctr} AND _src >= 0)
+"""
 
 
 def apply_count_window_batch(
@@ -163,7 +315,6 @@ def apply_count_window_batch(
     key: str = "essCode",
     n: int = DEFAULT_WINDOW_SIZE,
     order_col: str = "topicOffset",
-    shuffle_partitions: int | None = None,
     timeout_ms: int | None = None,
     batch_time_ms: int | None = None,
 ) -> DataFrame:
@@ -174,14 +325,6 @@ def apply_count_window_batch(
     scan over the snapshot's fired partition. A failure anywhere
     replays the batch, which deterministically recomputes the
     identical snapshot and fired rows from ``s{b-1}``.
-
-    ``shuffle_partitions`` sizes the window shuffle to the MICRO-BATCH
-    (e.g. 8 for ~100k-row batches), not to the session default that is
-    tuned for full-table scans: with AQE's parallelism-first coalescing
-    the default fans a megabyte batch into cores×3 tiny files whose
-    per-task/per-file overhead swamps the data. Set it ≈
-    batch_bytes / 64 MB on a real deployment; None keeps the session
-    value.
 
     ``timeout_ms`` enables the partial-window flush (SURVEY §4.3 — the
     fix for the reference's forever-stuck partial windows): the ctr
@@ -201,151 +344,40 @@ def apply_count_window_batch(
     if timeout_ms is not None and (batch_time_ms is None or batch_time_ms < 0):
         raise ValueError("timeout_ms requires batch_time_ms >= 0")
     spark = batch_df.sparkSession
-    cols = batch_df.columns
     pending, ctr = _load_state(spark, state_dir, batch_id, batch_df.schema)
 
-    # Total per-key order: counter phantom first (_src −1), carried
-    # tail next in buffered order (_src 0), then this batch's rows by
-    # order_col (_src 1) — replay-deterministic. The phantom carries
-    # the key's next-window counter in _ctr_val; data rows carry null.
-    # Absent state partitions contribute NO union branch (None), so
-    # batch 0 and evenly-divided batches stay single-source plans.
-    branches = []
-    if ctr is not None:
-        branches.append(
-            ctr.select(
-                *cols,
-                F.lit(-1).alias("_src"),
-                F.lit(-1).cast("long").alias("_ord"),
-                F.col("window_id").alias("_ctr_val"),
-                # last-activity clock, packed into the ctr row's
-                # flush_reason slot by the previous batch (NULL on
-                # snapshots written before timeouts were enabled —
-                # such keys never expire until their next arrival)
-                F.col("flush_reason").cast("long").alias("_ctr_ts"),
-            )
-        )
-    if pending is not None:
-        branches.append(
-            pending.select(
-                *cols,
-                F.lit(0).alias("_src"),
-                F.col("window_pos").cast("long").alias("_ord"),
-                F.lit(None).cast("long").alias("_ctr_val"),
-                F.lit(None).cast("long").alias("_ctr_ts"),
-            )
-        )
-    branches.append(
-        batch_df.select(
-            *cols,
-            F.lit(1).alias("_src"),
-            F.col(order_col).cast("long").alias("_ord"),
-            F.lit(None).cast("long").alias("_ctr_val"),
-            F.lit(None).cast("long").alias("_ctr_ts"),
-        )
-    )
-    unioned = branches[0]
-    for b in branches[1:]:
-        unioned = unioned.unionByName(b)
-    # ALL window functions share one (partition, order) spec — the
-    # whole-partition aggregates use an explicit unbounded frame so
-    # they ride the same WindowExec (hence the same single sort) as
-    # row_number.
-    ordered = Window.partitionBy(key).orderBy("_src", "_ord")
-    whole = ordered.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    # The window annotations are one select (chained withColumn calls
-    # re-analyse the whole plan once each). The counter row is MINTED
-    # in a second projection — a generator cannot take window
-    # expressions — by exploding each key's last row into a data role
-    # + a counter role: row duplication without a second pass over the
-    # shuffle (the union-two-filters alternative costs a full extra
-    # WindowExec + sort).
-    ann = unioned.select(
-        *cols,
-        "_src",
-        F.row_number().over(ordered).alias("_rn"),
-        F.count(F.lit(1)).over(whole).alias("_cnt"),
-        F.sum((F.col("_src") == -1).cast("int")).over(whole).alias("_nph"),
-        F.coalesce(F.max("_ctr_val").over(whole), F.lit(0)).alias("_base"),
-        F.max((F.col("_src") == 1).cast("int")).over(whole).alias("_new"),
-        F.max("_ctr_ts").over(whole).alias("_last_ts"),
-    ).withColumn(
-        "_role",
-        F.explode(
-            F.when(
-                F.col("_rn") == F.col("_cnt"),
-                F.array(F.lit("d"), F.lit("c")),
-            ).otherwise(F.array(F.lit("d")))
-        ),
-    )
-    idx = F.col("_rn") - 1 - F.col("_nph")
-    n_data = F.col("_cnt") - F.col("_nph")
-    fired_rows = (n_data / n).cast("long") * n
-    is_fired = idx < fired_rows
-    next_window = F.col("_base") + (n_data / n).cast("long")
-    is_ctr = F.col("_role") == "c"
-    # Timeout expiry: a key is expired iff it saw no batch rows AND
-    # its last-activity clock is old enough. Expired keys fire their
-    # whole tail as ONE partial window at the base counter (positions
-    # = buffered order) and mint NO ctr row — state removed, counter
-    # resets on the next arrival.
-    #
-    # The clock enters the plan only as STRING literals. Spark inlines
-    # long literals into the generated Java, and the codegen cache is
-    # keyed on the generated source text, so a long clock (or a cast
-    # of a string one, which constant folding turns back into a long)
-    # would compile new classes on every batch; string literals are
-    # passed by reference, so steady batches reuse the same classes.
-    # Zero-padded to 20 characters, clocks ≥ 0 compare as strings in
-    # numeric order, and a negative deadline's leading '-' sorts below
-    # every padded clock.
-    if timeout_ms is None:
-        expired = F.lit(False)
-        ctr_ts = F.lit(None).cast("string")
-    else:
-        last_ts = F.col("_last_ts").cast("string")
-        # last_ts ≤ batch_time_ms − timeout_ms
-        expired = (
-            (F.col("_new") == 0)
-            & F.col("_last_ts").isNotNull()
-            & (
-                F.lpad(last_ts, 20, "0")
-                <= F.lit(f"{batch_time_ms - timeout_ms:020d}")
-            )
-        )
-        # activity clock forward: reset on data, carried while idle
-        ctr_ts = F.when(
-            F.col("_new") == 1, F.lit(str(batch_time_ms))
-        ).otherwise(last_ts)
+    # The statement reads the batch and the state partitions through
+    # temp views under per-call names, which cannot clash with the
+    # caller's views; they are dropped as soon as the statement is
+    # analysed, which has resolved them into its plan.
+    token = uuid.uuid4().hex
+    views = []
 
-    rows = ann.filter(
-        (is_ctr & ~expired) | (~is_ctr & (F.col("_src") >= 0))
-    ).select(
-        *cols,
-        # window_id doubles as the ctr row's next-window counter
-        F.when(is_ctr, next_window)
-        .when(expired, F.col("_base"))
-        .when(is_fired, F.col("_base") + (idx / n).cast("long"))
-        .alias("window_id"),
-        # window_pos doubles as the tail's buffer position (0..n−2)
-        F.when(is_ctr, F.lit(-1))
-        .when(expired, idx)
-        .when(is_fired, idx % n)
-        .otherwise(idx - fired_rows)
-        .cast("int")
-        .alias("window_pos"),
-        # flush_reason doubles as the ctr row's last-activity clock
-        F.when(~is_ctr & expired, F.lit("timeout"))
-        .when(~is_ctr & is_fired, F.lit("count"))
-        .when(is_ctr, ctr_ts)
-        .alias("flush_reason"),
-        F.when(is_ctr, F.lit("ctr"))
-        .when(expired | is_fired, F.lit("fired"))
-        .otherwise(F.lit("tail"))
-        .alias("_part"),
-    )
+    def view(tag: str, df: DataFrame | None) -> str | None:
+        if df is None:
+            return None
+        name = f"_cw_{tag}_{token}"
+        df.createOrReplaceTempView(name)
+        views.append(name)
+        return name
+
+    try:
+        rows = spark.sql(
+            _window_sql(
+                batch_df.columns,
+                key,
+                n,
+                order_col,
+                batch=view("batch", batch_df),
+                tail=view("tail", pending),
+                ctr=view("ctr", ctr),
+                timeout_ms=timeout_ms,
+                batch_time_ms=batch_time_ms,
+            )
+        )
+    finally:
+        for name in views:
+            spark.catalog.dropTempView(name)
 
     snap = _snap(state_dir, batch_id)
     # Re-running a replayed batch overwrites its own snapshot: drop the
@@ -357,36 +389,18 @@ def apply_count_window_batch(
         pass
     # One shuffle on the key, ONE sort, one partitioned write
     # splitting fired/tail/ctr (AQE runs the shuffle as its own job).
-    # Concurrent output writers skip FileFormatWriter's extra sort on
-    # the partition column (only 3 values). Conf churn is safe here:
-    # foreachBatch handlers run serially within the query.
-    tune = {
-        "spark.sql.maxConcurrentOutputFileWriters": "4",
-    }
-    if shuffle_partitions is not None:
-        tune["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    prev_conf = {k: spark.conf.get(k, None) for k in tune}
-    for k, v in tune.items():
-        spark.conf.set(k, v)
-    try:
-        rows.write.mode("overwrite").partitionBy("_part").parquet(
-            os.path.join(snap, "rows")
-        )
-    finally:
-        for k, v in prev_conf.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    rows.write.mode("overwrite").partitionBy("_part").parquet(
+        os.path.join(snap, "rows")
+    )
     with open(os.path.join(snap, _OK), "w"):
         pass
     shutil.rmtree(_snap(state_dir, batch_id - 2), ignore_errors=True)
 
-    rows_schema = _rows_schema(batch_df.schema)
-    fired = _read_part(spark, snap, "fired", rows_schema)
+    out_schema = _out_schema(batch_df.schema)
+    fired = _read_part(spark, snap, "fired", out_schema)
     if fired is None:  # batch fired nothing — empty frame, same schema
-        fired = spark.createDataFrame([], rows_schema)
-    return fired.select(*cols, "window_id", "window_pos", "flush_reason")
+        fired = spark.createDataFrame([], out_schema)
+    return fired
 
 
 def publish_fired_files(
@@ -459,11 +473,37 @@ def run_count_window_jvm(
     batches instead of timer-driven empty batches, so finite drains
     still terminate (a quiet key's partial flushes on the NEXT batch
     that arrives after the deadline, or stays in state if the drain
-    ends first)."""
+    ends first).
+
+    ``shuffle_partitions`` sizes the window shuffle to the MICRO-BATCH
+    (e.g. 8 for ~100k-row batches), not to the session default that is
+    tuned for full-table scans: with AQE's parallelism-first coalescing
+    the default fans a megabyte batch into cores×3 tiny files whose
+    per-task/per-file overhead swamps the data. Set it ≈
+    batch_bytes / 64 MB on a real deployment; None keeps the session
+    value.
+
+    The window's write settings go, once, onto the query's own clone
+    of the session (Structured Streaming runs every micro-batch on
+    it), so the caller's session conf is left as it was. Concurrent
+    output writers skip FileFormatWriter's sort on the partition
+    column (only 3 values) above the key exchange. The settings hold
+    for the whole query, so ``shuffle_partitions`` also sizes any
+    shuffle the sink itself plans; stateful operators upstream keep
+    the partition count recorded in the checkpoint."""
     if (write_fn is None) == (publish_dir is None):
         raise ValueError("pass exactly one of write_fn / publish_dir")
+    tune = {"spark.sql.maxConcurrentOutputFileWriters": "4"}
+    if shuffle_partitions is not None:
+        tune["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    tuned = False
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal tuned
+        if not tuned:
+            for k, v in tune.items():
+                batch_df.sparkSession.conf.set(k, v)
+            tuned = True
         batch_time_ms = None
         if timeout_ms is not None:
             batch_time_ms = int(time.time() * 1000)
@@ -474,7 +514,6 @@ def run_count_window_jvm(
             key=key,
             n=n,
             order_col=order_col,
-            shuffle_partitions=shuffle_partitions,
             timeout_ms=timeout_ms,
             batch_time_ms=batch_time_ms,
         )

@@ -16,6 +16,7 @@ import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafkatoclickhouse_spark.operators import ingest
 from kafkatoclickhouse_spark.streaming import count_window_jvm as cwj
@@ -1293,28 +1294,38 @@ def test_count_window_jvm_multi_batch_carryover(spark, raw_feed_dir, tmp_path):
     assert got.filter(F.col("flush_reason") != "count").count() == 0
 
 
-def _window_batches(spark, state, batches, n, tmo):
-    """Run ``(clock, rows)`` batches through apply_count_window_batch,
-    yielding the fired rows so far after each one; by then those rows
-    and the held state have been checked against the model's on the
-    same prefix."""
-    schema = "essCode string, topicOffset long, payload string"
+def _window_batches(
+    spark, state, batches, n, tmo, key="essCode", order="topicOffset",
+    payload="payload",
+):
+    """Run ``(clock, rows)`` batches of ``(key, order, payload)`` rows
+    through apply_count_window_batch, yielding the fired rows so far
+    after each one; by then those rows and the held state have been
+    checked against the model's on the same prefix."""
+    schema = T.StructType([
+        T.StructField(key, T.StringType()),
+        T.StructField(order, T.LongType()),
+        T.StructField(payload, T.StringType()),
+    ])
+    out = [key, order] + WINDOW_COLS[2:]
     got = []
     for bid, (clock, rows) in enumerate(batches):
         fired = cwj.apply_count_window_batch(
             spark.createDataFrame(rows, schema),
             bid,
             state,
+            key=key,
             n=n,
+            order_col=order,
             timeout_ms=tmo,
             batch_time_ms=clock,
         )
-        got += [tuple(r) for r in fired.select(WINDOW_COLS).collect()]
+        got += [tuple(r[c] for c in out) for r in fired.collect()]
         expect, held = cw_model.count_window(
             batches[: bid + 1], n, timeout_ms=tmo
         )
         assert sorted(got) == sorted(expect), f"batch {bid}"
-        assert _held_state(spark, state) == held, f"batch {bid}"
+        assert _held_state(spark, state, key, order) == held, f"batch {bid}"
         yield got
 
 
@@ -1402,6 +1413,99 @@ def test_count_window_jvm_steady_batches_compile_nothing(spark, tmp_path):
         for _ in _window_batches(spark, str(tmp_path / "state"), batches, n, tmo)
     ]
     assert counts[2:] == [counts[1]] * 4, counts
+
+
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_count_window_jvm_quotes_column_names(spark, tmp_path):
+    """The window is one generated SQL statement, so every column name
+    it interpolates must be quoted. With key, order and payload
+    columns whose names hold a space, a dot and a backtick, the window
+    still matches the model, counts and timeouts alike, and the temp
+    views the statement reads are gone from the caller's catalog
+    afterwards."""
+    key, order, payload = "ess code.`k`", "topic.off`set", "pay load.`x"
+    batches = [
+        (1_000, _rows("E", range(7)) + _rows("F", range(2))),
+        (2_000, _rows("F", range(10, 14))),
+        # E idle 99 s expires with its 2-row tail; F keeps its tail
+        (100_000, _rows("F", [20])),
+    ]
+    views = _temp_views(spark)
+    *_, got = _window_batches(
+        spark, str(tmp_path / "state"), batches, 5, 60_000,
+        key=key, order=order, payload=payload,
+    )
+    assert {r[-1] for r in got} == {"timeout", "count"}
+    assert _temp_views(spark) == views
+
+
+def test_count_window_jvm_state_shapes(spark, tmp_path):
+    """Each union shape of the window statement against the model: a
+    batch with no state after batch 0 (every key expired, so the
+    snapshot holds neither a tail nor a ctr partition), and a batch
+    whose state has counter rows but no tail (every tail closed
+    evenly)."""
+    n, tmo = 3, 60_000
+    state = str(tmp_path / "state")
+    batches = [
+        # both keys close their windows evenly: ctr rows, no tail
+        (1_000, _rows("A", range(3)) + _rows("B", range(6))),
+        # ctr-only state ∪ batch; A buffers a tail of 2, nothing fires
+        (2_000, _rows("A", range(3, 5))),
+        # A and B idle past the deadline: A's tail fires as a timeout
+        # window, B has nothing to fire, and no state is left
+        (100_000, []),
+        # batch-only again, now at batch 3: A restarts at window 0
+        (101_000, _rows("A", range(10, 14)) + _rows("C", range(2))),
+    ]
+    parts = []
+    for bid, _ in enumerate(_window_batches(spark, state, batches, n, tmo)):
+        rows = os.path.join(state, f"s{bid}", "rows")
+        parts.append(sorted(
+            d[len("_part="):] for d in os.listdir(rows) if "=" in d
+        ))
+    assert parts == [
+        ["ctr", "fired"],
+        ["ctr", "tail"],
+        ["fired"],
+        ["ctr", "fired", "tail"],
+    ]
+
+
+def test_count_window_jvm_leaves_caller_conf_unchanged(
+    spark, raw_feed_dir, tmp_path
+):
+    """``job.start`` tunes the window's write on the query's own clone
+    of the session, once: every micro-batch of the stream sees the
+    setting, and the caller's session conf is unchanged afterwards."""
+    from kafkatoclickhouse_spark import config as cfgmod
+    from kafkatoclickhouse_spark.streaming import job
+
+    writers = "spark.sql.maxConcurrentOutputFileWriters"
+    before = spark.conf.get(writers)
+    cfg = cfgmod.PipelineConfig.from_properties(
+        cfgmod.load_properties("configs/example.properties")
+    )
+    cfg.checkpoint_dir = str(tmp_path / "ckpt")
+    feed = _jvm_feed(spark, raw_feed_dir, str(tmp_path / "feed"), slices=2)
+    raw = (
+        spark.readStream.schema(source.RAW_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
+    seen = []
+    assert job.start(
+        spark,
+        cfg,
+        write_fn=lambda df: seen.append(df.sparkSession.conf.get(writers)),
+        raw=raw,
+        available_now=True,
+    ).awaitTermination(300)
+    assert seen == ["4", "4"]
+    assert spark.conf.get(writers) == before != "4"
 
 
 def test_count_window_jvm_rejects_missing_predecessor_snapshot(
