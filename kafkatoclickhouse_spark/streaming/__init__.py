@@ -13,10 +13,12 @@ Modules:
 - ``pipeline``: the streaming ingest chain (R2–R6).
 - ``count_window_jvm``: per-key count window (R5) run inside
   ``foreachBatch`` as pure JVM operations over versioned state
-  snapshots, with a timeout flush for partial windows (fixing the
-  reference's stuck-partial-window semantics, SURVEY §4.3).
+  snapshots kept next to the checkpoint, with a timeout flush for
+  partial windows (fixing the reference's stuck-partial-window
+  semantics, SURVEY §4.3); its fired rows go to the sink through
+  ``sink.write_with_retry``.
 - ``job`` / ``curation``: the reference topology and the curation
-  topology, each wired to the count window and a retrying sink.
+  topology, each handing its sink to the count window.
 - ``windows``: event-time tumbling/sliding/session windows +
   watermark + streaming dedup (SURVEY §2.2 [EXT]).
 - ``sink``: ``foreachBatch`` JDBC sink with bounded retry (R7) —

@@ -25,12 +25,9 @@ shuffle + one partitioned write per micro-batch:
             fired/  the emission (exactly the output contract)
             tail/   carried partial-window rows
             ctr/    one row per key: its next window id
-        → file sinks: the fired partition's parquet files are
-          PUBLISHED into the landing dir by hardlink under
-          deterministic per-batch names — the FileStreamSink
-          write-then-commit pattern, zero second data pass;
-          other sinks (JDBC): the fired partition scans out through
-          ``write_fn``.
+        → the fired partition scans out through the sink
+          (``write_fn``, e.g. the JDBC writer) under bounded retry
+          (``sink.write_with_retry``).
 
 Everything from the union to the ``_part`` column is ONE generated
 ``spark.sql`` statement over temp views of the batch and the two
@@ -42,20 +39,18 @@ backtick-quoted into the text, and the
 batch clock enters it only as string literals, so a steady batch
 compiles no new code (see the timeout comment in ``_window_sql``).
 
-Through ``job.start`` (the ``write_fn`` path) that is three Spark jobs
-per micro-batch, as read from the status store in a traced
-``perfbench`` ``stream_trickle`` run (``spark.jobs_per_op = 3.0``):
-AQE's shuffle-map job (scan of carried state + batch, shuffle write),
-the partitioned write (its map stage skipped as already run), and the
-sink's scan of the fired partition. The publish path skips the third.
+That is three Spark jobs per micro-batch, as read from the status
+store in a traced ``perfbench`` ``stream_trickle`` run
+(``spark.jobs_per_op = 3.0``): AQE's shuffle-map job (scan of carried
+state + batch, shuffle write), the partitioned write (its map stage
+skipped as already run), and the sink's scan of the fired partition.
 
 State snapshots are versioned BY MICRO-BATCH ID — the standard
 foreachBatch idempotence pattern: batch ``b`` always loads snapshot
 ``s{b-1}`` and (re)writes ``s{b}``, so a replayed batch recomputes
-bit-identical output (the ordering below is total); published files
-overwrite their own deterministic names, so the topology is
-effectively exactly-once into a file sink and at-least-once into
-others (job.py docstring).
+bit-identical output (the ordering below is total). The sink thus
+sees at-least-once delivery of identical rows, which an idempotent
+sink turns into exactly-once (job.py docstring).
 
 Ordering: a recomputation needs an EXPLICIT total order to be
 replay-safe, so each key's rows are ordered by (counter phantom
@@ -64,21 +59,20 @@ with the Kafka source that is ``topicOffset``, which is exactly
 Kafka's per-partition arrival order, i.e. the same order the
 reference's FIFO keyed buffers see.
 
-Schema trick that keeps the published files contract-exact: all
-three partitions share one schema (cols, window_id, window_pos,
+Schema trick that keeps the fired files contract-exact: all three
+partitions share one schema (cols, window_id, window_pos,
 flush_reason); ``window_pos`` doubles as the tail's buffer position,
 ``window_id`` doubles as the ctr row's next-window counter, and
 ``_part`` is the partition column (not in the files) — so the fired
 partition's files carry EXACTLY the output schema (batch columns +
-window_id/window_pos/flush_reason) and can be linked into the
-landing zone untouched.
+window_id/window_pos/flush_reason) and the sink reads them back with
+no projection.
 
 Scale: carried state is one counter row plus ≤N−1 tail rows per
 key — megabytes at millions of keys — but every batch shuffles and
 rewrites all of it, not only the keys the batch touched. At
-100 TB the snapshot dir lives on the object store (same parquet
-writes; publish-by-rename is the object-store commit pattern); GC
-keeps exactly two versions.
+100 TB the snapshot dir lives on the object store next to the
+checkpoint (same parquet writes); GC keeps exactly two versions.
 """
 
 from __future__ import annotations
@@ -92,7 +86,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from kafkatoclickhouse_spark.streaming import sink
+
 DEFAULT_WINDOW_SIZE = 20  # reference prod default, KafakToClickhouse.scala:57
+DEFAULT_TIMEOUT_MS = 60_000  # partial-window flush after a minute idle
 
 _OK = "_OK"  # snapshot commit marker, written last
 
@@ -403,69 +400,36 @@ def apply_count_window_batch(
     return fired
 
 
-def publish_fired_files(
-    state_dir: str, batch_id: int, publish_dir: str
-) -> int:
-    """File-sink fast path: hardlink the fired partition's parquet
-    files (written ONCE by :func:`apply_count_window_batch`; their
-    schema is exactly the output contract — see module docstring)
-    into ``publish_dir`` under deterministic per-batch names. A
-    replayed batch first removes its own earlier names, so the
-    landing dir converges to exactly-once. Hardlinks survive snapshot
-    GC (inode refcount); cross-device falls back to copy. Returns the
-    number of files published. On an object store this step is the
-    same rename/copy a FileStreamSink commit performs."""
-    os.makedirs(publish_dir, exist_ok=True)
-    prefix = f"b{batch_id}-"
-    for name in os.listdir(publish_dir):
-        if name.startswith(prefix):
-            os.remove(os.path.join(publish_dir, name))
-    fired_dir = os.path.join(_snap(state_dir, batch_id), "rows", "_part=fired")
-    if not os.path.isdir(fired_dir):
-        return 0
-    files = sorted(
-        f for f in os.listdir(fired_dir) if f.endswith(".parquet")
-    )
-    for i, name in enumerate(files):
-        src = os.path.join(fired_dir, name)
-        dst = os.path.join(publish_dir, f"{prefix}{i:05d}.snappy.parquet")
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-    return len(files)
-
-
 def run_count_window_jvm(
     clean: DataFrame,
-    write_fn: Callable[[DataFrame], None] | None = None,
-    checkpoint_dir: str = "",
-    state_dir: str = "",
+    write_fn: Callable[[DataFrame], None],
+    checkpoint_dir: str,
     key: str = "essCode",
     n: int = DEFAULT_WINDOW_SIZE,
     order_col: str = "topicOffset",
     available_now: bool = False,
-    publish_dir: str | None = None,
-    shuffle_partitions: int | None = None,
-    timeout_ms: int | None = None,
+    timeout_ms: int | None = DEFAULT_TIMEOUT_MS,
+    max_retries: int = sink.DEFAULT_MAX_RETRIES,
 ):
     """Wire the JVM count window into a streaming query: the clean
     ingest stream drains through ``foreachBatch`` where each batch is
-    windowed (pure JVM ops) and the fired rows go to the sink —
-    either ``publish_dir`` (parquet landing zone, zero-copy hardlink
-    publish of the already-written fired partition) or ``write_fn``
-    (arbitrary sink, e.g. the JDBC writer; one extra scan of the
-    fired partition). Exactly one of the two must be given.
+    windowed (pure JVM ops) and the fired rows go to ``write_fn`` (any
+    ``(DataFrame) -> None`` sink, e.g. the JDBC writer) through
+    ``sink.write_with_retry`` with up to ``max_retries`` attempts.
+
+    The state snapshots live in ``<checkpoint_dir>/jvm_window_state``:
+    in the checkpoint's durability domain, so the two move together as
+    the missing-snapshot guard in ``_load_state`` assumes.
 
     A failure anywhere in the batch replays it: the snapshot for
     batch ``b`` is always recomputed from ``s{b-1}`` (never read
     back), and the total ordering makes the recomputation — fired
-    rows included — bit-identical, so a file sink converges to
-    exactly-once (deterministic published names) and other sinks see
-    at-least-once delivery of identical rows (pair with an
-    idempotent sink).
+    rows included — bit-identical, so the sink sees at-least-once
+    delivery of identical rows (pair with an idempotent sink for
+    exactly-once).
 
-    ``timeout_ms`` enables the partial-window flush; each batch's
+    ``timeout_ms`` (default one minute; None keeps the reference's
+    count-only trigger) enables the partial-window flush; each batch's
     clock is the wall clock when the batch starts. With wall clock a
     replay may flush at a different boundary than the first attempt
     — the at-least-once caveat of any processing-time timer. Timeouts
@@ -475,34 +439,20 @@ def run_count_window_jvm(
     that arrives after the deadline, or stays in state if the drain
     ends first).
 
-    ``shuffle_partitions`` sizes the window shuffle to the MICRO-BATCH
-    (e.g. 8 for ~100k-row batches), not to the session default that is
-    tuned for full-table scans: with AQE's parallelism-first coalescing
-    the default fans a megabyte batch into cores×3 tiny files whose
-    per-task/per-file overhead swamps the data. Set it ≈
-    batch_bytes / 64 MB on a real deployment; None keeps the session
-    value.
-
-    The window's write settings go, once, onto the query's own clone
+    The window's write setting goes, once, onto the query's own clone
     of the session (Structured Streaming runs every micro-batch on
     it), so the caller's session conf is left as it was. Concurrent
     output writers skip FileFormatWriter's sort on the partition
-    column (only 3 values) above the key exchange. The settings hold
-    for the whole query, so ``shuffle_partitions`` also sizes any
-    shuffle the sink itself plans; stateful operators upstream keep
-    the partition count recorded in the checkpoint."""
-    if (write_fn is None) == (publish_dir is None):
-        raise ValueError("pass exactly one of write_fn / publish_dir")
-    tune = {"spark.sql.maxConcurrentOutputFileWriters": "4"}
-    if shuffle_partitions is not None:
-        tune["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    column (only 3 values) above the key exchange."""
+    state_dir = os.path.join(checkpoint_dir, "jvm_window_state")
     tuned = False
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal tuned
         if not tuned:
-            for k, v in tune.items():
-                batch_df.sparkSession.conf.set(k, v)
+            batch_df.sparkSession.conf.set(
+                "spark.sql.maxConcurrentOutputFileWriters", "4"
+            )
             tuned = True
         batch_time_ms = None
         if timeout_ms is not None:
@@ -517,10 +467,7 @@ def run_count_window_jvm(
             timeout_ms=timeout_ms,
             batch_time_ms=batch_time_ms,
         )
-        if publish_dir is not None:
-            publish_fired_files(state_dir, batch_id, publish_dir)
-        else:
-            write_fn(fired)
+        sink.write_with_retry(write_fn, fired, max_retries=max_retries)
 
     writer = (
         clean.writeStream.foreachBatch(handle)

@@ -27,7 +27,6 @@ fingerprint rule) is pinned in tests/test_streaming.py.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -123,8 +122,8 @@ def start_curation(
     eval_shingles: DataFrame | None = None,
     ts_col: str | None = None,
     window_key: str = "source",
-    window_size: int = 20,
-    max_retries: int = 3,
+    window_size: int = count_window_jvm.DEFAULT_WINDOW_SIZE,
+    max_retries: int = sink.DEFAULT_MAX_RETRIES,
     available_now: bool = False,
     decontam_mode: str = "bloom",
 ) -> StreamingQuery:
@@ -145,20 +144,13 @@ def start_curation(
         decontam_mode=decontam_mode,
     )
 
-    def sink_write(fired: DataFrame) -> None:
-        sink.write_with_retry(write_fn, fired, max_retries=max_retries)
-
-    # state snapshots live NEXT TO the checkpoint (same durability
-    # domain — the job.start convention)
-    state_dir = os.path.join(checkpoint_dir, "jvm_window_state")
     return count_window_jvm.run_count_window_jvm(
         curated,
-        write_fn=sink_write,
+        write_fn=write_fn,
         checkpoint_dir=checkpoint_dir,
-        state_dir=state_dir,
         key=window_key,
         n=window_size,
         order_col="doc_id",
         available_now=available_now,
-        timeout_ms=60_000,
+        max_retries=max_retries,
     )

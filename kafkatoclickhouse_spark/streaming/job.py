@@ -19,7 +19,6 @@ count windows flush on timeout instead of leaking forever.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,13 +42,14 @@ def start(
     available_now: bool = False,
     catalog: list[tuple[str, str]] | None = None,
 ) -> StreamingQuery:
-    """Wire the topology to the retry sink and start it.
+    """Wire the topology to the count window and start it.
 
-    The count window is the foreachBatch JVM-only path
-    (``count_window_jvm``) with the 60 s partial-window timeout armed
-    in every mode: flushes piggyback on data batches, so
-    ``availableNow`` drains still terminate (see
-    ``run_count_window_jvm``).
+    The count window (``count_window_jvm.run_count_window_jvm``) owns
+    the rest of the wiring: its state snapshots next to the
+    checkpoint, the retrying sink (``cfg.max_retries`` attempts) and
+    the 60 s partial-window timeout, armed in every mode — flushes
+    piggyback on data batches, so ``availableNow`` drains still
+    terminate.
 
     ``raw`` substitutes the Kafka source (tests use the file-backed
     double; the shapes are identical — see ``source.RAW_SCHEMA``).
@@ -88,21 +88,14 @@ def start(
             fired = sink_catalog.project_to_catalog(
                 fired, catalog, string_types=cfg.string_types
             )
-        sink.write_with_retry(
-            write_fn, fired, max_retries=cfg.max_retries
-        )
+        write_fn(fired)
 
-    # state snapshots live NEXT TO the checkpoint (same durability
-    # domain — the module's checkpoint/state-divergence guard assumes
-    # they move together)
-    state_dir = os.path.join(cfg.checkpoint_dir, "jvm_window_state")
     return count_window_jvm.run_count_window_jvm(
         clean,
         write_fn=sink_write,
         checkpoint_dir=cfg.checkpoint_dir,
-        state_dir=state_dir,
         key="essCode",
         n=cfg.window_size,
         available_now=available_now,
-        timeout_ms=60_000,
+        max_retries=cfg.max_retries,
     )

@@ -93,7 +93,13 @@ def keyed_type_counts_tws(
     """(user_id, event_type) running totals as versioned snapshot
     rows; requires the RocksDB state store provider. With ``ttl_ms``
     set, idle state expires (TTL needs the processing-time mode —
-    expiry timestamps are wall-clock)."""
+    expiry timestamps are wall-clock).
+
+    An ``availableNow`` drain with ``ttl_ms`` needs
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false``: in
+    processing-time mode every trigger schedules another no-data
+    batch to evict expired state, so with no-data batches on the
+    drain never terminates."""
     return (
         events.select("user_id", "event_type")
         .groupBy("user_id")

@@ -114,14 +114,14 @@ def test_streaming_count_window(spark, raw_feed_dir, tmp_path):
     raw = source.file_raw_stream(spark, raw_feed_dir)
     clean, _ = pipeline.streaming_ingest(raw)
     out = str(tmp_path / "cw_out")
-    state = str(tmp_path / "cw_state")
+    ckpt = str(tmp_path / "ckpt")
     q = cwj.run_count_window_jvm(
         clean,
         write_fn=sink.parquet_writer(out),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        state_dir=state,
+        checkpoint_dir=ckpt,
         n=n,
         available_now=True,
+        timeout_ms=None,
     )
     q.awaitTermination(300)
     got = spark.read.parquet(out).cache()
@@ -156,7 +156,7 @@ def test_streaming_count_window(spark, raw_feed_dir, tmp_path):
     assert sorted(map(tuple, got.select(WINDOW_COLS).collect())) == sorted(
         want
     )
-    assert _held_state(spark, state) == held
+    assert _held_state(spark, os.path.join(ckpt, "jvm_window_state")) == held
 
 
 def test_streaming_tumbling_window_agg(spark, sf_dir, raw_feed_dir, tmp_path):
@@ -1212,8 +1212,8 @@ def test_count_window_jvm_matches_legacy(spark, raw_feed_dir, tmp_path):
     + versioned state table, zero Python in the hot path) emits
     EXACTLY the rows of the pure-Python model of
     countWindow(N) + MyWindowFunction (``tests/cw_model.py``, no
-    timeout) on the same single-batch feed, through the hardlink
-    publish sink."""
+    timeout) on the same single-batch feed, through the parquet
+    sink."""
     n = 20
     feed = _jvm_feed(spark, raw_feed_dir, str(tmp_path / "jvm_feed"))
     raw = source.file_raw_stream(spark, feed)
@@ -1221,11 +1221,11 @@ def test_count_window_jvm_matches_legacy(spark, raw_feed_dir, tmp_path):
     out = str(tmp_path / "jvm_out")
     q = cwj.run_count_window_jvm(
         clean,
+        write_fn=sink.parquet_writer(out),
         checkpoint_dir=str(tmp_path / "jvm_ckpt"),
-        state_dir=str(tmp_path / "jvm_state"),
         n=n,
         available_now=True,
-        publish_dir=out,  # the zero-copy hardlink-publish file sink
+        timeout_ms=None,
     )
     q.awaitTermination(300)
     got = sorted(
@@ -1235,6 +1235,44 @@ def test_count_window_jvm_matches_legacy(spark, raw_feed_dir, tmp_path):
 
     want, _ = cw_model.count_window([(0, _clean_rows(spark, feed))], n)
     assert got == sorted(want)
+
+
+def test_count_window_jvm_retries_failed_sink_write(
+    spark, raw_feed_dir, tmp_path
+):
+    """The window owns the sink's bounded retry: a ``write_fn`` that
+    raises on its first call is retried, not failing the micro-batch,
+    and every window lands exactly once — the model's rows."""
+    n = 20
+    feed = _jvm_feed(spark, raw_feed_dir, str(tmp_path / "retry_feed"))
+    raw = source.file_raw_stream(spark, feed)
+    clean, _ = pipeline.streaming_ingest(raw)
+    out = str(tmp_path / "retry_out")
+    land = sink.parquet_writer(out)
+    calls = []
+
+    def flaky(df):
+        calls.append(df)
+        if len(calls) == 1:
+            raise RuntimeError("transient sink failure")
+        land(df)
+
+    q = cwj.run_count_window_jvm(
+        clean,
+        write_fn=flaky,
+        checkpoint_dir=str(tmp_path / "retry_ckpt"),
+        n=n,
+        available_now=True,
+        timeout_ms=None,
+        max_retries=2,
+    )
+    assert q.awaitTermination(300)
+    assert len(calls) == 2  # one batch: the failed attempt + its retry
+    got = sorted(
+        map(tuple, spark.read.parquet(out).select(WINDOW_COLS).collect())
+    )
+    want, _ = cw_model.count_window([(0, _clean_rows(spark, feed))], n)
+    assert want and got == sorted(want)
 
 
 def test_count_window_jvm_multi_batch_carryover(spark, raw_feed_dir, tmp_path):
@@ -1252,11 +1290,11 @@ def test_count_window_jvm_multi_batch_carryover(spark, raw_feed_dir, tmp_path):
     out = str(tmp_path / "mb_out")
     q = cwj.run_count_window_jvm(
         clean,
-        write_fn=sink.parquet_writer(out),  # the generic-sink path
+        write_fn=sink.parquet_writer(out),
         checkpoint_dir=str(tmp_path / "mb_ckpt"),
-        state_dir=str(tmp_path / "mb_state"),
         n=n,
         available_now=True,
+        timeout_ms=None,
     )
     q.awaitTermination(300)
     got = spark.read.parquet(out)
@@ -1640,12 +1678,18 @@ def test_type_counts_tws_ttl_expires_idle_state(spark, sf_dir, tmp_path):
         str(feed / "a")
     )
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
+    # RocksDB for tws; no-data batches off, or each processing-time
+    # trigger schedules another empty batch and the drain never ends
+    confs = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        ),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
 
     out_dir = str(tmp_path / "ttl_out")
 
@@ -1662,7 +1706,7 @@ def test_type_counts_tws_ttl_expires_idle_state(spark, sf_dir, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), f"{name}: drain did not terminate"
         return spark.read.parquet(out_dir).collect()
 
     try:
@@ -1677,9 +1721,8 @@ def test_type_counts_tws_ttl_expires_idle_state(spark, sf_dir, tmp_path):
         )
         out_b = drain("ttl_run_b")
     finally:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", prev
-        )
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     # the parquet sink accumulates both runs; run B's emissions are
     # the new rows. Expired state ⇒ batch-B-only counts AND a seq
     # restarted at 1 (the seq ValueState expired too) — resumed state

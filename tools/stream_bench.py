@@ -16,8 +16,8 @@ Prints ONE JSON line:
 
 ``--breakdown`` additionally drains ABLATED topologies so cost
 attributes to stages by differencing: source → sink alone; + JSON
-parse/validate; + the count window (publishing its fired files
-straight into the landing dir).
+parse/validate. The headline drain above adds the count window and
+its retrying sink.
 """
 
 from __future__ import annotations
@@ -76,45 +76,9 @@ def breakdown(spark, feed: str, n_rows: int, work: str, window_size: int):
         clean, _ = pipeline.streaming_ingest(raw)
         return clean
 
-    def jvm_variant():
-        """The count window: foreachBatch + row_number modular
-        windowing + versioned state table — no Python in the hot
-        path. Runs its own query wiring (the window happens inside
-        foreachBatch, not as a stream transform). Same warm + 3-timed
-        median protocol as variant()."""
-        import statistics
-
-        from kafkatoclickhouse_spark.streaming import count_window_jvm
-
-        walls = []
-        for rnd in ("warm", "t0", "t1", "t2"):
-            ckpt = os.path.join(work, f"bk_jvm_{rnd}_ckpt")
-            state = os.path.join(work, f"bk_jvm_{rnd}_state")
-            out_dir = os.path.join(work, f"bk_jvm_{rnd}_out")
-            raw = source.file_raw_stream(spark, feed)
-            clean, _ = pipeline.streaming_ingest(raw)
-            t0 = time.perf_counter()
-            q = count_window_jvm.run_count_window_jvm(
-                clean,
-                checkpoint_dir=ckpt,
-                state_dir=state,
-                n=window_size,
-                available_now=True,
-                publish_dir=out_dir,
-                # ~100k-row micro-batches: size the window shuffle to
-                # the batch (≈ bytes/64MB), not the scan-tuned session
-                # default (see apply_count_window_batch docstring)
-                shuffle_partitions=8,
-            )
-            q.awaitTermination(600)
-            if rnd != "warm":
-                walls.append(time.perf_counter() - t0)
-        return round(n_rows / statistics.median(walls), 1)
-
     return {
         "source_sink": variant("src", lambda raw: raw),
         "parse_validate": variant("parse", parse_only),
-        "window_jvm": jvm_variant(),
     }
 
 
