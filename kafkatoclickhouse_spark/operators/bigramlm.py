@@ -33,8 +33,8 @@ Four surfaces:
  - ``text_bigram_train``      — the model table (oracled);
  - ``text_bigram_logperp``    — per-doc NLL, model trained in-plan;
  - ``text_bigram_logperp_trained`` — serve from the persisted
-   artifact (the EIGHTH index family; fingerprint-keyed, meta-last,
-   poison-tested);
+   artifact (the EIGHTH index family, committed through
+   ``artifacts``; poison-tested);
  - ``text_bigram_perplexity_filter`` — the keep gate: drop the
    worst-perplexity tail above the bin-granular p90;
  - ``text_bigram_hashed_logperp`` — the BOUNDED hashed-bucket model
@@ -44,20 +44,16 @@ Four surfaces:
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkatoclickhouse_spark import artifacts
 from kafkatoclickhouse_spark.functions import hashing
 from kafkatoclickhouse_spark.functions.exact import stable_round6
 from kafkatoclickhouse_spark.registry import query
-from kafkatoclickhouse_spark.tables import (
-    fan_out,
-    load_table,
-    table_fingerprint,
-)
+from kafkatoclickhouse_spark.tables import fan_out, load_table
 
 # p90 filter: per-doc integer NLL is binned at 0.01 nat — the
 # histogram is bounded by the SCORE RANGE (a few thousand bins),
@@ -373,26 +369,6 @@ def text_bigram_perplexity_filter(
 # ---------------------------------------------------------------------------
 
 
-def bigram_index_dir(sf_dir: str) -> str:
-    """Fingerprint-keyed artifact location, same discipline as the
-    BM25/PQ/SQ8/BPE/packds families."""
-    import hashlib
-
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(
-            os.path.dirname(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            ),
-            ".ann_index",
-        ),
-    )
-    fp = table_fingerprint(sf_dir, "documents")
-    tag = hashlib.sha256(repr(fp).encode()).hexdigest()[:12]
-    base = os.path.basename(sf_dir.rstrip("/")) or "data"
-    return os.path.join(root, f"{base}_{tag}_bigram")
-
-
 def text_bigram_index_build(
     spark: SparkSession,
     sf_dir: str,
@@ -404,67 +380,54 @@ def text_bigram_index_build(
       - ``model.parquet`` (w1, w2, c12, c1): the transition table;
       - ``hashed12.parquet`` / ``hashed1.parquet``: the bounded
         collision-folded bucket counts the streaming gate ships as
-        map literals;
-      - ``meta.json`` (written LAST — the crash-safe build-complete
-        marker): vocabulary size, totals, bucket/seed config, source
-        fingerprint. The bucket/seed config is IN the validity check
-        so a constant change rebuilds instead of serving stale
-        (the packds staleness lesson, VERDICT r13 #1)."""
-    path = path or bigram_index_dir(sf_dir)
-    fp = list(table_fingerprint(sf_dir, "documents"))
-    meta_path = os.path.join(path, "meta.json")
-    if os.path.isfile(meta_path) and not force:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if (
-            meta.get("fingerprint") == fp
-            and meta.get("bigram_buckets") == BIGRAM_BUCKETS
-            and meta.get("ctx_buckets") == CTX_BUCKETS
-            and meta.get("seeds") == [BIGRAM_HASH_SEED, CTX_HASH_SEED]
-        ):
-            return path
-    try:
-        os.remove(meta_path)
-    except FileNotFoundError:
-        pass
-    os.makedirs(path, exist_ok=True)
+        map literals.
 
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    bg = _doc_bigrams(docs)
-    _model(bg).write.mode("overwrite").parquet(
-        os.path.join(path, "model.parquet")
-    )
-    hb = _hashed_buckets(bg)
-    hb.groupBy("b12").agg(
-        F.count("*").cast("long").alias("c")
-    ).write.mode("overwrite").parquet(os.path.join(path, "hashed12.parquet"))
-    hb.groupBy("b1").agg(
-        F.count("*").cast("long").alias("c")
-    ).write.mode("overwrite").parquet(os.path.join(path, "hashed1.parquet"))
+    The key is the source fingerprint plus the bucket/seed config, so
+    a constant change rebuilds instead of serving stale; the marker
+    also carries the vocabulary size and totals (commit protocol:
+    ``artifacts``)."""
 
-    vrow = _vocab(docs).first()
-    trow = (
-        spark.read.parquet(os.path.join(path, "model.parquet"))
-        .agg(
-            F.sum("c12").cast("long").alias("total"),
-            F.count("*").cast("long").alias("n_bigrams"),
+    def write(path: str) -> dict:
+        docs = fan_out(load_table(spark, sf_dir, "documents"))
+        bg = _doc_bigrams(docs)
+        _model(bg).write.mode("overwrite").parquet(
+            os.path.join(path, "model.parquet")
         )
-        .first()
+        hb = _hashed_buckets(bg)
+        hb.groupBy("b12").agg(
+            F.count("*").cast("long").alias("c")
+        ).write.mode("overwrite").parquet(
+            os.path.join(path, "hashed12.parquet")
+        )
+        hb.groupBy("b1").agg(
+            F.count("*").cast("long").alias("c")
+        ).write.mode("overwrite").parquet(
+            os.path.join(path, "hashed1.parquet")
+        )
+
+        vrow = _vocab(docs).first()
+        trow = (
+            spark.read.parquet(os.path.join(path, "model.parquet"))
+            .agg(
+                F.sum("c12").cast("long").alias("total"),
+                F.count("*").cast("long").alias("n_bigrams"),
+            )
+            .first()
+        )
+        return {
+            "v": int(vrow["v"]),
+            "total_transitions": int(trow["total"]),
+            "n_unique_bigrams": int(trow["n_bigrams"]),
+        }
+
+    key = {
+        "bigram_buckets": BIGRAM_BUCKETS,
+        "ctx_buckets": CTX_BUCKETS,
+        "seeds": [BIGRAM_HASH_SEED, CTX_HASH_SEED],
+    }
+    return artifacts.build(
+        sf_dir, "documents", "bigram", key, write, path, force
     )
-    with open(meta_path, "w") as fh:
-        json.dump(
-            {
-                "fingerprint": fp,
-                "v": int(vrow["v"]),
-                "total_transitions": int(trow["total"]),
-                "n_unique_bigrams": int(trow["n_bigrams"]),
-                "bigram_buckets": BIGRAM_BUCKETS,
-                "ctx_buckets": CTX_BUCKETS,
-                "seeds": [BIGRAM_HASH_SEED, CTX_HASH_SEED],
-            },
-            fh,
-        )
-    return path
 
 
 @query(
@@ -496,8 +459,7 @@ def text_bigram_logperp_trained(
     ln(1/(c1+V)) — the add-one unseen mass. The oracle recomputes
     the entire train+serve chain from raw text."""
     path = text_bigram_index_build(spark, sf_dir)
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
+    meta = artifacts.read_meta(path)
     model = spark.read.parquet(os.path.join(path, "model.parquet"))
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     bg = _doc_bigrams(docs)

@@ -23,11 +23,10 @@ collecting k centroids), and a map-side Arrow re-tokenize;
 corpus-sized ever reaches the driver, and no step's cost grows
 faster than the vocabulary.
 
-Persistence mirrors the other four index families
-(``classifier.text_classifier_index_build`` precedent):
-``merges.parquet`` (merge_rank, left_sym, right_sym) plus a
-``meta.json`` written LAST as the crash-safe build-complete marker,
-keyed by the source fixture's fingerprint. The serve queries
+Persistence goes through ``artifacts`` like every index family:
+``merges.parquet`` (merge_rank, left_sym, right_sym) under a commit
+marker keyed by the source fixture's fingerprint and the merge
+budget. The serve queries
 (``corpus_pack_chunks_bpe_trained``,
 ``corpus_tokenizer_fertility_trained``) read ONLY the persisted
 table — poison-pinned in ``tests/test_bpetrain.py`` — and their
@@ -45,23 +44,19 @@ this is [EXT] LLM-pipeline north-star surface.
 
 from __future__ import annotations
 
-import json
 import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkatoclickhouse_spark import artifacts
 from kafkatoclickhouse_spark.functions import bpe as bpefns
 from kafkatoclickhouse_spark.functions import hashing
 from kafkatoclickhouse_spark.functions import textfns
 from kafkatoclickhouse_spark.operators.text import CHUNK_TOKENS
 from kafkatoclickhouse_spark.registry import query
-from kafkatoclickhouse_spark.tables import (
-    fan_out,
-    load_table,
-    table_fingerprint,
-)
+from kafkatoclickhouse_spark.tables import fan_out, load_table
 
 BPE_TRAIN_MERGES = 40  # matches the frozen table's training budget
 
@@ -348,29 +343,6 @@ def _train_distributed_from(
 # ---------------------------------------------------------------------------
 
 
-def bpe_index_dir(sf_dir: str) -> str:
-    """Fingerprint-keyed artifact location for the trained merge
-    table — same location discipline as the BM25/PQ/SQ8/classifier
-    artifacts."""
-    import hashlib
-
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(
-            os.path.dirname(
-                os.path.dirname(
-                    os.path.dirname(os.path.abspath(__file__))
-                )
-            ),
-            ".ann_index",
-        ),
-    )
-    fp = table_fingerprint(sf_dir, "documents")
-    tag = hashlib.sha256(repr(fp).encode()).hexdigest()[:12]
-    base = os.path.basename(sf_dir.rstrip("/")) or "data"
-    return os.path.join(root, f"{base}_{tag}_bpe")
-
-
 def text_bpe_index_build(
     spark: SparkSession,
     sf_dir: str,
@@ -381,82 +353,61 @@ def text_bpe_index_build(
 
       - ``merges.parquet`` (merge_rank, left_sym, right_sym): the
         bounded table every serve path broadcasts;
-      - ``meta.json`` (written LAST — the crash-safe build-complete
-        marker): merge budget, trained merge count, source
-        fingerprint."""
-    path = path or bpe_index_dir(sf_dir)
-    fp = list(table_fingerprint(sf_dir, "documents"))
-    meta_path = os.path.join(path, "meta.json")
-    if os.path.isfile(meta_path) and not force:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        # vocab_size guards artifacts from before the vocab half
-        # existed — absent key forces one rebuild; the budget check
-        # forces one when BPE_TRAIN_MERGES changes (ADVICE r12)
-        if (
-            meta.get("fingerprint") == fp
-            and "vocab_size" in meta
-            and meta.get("budget") == BPE_TRAIN_MERGES
-        ):
-            return path
-    try:
-        os.remove(meta_path)
-    except FileNotFoundError:
-        pass
-    os.makedirs(path, exist_ok=True)
+      - ``vocab.parquet`` (symbol, id): characters, then merged
+        symbols.
 
-    merges = train_merges(spark, sf_dir)
-    spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "merge_rank long, left_sym string, right_sym string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "merges.parquet")
-    )
-    # vocabulary: corpus characters (sorted, ids 0..C-1 — a bounded
-    # barrier like the argmax: distinct chars, not distinct words)
-    # then merged symbols at C + rank; duplicate STRINGS keep the
-    # lowest id (two merges can form the same string — ('a','bc')
-    # and ('ab','c') — and token ids key by string, first-id-wins,
-    # the same rule the oracle's list_position gives for free).
-    chars = sorted(
-        r["c"]
-        for r in _word_freqs(spark, sf_dir)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(word)),"
-                    " i -> substring(word, i, 1))"
-                )
-            ).alias("c")
+    The key is the source fingerprint plus the merge budget; the
+    marker also carries the trained merge and vocabulary counts
+    (commit protocol: ``artifacts``)."""
+
+    def write(path: str) -> dict:
+        merges = train_merges(spark, sf_dir)
+        spark.createDataFrame(
+            [(i, a, b) for i, (a, b) in enumerate(merges)],
+            "merge_rank long, left_sym string, right_sym string",
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(path, "merges.parquet")
         )
-        .distinct()
-        .collect()
-    )
-    vocab_rows: list[tuple[str, int]] = []
-    seen: set[str] = set()
-    for i, sym in enumerate(
-        chars + [a + b for a, b in merges]
-    ):
-        if sym not in seen:
-            seen.add(sym)
-            vocab_rows.append((sym, i))
-    spark.createDataFrame(
-        vocab_rows, "symbol string, id long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "vocab.parquet")
-    )
-    with open(meta_path, "w") as fh:
-        json.dump(
-            {
-                "fingerprint": fp,
-                "budget": BPE_TRAIN_MERGES,
-                "n_merges": len(merges),
-                "n_chars": len(chars),
-                "vocab_size": len(vocab_rows),
-            },
-            fh,
+        # vocabulary: corpus characters (sorted, ids 0..C-1 — a
+        # bounded barrier like the argmax: distinct chars, not
+        # distinct words) then merged symbols at C + rank; duplicate
+        # STRINGS keep the lowest id (two merges can form the same
+        # string — ('a','bc') and ('ab','c') — and token ids key by
+        # string, first-id-wins, the same rule the oracle's
+        # list_position gives for free).
+        chars = sorted(
+            r["c"]
+            for r in _word_freqs(spark, sf_dir)
+            .select(
+                F.explode(
+                    F.expr(
+                        "transform(sequence(1, length(word)),"
+                        " i -> substring(word, i, 1))"
+                    )
+                ).alias("c")
+            )
+            .distinct()
+            .collect()
         )
-    return path
+        vocab_rows: list[tuple[str, int]] = []
+        seen: set[str] = set()
+        for i, sym in enumerate(chars + [a + b for a, b in merges]):
+            if sym not in seen:
+                seen.add(sym)
+                vocab_rows.append((sym, i))
+        spark.createDataFrame(
+            vocab_rows, "symbol string, id long"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(path, "vocab.parquet")
+        )
+        return {
+            "n_merges": len(merges),
+            "n_chars": len(chars),
+            "vocab_size": len(vocab_rows),
+        }
+
+    key = {"budget": BPE_TRAIN_MERGES}
+    return artifacts.build(sf_dir, "documents", "bpe", key, write, path, force)
 
 
 def load_trained_ranks(
@@ -671,9 +622,8 @@ def corpus_pack_chunks_bpe_trained(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Sequence packing budgeted in tokens of the IN-ENGINE-TRAINED
-    tokenizer, served from the persisted merge table (built
-    fingerprint-keyed on first use, crash-safe meta-last marker —
-    the fifth persisted index family). The Spark side reads ONLY
+    tokenizer, served from the persisted merge table (built on first
+    use — the fifth persisted index family). The Spark side reads ONLY
     ``merges.parquet`` (poison-pinned); the oracle retrains the
     table from raw text and replays the apply rule, so a stale or
     corrupt artifact is a hash mismatch. Packing algebra is
@@ -1459,56 +1409,36 @@ def sql_bpe_bytes_train_ctes(n_merges: int = BPE_BYTES_MERGES) -> str:
     )
 
 
-def bpe_bytes_index_dir(sf_dir: str) -> str:
-    """Artifact location for the byte-mode merge table."""
-    return bpe_index_dir(sf_dir) + "bytes"
-
-
 def text_bpe_bytes_index_build(
     spark: SparkSession,
     sf_dir: str,
     path: str | None = None,
     force: bool = False,
 ) -> str:
-    """BUILD half of the byte-mode artifact: ``merges.parquet`` +
-    crash-safe meta-last marker. No vocab parquet — the byte
-    alphabet is the CONSTANT 0..255, so the vocabulary is fully
-    determined by the merge table (id = byte value | 256 + rank)."""
-    path = path or bpe_bytes_index_dir(sf_dir)
-    fp = list(table_fingerprint(sf_dir, "documents"))
-    meta_path = os.path.join(path, "meta.json")
-    if os.path.isfile(meta_path) and not force:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if (
-            meta.get("fingerprint") == fp
-            and meta.get("budget") == BPE_BYTES_MERGES
-        ):
-            return path
-    try:
-        os.remove(meta_path)
-    except FileNotFoundError:
-        pass
-    os.makedirs(path, exist_ok=True)
-    merges = train_merges_bytes(spark, sf_dir)
-    spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "merge_rank long, left_sym string, right_sym string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "merges.parquet")
-    )
-    with open(meta_path, "w") as fh:
-        json.dump(
-            {
-                "fingerprint": fp,
-                "budget": BPE_BYTES_MERGES,
-                "n_merges": len(merges),
-                "alphabet": "bytes-hex",
-                "vocab_size": 256 + len(merges),
-            },
-            fh,
+    """BUILD half of the byte-mode artifact: ``merges.parquet``. No
+    vocab parquet — the byte alphabet is the CONSTANT 0..255, so the
+    vocabulary is fully determined by the merge table (id = byte
+    value | 256 + rank). The key is the source fingerprint plus the
+    merge budget (commit protocol: ``artifacts``)."""
+
+    def write(path: str) -> dict:
+        merges = train_merges_bytes(spark, sf_dir)
+        spark.createDataFrame(
+            [(i, a, b) for i, (a, b) in enumerate(merges)],
+            "merge_rank long, left_sym string, right_sym string",
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(path, "merges.parquet")
         )
-    return path
+        return {
+            "n_merges": len(merges),
+            "alphabet": "bytes-hex",
+            "vocab_size": 256 + len(merges),
+        }
+
+    key = {"budget": BPE_BYTES_MERGES}
+    return artifacts.build(
+        sf_dir, "documents", "bpe_bytes", key, write, path, force
+    )
 
 
 def load_trained_ranks_bytes(
@@ -1743,17 +1673,10 @@ def corpus_tokenizer_fertility_bytes(
 # ---------------------------------------------------------------------------
 #
 # Everything above COMPUTES the training tensor; a real pipeline
-# writes it once and every trainer epoch READS the artifact. Same
-# lifecycle discipline as the other six families: fingerprint-keyed
-# directory, chunks + epoch-order parquet, meta.json written LAST as
-# the crash-safe build-complete marker; the serve query reads ONLY
-# the artifact (poison-pinned) while its oracle recomputes the whole
-# chain from raw text, so a stale or corrupt artifact is a hash
-# mismatch.
-
-
-def pack_dataset_dir(sf_dir: str) -> str:
-    return bpe_index_dir(sf_dir) + "_packds"
+# writes it once and every trainer epoch READS the artifact. The
+# serve query reads ONLY the artifact (poison-pinned) while its
+# oracle recomputes the whole chain from raw text, so a stale or
+# corrupt artifact is a hash mismatch.
 
 
 def corpus_pack_index_build(
@@ -1767,70 +1690,49 @@ def corpus_pack_index_build(
       - ``chunks.parquet``: (chunk_id, n_tokens, token_ids,
         doc_spans, loss_mask) — the tensor + boundary metadata;
       - ``epochs.parquet``: (epoch, chunk_id, order_key) — the
-        deterministic epoch shuffle;
-      - ``meta.json`` (written LAST): chunk budget, epoch count,
-        chunk/token totals, source fingerprint, and the FULL meta of
-        the BPE tokenizer artifact the chunks were encoded under —
-        a tokenizer retrain (budget change, corpus change) therefore
-        invalidates the packed tensors too."""
-    path = path or pack_dataset_dir(sf_dir)
-    fp = list(table_fingerprint(sf_dir, "documents"))
-    meta_path = os.path.join(path, "meta.json")
-    # The chunks are encoded under the trained char-BPE tokenizer, so
-    # the pack artifact is stale whenever THAT artifact is — freshen
-    # it first and fold its meta (budget, merge count, vocab) into
-    # this family's validity check (VERDICT r13 #1: checking only
-    # fingerprint/chunk_tokens/n_epochs served stale tensors after a
-    # BPE_TRAIN_MERGES change, the exact staleness class the r12 fix
-    # closed for the BPE family itself).
-    bpe_meta_path = os.path.join(
-        text_bpe_index_build(spark, sf_dir), "meta.json"
-    )
-    with open(bpe_meta_path) as fh:
-        bpe_meta = json.load(fh)
-    if os.path.isfile(meta_path) and not force:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if (
-            meta.get("fingerprint") == fp
-            and meta.get("chunk_tokens") == CHUNK_TOKENS
-            and meta.get("n_epochs") == N_EPOCHS
-            and meta.get("tokenizer_meta") == bpe_meta
-        ):
-            return path
-    try:
-        os.remove(meta_path)
-    except FileNotFoundError:
-        pass
-    os.makedirs(path, exist_ok=True)
-    chunks = corpus_pack_examples_spans(spark, sf_dir)
-    chunks.write.mode("overwrite").parquet(
-        os.path.join(path, "chunks.parquet")
-    )
-    corpus_epoch_order(spark, sf_dir).write.mode("overwrite").parquet(
-        os.path.join(path, "epochs.parquet")
-    )
-    stats = (
-        spark.read.parquet(os.path.join(path, "chunks.parquet"))
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum("n_tokens").alias("total_tokens"),
+        deterministic epoch shuffle.
+
+    The key is the source fingerprint, the chunk budget, the epoch
+    count and the FULL marker of the BPE tokenizer artifact the
+    chunks are encoded under, so a tokenizer retrain (budget change,
+    corpus change) invalidates the packed tensors too; the marker
+    also carries the chunk/token totals (commit protocol:
+    ``artifacts``)."""
+
+    def write(path: str) -> dict:
+        chunks = corpus_pack_examples_spans(spark, sf_dir)
+        chunks.write.mode("overwrite").parquet(
+            os.path.join(path, "chunks.parquet")
         )
-        .collect()[0]
-    )
-    with open(meta_path, "w") as fh:
-        json.dump(
-            {
-                "fingerprint": fp,
-                "chunk_tokens": CHUNK_TOKENS,
-                "n_epochs": N_EPOCHS,
-                "tokenizer_meta": bpe_meta,
-                "n_chunks": int(stats["n_chunks"]),
-                "total_tokens": int(stats["total_tokens"]),
-            },
-            fh,
+        corpus_epoch_order(spark, sf_dir).write.mode("overwrite").parquet(
+            os.path.join(path, "epochs.parquet")
         )
-    return path
+        stats = (
+            spark.read.parquet(os.path.join(path, "chunks.parquet"))
+            .agg(
+                F.count(F.lit(1)).alias("n_chunks"),
+                F.sum("n_tokens").alias("total_tokens"),
+            )
+            .collect()[0]
+        )
+        return {
+            "n_chunks": int(stats["n_chunks"]),
+            "total_tokens": int(stats["total_tokens"]),
+        }
+
+    # freshen the tokenizer first: its marker is part of this key
+    # (VERDICT r13 #1: checking only fingerprint/chunk_tokens/n_epochs
+    # served stale tensors after a BPE_TRAIN_MERGES change)
+    key = {
+        "chunk_tokens": CHUNK_TOKENS,
+        "n_epochs": N_EPOCHS,
+        "tokenizer_meta": artifacts.read_meta(
+            text_bpe_index_build(spark, sf_dir)
+        ),
+    }
+    return artifacts.build(
+        sf_dir, "documents", "packds", key, write, path, force
+    )
 
 
 @query(

@@ -29,9 +29,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkatoclickhouse_spark import artifacts
 from kafkatoclickhouse_spark.functions import hashing
 from kafkatoclickhouse_spark.registry import query
-from kafkatoclickhouse_spark.tables import fan_out, load_table, table_fingerprint
+from kafkatoclickhouse_spark.tables import fan_out, load_table
 
 CLF_SEED = 311          # token → bucket hash seed
 CLF_WEIGHT_SEED = 313   # bucket → weight hash seed
@@ -349,27 +350,6 @@ def text_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _clf_weights_df(spark, sf_dir)
 
 
-def clf_index_dir(sf_dir: str) -> str:
-    """Fingerprint-keyed artifact location for the trained weight
-    table — same location discipline as the BM25/PQ/SQ8 indexes."""
-    import hashlib
-    import os
-
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(
-            os.path.dirname(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            ),
-            ".ann_index",
-        ),
-    )
-    fp = table_fingerprint(sf_dir, "documents")
-    tag = hashlib.sha256(repr(fp).encode()).hexdigest()[:12]
-    base = os.path.basename(sf_dir.rstrip("/")) or "data"
-    return os.path.join(root, f"{base}_{tag}_clf")
-
-
 def text_classifier_index_build(
     spark: SparkSession,
     sf_dir: str,
@@ -379,91 +359,80 @@ def text_classifier_index_build(
     """BUILD half: train once and persist the model —
 
       - ``weights.parquet`` (bucket, weight_micro): the broadcast
-        table the scoring plan anticipated from day one;
-      - ``meta.json`` (written LAST — the crash-safe build-complete
-        marker): bias_micro (document prior), w0_micro (unseen-bucket
-        default = the LLR at zero counts), class totals, source
-        fingerprint.
+        table the scoring plan anticipated from day one.
+
+    The key is the source fingerprint plus the bucket count and hash
+    seed; the marker also carries bias_micro (document prior),
+    w0_micro (unseen-bucket default = the LLR at zero counts) and the
+    class totals (commit protocol: ``artifacts``).
 
     All scalars are computed by SPARK expressions (JVM ln), so the
     persisted model is exactly what the engine would retrain."""
-    import json
     import os
 
-    path = path or clf_index_dir(sf_dir)
-    fp = list(table_fingerprint(sf_dir, "documents"))
-    meta_path = os.path.join(path, "meta.json")
-    if os.path.isfile(meta_path) and not force:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if meta.get("fingerprint") == fp:
-            return path
-    try:
-        os.remove(meta_path)
-    except FileNotFoundError:
-        pass
-    os.makedirs(path, exist_ok=True)
-
-    weights = _clf_weights_df(spark, sf_dir)
-    weights.select("bucket", "c_keep", "c_drop", "weight_micro").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "weights.parquet"))
-    persisted = spark.read.parquet(os.path.join(path, "weights.parquet"))
-    trow = (
-        persisted.agg(
-            F.sum("c_keep").cast("long").alias("t_keep"),
-            F.sum("c_drop").cast("long").alias("t_drop"),
+    def write(path: str) -> dict:
+        weights = _clf_weights_df(spark, sf_dir)
+        weights.select(
+            "bucket", "c_keep", "c_drop", "weight_micro"
+        ).write.mode("overwrite").parquet(
+            os.path.join(path, "weights.parquet")
         )
-        .select(
-            "t_keep",
-            "t_drop",
-            _weight_micro_col(
-                F.lit(0), F.lit(0), F.col("t_keep"), F.col("t_drop")
-            ).alias("w0_micro"),
-        )
-        .first()
-    )
-    from kafkatoclickhouse_spark.operators.text import gopher_keep_col
-
-    docs = load_table(spark, sf_dir, "documents")
-    prow = (
-        docs.select(gopher_keep_col(F.col("text")).alias("keep"))
-        .agg(
-            F.sum(F.col("keep").cast("long")).cast("long").alias("nk"),
-            F.sum((~F.col("keep")).cast("long")).cast("long").alias("nd"),
-        )
-        .select(
-            "nk",
-            "nd",
-            F.floor(
-                F.log(
-                    (F.col("nk") + F.lit(1)).cast("double")
-                    / (F.col("nd") + F.lit(1)).cast("double")
-                )
-                * F.lit(1000000.0)
-                + F.lit(0.5)
+        persisted = spark.read.parquet(os.path.join(path, "weights.parquet"))
+        trow = (
+            persisted.agg(
+                F.sum("c_keep").cast("long").alias("t_keep"),
+                F.sum("c_drop").cast("long").alias("t_drop"),
             )
-            .cast("long")
-            .alias("bias_micro"),
+            .select(
+                "t_keep",
+                "t_drop",
+                _weight_micro_col(
+                    F.lit(0), F.lit(0), F.col("t_keep"), F.col("t_drop")
+                ).alias("w0_micro"),
+            )
+            .first()
         )
-        .first()
-    )
-    with open(meta_path, "w") as fh:
-        json.dump(
-            {
-                "fingerprint": fp,
-                "buckets": CLF_BUCKETS,
-                "seed": CLF_SEED,
-                "t_keep": int(trow["t_keep"]),
-                "t_drop": int(trow["t_drop"]),
-                "w0_micro": int(trow["w0_micro"]),
-                "n_keep_docs": int(prow["nk"]),
-                "n_drop_docs": int(prow["nd"]),
-                "bias_micro": int(prow["bias_micro"]),
-            },
-            fh,
+        from kafkatoclickhouse_spark.operators.text import gopher_keep_col
+
+        docs = load_table(spark, sf_dir, "documents")
+        prow = (
+            docs.select(gopher_keep_col(F.col("text")).alias("keep"))
+            .agg(
+                F.sum(F.col("keep").cast("long")).cast("long").alias("nk"),
+                F.sum((~F.col("keep")).cast("long"))
+                .cast("long")
+                .alias("nd"),
+            )
+            .select(
+                "nk",
+                "nd",
+                F.floor(
+                    F.log(
+                        (F.col("nk") + F.lit(1)).cast("double")
+                        / (F.col("nd") + F.lit(1)).cast("double")
+                    )
+                    * F.lit(1000000.0)
+                    + F.lit(0.5)
+                )
+                .cast("long")
+                .alias("bias_micro"),
+            )
+            .first()
         )
-    return path
+        return {
+            "t_keep": int(trow["t_keep"]),
+            "t_drop": int(trow["t_drop"]),
+            "w0_micro": int(trow["w0_micro"]),
+            "n_keep_docs": int(prow["nk"]),
+            "n_drop_docs": int(prow["nd"]),
+            "bias_micro": int(prow["bias_micro"]),
+        }
+
+    key = {
+        "buckets": CLF_BUCKETS,
+        "seed": CLF_SEED,
+    }
+    return artifacts.build(sf_dir, "documents", "clf", key, write, path, force)
 
 
 @query(
@@ -503,12 +472,10 @@ def text_classifier_score_trained(
     weight table → one doc_id aggregate → left join back so empty
     documents score exactly the prior bias. The oracle retrains and
     rescores the identical model from raw text via CTEs."""
-    import json
     import os
 
     path = text_classifier_index_build(spark, sf_dir)
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
+    meta = artifacts.read_meta(path)
     weights = spark.read.parquet(
         os.path.join(path, "weights.parquet")
     ).select("bucket", "weight_micro")
@@ -594,12 +561,10 @@ def text_classifier_calibration_trained(
     projection (gopher_keep_col is map-only)."""
     from kafkatoclickhouse_spark.operators.text import gopher_keep_col
 
-    path = text_classifier_index_build(spark, sf_dir)
-    import json
     import os
 
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
+    path = text_classifier_index_build(spark, sf_dir)
+    meta = artifacts.read_meta(path)
     weights = spark.read.parquet(
         os.path.join(path, "weights.parquet")
     ).select("bucket", "weight_micro")

@@ -1413,8 +1413,8 @@ def dedup_substring_spans_winnowed(
     so both of its carriers are candidates and every corpus-wide
     fingerprint count >= 2 is preserved inside the pruned subset
     (pinned in tests/test_properties.py). Candidates come from the
-    PERSISTED winnow index (winnow.text_winnow_index_build,
-    fingerprint-keyed, built iff absent) — the nightly re-verify
+    PERSISTED winnow index (winnow.text_winnow_index_build, built
+    iff absent or stale) — the nightly re-verify
     reads the index instead of re-hashing every position; measured
     at sf1.0 the served composition beats the unpruned twin
     (candidate fraction 0.2 on the fixture)."""

@@ -146,6 +146,9 @@ for _k in range(8):
         _A[_k, _n] = np.cos((2 * _n + 1) * _k * np.pi / 16) * (
             np.sqrt(1 / 8) if _k == 0 else np.sqrt(2 / 8)
         )
+# row k = the 64 level-shifted pixels one unit of zigzag coefficient k
+# adds to its block
+_BASIS_ZZ = np.einsum("ui,vj->uvij", _A, _A).reshape(64, 64)[ZIGZAG]
 
 
 def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -1045,7 +1048,9 @@ def _component_qcoefs(
     order, DCT'd and quantized as ONE batched numpy op (per-block
     matmuls in a Python loop dominated the old encoder), handed back
     as Python lists for the symbol loop — plus each block's last
-    nonzero index, computed vectorized."""
+    nonzero index, computed vectorized. Blocks that plain rounding
+    reconstructs badly get their coefficients re-picked by
+    :func:`_refine_blocks`."""
     h, w = plane.shape
     by, bx = (h + 7) // 8, (w + 7) // 8
     padded = np.empty((by * 8, bx * 8), dtype=np.float64)
@@ -1058,11 +1063,85 @@ def _component_qcoefs(
     )
     coef = _A @ blocks @ _A.T  # batched over the leading block axis
     q = np.round(coef.reshape(-1, 64)[:, ZIGZAG] / quant).astype(np.int64)
+    real = np.zeros((by * 8, bx * 8), dtype=bool)
+    real[:h, :w] = True
+    real = real.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3).reshape(-1, 64)
+    pixels = blocks.reshape(-1, 64)
+    err = np.where(real, (q * quant) @ _BASIS_ZZ - pixels, 0.0)
+    worse = ~real.all(axis=1) | (np.abs(err).max(axis=1) > _REFINE_ABOVE)
+    if worse.any():
+        q[worse] = _refine_blocks(q[worse], err[worse], real[worse], quant)
     nz = q != 0
     last_nz = np.where(
         nz.any(axis=1), 63 - np.argmax(nz[:, ::-1], axis=1), 0
     )
     return q.tolist(), last_nz.tolist()
+
+
+# a block whose plain rounding leaves a real pixel further off than
+# this (level units) gets its coefficients re-picked
+_REFINE_ABOVE = 16.0
+# the re-pick takes at most this many ±1 steps per block, scoring
+# this many blocks per numpy batch (128 candidate error vectors each)
+_REFINE_STEPS = 64
+_REFINE_CHUNK = 512
+
+
+def _refine_blocks(
+    q: np.ndarray,
+    err: np.ndarray,
+    real: np.ndarray,
+    quant: np.ndarray,
+) -> np.ndarray:
+    """Re-pick the quantized coefficients of blocks that plain
+    rounding reconstructs badly: every edge block that hangs off the
+    image, and any block with a pixel more than ``_REFINE_ABOVE``
+    off. Edge-replicate padding makes a hanging block nearly
+    constant, so its few real pixels carry detail spread over many
+    small coefficients that all round the same way — their errors
+    add up coherently on the real pixels (a 2×2 corner of noise
+    came back 25 levels off). Rounding each coefficient on its own
+    is not the closest lattice point in pixel space either, so a
+    full block can still stack its errors on one pixel. Steepest
+    descent over ±1 steps of single coefficients, per block, on
+    (max, sum of squares) of the error over the real pixels only —
+    pad pixels are discarded by the decoder, so they do not count.
+    ``err`` is the current reconstruction error, zero on pad pixels.
+    A block leaves the search once no step improves it or after
+    ``_REFINE_STEPS`` steps. A block that already reconstructs
+    exactly (a constant tile) has no improving step and is left
+    untouched."""
+    q = q.copy()
+    err = err.copy()
+    quant = np.asarray(quant, dtype=np.float64)
+    step = _BASIS_ZZ * quant[:, None]
+    moves = np.concatenate([step, -step])  # (128 moves, 64 pixels)
+
+    def score(e: np.ndarray) -> np.ndarray:
+        return np.abs(e).max(axis=-1) * 1e6 + (e * e).sum(axis=-1)
+
+    cur = score(err)
+    active = np.arange(len(q))
+    for _ in range(_REFINE_STEPS):
+        if not len(active):
+            break
+        moved = []
+        for lo in range(0, len(active), _REFINE_CHUNK):
+            idx = active[lo : lo + _REFINE_CHUNK]
+            cand = np.where(
+                real[idx, None, :], err[idx, None, :] + moves, 0.0
+            )
+            sc = score(cand)
+            best = sc.argmin(axis=1)
+            rows = np.arange(len(idx))
+            better = sc[rows, best] < cur[idx] - 1e-6
+            idx, rows, mv = idx[better], rows[better], best[better]
+            q[idx, mv % 64] += np.where(mv < 64, 1, -1)
+            err[idx] = cand[rows, mv]
+            cur[idx] = sc[rows, mv]
+            moved.append(idx)
+        active = np.concatenate(moved)
+    return q
 
 
 # quant tables: DC step 8 makes constant blocks lossless (module

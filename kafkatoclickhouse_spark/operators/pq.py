@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from kafkatoclickhouse_spark import artifacts
 from kafkatoclickhouse_spark.operators import kmeans as KM
 from kafkatoclickhouse_spark.operators import simfuse as SFZ
 from kafkatoclickhouse_spark.operators.similarity import (
@@ -59,7 +60,7 @@ from kafkatoclickhouse_spark.operators.similarity import (
     adaptive_probes,
 )
 from kafkatoclickhouse_spark.registry import query
-from kafkatoclickhouse_spark.tables import fan_out, load_table
+from kafkatoclickhouse_spark.tables import fan_out, load_table, table_fingerprint
 
 PQ_M = 4  # subspaces
 PQ_SUBDIM = KM._DIM // PQ_M  # 16 dims each
@@ -86,14 +87,6 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BOOK_CACHE: dict[tuple, list] = {}
 
 
-def _table_fingerprint(sf_dir: str, table: str = "embeddings") -> tuple:
-    """See :func:`kafkatoclickhouse_spark.tables.table_fingerprint`
-    — the shared stale-artifact invalidation key."""
-    from kafkatoclickhouse_spark.tables import table_fingerprint
-
-    return table_fingerprint(sf_dir, table)
-
-
 def _codebooks(
     spark: SparkSession, sf_dir: str
 ) -> list[list[tuple[int, list[int]]]]:
@@ -103,7 +96,7 @@ def _codebooks(
     same books (an index build trains once and persists; the memo is
     that persistence). The fingerprint in the key means regenerating
     the fixture in-process retrains instead of serving stale books."""
-    key = _table_fingerprint(sf_dir)
+    key = table_fingerprint(sf_dir, "embeddings")
     if key in _BOOK_CACHE:
         return _BOOK_CACHE[key]
     e = _quantized(spark, sf_dir)
@@ -777,37 +770,6 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Index lifecycle: BUILD once at ingest, SERVE many --------------
 
 
-def default_index_dir(sf_dir: str) -> str:
-    """Artifact location for the persisted IVF-PQ index of one
-    fixture dir: ``$SPARK_GRAFT_INDEX_DIR`` (default
-    ``<repo>/.ann_index``) / ``<fixture>_<fingerprint>``. The
-    fingerprint in the path means a regenerated fixture gets a fresh
-    index instead of stale artifacts. On a cluster this would be an
-    object-store prefix next to the table."""
-    import hashlib
-    import os
-
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(
-            os.path.dirname(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            ),
-            ".ann_index",
-        ),
-    )
-    fp = _table_fingerprint(sf_dir)
-    tag = hashlib.sha256(repr(fp).encode()).hexdigest()[:12]
-    base = os.path.basename(sf_dir.rstrip("/")) or "data"
-    return os.path.join(root, f"{base}_{tag}")
-
-
-def index_is_built(path: str) -> bool:
-    import os
-
-    return os.path.isfile(os.path.join(path, "meta.json"))
-
-
 def embedding_pq_index_build(
     spark: SparkSession, sf_dir: str, path: str | None = None,
     force: bool = False,
@@ -823,68 +785,52 @@ def embedding_pq_index_build(
         compressed corpus — M small ints + a cell id per vector, the
         ONLY data-sized artifact, written distributed (at 100 TB
         this is the 64×-compressed table retrieval scans instead of
-        the vectors);
-      - ``meta.json`` (written LAST — the build-complete marker):
-        config + source-table fingerprint, so a stale index is
-        detected, never silently served.
+        the vectors).
+
+    The key is the source fingerprint plus m/k/subdim/iters/coarse_k
+    (commit protocol: ``artifacts``).
 
     Train-once-serve-many is how FAISS deploys IVF-PQ; re-training
     per query (what ``sim_ivfpq_topk`` does, deliberately, to stay
     a self-contained oracle-replayable query) was the slowest bench
     key in r7 — the serve path exists to amortize it away."""
-    import json
     import os
 
-    path = path or default_index_dir(sf_dir)
-    if index_is_built(path) and not force:
-        with open(os.path.join(path, "meta.json")) as fh:
-            meta = json.load(fh)
-        if meta.get("fingerprint") == list(_table_fingerprint(sf_dir)):
-            return path
-    # meta.json is the build-complete marker: remove it BEFORE
-    # touching any artifact so a crash mid-rebuild leaves a dir that
-    # reads as "not built" (rebuild on next call), never a stale
-    # marker pointing at half-rewritten codes.
-    try:
-        os.remove(os.path.join(path, "meta.json"))
-    except FileNotFoundError:
-        pass
-    books = _codebooks(spark, sf_dir)
-    coarse = [(cid, cq) for cid, cq, _ in KM._train(spark, sf_dir)]
-    codes = (
-        _encoded(spark, sf_dir)
-        .withColumn(
-            "cell", F.expr(KM._ranked_cells("vq", coarse) + "[0].cid")
+    def write(path: str) -> None:
+        books = _codebooks(spark, sf_dir)
+        coarse = [(cid, cq) for cid, cq, _ in KM._train(spark, sf_dir)]
+        codes = (
+            _encoded(spark, sf_dir)
+            .withColumn(
+                "cell", F.expr(KM._ranked_cells("vq", coarse) + "[0].cid")
+            )
+            .select(
+                "vec_id", *[f"code{m}" for m in range(PQ_M)], "cell"
+            )
         )
-        .select(
-            "vec_id", *[f"code{m}" for m in range(PQ_M)], "cell"
+        codes.write.mode("overwrite").parquet(
+            os.path.join(path, "codes.parquet")
         )
-    )
-    codes.write.mode("overwrite").parquet(os.path.join(path, "codes.parquet"))
-    spark.createDataFrame(
-        [(m, cid, cq) for m, book in enumerate(books) for cid, cq in book],
-        schema="m int, cid int, cq array<bigint>",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "codebooks.parquet")
-    )
-    spark.createDataFrame(
-        coarse, schema="cid int, cq array<bigint>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "coarse.parquet")
-    )
-    with open(os.path.join(path, "meta.json"), "w") as fh:
-        json.dump(
-            {
-                "fingerprint": list(_table_fingerprint(sf_dir)),
-                "m": PQ_M,
-                "k": PQ_K,
-                "subdim": PQ_SUBDIM,
-                "iters": PQ_ITERS,
-                "coarse_k": KM.KM_K,
-            },
-            fh,
+        spark.createDataFrame(
+            [(m, cid, cq) for m, book in enumerate(books) for cid, cq in book],
+            schema="m int, cid int, cq array<bigint>",
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(path, "codebooks.parquet")
         )
-    return path
+        spark.createDataFrame(
+            coarse, schema="cid int, cq array<bigint>"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(path, "coarse.parquet")
+        )
+
+    key = {
+        "m": PQ_M,
+        "k": PQ_K,
+        "subdim": PQ_SUBDIM,
+        "iters": PQ_ITERS,
+        "coarse_k": KM.KM_K,
+    }
+    return artifacts.build(sf_dir, "embeddings", "pq", key, write, path, force)
 
 
 _INDEX_CACHE: dict[tuple, tuple] = {}
@@ -897,15 +843,14 @@ def _load_index(
     from persisted artifacts. The centroid/codebook collects are
     K·DIM scalars — the same literal-shipping driver sync training
     uses; the codes table is NEVER collected. The two kilobyte-sized
-    metadata collects are memoized per (path, meta.json mtime/size)
-    — the same persistence-backed memo discipline as ``_BOOK_CACHE``
-    (a rebuilt index invalidates the key); the data-sized codes
+    metadata collects are memoized per (path, committed marker
+    content): a rebuild under a different key commits a different
+    marker, so it is never served from the memo; the data-sized codes
     DataFrame is re-created per call."""
+    import json
     import os
 
-    meta = os.path.join(path, "meta.json")
-    st = os.stat(meta)
-    key = (path, st.st_mtime_ns, st.st_size)
+    key = (path, json.dumps(artifacts.read_meta(path), sort_keys=True))
     if key in _INDEX_CACHE:
         coarse, books = _INDEX_CACHE[key]
         return coarse, books, spark.read.parquet(

@@ -119,13 +119,19 @@ def cosine2(A, an, B, bn):
 # --------------------------------------------------------------------------
 
 
+# SQ8 codes are floor(x / max_abs · SQ8_RANGE), in [-SQ8_RANGE,
+# SQ8_RANGE]; every encoder (Spark, SQL, numpy) and the persisted
+# sq8 artifact's key read this one value
+SQ8_RANGE = 127
+
+
 def sq8_np(V: np.ndarray):
     """(scale_micro int64, codes int64 (n,d)) — the
     ``operators.similarity.sq8_encode`` construction in numpy."""
     ma = np.max(np.abs(V), axis=1)
     scale = np.floor(ma * 1_000_000.0).astype(np.int64)
     with np.errstate(divide="ignore", invalid="ignore"):
-        c = np.floor(V / ma[:, None] * 127.0)
+        c = np.floor(V / ma[:, None] * float(SQ8_RANGE))
     codes = np.where(ma[:, None] == 0.0, 0.0, c).astype(np.int64)
     return scale, codes
 

@@ -28,12 +28,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from kafkatoclickhouse_spark import artifacts
 from kafkatoclickhouse_spark.functions.vector import (
     cosine_with_norms,
     dot,
     norm,
 )
 from kafkatoclickhouse_spark.operators import simfuse as SFZ
+from kafkatoclickhouse_spark.operators.simfuse import SQ8_RANGE
 from kafkatoclickhouse_spark.registry import query
 from kafkatoclickhouse_spark.tables import fan_out, load_table
 
@@ -919,7 +921,7 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_quantize_int8",
-    oracle="""
+    oracle=f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
     m AS (SELECT vec_id, v,
@@ -930,13 +932,13 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(floor(max_abs * 1000000) AS BIGINT) AS scale_micro,
            array_to_string(
              list_transform(v, x -> CAST(CASE WHEN max_abs = 0 THEN 0
-                 ELSE floor(x / max_abs * 127) END AS BIGINT)), ',')
+                 ELSE floor(x / max_abs * {SQ8_RANGE}) END AS BIGINT)), ',')
              AS codes_csv
     FROM m
     """,
 )
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric int8 quantization per vector (codes in [-127, 127],
+    """Symmetric int8 quantization per vector (codes in ±``SQ8_RANGE``,
     per-vector max-abs scale) — the 4× storage/bandwidth reduction
     step before ANN indexing at 100 TB. Map-only higher-order
     expressions, no shuffle, no Python.
@@ -946,8 +948,8 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     (engine tie-break differs) and no libm (pow/log vary per
     implementation); the scale is emitted floor-quantized to an
     integer micro grid. Codes join back as
-    ``code * scale / 127`` for reconstruction (error ≤ scale/127 per
-    component, ~0.8%)."""
+    ``code * scale / SQ8_RANGE`` for reconstruction (error ≤
+    scale/SQ8_RANGE per component, ~0.8%)."""
     em = load_table(spark, sf_dir, "embeddings")
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return (
@@ -967,7 +969,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
                     lambda x: F.when(
                         F.col("max_abs") == 0, F.lit(0).cast("long")
                     )
-                    .otherwise(F.floor(x / F.col("max_abs") * 127))
+                    .otherwise(F.floor(x / F.col("max_abs") * SQ8_RANGE))
                     .cast("string"),
                 ),
             ).alias("codes_csv"),
@@ -981,22 +983,22 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def int8_codes(v: Column, max_abs: Column) -> Column:
-    """array<long> symmetric int8 codes (floor(x / max_abs · 127),
-    codes in [-127, 127]) — the same exactly-rounded IEEE construction
-    as ``embedding_quantize_int8`` (abs/max/div/mul + floor only, no
-    ROUND, no libm), factored so the storage op and the SQ8 scorer
-    can never drift apart."""
+    """array<long> symmetric int8 codes (floor(x / max_abs ·
+    SQ8_RANGE), codes in ±``SQ8_RANGE``) — the same exactly-rounded
+    IEEE construction as ``embedding_quantize_int8`` (abs/max/div/mul
+    + floor only, no ROUND, no libm), factored so the storage op and
+    the SQ8 scorer can never drift apart."""
     return F.transform(
         v,
         lambda x: F.when(max_abs == 0, F.lit(0).cast("long")).otherwise(
-            F.floor(x / max_abs * 127).cast("long")
+            F.floor(x / max_abs * SQ8_RANGE).cast("long")
         ),
     )
 
 
 _SQL_INT8_CODES = (
     "list_transform({v}, x -> CAST(CASE WHEN {m} = 0 THEN 0 "
-    "ELSE floor(x / {m} * 127) END AS BIGINT))"
+    f"ELSE floor(x / {{m}} * {SQ8_RANGE}) END AS BIGINT))"
 )
 
 
@@ -2132,38 +2134,22 @@ def embedding_sq8_index_build(
     integer scale, 4× less bandwidth than float32 — and persist as
 
       - ``sq8_codes.parquet``: the compressed corpus, written
-        distributed (the only data-sized artifact);
-      - ``meta.json`` (written LAST / removed FIRST — the
-        crash-safe build-complete marker): source-table fingerprint
-        so a stale index is detected, never silently served.
+        distributed (the only data-sized artifact).
 
-    Shares ``pq.default_index_dir``'s fingerprint-keyed location
-    (``sq8`` subdir) so regenerated fixtures get fresh indexes."""
-    import json
+    The key is the source fingerprint plus the code range (commit
+    protocol: ``artifacts``)."""
     import os
 
-    from kafkatoclickhouse_spark.operators import pq as PQ
-    from kafkatoclickhouse_spark.tables import table_fingerprint
+    def write(path: str) -> None:
+        em = load_table(spark, sf_dir, "embeddings")
+        sq8_encode(em, "embedding", ("vec_id",)).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(path, "sq8_codes.parquet"))
 
-    path = path or os.path.join(PQ.default_index_dir(sf_dir), "sq8")
-    meta_path = os.path.join(path, "meta.json")
-    fp = list(table_fingerprint(sf_dir, "embeddings"))
-    if os.path.isfile(meta_path) and not force:
-        with open(meta_path) as fh:
-            if json.load(fh).get("fingerprint") == fp:
-                return path
-    try:
-        os.remove(meta_path)
-    except FileNotFoundError:
-        pass
-    em = load_table(spark, sf_dir, "embeddings")
-    sq8_encode(em, "embedding", ("vec_id",)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "sq8_codes.parquet"))
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as fh:
-        json.dump({"fingerprint": fp, "codes": 127}, fh)
-    return path
+    key = {"codes": SQ8_RANGE}
+    return artifacts.build(
+        sf_dir, "embeddings", "sq8", key, write, path, force
+    )
 
 
 @query("sim_sq8_serve_topk", oracle=_SQL_SQ8_TOPK)
@@ -2196,41 +2182,25 @@ def embedding_binary_index_build(
     (vec_id, b), two BIGINT words per 64-dim vector, a 32× bandwidth
     cut — and persist as
 
-      - ``bin_codes.parquet``: the compressed corpus;
-      - ``meta.json`` (written LAST / removed FIRST — the crash-safe
-        build-complete marker) with the source-table fingerprint.
+      - ``bin_codes.parquet``: the compressed corpus.
 
-    Same fingerprint-keyed location discipline as the sibling
-    indexes (``pq.default_index_dir``, ``bin`` subdir)."""
-    import json
+    The key is the source fingerprint plus the word layout (commit
+    protocol: ``artifacts``)."""
     import os
 
-    from kafkatoclickhouse_spark.operators import pq as PQ
-    from kafkatoclickhouse_spark.tables import table_fingerprint
-
-    path = path or os.path.join(PQ.default_index_dir(sf_dir), "bin")
-    meta_path = os.path.join(path, "meta.json")
-    fp = list(table_fingerprint(sf_dir, "embeddings"))
-    if os.path.isfile(meta_path) and not force:
-        with open(meta_path) as fh:
-            if json.load(fh).get("fingerprint") == fp:
-                return path
-    try:
-        os.remove(meta_path)
-    except FileNotFoundError:
-        pass
-    em = load_table(spark, sf_dir, "embeddings")
-    _binary_codes(em).write.mode("overwrite").parquet(
-        os.path.join(path, "bin_codes.parquet")
-    )
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as fh:
-        json.dump(
-            {"fingerprint": fp, "word_bits": BIN_WORD_BITS,
-             "words": BIN_WORDS},
-            fh,
+    def write(path: str) -> None:
+        em = load_table(spark, sf_dir, "embeddings")
+        _binary_codes(em).write.mode("overwrite").parquet(
+            os.path.join(path, "bin_codes.parquet")
         )
-    return path
+
+    key = {
+        "word_bits": BIN_WORD_BITS,
+        "words": BIN_WORDS,
+    }
+    return artifacts.build(
+        sf_dir, "embeddings", "bin", key, write, path, force
+    )
 
 
 def _binary_score_topk(codes: DataFrame) -> DataFrame:
@@ -2531,48 +2501,44 @@ def embedding_ivf_index_build(
     the base slice's (cell, SQ8-code) rows, persisted as
 
       - ``centroids.parquet`` (cid, cv): the frozen coarse quantizer;
-      - ``codes.parquet`` (vec_id, cell, scale_micro, codes);
-      - ``meta.json`` (written LAST — crash-safe marker): source
-        fingerprint + appended-batch flag (False at build)."""
-    import json
+      - ``codes.parquet`` (vec_id, cell, scale_micro, codes).
+
+    The key is the source fingerprint plus the centroid count and the
+    base/batch split; the marker also carries the appended-batch flag,
+    False at build (commit protocol: ``artifacts``)."""
     import os
 
-    from kafkatoclickhouse_spark.operators import pq as PQ
-    from kafkatoclickhouse_spark.tables import table_fingerprint
-
-    path = path or os.path.join(PQ.default_index_dir(sf_dir), "ivf_app")
-    meta_path = os.path.join(path, "meta.json")
-    fp = list(table_fingerprint(sf_dir, "embeddings"))
-    if os.path.isfile(meta_path) and not force:
-        with open(meta_path) as fh:
-            if json.load(fh).get("fingerprint") == fp:
-                return path
-    try:
-        os.remove(meta_path)
-    except FileNotFoundError:
-        pass
-    em = load_table(spark, sf_dir, "embeddings")
-    base = em.filter(F.col("vec_id") % APPEND_MOD != APPEND_RES)
-    cent = (
-        base.orderBy("vec_id")
-        .limit(NUM_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+    def write(path: str) -> dict:
+        em = load_table(spark, sf_dir, "embeddings")
+        base = em.filter(F.col("vec_id") % APPEND_MOD != APPEND_RES)
+        cent = (
+            base.orderBy("vec_id")
+            .limit(NUM_CENTROIDS)
+            .select(
+                F.col("vec_id").alias("cid"),
+                F.col("embedding").alias("cv"),
+            )
         )
+        cent.write.mode("overwrite").parquet(
+            os.path.join(path, "centroids.parquet")
+        )
+        cent_n = spark.read.parquet(
+            os.path.join(path, "centroids.parquet")
+        ).select("cid", "cv", norm(F.col("cv")).alias("cn"))
+        _ivf_assign_codes(
+            base.select("vec_id", "embedding"), cent_n
+        ).write.mode("overwrite").parquet(
+            os.path.join(path, "codes.parquet")
+        )
+        return {"appended": False}
+
+    key = {
+        "centroids": NUM_CENTROIDS,
+        "append_split": [APPEND_MOD, APPEND_RES],
+    }
+    return artifacts.build(
+        sf_dir, "embeddings", "ivf_app", key, write, path, force
     )
-    cent.write.mode("overwrite").parquet(
-        os.path.join(path, "centroids.parquet")
-    )
-    cent_n = spark.read.parquet(
-        os.path.join(path, "centroids.parquet")
-    ).select("cid", "cv", norm(F.col("cv")).alias("cn"))
-    _ivf_assign_codes(
-        base.select("vec_id", "embedding"), cent_n
-    ).write.mode("overwrite").parquet(os.path.join(path, "codes.parquet"))
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as fh:
-        json.dump({"fingerprint": fp, "appended": False}, fh)
-    return path
 
 
 def embedding_ivf_index_append(
@@ -2581,15 +2547,13 @@ def embedding_ivf_index_append(
     """APPEND: assign ONLY the new-batch slice (vec_id % {APPEND_MOD}
     == {APPEND_RES}) against the PERSISTED centroids — no retrain, no
     base re-read — and write ``codes_append.parquet``; meta flips
-    ``appended`` last (idempotent: a second call is a no-op)."""
-    import json
+    ``appended`` last, atomically (idempotent: a second call is a
+    no-op)."""
     import os
 
     path = path or embedding_ivf_index_build(spark, sf_dir)
-    meta_path = os.path.join(path, "meta.json")
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    if meta.get("appended"):
+    meta = artifacts.read_meta(path)
+    if meta["appended"]:
         return path
     cent_n = spark.read.parquet(
         os.path.join(path, "centroids.parquet")
@@ -2602,9 +2566,7 @@ def embedding_ivf_index_append(
     ).write.mode("overwrite").parquet(
         os.path.join(path, "codes_append.parquet")
     )
-    meta["appended"] = True
-    with open(meta_path, "w") as fh:
-        json.dump(meta, fh)
+    artifacts.write_meta(path, {**meta, "appended": True})
     return path
 
 

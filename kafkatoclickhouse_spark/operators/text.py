@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkatoclickhouse_spark import artifacts
 from kafkatoclickhouse_spark.functions import bpe as bpefns
 from kafkatoclickhouse_spark.functions import hashing, textfns
 from kafkatoclickhouse_spark.functions.textfns import (
@@ -1618,35 +1619,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text every invocation — correct as a self-contained oracled query,
 # wrong as a 100 TB lifecycle, where the postings are built once at
 # ingest (what Lucene/Elasticsearch do) and queries touch ONLY the
-# index. Mirrors the PQ index lifecycle (operators/pq.py:498):
-# fingerprint-keyed artifact dir, meta.json written LAST as the
-# build-complete marker (and deleted FIRST on rebuild), serve path
-# that retrains/retokenizes NOTHING (poison-tested).
-
-
-def bm25_index_dir(sf_dir: str) -> str:
-    """Artifact location for the persisted BM25 postings of one
-    fixture dir — same root as the ANN index, `_bm25` suffix, source
-    fingerprint in the path so a regenerated fixture gets a fresh
-    index instead of stale postings."""
-    import hashlib
-    import os
-
-    from kafkatoclickhouse_spark.tables import table_fingerprint
-
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(
-            os.path.dirname(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            ),
-            ".ann_index",
-        ),
-    )
-    fp = table_fingerprint(sf_dir, "documents")
-    tag = hashlib.sha256(repr(fp).encode()).hexdigest()[:12]
-    base = os.path.basename(sf_dir.rstrip("/")) or "data"
-    return os.path.join(root, f"{base}_{tag}_bm25")
+# index. The serve path retrains/retokenizes NOTHING (poison-tested).
 
 
 def _bm25_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1675,54 +1648,39 @@ def text_bm25_index_build(
         but laid out token-major by the tf groupBy's hash shuffle —
         at 100 TB this is the table queries scan instead of raw text;
       - ``dfreq.parquet``   (token, df): the vocabulary;
-      - ``dlen.parquet``    (doc_id, dl): length normalization;
-      - ``meta.json`` (written LAST — the build-complete marker):
-        corpus scalars (n_docs, avgdl), k1/b, source fingerprint.
+      - ``dlen.parquet``    (doc_id, dl): length normalization.
 
-    A crash mid-rebuild leaves no marker (meta.json is deleted first),
-    so a half-written index reads as "not built", never served."""
-    import json
+    The key is the source fingerprint plus k1/b; the marker also
+    carries the corpus scalars n_docs and avgdl (commit protocol:
+    ``artifacts``)."""
     import os
 
-    from kafkatoclickhouse_spark.tables import table_fingerprint
-
-    path = path or bm25_index_dir(sf_dir)
-    fp = list(table_fingerprint(sf_dir, "documents"))
-    meta_path = os.path.join(path, "meta.json")
-    if os.path.isfile(meta_path) and not force:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if meta.get("fingerprint") == fp:
-            return path
-    try:
-        os.remove(meta_path)
-    except FileNotFoundError:
-        pass
-    os.makedirs(path, exist_ok=True)
-    tf = _bm25_tf(spark, sf_dir)
-    tf.write.mode("overwrite").parquet(os.path.join(path, "postings.parquet"))
-    postings = spark.read.parquet(os.path.join(path, "postings.parquet"))
-    postings.groupBy("token").agg(
-        F.count("*").alias("df")
-    ).write.mode("overwrite").parquet(os.path.join(path, "dfreq.parquet"))
-    dlen = postings.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    dlen.write.mode("overwrite").parquet(os.path.join(path, "dlen.parquet"))
-    srow = dlen.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    ).first()
-    with open(meta_path, "w") as fh:
-        json.dump(
-            {
-                "fingerprint": fp,
-                "n_docs": int(srow["n_docs"]),
-                "avgdl": float(srow["avgdl"]),
-                "k1": BM25_K1,
-                "b": BM25_B,
-            },
-            fh,
+    def write(path: str) -> dict:
+        tf = _bm25_tf(spark, sf_dir)
+        tf.write.mode("overwrite").parquet(
+            os.path.join(path, "postings.parquet")
         )
-    return path
+        postings = spark.read.parquet(os.path.join(path, "postings.parquet"))
+        postings.groupBy("token").agg(
+            F.count("*").alias("df")
+        ).write.mode("overwrite").parquet(os.path.join(path, "dfreq.parquet"))
+        dlen = postings.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+        dlen.write.mode("overwrite").parquet(
+            os.path.join(path, "dlen.parquet")
+        )
+        srow = dlen.agg(
+            F.count("*").cast("long").alias("n_docs"),
+            (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
+        ).first()
+        return {"n_docs": int(srow["n_docs"]), "avgdl": float(srow["avgdl"])}
+
+    key = {
+        "k1": BM25_K1,
+        "b": BM25_B,
+    }
+    return artifacts.build(
+        sf_dir, "documents", "bm25", key, write, path, force
+    )
 
 
 def _bm25_oracle() -> str:
@@ -1736,7 +1694,7 @@ def text_bm25_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SERVE half: identical semantics (and oracle) to
     ``text_bm25_topk``, but retrieval runs against the PERSISTED
     postings — no tokenization, no tf/df/dlen recomputation; the
-    corpus scalars ride in from meta.json as literals. Builds the
+    corpus scalars ride in from the marker as literals. Builds the
     index first iff absent/stale (one cold build; every later call is
     pure serve — bench shows the split).
 
@@ -1747,14 +1705,12 @@ def text_bm25_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain; final top-k is a TakeOrdered. The raw text column is never
     read — which is exactly the property that makes build-at-ingest
     the 100 TB lifecycle."""
-    import json
     import os
 
     from pyspark.sql import Window as W
 
     path = text_bm25_index_build(spark, sf_dir)
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
+    meta = artifacts.read_meta(path)
     postings = spark.read.parquet(os.path.join(path, "postings.parquet"))
     dfreq = spark.read.parquet(os.path.join(path, "dfreq.parquet"))
     dlen = spark.read.parquet(os.path.join(path, "dlen.parquet"))

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from kafkatoclickhouse_spark import artifacts
 from kafkatoclickhouse_spark.functions import hashing
 from kafkatoclickhouse_spark.registry import query
 from kafkatoclickhouse_spark.tables import fan_out, load_table
@@ -138,30 +139,6 @@ def text_winnow_fingerprints(
     return _fingerprints(spark, sf_dir)
 
 
-def winnow_index_dir(sf_dir: str) -> str:
-    """Fingerprint-keyed artifact location for the persisted winnow
-    index — same location discipline as the BM25/PQ/SQ8/classifier
-    artifacts."""
-    import hashlib
-    import os
-
-    from kafkatoclickhouse_spark.tables import table_fingerprint
-
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(
-            os.path.dirname(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            ),
-            ".ann_index",
-        ),
-    )
-    fp = table_fingerprint(sf_dir, "documents")
-    tag = hashlib.sha256(repr(fp).encode()).hexdigest()[:12]
-    base = os.path.basename(sf_dir.rstrip("/")) or "data"
-    return os.path.join(root, f"{base}_{tag}_winnow")
-
-
 def text_winnow_index_build(
     spark: SparkSession,
     sf_dir: str,
@@ -169,55 +146,44 @@ def text_winnow_index_build(
     force: bool = False,
 ) -> str:
     """BUILD half of the winnow lifecycle: hash + window-select ONCE
-    and persist ``wfp.parquet`` (doc_id, fp_hash, fp_pos) with the
-    meta-last crash-safe marker. At 100 TB this is built at ingest —
-    2/(W+1) of the k-gram positions, a few narrow columns — and every
-    copy-detection / substring-dedup pass reads it instead of
-    re-hashing the corpus (``dedup_substring_spans_winnowed`` is the
-    serve-side consumer)."""
-    import json
+    and persist ``wfp.parquet`` (doc_id, fp_hash, fp_pos). At 100 TB
+    this is built at ingest — 2/(W+1) of the k-gram positions, a few
+    narrow columns — and every copy-detection / substring-dedup pass
+    reads it instead of re-hashing the corpus
+    (``dedup_substring_spans_winnowed`` is the serve-side consumer).
+    The key is the source fingerprint plus k/w/seed (commit protocol:
+    ``artifacts``)."""
     import os
 
-    from kafkatoclickhouse_spark.tables import table_fingerprint
-
-    path = path or winnow_index_dir(sf_dir)
-    meta_path = os.path.join(path, "meta.json")
-    fp = list(table_fingerprint(sf_dir, "documents"))
-    if os.path.isfile(meta_path) and not force:
-        with open(meta_path) as fh:
-            if json.load(fh).get("fingerprint") == fp:
-                return path
-    try:
-        os.remove(meta_path)
-    except FileNotFoundError:
-        pass
-    os.makedirs(path, exist_ok=True)
-    _fingerprints(spark, sf_dir).write.mode("overwrite").parquet(
-        os.path.join(path, "wfp.parquet")
-    )
-    wfp = spark.read.parquet(os.path.join(path, "wfp.parquet"))
-    # duplicate-candidate summary, derived once at build (the BM25
-    # dfreq pattern): docs holding a fingerprint selected at >= 2
-    # corpus positions. Serve-side consumers (the winnowed span
-    # verify) read THIS instead of re-counting the whole index.
-    hot = (
-        wfp.groupBy("fp_hash")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("fp_hash")
-    )
-    wfp.join(hot, "fp_hash").select(
-        "doc_id"
-    ).distinct().write.mode("overwrite").parquet(
-        os.path.join(path, "cand.parquet")
-    )
-    with open(meta_path, "w") as fh:
-        json.dump(
-            {"fingerprint": fp, "k": WINNOW_K, "w": WINNOW_W,
-             "seed": WINNOW_SEED},
-            fh,
+    def write(path: str) -> None:
+        _fingerprints(spark, sf_dir).write.mode("overwrite").parquet(
+            os.path.join(path, "wfp.parquet")
         )
-    return path
+        wfp = spark.read.parquet(os.path.join(path, "wfp.parquet"))
+        # duplicate-candidate summary, derived once at build (the BM25
+        # dfreq pattern): docs holding a fingerprint selected at >= 2
+        # corpus positions. Serve-side consumers (the winnowed span
+        # verify) read THIS instead of re-counting the whole index.
+        hot = (
+            wfp.groupBy("fp_hash")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .filter(F.col("c") >= 2)
+            .select("fp_hash")
+        )
+        wfp.join(hot, "fp_hash").select(
+            "doc_id"
+        ).distinct().write.mode("overwrite").parquet(
+            os.path.join(path, "cand.parquet")
+        )
+
+    key = {
+        "k": WINNOW_K,
+        "w": WINNOW_W,
+        "seed": WINNOW_SEED,
+    }
+    return artifacts.build(
+        sf_dir, "documents", "winnow", key, write, path, force
+    )
 
 
 def winnow_fingerprints_served(

@@ -20,7 +20,6 @@ integers — the plans differ only in join-vs-literal delivery).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -64,8 +63,6 @@ def streaming_bigram_nll(
     frozen model never saw back off to the add-one unseen mass,
     exactly like the batch LEFT joins."""
     path = text_bigram_index_build(spark, sf_dir)
-    with open(os.path.join(path, "meta.json")) as fh:
-        json.load(fh)  # existence-validated; scalars live in maps
     map12 = _count_map(
         spark, os.path.join(path, "hashed12.parquet"), "b12"
     )

@@ -22,12 +22,12 @@ weights).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkatoclickhouse_spark import artifacts
 from kafkatoclickhouse_spark.operators.classifier import (
     _bucket_col,
     text_classifier_index_build,
@@ -43,8 +43,7 @@ def streaming_classifier_score(
     weights, exact BIGINT) and ``keep`` (threshold 0); NULL/empty
     text scores exactly the prior bias, like the batch path."""
     path = text_classifier_index_build(spark, sf_dir)
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
+    meta = artifacts.read_meta(path)
     rows = (
         spark.read.parquet(os.path.join(path, "weights.parquet"))
         .select("bucket", "weight_micro")

@@ -40,7 +40,6 @@ from kafkatoclickhouse_spark.streaming.classifier import (
     streaming_classifier_score,
 )
 from kafkatoclickhouse_spark.streaming.decontam import (
-    streaming_decontaminate,
     streaming_decontaminate_bloom,
 )
 
@@ -56,7 +55,6 @@ def curation_topology(
     drop_rejected: bool = True,
     ts_col: str | None = None,
     dedup_watermark: str = "10 minutes",
-    decontam_mode: str = "bloom",
 ) -> DataFrame:
     """Compose the selected curation stages over a document stream
     (needs at least ``doc_id``/``text``; ``dedup`` additionally needs
@@ -81,17 +79,9 @@ def curation_topology(
             raise ValueError(
                 "the decontam stage needs an eval_shingles relation"
             )
-        if decontam_mode == "bloom":
-            # VERDICT r13 #6: the Bloom prefilter is the production
-            # default — row-identical verdicts (no false negatives),
-            # exact probes only on candidate docs
-            out = streaming_decontaminate_bloom(out, eval_shingles)
-        elif decontam_mode == "exact":
-            out = streaming_decontaminate(out, eval_shingles)
-        else:
-            raise ValueError(
-                f"unknown decontam_mode: {decontam_mode!r}"
-            )
+        # the Bloom prefilter gives the exact gate's verdicts (no
+        # false negatives) with exact probes only on candidate docs
+        out = streaming_decontaminate_bloom(out, eval_shingles)
         if drop_rejected:
             out = out.filter(~F.col("contaminated")).drop(
                 "bloom_candidate"
@@ -125,7 +115,6 @@ def start_curation(
     window_size: int = count_window_jvm.DEFAULT_WINDOW_SIZE,
     max_retries: int = sink.DEFAULT_MAX_RETRIES,
     available_now: bool = False,
-    decontam_mode: str = "bloom",
 ) -> StreamingQuery:
     """Curated stream → per-``window_key`` count window → retrying
     sink, one running query. The count window is the reference R5
@@ -141,7 +130,6 @@ def start_curation(
         stages=stages,
         eval_shingles=eval_shingles,
         ts_col=ts_col,
-        decontam_mode=decontam_mode,
     )
 
     return count_window_jvm.run_count_window_jvm(

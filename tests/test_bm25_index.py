@@ -13,7 +13,7 @@ from __future__ import annotations
 import json
 import os
 
-from kafkatoclickhouse_spark import registry
+from kafkatoclickhouse_spark import artifacts, registry
 from kafkatoclickhouse_spark.operators import text as TXT
 
 
@@ -29,8 +29,9 @@ def test_bm25_build_then_serve_without_tokenizing(
     expected = _canon(
         registry.QUERIES["text_bm25_topk"](spark, sf_dir).collect()
     )
-    path = str(tmp_path / "bm25")
-    built = TXT.text_bm25_index_build(spark, sf_dir, path=path)
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
+    path = artifacts.artifact_dir(sf_dir, "documents", "bm25")
+    built = TXT.text_bm25_index_build(spark, sf_dir)
     assert built == path and os.path.isfile(os.path.join(path, "meta.json"))
     with open(os.path.join(path, "meta.json")) as fh:
         meta = json.load(fh)
@@ -45,7 +46,7 @@ def test_bm25_build_then_serve_without_tokenizing(
 
     # idempotent: second build with matching fingerprint is a no-op.
     t0 = os.path.getmtime(os.path.join(path, "meta.json"))
-    assert TXT.text_bm25_index_build(spark, sf_dir, path=path) == path
+    assert TXT.text_bm25_index_build(spark, sf_dir) == path
     assert os.path.getmtime(os.path.join(path, "meta.json")) == t0
 
     # SERVE: poison the only tokenizing entry point and the raw-text
@@ -54,7 +55,6 @@ def test_bm25_build_then_serve_without_tokenizing(
         raise AssertionError("serve path tokenized raw text")
 
     monkeypatch.setattr(TXT, "_bm25_tf", boom)
-    monkeypatch.setattr(TXT, "bm25_index_dir", lambda s: path)
     got = _canon(
         registry.QUERIES["text_bm25_serve_topk"](spark, sf_dir).collect()
     )

@@ -13,9 +13,10 @@ import json
 import os
 import pytest
 
-from kafkatoclickhouse_spark import registry
+from kafkatoclickhouse_spark import artifacts, registry
 from kafkatoclickhouse_spark.operators import kmeans as KM
 from kafkatoclickhouse_spark.operators import pq as PQ
+from kafkatoclickhouse_spark.tables import table_fingerprint
 
 
 def _canon(rows):
@@ -31,12 +32,14 @@ def test_pq_index_build_then_serve_without_retraining(
     expected = _canon(
         registry.QUERIES["sim_ivfpq_topk"](spark, sf_dir).collect()
     )
-    path = str(tmp_path / "idx")
-    built = PQ.embedding_pq_index_build(spark, sf_dir, path=path)
-    assert built == path and PQ.index_is_built(path)
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
-    assert meta["fingerprint"] == list(PQ._table_fingerprint(sf_dir))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
+    path = artifacts.artifact_dir(sf_dir, "embeddings", "pq")
+    built = PQ.embedding_pq_index_build(spark, sf_dir)
+    assert built == path and path.startswith(str(tmp_path))
+    meta = artifacts.read_meta(path)
+    assert meta["fingerprint"] == list(
+        table_fingerprint(sf_dir, "embeddings")
+    )
 
     # codes artifact is the compressed corpus: M code columns + cell,
     # NO vector column — the thing a 100 TB retrieval scans.
@@ -58,14 +61,13 @@ def test_pq_index_build_then_serve_without_retraining(
     assert os.path.getmtime(os.path.join(path, "meta.json")) == t0
 
     # SERVE: poison every training entry point, clear the in-process
-    # codebook memo, point the serve query at the built artifacts —
-    # it must still return the re-training query's exact results.
+    # codebook memo, serve from the built artifacts — it must still
+    # return the re-training query's exact results.
     def boom(*a, **k):
         raise AssertionError("serve path retrained the index")
 
     monkeypatch.setattr(KM, "train_on", boom)
     monkeypatch.setattr(KM, "_train", boom)
-    monkeypatch.setattr(PQ, "default_index_dir", lambda s: path)
     PQ._BOOK_CACHE.clear()
     got = _canon(
         registry.QUERIES["sim_ivfpq_serve_topk"](spark, sf_dir).collect()
@@ -89,7 +91,9 @@ def test_pq_index_stale_fingerprint_forces_rebuild(
     PQ.embedding_pq_index_build(spark, sf_dir, path=path)
     with open(meta_path) as fh:
         rebuilt = json.load(fh)
-    assert rebuilt["fingerprint"] == list(PQ._table_fingerprint(sf_dir))
+    assert rebuilt["fingerprint"] == list(
+        table_fingerprint(sf_dir, "embeddings")
+    )
     assert os.path.getmtime(meta_path) >= t0
 
 
@@ -113,11 +117,10 @@ def test_sq8_index_build_serve_lifecycle(
     expected = canon(
         registry.QUERIES["sim_sq8_topk"](spark, sf_dir).collect()
     )
-    monkeypatch.setattr(
-        PQ, "default_index_dir", lambda s: str(tmp_path)
-    )
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
     path = S.embedding_sq8_index_build(spark, sf_dir)
-    assert path == os.path.join(str(tmp_path), "sq8")
+    assert path == artifacts.artifact_dir(sf_dir, "embeddings", "sq8")
+    assert path.startswith(str(tmp_path))
     codes = spark.read.parquet(os.path.join(path, "sq8_codes.parquet"))
     assert set(codes.columns) == {"vec_id", "scale_micro", "codes"}
     n_vecs = spark.read.parquet(
@@ -174,11 +177,10 @@ def test_binary_index_build_serve_lifecycle(
     expected = canon(
         registry.QUERIES["sim_binary_topk"](spark, sf_dir).collect()
     )
-    monkeypatch.setattr(
-        PQ, "default_index_dir", lambda s: str(tmp_path)
-    )
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
     path = S.embedding_binary_index_build(spark, sf_dir)
-    assert path == os.path.join(str(tmp_path), "bin")
+    assert path == artifacts.artifact_dir(sf_dir, "embeddings", "bin")
+    assert path.startswith(str(tmp_path))
     codes = spark.read.parquet(os.path.join(path, "bin_codes.parquet"))
     assert set(codes.columns) == {"vec_id", "b"}
     n_vecs = spark.read.parquet(
@@ -222,11 +224,10 @@ def test_ivf_append_lifecycle(spark, sf_dir, tmp_path, monkeypatch):
     poisoned (retrieval reads only the persisted artifacts)."""
     from kafkatoclickhouse_spark.operators import similarity as S
 
-    monkeypatch.setattr(
-        PQ, "default_index_dir", lambda s: str(tmp_path)
-    )
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
     path = S.embedding_ivf_index_build(spark, sf_dir)
-    assert path == os.path.join(str(tmp_path), "ivf_app")
+    assert path == artifacts.artifact_dir(sf_dir, "embeddings", "ivf_app")
+    assert path.startswith(str(tmp_path))
     with open(os.path.join(path, "meta.json")) as fh:
         assert json.load(fh)["appended"] is False
     # base codes hold no batch-slice ids

@@ -1779,13 +1779,11 @@ def test_streaming_classifier_matches_batch_serve(spark, sf_dir, tmp_path):
         r["doc_id"]: (r["logit_micro"], r["keep"])
         for r in spark.table("clf_stream").collect()
     }
-    import json
-    import os
+    from kafkatoclickhouse_spark import artifacts
 
-    from kafkatoclickhouse_spark.operators.classifier import clf_index_dir
-
-    with open(os.path.join(clf_index_dir(sf_dir), "meta.json")) as fh:
-        bias = json.load(fh)["bias_micro"]
+    bias = artifacts.read_meta(
+        artifacts.artifact_dir(sf_dir, "documents", "clf")
+    )["bias_micro"]
     assert got.pop(null_id) == (bias, bias >= 0)
     assert got == batch
 

@@ -123,11 +123,7 @@ def curate_breakdown(spark, sf_dir: str, work: str, window_size: int):
 
     state_rows = {}
 
-    def variant(
-        name: str,
-        stages: tuple[str, ...],
-        decontam_mode: str = "bloom",
-    ):
+    def variant(name: str, stages: tuple[str, ...]):
         walls = []
         for rnd in ("warm", "t0", "t1", "t2"):
             ckpt = os.path.join(work, f"cur_{name}_{rnd}_ckpt")
@@ -149,7 +145,6 @@ def curate_breakdown(spark, sf_dir: str, work: str, window_size: int):
                 ts_col="ingest_ts" if "dedup" in stages else None,
                 window_size=window_size,
                 available_now=True,
-                decontam_mode=decontam_mode,
             )
             q.awaitTermination(600)
             if rnd == "t2":
@@ -166,9 +161,6 @@ def curate_breakdown(spark, sf_dir: str, work: str, window_size: int):
         "window_only": variant("plain", ()),
         "score": variant("score", ("score",)),
         "score_decontam": variant("sd", ("score", "decontam")),
-        "score_decontam_exact": variant(
-            "sdx", ("score", "decontam"), decontam_mode="exact"
-        ),
         "full_curation": variant(
             "full", ("score", "decontam", "dedup")
         ),
