@@ -39,25 +39,15 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity in double; 0-vector guarded to NULL."""
-    denom = norm(a) * norm(b)
-    return F.when(denom != 0.0, dot(a, b) / denom)
-
-
-def cosine_rounded(a: Column, b: Column, places: int = 6) -> Column:
-    """Cosine rounded for cross-engine comparison stability."""
-    return F.round(cosine(a, b), places)
-
-
 def cosine_with_norms(
     a: Column, b: Column, norm_a: Column, norm_b: Column
 ) -> Column:
-    """Cosine with precomputed L2 norms — bit-identical to
-    :func:`cosine` (same values, same fold order), but in a pairwise
-    join the norms are computed once per VECTOR instead of once per
-    PAIR: O(n·d) instead of O(n²·d) norm work. At 100 TB this is the
-    difference between scoring dominating the job and scoring being
-    a rounding error; measured 3× on the local pair-join bench."""
+    """Cosine with precomputed L2 norms (:func:`dot` over the
+    product of :func:`norm` values, NULL when either norm is 0). In
+    a pairwise join the norms are computed once per VECTOR instead
+    of once per PAIR: O(n·d) instead of O(n²·d) norm work. At 100 TB
+    this is the difference between scoring dominating the job and
+    scoring being a rounding error; measured 3× on the local
+    pair-join bench."""
     denom = norm_a * norm_b
     return F.when(denom != 0.0, dot(a, b) / denom)

@@ -223,6 +223,9 @@ class _BitWriter:
             self._out.append(byte)
             if byte == 0xFF:  # byte stuffing
                 self._out.append(0x00)
+        # keep only the bits not yet emitted, so the shift above stays
+        # O(1) instead of copying every bit written so far
+        self._acc &= (1 << self._n) - 1
 
     def flush(self) -> bytes:
         if self._n:

@@ -57,7 +57,6 @@ from kafkatoclickhouse_spark.operators import simfuse as SFZ
 from kafkatoclickhouse_spark.operators.similarity import (
     PROBE_MASS_DEN,
     PROBE_MASS_NUM,
-    adaptive_probes,
 )
 from kafkatoclickhouse_spark.registry import query
 from kafkatoclickhouse_spark.tables import fan_out, load_table, table_fingerprint
@@ -430,9 +429,9 @@ def _sql_ivfpq_refine() -> str:
 # the persisted codes), with the query-side state — quantized query
 # vectors, per-subspace ADC LUTs, coarse probe sets — computed once in
 # the driver from bounded collects. Everything here is int64 on the
-# 1e-6 grid, so numpy is trivially bit-identical; the retained
-# ``_catalyst_sim_*`` builders are pinned row-identical by
-# tests/test_simfuse.py, and the DuckDB oracles are unchanged.
+# 1e-6 grid, so numpy is trivially bit-identical. Each query's one
+# reference is its DuckDB oracle: tests/test_parity.py replays it on
+# the fixture and tests/test_simfuse.py on an adversarial corpus.
 
 
 def _collect_pq_queries(spark: SparkSession, sf_dir: str):
@@ -565,10 +564,12 @@ def _k_pq_adc(book_mats, luts, q_ids, topn, refine=False, qvq=None, coarse=None)
     return kern
 
 
-def _k_pq_codes(lut_dense, ccids, P, q_ids, topn):
+def _k_pq_codes(book_mats, luts, ccids, P, q_ids, topn, artifact):
     """Kernel factory over the PERSISTED (vec_id, code0.., cell)
-    table: probe-filter + dense-LUT ADC score + per-batch top-k.
-    ``lut_dense[m]`` is (Q, max_cid+1) indexed by stored cid."""
+    table: probe-filter + ADC score + per-batch top-k. Stored cells
+    and codeword cids are mapped to their positions in ``ccids`` and
+    each book's cids; an id missing there raises (``artifact`` names
+    the index in the error) instead of scoring as a neighbour."""
 
     def kern(it):
         for b in it:
@@ -576,11 +577,11 @@ def _k_pq_codes(lut_dense, ccids, P, q_ids, topn):
                 continue
             vid = SFZ.col_vec(b, "vec_id")
             cells = SFZ.col_vec(b, "cell")
-            cell_idx = np.searchsorted(ccids, cells)
+            cell_idx = SFZ.id_positions(ccids, cells, artifact)
             d = np.zeros((len(vid), len(q_ids)), dtype=np.int64)
-            for m in range(PQ_M):
+            for m, (cids, _) in enumerate(book_mats):
                 cm = SFZ.col_vec(b, f"code{m}")
-                d = d + lut_dense[m][:, cm].T
+                d = d + luts[m][:, SFZ.id_positions(cids, cm, artifact)].T
             oq, on, od = [], [], []
             for qi in range(len(q_ids)):
                 mask = P[cell_idx, qi] & (vid != q_ids[qi])
@@ -605,24 +606,13 @@ def _k_pq_codes(lut_dense, ccids, P, q_ids, topn):
     return kern
 
 
-def _lut_dense(luts, book_mats):
-    """Re-index position-keyed LUTs by stored cid (dense, gaps never
-    referenced — codes only contain existing cids)."""
-    out = []
-    for (cids, _), lut in zip(book_mats, luts):
-        dense = np.zeros((lut.shape[0], int(cids.max()) + 1), dtype=np.int64)
-        dense[:, cids] = lut
-        out.append(dense)
-    return out
-
-
 @query("sim_ivfpq_topk", oracle=_sql_ivfpq())
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ — the composition FAISS ships for billion-scale ANN
     (Jégou 2011): the full-space k-means coarse quantizer prunes the
     corpus to each query's mass-probed cells (the recall-targeted
-    τ policy of ``similarity.adaptive_probes`` — VERDICT r9 #4,
-    replacing the fixed nprobe=3), and inside
+    τ policy that ``simfuse.mass_probes`` serves, replacing the
+    fixed nprobe=3), and inside
     them candidates are scored from their PQ codes with the query's
     ADC lookup tables. Both halves are the already-oracled pieces
     (`sim_ivf_kmeans_topk`'s cell structure; `sim_pq_adc_topk`'s
@@ -639,8 +629,8 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid): query LUTs + coarse probe sets computed in the driver
     from bounded collects, per-cell counts from a one-stage
     histogram pass, then ONE ``mapInArrow`` quantize/assign/encode/
-    ADC-score/per-batch-top-k pass. Pinned to
-    ``_catalyst_sim_ivfpq_topk`` by tests/test_simfuse.py."""
+    ADC-score/per-batch-top-k pass. Its reference is the DuckDB
+    oracle ``_sql_ivfpq``."""
     coarse = [(cid, cq) for cid, cq, _ in KM._train(spark, sf_dir)]
     bmats = _book_mats(_codebooks(spark, sf_dir))
     ccids, cmat = _coarse_state(coarse)
@@ -667,103 +657,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("d").alias("adc_dist_sq_micro"),
             F.col("rn").alias("rank"),
         )
-    )
-
-
-def _catalyst_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r15 Catalyst chain — unregistered; the fused path's
-    equivalence reference (tests/test_simfuse.py)."""
-    w = W.partitionBy("query_id").orderBy("d", "neighbor_id")
-    return (
-        _ivfpq_scored(spark, sf_dir)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ADC_TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("d").alias("adc_dist_sq_micro"),
-            F.col("rn").alias("rank"),
-        )
-    )
-
-
-def _mass_probed_queries(
-    qbase: DataFrame,
-    coarse: list[tuple[int, list[int]]],
-    cells: DataFrame,
-    luts: list,
-) -> DataFrame:
-    """(query_id, qcell, lut0..lutM−1): the query-side probe table
-    under the recall-targeted mass policy (VERDICT r9 #4,
-    ``similarity.adaptive_probes``): rank ALL coarse cells by exact
-    integer distance (``KM._ranked_cells`` — same order the fixed
-    slice used), then keep cells until ≥ τ of the corpus mass is
-    covered. ``cells`` is any frame with a ``cell`` column covering
-    the corpus (encoded table or persisted codes); its groupBy is
-    the per-cell count an index keeps as metadata. Empty k-means
-    cells drop out of the join — zero mass, zero candidates, no
-    effect on the cumulative rule."""
-    sizes = cells.groupBy(F.col("cell").alias("cid")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    ranked = qbase.select(
-        F.col("vec_id").alias("query_id"),
-        F.posexplode(
-            F.expr(KM._ranked_cells("vq", coarse))
-        ).alias("pos", "rc"),
-        *luts,
-    ).select(
-        "query_id",
-        # adaptive_probes ranks by cs DESC; negative array position
-        # replays the ascending (d, cid) sort of _ranked_cells
-        (-F.col("pos")).cast("long").alias("cs"),
-        F.col("rc.cid").alias("cid"),
-        *[f"lut{m}" for m in range(PQ_M)],
-    )
-    return adaptive_probes(ranked, sizes).select(
-        "query_id",
-        F.col("cid").alias("qcell"),
-        *[f"lut{m}" for m in range(PQ_M)],
-    )
-
-
-def _ivfpq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, neighbor_id, d): ADC distances over ONLY the
-    members of each query's mass-probed coarse cells — the pruned
-    compressed scan shared by the direct IVF-PQ top-k and the
-    refined tier."""
-    coarse = [
-        (cid, cq) for cid, cq, _ in KM._train(spark, sf_dir)
-    ]
-    enc = _encoded(spark, sf_dir).withColumn(
-        "cell", F.expr(KM._ranked_cells("vq", coarse) + "[0].cid")
-    )
-    luts = _lut_cols(_codebooks(spark, sf_dir))
-    queries = _mass_probed_queries(
-        _quantized(spark, sf_dir)
-        .filter((F.col("vec_id") % ADC_QUERY_MOD) == 0)
-        .orderBy("vec_id")
-        .limit(ADC_QUERY_LIMIT),
-        coarse,
-        enc,
-        luts,
-    )
-    scored = enc.join(
-        F.broadcast(queries),
-        (F.col("cell") == F.col("qcell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    )
-    d = sum(
-        (
-            F.element_at(F.col(f"lut{m}"), F.col(f"code{m}"))
-            for m in range(1, PQ_M)
-        ),
-        F.element_at(F.col("lut0"), F.col("code0")),
-    )
-    return scored.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        d.alias("d"),
     )
 
 
@@ -894,11 +787,10 @@ def sim_ivfpq_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB.
 
     Round-15 fused execution: one-stage histogram over the persisted
-    cells + ONE ``mapInArrow`` over ``codes.parquet`` (dense-LUT ADC
+    cells + ONE ``mapInArrow`` over ``codes.parquet`` (LUT ADC
     + probe filter + per-batch top-k; the vector table is touched
     only for the Q query vectors, preserving the poison test).
-    Pinned to ``_catalyst_sim_ivfpq_serve_topk`` by
-    tests/test_simfuse.py."""
+    Its reference is the re-training DuckDB oracle ``_sql_ivfpq``."""
     path = embedding_pq_index_build(spark, sf_dir)
     coarse, books, codes = _load_index(spark, path)
     bmats = _book_mats(books)
@@ -917,59 +809,12 @@ def sim_ivfpq_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qD, ccids, sizes, PROBE_MASS_NUM, PROBE_MASS_DEN, ascending=True
     )
     scored = fan_out(codes).mapInArrow(
-        _k_pq_codes(_lut_dense(luts, bmats), ccids, P, q_ids, ADC_TOP_K),
+        _k_pq_codes(bmats, luts, ccids, P, q_ids, ADC_TOP_K, path),
         "query_id long, neighbor_id long, d long",
     )
     w = W.partitionBy("query_id").orderBy("d", "neighbor_id")
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ADC_TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("d").alias("adc_dist_sq_micro"),
-            F.col("rn").alias("rank"),
-        )
-    )
-
-
-def _catalyst_sim_ivfpq_serve_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pre-r15 Catalyst chain — unregistered; the fused path's
-    equivalence reference (tests/test_simfuse.py)."""
-    path = embedding_pq_index_build(spark, sf_dir)
-    coarse, books, codes = _load_index(spark, path)
-    luts = _lut_cols(books)
-    queries = _mass_probed_queries(
-        _quantized(spark, sf_dir)
-        .filter((F.col("vec_id") % ADC_QUERY_MOD) == 0)
-        .orderBy("vec_id")
-        .limit(ADC_QUERY_LIMIT),
-        coarse,
-        codes,
-        luts,
-    )
-    scored = codes.join(
-        F.broadcast(queries),
-        (F.col("cell") == F.col("qcell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    )
-    d = sum(
-        (
-            F.element_at(F.col(f"lut{m}"), F.col(f"code{m}"))
-            for m in range(1, PQ_M)
-        ),
-        F.element_at(F.col("lut0"), F.col("code0")),
-    )
-    w = W.partitionBy("query_id").orderBy("d", "neighbor_id")
-    return (
-        scored.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            d.alias("d"),
-        )
-        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= ADC_TOP_K)
         .select(
             "query_id",
@@ -1072,8 +917,8 @@ def sim_pq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query top-{REFINE_C} (the quantized vectors are already in
     the batch) — the old hydrate equi-join + second corpus scan are
     gone; over-fetch and final re-rank are two windows over one
-    query_id exchange. Pinned to ``_catalyst_sim_pq_refine_topk``
-    by tests/test_simfuse.py."""
+    query_id exchange. Its reference is the DuckDB oracle
+    ``_sql_refine``."""
     bmats = _book_mats(_codebooks(spark, sf_dir))
     q_ids, qvq = _collect_pq_queries(spark, sf_dir)
     luts = _luts_np(qvq, bmats)
@@ -1100,57 +945,12 @@ def sim_pq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _catalyst_sim_pq_refine_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pre-r15 Catalyst chain — unregistered; the fused path's
-    equivalence reference (tests/test_simfuse.py)."""
-    w = W.partitionBy("query_id").orderBy("d", "neighbor_id")
-    cand = (
-        _adc_scored(spark, sf_dir)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= REFINE_C)
-        .select("query_id", "neighbor_id")
-    )
-    qv = (
-        _quantized(spark, sf_dir)
-        .filter((F.col("vec_id") % ADC_QUERY_MOD) == 0)
-        .orderBy("vec_id")
-        .limit(ADC_QUERY_LIMIT)
-        .select(F.col("vec_id").alias("query_id"), F.col("vq").alias("qvq"))
-    )
-    vecs = _quantized(spark, sf_dir).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("vq").alias("nvq")
-    )
-    exact = vecs.join(
-        F.broadcast(cand.join(qv, "query_id")), "neighbor_id"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.aggregate(
-            F.zip_with("qvq", "nvq", lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda a, b: a + b,
-        ).alias("d"),
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ADC_TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("d").alias("dist_sq_micro"),
-            F.col("rn").alias("rank"),
-        )
-    )
-
-
 @query("sim_ivfpq_refine_topk", oracle=_sql_ivfpq_refine())
 def sim_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full production retrieval tier — FAISS's
     ``IndexIVFPQ + IndexRefineFlat`` composition: the coarse cells
     prune the corpus, the PQ codes scan scores the survivors with
-    ADC lookups (``_ivfpq_scored``), the top-``REFINE_C`` candidates
+    ADC lookups, the top-``REFINE_C`` candidates
     per query hydrate their true vectors by broadcast equi-join, and
     the exact integer-L2 re-rank produces the final top-k. All three
     pruning stages stay on the exact integer grid, so even this
@@ -1166,8 +966,8 @@ def sim_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-15 fused execution: ``sim_ivfpq_topk``'s fusion plus the
     eager exact rescore of each batch's top-{REFINE_C}
     (``sim_pq_refine_topk``'s trick) — one corpus pass, one
-    histogram pass, one bounded collect. Pinned to
-    ``_catalyst_sim_ivfpq_refine_topk`` by tests/test_simfuse.py."""
+    histogram pass, one bounded collect. Its reference is the
+    DuckDB oracle ``_sql_ivfpq_refine``."""
     coarse = [(cid, cq) for cid, cq, _ in KM._train(spark, sf_dir)]
     bmats = _book_mats(_codebooks(spark, sf_dir))
     ccids, cmat = _coarse_state(coarse)
@@ -1204,51 +1004,6 @@ def sim_ivfpq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "neighbor_id",
             F.col("exact").alias("dist_sq_micro"),
-            F.col("rn").alias("rank"),
-        )
-    )
-
-
-def _catalyst_sim_ivfpq_refine_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pre-r15 Catalyst chain — unregistered; the fused path's
-    equivalence reference (tests/test_simfuse.py)."""
-    w = W.partitionBy("query_id").orderBy("d", "neighbor_id")
-    cand = (
-        _ivfpq_scored(spark, sf_dir)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= REFINE_C)
-        .select("query_id", "neighbor_id")
-    )
-    qv = (
-        _quantized(spark, sf_dir)
-        .filter((F.col("vec_id") % ADC_QUERY_MOD) == 0)
-        .orderBy("vec_id")
-        .limit(ADC_QUERY_LIMIT)
-        .select(F.col("vec_id").alias("query_id"), F.col("vq").alias("qvq"))
-    )
-    vecs = _quantized(spark, sf_dir).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("vq").alias("nvq")
-    )
-    exact = vecs.join(
-        F.broadcast(cand.join(qv, "query_id")), "neighbor_id"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.aggregate(
-            F.zip_with("qvq", "nvq", lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda a, b: a + b,
-        ).alias("d"),
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ADC_TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("d").alias("dist_sq_micro"),
             F.col("rn").alias("rank"),
         )
     )

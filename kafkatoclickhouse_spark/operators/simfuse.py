@@ -36,10 +36,11 @@ expression it replaces exactly:
     ``F.aggregate`` folds over the dimension axis; :func:`seq_dot2` /
     :func:`seq_sqnorm` run the same fold vectorized over ROWS but
     sequential over DIMS (one IEEE multiply + one IEEE add per dim,
-    same order, same 0.0 seed) — the ``_mmr_group`` precedent, now
-    pinned for every kernel by ``tests/test_simfuse.py`` which
-    asserts row-identical output against the retained Catalyst
-    builders on the real fixtures.
+    same order, same 0.0 seed) — the ``_mmr_group`` precedent. Every
+    kernel's output is checked row for row, doubles by ``repr``,
+    against its DuckDB oracle: on the real fixtures by
+    ``tests/test_parity.py`` and on an adversarial corpus by
+    ``tests/test_simfuse.py``.
   - ``cosine_with_norms``'s ``F.when(denom != 0.0, …)`` NULL guard
     becomes an explicit validity mask (ranked as −inf — Spark orders
     NULLS LAST under ``desc``, and cosine is bounded so −inf cannot
@@ -75,6 +76,23 @@ def list_mat(batch: pa.RecordBatch, col: str, dtype, dim: int = DIM):
 
 def col_vec(batch: pa.RecordBatch, col: str, dtype=np.int64):
     return np.asarray(batch.column(col).to_numpy(zero_copy_only=False), dtype=dtype)
+
+
+def id_positions(ids: np.ndarray, stored: np.ndarray, artifact: str) -> np.ndarray:
+    """Positions of the ``stored`` ids (cells, codeword cids) read from
+    a persisted artifact in the ascending id list ``ids``. Raises
+    ``ValueError`` naming ``artifact`` when an id is not in the list:
+    a bare ``searchsorted`` would hand it the next id's row and serve
+    a plausible wrong answer."""
+    pos = np.searchsorted(ids, stored)
+    ok = pos < len(ids)
+    ok[ok] = ids[pos[ok]] == stored[ok]
+    if not ok.all():
+        raise ValueError(
+            f"{artifact}: stored ids {np.unique(stored[~ok])[:5].tolist()} "
+            f"are not in the index's id list {ids.tolist()}"
+        )
+    return pos
 
 
 # --------------------------------------------------------------------------
@@ -171,7 +189,7 @@ def argmax_cells(S: np.ndarray) -> np.ndarray:
 
 
 # --------------------------------------------------------------------------
-# Driver-side probe policy (adaptive_probes twin)
+# Driver-side probe policy (mass policy; DuckDB copy in similarity)
 # --------------------------------------------------------------------------
 
 # PROBE_MASS_NUM / DEN live in operators.similarity; passed in to
@@ -189,9 +207,9 @@ def mass_probes(
     """(k, q) bool probe matrix under the τ mass policy. ``S`` is the
     (q, k) query→cell affinity (cosine for the IVF tier — ranked
     DESC; integer distance for the PQ coarse tier — ``ascending``);
-    ties break toward the smaller cid, replaying the
-    ``adaptive_probes`` window order. Cells absent from ``sizes``
-    drop out exactly like its inner join (zero mass, zero
+    ties break toward the smaller cid, replaying the window order
+    of ``similarity._sql_adaptive_probes``. Cells absent from
+    ``sizes`` drop out exactly like its inner join (zero mass, zero
     candidates, excluded from the cumulative rule). A cell is probed
     iff den·(mass of strictly better cells) < num·total."""
     k = len(cids)
@@ -241,18 +259,6 @@ def top_idx_asc(keys: np.ndarray, nid: np.ndarray, n: int) -> np.ndarray:
 # --------------------------------------------------------------------------
 # Bounded collects + histogram pass helpers (used by the operators)
 # --------------------------------------------------------------------------
-
-
-def collect_vec_rows(df) -> tuple[np.ndarray, np.ndarray]:
-    """Collect a small (vec_id, embedding) frame → (ids int64,
-    V float64 (n, DIM)). Bounded-barrier: callers only pass
-    LIMIT-ed relations (≤ centroids + queries rows)."""
-    rows = df.collect()
-    if not rows:
-        return np.zeros(0, dtype=np.int64), np.zeros((0, DIM))
-    ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
-    V = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    return ids, V
 
 
 def cell_hist(df, kernel) -> dict[int, int]:

@@ -328,40 +328,13 @@ PROBE_MASS_NUM = 1
 PROBE_MASS_DEN = 2
 
 
-def adaptive_probes(scored_cells: DataFrame, sizes: DataFrame) -> DataFrame:
-    """Filter a per-query ranked cell table down to the cells the
-    mass policy probes. ``scored_cells``: one row per (query, cell)
-    with columns ``query_id``, ``cid``, ``cs`` (centroid similarity)
-    plus any carry columns; ``sizes``: (cid, cnt) — the per-cell
-    member counts an index keeps as metadata (at 100 TB both inputs
-    are tiny broadcast tables; the corpus never enters this plan).
-    A cell is probed iff the total count of strictly-better-ranked
-    cells is below τ·corpus — so the first cell always probes and
-    probing stops once coverage is reached. Integer compare,
-    identical in the DuckDB oracles."""
-    with_cnt = scored_cells.join(F.broadcast(sizes), "cid")
-    total = F.sum("cnt").over(W.partitionBy("query_id"))
-    wrank = W.partitionBy("query_id").orderBy(F.desc("cs"), "cid")
-    cum_prev = F.coalesce(
-        F.sum("cnt").over(wrank.rowsBetween(W.unboundedPreceding, -1)),
-        F.lit(0),
-    )
-    return (
-        with_cnt.withColumn("_total", total)
-        .withColumn("_cum_prev", cum_prev)
-        .filter(
-            PROBE_MASS_DEN * F.col("_cum_prev")
-            < PROBE_MASS_NUM * F.col("_total")
-        )
-        .drop("cnt", "_total", "_cum_prev")
-    )
-
-
 def _sql_adaptive_probes(
     assign_rel: str, q_rel: str, qv: str = "qv"
 ) -> str:
-    """DuckDB twin of :func:`adaptive_probes` as a CTE chain
-    (``sz``/``probes``, no WITH prefix): per-cell counts from
+    """The mass probe policy as a DuckDB CTE chain (``sz``/``probes``,
+    no WITH prefix), the oracles' copy of ``simfuse.mass_probes``:
+    a cell is probed iff the total count of strictly-better-ranked
+    cells is below τ·corpus. Per-cell counts come from
     ``assign_rel`` (must expose ``cell``), cumulative
     strictly-better mass per query from ``q_rel`` (must expose
     ``query_id`` and the query vector column ``qv``) × ``cent``."""
@@ -386,11 +359,11 @@ def _sql_adaptive_probes(
 # The registered sim_ivf_* retrieval queries below run as ONE fused
 # mapInArrow pass over the corpus (+ one bounded driver collect of the
 # centroid/query vectors and, for mass-policy tiers, one per-cell
-# histogram pass) instead of the 20-stage Catalyst chain. The original
-# Catalyst builders are retained as ``_catalyst_sim_*`` — unregistered,
-# pinned row-identical to the fused path by tests/test_simfuse.py (the
-# equivalence harness VERDICT r14 #1 requires) and by the DuckDB parity
-# gate, which is unchanged.
+# histogram pass) instead of a 20-stage Catalyst chain. Each query's
+# one reference is its registered DuckDB oracle: tests/test_parity.py
+# replays it on the fixture and tests/test_simfuse.py on an adversarial
+# corpus (zero vectors, duplicates, vectors equal to centroids), with
+# doubles compared by ``repr``.
 
 
 def _collect_cents_queries(cent_df: DataFrame, q_df: DataFrame):
@@ -554,11 +527,12 @@ def _k_ivf_sq8(cids, C, cn, P, q_ids, qcodes, topn, refine=False, Q=None, qn=Non
     return kern
 
 
-def _k_codes_sq8(cell_vals_sorted, P, q_ids, qcodes, topn):
+def _k_codes_sq8(cell_vals_sorted, P, q_ids, qcodes, topn, artifact):
     """Kernel factory over a PERSISTED (vec_id, cell, scale_micro,
     codes) table — probe-filter + integer score + per-batch top-k;
     no assignment (cells are stored). ``P`` rows follow
-    ``cell_vals_sorted`` order."""
+    ``cell_vals_sorted`` order; a stored cell outside it raises
+    (``artifact`` names the index in the error)."""
 
     def kern(it):
         for b in it:
@@ -568,7 +542,7 @@ def _k_codes_sq8(cell_vals_sorted, P, q_ids, qcodes, topn):
             cells = SFZ.col_vec(b, "cell")
             scale = SFZ.col_vec(b, "scale_micro")
             codes = SFZ.list_mat(b, "codes", np.int64)
-            cell_idx = np.searchsorted(cell_vals_sorted, cells)
+            cell_idx = SFZ.id_positions(cell_vals_sorted, cells, artifact)
             idot = codes @ qcodes.T
             score = scale[:, None] * idot
             oq, on, osc = [], [], []
@@ -652,8 +626,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k, and a single window for the global top-k — replacing the
     crossJoin/window/broadcast-join stage chain whose fixed latency
     dominated at every fixture scale (scaling ratio ≈ 0.9 at 8→32
-    cores). Bit-exact vs the retained ``_catalyst_sim_ivf_topk``
-    (tests/test_simfuse.py) and the DuckDB oracle. The 100 TB shape
+    cores). Bit-exact vs the DuckDB oracle. The 100 TB shape
     is unchanged: assignment/scoring stay distributed; only K·DIM +
     Q·DIM scalars ever reach the driver."""
     em = load_table(spark, sf_dir, "embeddings")
@@ -669,82 +642,6 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = fan_out(em.select("vec_id", "embedding")).mapInArrow(
         _k_ivf_cos(cids, C, cn, P, q_ids, Q, qn, TOP_K),
         "query_id long, neighbor_id long, s double",
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("s"), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("s", 6).alias("score"),
-            F.col("rn").alias("rank"),
-        )
-    )
-
-
-def _catalyst_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r15 Catalyst chain — unregistered; the fused path's
-    equivalence reference (tests/test_simfuse.py)."""
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        em.orderBy("vec_id")
-        .limit(NUM_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            norm(F.col("embedding")).alias("cn"),
-        )
-    )
-    aw = W.partitionBy("vec_id").orderBy(F.desc("cs"), "cid")
-    assign = (
-        fan_out(em)
-        .withColumn("en", norm(F.col("embedding")))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "embedding",
-            "en",
-            "cid",
-            cosine_with_norms(
-                F.col("embedding"), F.col("cv"), F.col("en"), F.col("cn")
-            ).alias("cs"),
-        )
-        .withColumn("rn", F.row_number().over(aw))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "en", F.col("cid").alias("cell"))
-    )
-    queries = em.filter((F.col("vec_id") % QUERY_MOD) == 0).orderBy("vec_id").limit(QUERY_LIMIT).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("qn"),
-    )
-    pw = W.partitionBy("query_id").orderBy(F.desc("cs"), "cid")
-    probes = (
-        queries.crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "qv",
-            "qn",
-            "cid",
-            cosine_with_norms(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            ).alias("cs"),
-        )
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= NPROBE)
-        .select("query_id", "qv", "qn", F.col("cid").alias("qcell"))
-    )
-    scored = assign.join(
-        F.broadcast(probes),
-        (F.col("cell") == F.col("qcell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine_with_norms(
-            F.col("qv"), F.col("embedding"), F.col("qn"), F.col("en")
-        ).alias("s"),
     )
     w = W.partitionBy("query_id").orderBy(F.desc("s"), "neighbor_id")
     return (
@@ -1197,8 +1094,8 @@ def sim_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same broadcast-centroid argmax (at 100 TB it runs once at
     ingest); query codes broadcast with the probe list.
 
-    Probe depth is the recall-targeted mass policy (VERDICT r9 #4,
-    :func:`adaptive_probes`), not a fixed nprobe: cells probe in
+    Probe depth is the recall-targeted mass policy
+    (``simfuse.mass_probes``), not a fixed nprobe: cells probe in
     similarity order until ≥ τ of the corpus is covered, bounding
     worst-case (iid) recall at ~τ while clustered corpora stop at
     the cells that matter. Measured τ→recall in BASELINE.md.
@@ -1206,8 +1103,8 @@ def sim_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-15 fused execution: bounded centroid/query collect + one
     per-cell histogram pass (the index metadata the mass policy
     reads) + ONE fused assign/encode/score/top-k ``mapInArrow`` pass
-    — see the block comment above ``_collect_cents_queries`` and
-    ``_catalyst_sim_ivf_sq8_topk`` (the pinned reference)."""
+    — see the block comment above ``_collect_cents_queries``. Its
+    reference is the DuckDB oracle."""
     em = load_table(spark, sf_dir, "embeddings")
     cids, C, cn, q_ids, Q, qn = _collect_cents_queries(
         em.orderBy("vec_id").limit(NUM_CENTROIDS).select("vec_id", "embedding"),
@@ -1223,95 +1120,6 @@ def sim_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = fan_out(em.select("vec_id", "embedding")).mapInArrow(
         _k_ivf_sq8(cids, C, cn, P, q_ids, qcodes, TOP_K),
         "query_id long, neighbor_id long, score_scaled long",
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("score_scaled"), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "score_scaled",
-            F.col("rn").cast("int").alias("rank"),
-        )
-    )
-
-
-def _catalyst_sim_ivf_sq8_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pre-r15 Catalyst chain — unregistered; the fused path's
-    equivalence reference (tests/test_simfuse.py)."""
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        em.orderBy("vec_id")
-        .limit(NUM_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            norm(F.col("embedding")).alias("cn"),
-        )
-    )
-    aw = W.partitionBy("vec_id").orderBy(F.desc("cs"), "cid")
-    assigned = (
-        fan_out(em)
-        .withColumn("en", norm(F.col("embedding")))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "embedding",
-            "cid",
-            cosine_with_norms(
-                F.col("embedding"), F.col("cv"), F.col("en"), F.col("cn")
-            ).alias("cs"),
-        )
-        .withColumn("rn", F.row_number().over(aw))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", F.col("cid").alias("cell"))
-    )
-    assign = sq8_encode(assigned, "embedding", ("vec_id", "cell"))
-    queries = (
-        em.filter((F.col("vec_id") % QUERY_MOD) == 0)
-        .orderBy("vec_id")
-        .limit(QUERY_LIMIT)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            norm(F.col("embedding")).alias("qn"),
-        )
-    )
-    sizes = assigned.groupBy(F.col("cell").alias("cid")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    probed = adaptive_probes(
-        queries.crossJoin(F.broadcast(cent)).select(
-            "query_id",
-            "qv",
-            "cid",
-            cosine_with_norms(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            ).alias("cs"),
-        ),
-        sizes,
-    ).select("query_id", "qv", F.col("cid").alias("qcell"))
-    probes = sq8_encode(probed, "qv", ("query_id", "qcell")).select(
-        "query_id", "qcell", F.col("codes").alias("qcodes")
-    )
-    idot = F.aggregate(
-        F.zip_with("qcodes", "codes", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = assign.join(
-        F.broadcast(probes),
-        (F.col("cell") == F.col("qcell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (F.col("scale_micro") * idot).alias("score_scaled"),
     )
     w = W.partitionBy("query_id").orderBy(
         F.desc("score_scaled"), "neighbor_id"
@@ -1952,7 +1760,7 @@ def sim_binary_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ivf_sq8_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full production retrieval composition (FAISS
     ``IVFx,SQ8`` + ``IndexRefineFlat``): recall-targeted adaptive
-    coarse prune (:func:`adaptive_probes` — probe cells by
+    coarse prune (``simfuse.mass_probes`` — probe cells by
     similarity until ≥ τ corpus mass), INT8 code-space scoring
     inside the probed cells, top-{SQ8_FETCH} over-fetch, then exact
     float cosine re-rank of just those candidates. Each tier fixes
@@ -1968,8 +1776,8 @@ def sim_ivf_sq8_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-score of each batch's top-{SQ8_FETCH} candidates (their float
     vectors are already in the batch), so the old hydrate equi-join
     + second corpus scan are gone; the global over-fetch and final
-    re-rank are two windows over one query_id exchange. Pinned to
-    ``_catalyst_sim_ivf_sq8_refine_topk`` by tests/test_simfuse.py."""
+    re-rank are two windows over one query_id exchange. Its
+    reference is the DuckDB oracle."""
     em = load_table(spark, sf_dir, "embeddings")
     cids, C, cn, q_ids, Q, qn = _collect_cents_queries(
         em.orderBy("vec_id").limit(NUM_CENTROIDS).select("vec_id", "embedding"),
@@ -1997,118 +1805,6 @@ def sim_ivf_sq8_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= SQ8_FETCH)
         .drop("rn")
         .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("s", 6).alias("score"),
-            F.col("rn").cast("int").alias("rank"),
-        )
-    )
-
-
-def _catalyst_sim_ivf_sq8_refine_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pre-r15 Catalyst chain — unregistered; the fused path's
-    equivalence reference (tests/test_simfuse.py)."""
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        em.orderBy("vec_id")
-        .limit(NUM_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            norm(F.col("embedding")).alias("cn"),
-        )
-    )
-    aw = W.partitionBy("vec_id").orderBy(F.desc("cs"), "cid")
-    assigned = (
-        fan_out(em)
-        .withColumn("en", norm(F.col("embedding")))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "embedding",
-            "cid",
-            cosine_with_norms(
-                F.col("embedding"), F.col("cv"), F.col("en"), F.col("cn")
-            ).alias("cs"),
-        )
-        .withColumn("rn", F.row_number().over(aw))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", F.col("cid").alias("cell"))
-    )
-    assign = sq8_encode(assigned, "embedding", ("vec_id", "cell"))
-    queries = (
-        em.filter((F.col("vec_id") % QUERY_MOD) == 0)
-        .orderBy("vec_id")
-        .limit(QUERY_LIMIT)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            norm(F.col("embedding")).alias("qn"),
-        )
-    )
-    sizes = assigned.groupBy(F.col("cell").alias("cid")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    probed = adaptive_probes(
-        queries.crossJoin(F.broadcast(cent)).select(
-            "query_id",
-            "qv",
-            "cid",
-            cosine_with_norms(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            ).alias("cs"),
-        ),
-        sizes,
-    ).select("query_id", "qv", F.col("cid").alias("qcell"))
-    probes = sq8_encode(probed, "qv", ("query_id", "qcell")).select(
-        "query_id", "qcell", F.col("codes").alias("qcodes")
-    )
-    idot = F.aggregate(
-        F.zip_with("qcodes", "codes", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    fw = W.partitionBy("query_id").orderBy(
-        F.desc("score_scaled"), "neighbor_id"
-    )
-    fetched = (
-        assign.join(
-            F.broadcast(probes),
-            (F.col("cell") == F.col("qcell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (F.col("scale_micro") * idot).alias("score_scaled"),
-        )
-        .withColumn("rn", F.row_number().over(fw))
-        .filter(F.col("rn") <= SQ8_FETCH)
-        .select("query_id", "neighbor_id")
-    )
-    qfloat = queries.select("query_id", "qv", "qn")
-    hydrated = fetched.join(
-        em.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("nv"),
-            norm(F.col("embedding")).alias("nn"),
-        ),
-        "neighbor_id",
-    ).join(F.broadcast(qfloat), "query_id")
-    rescored = hydrated.select(
-        "query_id",
-        "neighbor_id",
-        cosine_with_norms(
-            F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn")
-        ).alias("s"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("s"), "neighbor_id")
-    return (
-        rescored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .select(
             "query_id",
@@ -2326,8 +2022,8 @@ def sim_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-15 fused execution: the histogram pass counts only
     label-matching members per cell (the per-bucket stats) and the
     fused scan applies the predicate before scoring — same shape as
-    ``sim_ivf_sq8_topk``'s fusion. Pinned to
-    ``_catalyst_sim_ivf_filtered_topk`` by tests/test_simfuse.py."""
+    ``sim_ivf_sq8_topk``'s fusion. Its reference is the DuckDB
+    oracle."""
     em = load_table(spark, sf_dir, "embeddings")
     cids, C, cn, q_ids, Q, qn = _collect_cents_queries(
         em.orderBy("vec_id").limit(NUM_CENTROIDS).select("vec_id", "embedding"),
@@ -2344,95 +2040,6 @@ def sim_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cids, C, cn, P, q_ids, Q, qn, TOP_K, labels_keep=FILTER_LABELS
         ),
         "query_id long, neighbor_id long, label int, s double",
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("s"), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "label",
-            F.round("s", 6).alias("score"),
-            F.col("rn").cast("int").alias("rank"),
-        )
-    )
-
-
-def _catalyst_sim_ivf_filtered_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pre-r15 Catalyst chain — unregistered; the fused path's
-    equivalence reference (tests/test_simfuse.py)."""
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        em.orderBy("vec_id")
-        .limit(NUM_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            norm(F.col("embedding")).alias("cn"),
-        )
-    )
-    aw = W.partitionBy("vec_id").orderBy(F.desc("cs"), "cid")
-    assigned = (
-        fan_out(em)
-        .withColumn("en", norm(F.col("embedding")))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "embedding",
-            "en",
-            "label",
-            "cid",
-            cosine_with_norms(
-                F.col("embedding"), F.col("cv"), F.col("en"), F.col("cn")
-            ).alias("cs"),
-        )
-        .withColumn("rn", F.row_number().over(aw))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id", "embedding", "en", "label",
-            F.col("cid").alias("cell"),
-        )
-    )
-    fassign = assigned.filter(F.col("label").isin(*FILTER_LABELS))
-    queries = (
-        em.filter((F.col("vec_id") % QUERY_MOD) == 0)
-        .orderBy("vec_id")
-        .limit(QUERY_LIMIT)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            norm(F.col("embedding")).alias("qn"),
-        )
-    )
-    sizes = fassign.groupBy(F.col("cell").alias("cid")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    probes = adaptive_probes(
-        queries.crossJoin(F.broadcast(cent)).select(
-            "query_id",
-            "qv",
-            "qn",
-            "cid",
-            cosine_with_norms(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            ).alias("cs"),
-        ),
-        sizes,
-    ).select("query_id", "qv", "qn", F.col("cid").alias("qcell"))
-    scored = fassign.join(
-        F.broadcast(probes),
-        (F.col("cell") == F.col("qcell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        "label",
-        cosine_with_norms(
-            F.col("qv"), F.col("embedding"), F.col("qn"), F.col("en")
-        ).alias("s"),
     )
     w = W.partitionBy("query_id").orderBy(F.desc("s"), "neighbor_id")
     return (
@@ -2647,9 +2254,9 @@ def sim_ivf_appended_serve_topk(
     over the persisted codes, and retrieval is ONE ``mapInArrow``
     over the code files (probe-filter + integer dot + per-batch
     top-k; the embedding table is touched only for the Q query
-    vectors, preserving the serve-path poison test). Pinned to
-    ``_catalyst_sim_ivf_appended_serve_topk`` by
-    tests/test_simfuse.py."""
+    vectors, preserving the serve-path poison test). Its reference
+    is the DuckDB oracle, which replays the union from the raw
+    vectors."""
     import os
 
     path = embedding_ivf_index_append(spark, sf_dir)
@@ -2679,79 +2286,8 @@ def sim_ivf_appended_serve_topk(
     P = SFZ.mass_probes(qcs, cids, sizes, PROBE_MASS_NUM, PROBE_MASS_DEN)
     _, qcodes = SFZ.sq8_np(Q)
     scored = fan_out(codes).mapInArrow(
-        _k_codes_sq8(cids, P, q_ids, qcodes, TOP_K),
+        _k_codes_sq8(cids, P, q_ids, qcodes, TOP_K, path),
         "query_id long, neighbor_id long, score_scaled long",
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("score_scaled"), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "score_scaled",
-            F.col("rn").cast("int").alias("rank"),
-        )
-    )
-
-
-def _catalyst_sim_ivf_appended_serve_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pre-r15 Catalyst chain — unregistered; the fused path's
-    equivalence reference (tests/test_simfuse.py)."""
-    import os
-
-    path = embedding_ivf_index_append(spark, sf_dir)
-    cent = spark.read.parquet(
-        os.path.join(path, "centroids.parquet")
-    ).select("cid", "cv", norm(F.col("cv")).alias("cn"))
-    codes = spark.read.parquet(os.path.join(path, "codes.parquet")).unionByName(
-        spark.read.parquet(os.path.join(path, "codes_append.parquet"))
-    )
-    queries = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter((F.col("vec_id") % QUERY_MOD) == 0)
-        .orderBy("vec_id")
-        .limit(QUERY_LIMIT)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            norm(F.col("embedding")).alias("qn"),
-        )
-    )
-    sizes = codes.groupBy(F.col("cell").alias("cid")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    probed = adaptive_probes(
-        queries.crossJoin(F.broadcast(cent)).select(
-            "query_id",
-            "qv",
-            "cid",
-            cosine_with_norms(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            ).alias("cs"),
-        ),
-        sizes,
-    ).select("query_id", "qv", F.col("cid").alias("qcell"))
-    probes = sq8_encode(probed, "qv", ("query_id", "qcell")).select(
-        "query_id", "qcell", F.col("codes").alias("qcodes")
-    )
-    idot = F.aggregate(
-        F.zip_with("qcodes", "codes", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = codes.join(
-        F.broadcast(probes),
-        (F.col("cell") == F.col("qcell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (F.col("scale_micro") * idot).alias("score_scaled"),
     )
     w = W.partitionBy("query_id").orderBy(
         F.desc("score_scaled"), "neighbor_id"

@@ -12,6 +12,7 @@ Shared by ``tools/parity.py`` (CLI sweep) and ``tests/test_parity.py``
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 from pyspark.sql import SparkSession
@@ -21,14 +22,17 @@ from kafkatoclickhouse_spark.tables import TABLES
 
 
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """In-memory DuckDB with every fixture table as a view — the
-    same pre-registered views the driver gives oracle SQL."""
+    """In-memory DuckDB with every fixture table as a view, under
+    the table names oracle SQL reads. A table whose parquet file is
+    absent gets no view, so a directory with only some tables
+    connects and a query over a missing one fails when it runs."""
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
+            )
     return con
 
 

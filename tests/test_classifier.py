@@ -36,7 +36,8 @@ BAD_TEXT = " ".join(["zqxjkwvbnmplqrtsdfghyu"] * 60)
 def planted_dir(spark, tmp_path_factory):
     """A documents fixture with two planted quality classes, written
     in the standard table layout so load_table/table_fingerprint
-    work unchanged."""
+    work unchanged. The module's classifier artifacts build under a
+    temp index root, not the repo's default one."""
     d = str(tmp_path_factory.mktemp("clf") )
     rows = []
     for i in range(40):
@@ -52,7 +53,11 @@ def planted_dir(spark, tmp_path_factory):
     df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(d, "documents.parquet")
     )
-    return d
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv(
+            "SPARK_GRAFT_INDEX_DIR", str(tmp_path_factory.mktemp("clf_index"))
+        )
+        yield d
 
 
 def test_trained_keep_rate_separates_planted_classes(spark, planted_dir):

@@ -172,6 +172,30 @@ def test_app_and_comment_segments_skipped():
     assert (dec[..., 0] == img).all()
 
 
+def test_bitwriter_accumulator_stays_bounded():
+    """``_BitWriter.put`` keeps only the bits it has not emitted yet,
+    so a put costs the same however much was written before it. The
+    bytes are the MSB-first packing of the codes, padded with 1-bits
+    and with 0x00 stuffed after every 0xFF."""
+    rng = np.random.RandomState(5)
+    w = J._BitWriter()
+    bits = []
+    for _ in range(5000):
+        length = int(rng.randint(1, 17))
+        code = int(rng.randint(0, 1 << length))
+        w.put(code, length)
+        bits.append(format(code, f"0{length}b"))
+        assert w._acc.bit_length() < 8
+    s = "".join(bits)
+    s += "1" * (-len(s) % 8)
+    want = bytearray()
+    for i in range(0, len(s), 8):
+        want.append(int(s[i : i + 8], 2))
+        if want[-1] == 0xFF:
+            want.append(0x00)
+    assert w.flush() == bytes(want)
+
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 

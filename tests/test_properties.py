@@ -699,7 +699,7 @@ def test_session_merge_kernel_equals_sorted_split():
     check()
 
 
-def test_substring_spans_pinned_properties(spark, tmp_path):
+def test_substring_spans_pinned_properties(spark, tmp_path, monkeypatch):
     """Lee et al. substring dedup, pinned semantics (VERDICT r9 #1):
     an exact-duplicate pair with >= SPAN_MIN_TOKENS tokens is covered
     wall to wall (fraction 1.0); a corpus-unique document has no span
@@ -726,6 +726,8 @@ def test_substring_spans_pinned_properties(spark, tmp_path):
     )
     d = tmp_path / "spancorpus"
     docs.write.parquet(str(d / "documents.parquet"))
+    # the winnow artifacts of this throwaway corpus build under tmp_path
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "index"))
 
     spans = {
         (r["doc_id"], r["span_start"], r["span_end"], r["span_tokens"])

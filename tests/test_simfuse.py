@@ -1,82 +1,51 @@
-"""Equivalence harness for the round-15 fused sim_* kernels
-(VERDICT r14 #1): every fused ``mapInArrow`` retrieval path must be
-ROW-IDENTICAL — bit-for-bit on doubles, null-for-null — to the
-retained pre-r15 Catalyst builder it replaced, both on the real
-fixture and on an adversarial corpus built to hit the edge cases the
-fixture cannot: zero vectors (NULL-cosine branches), a zero-vector
-QUERY and a zero-vector CENTROID, exact duplicate vectors (score
-ties broken by id), and vectors equal to centroids."""
+"""The fused ``mapInArrow`` sim_* retrieval paths against their DuckDB
+oracles, on the real fixture and on an adversarial corpus.
+
+The corpus is built to hit the edge cases the fixture cannot: zero
+vectors (NULL-cosine branches), a zero-vector QUERY and a zero-vector
+CENTROID, exact duplicate vectors (score ties broken by id), and
+vectors equal to centroids. All nine queries run, the two that serve
+PERSISTED indexes included; their indexes are built in a temp dir.
+``oracle.compare_query`` compares doubles by ``repr``, so ``-0.0`` vs
+``0.0`` and NULL vs a value are differences. Column order, Spark types
+and non-empty output are pinned here, since the oracle compares column
+names as a set.
+
+The persisted indexes must also fail loudly when their stored ids are
+corrupt: a cell id the centroid list lacks, or a PQ code naming a
+codeword the codebook lacks, raises instead of serving a plausible
+neighbour list."""
 
 from __future__ import annotations
 
 import os
-import struct
+import shutil
 
+import duckdb
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from kafkatoclickhouse_spark import oracle, registry
 from kafkatoclickhouse_spark.operators import pq as PQ
 from kafkatoclickhouse_spark.operators import similarity as SIM
 
-PAIRS = [
-    ("sim_ivf_topk", SIM._catalyst_sim_ivf_topk),
-    ("sim_ivf_sq8_topk", SIM._catalyst_sim_ivf_sq8_topk),
-    ("sim_ivf_sq8_refine_topk", SIM._catalyst_sim_ivf_sq8_refine_topk),
-    ("sim_ivf_filtered_topk", SIM._catalyst_sim_ivf_filtered_topk),
-    (
-        "sim_ivf_appended_serve_topk",
-        SIM._catalyst_sim_ivf_appended_serve_topk,
-    ),
-    ("sim_ivfpq_topk", PQ._catalyst_sim_ivfpq_topk),
-    ("sim_ivfpq_refine_topk", PQ._catalyst_sim_ivfpq_refine_topk),
-    ("sim_ivfpq_serve_topk", PQ._catalyst_sim_ivfpq_serve_topk),
-    ("sim_pq_refine_topk", PQ._catalyst_sim_pq_refine_topk),
-]
-
-# Queries that read persisted index artifacts keyed on the fixture
-# fingerprint — exercised on the real fixture only (their scoring
-# kernels are shared with the inline variants, which DO run on the
-# adversarial corpus).
-PERSISTED = {"sim_ivf_appended_serve_topk", "sim_ivfpq_serve_topk"}
-
-
-def _bits(v):
-    """Hashable exact representation: doubles by bit pattern (so
-    0.1+0.2 != 0.3 and -0.0 != 0.0 — stricter than the oracle),
-    everything else as-is."""
-    if isinstance(v, float):
-        return struct.pack("<d", v)
-    return v
-
-
-def _canon(df):
-    return sorted(
-        tuple(_bits(v) for v in row) for row in df.collect()
-    )
-
-
-def _assert_identical(fused_df, cat_df, name):
-    assert fused_df.columns == cat_df.columns, name
-    assert [f.dataType for f in fused_df.schema.fields] == [
-        f.dataType for f in cat_df.schema.fields
-    ], name
-    f_rows, c_rows = _canon(fused_df), _canon(cat_df)
-    assert f_rows == c_rows, (
-        f"{name}: fused != catalyst "
-        f"({len(f_rows)} vs {len(c_rows)} rows; first diff: "
-        f"{next((a, b) for a, b in zip(f_rows, c_rows) if a != b) if len(f_rows) == len(c_rows) else '(row count)'})"
-    )
-
-
-@pytest.mark.parametrize("name,catalyst", PAIRS, ids=[p[0] for p in PAIRS])
-def test_fused_matches_catalyst_on_fixture(spark, sf_dir, name, catalyst):
-    from kafkatoclickhouse_spark import registry
-
-    _assert_identical(
-        registry.QUERIES[name](spark, sf_dir), catalyst(spark, sf_dir), name
-    )
+_K = [("query_id", "bigint"), ("neighbor_id", "bigint")]
+_R = [("rank", "int")]
+SCHEMAS = {
+    "sim_ivf_topk": _K + [("score", "double")] + _R,
+    "sim_ivf_sq8_topk": _K + [("score_scaled", "bigint")] + _R,
+    "sim_ivf_sq8_refine_topk": _K + [("score", "double")] + _R,
+    "sim_ivf_filtered_topk": _K
+    + [("label", "int"), ("score", "double")]
+    + _R,
+    "sim_ivf_appended_serve_topk": _K + [("score_scaled", "bigint")] + _R,
+    "sim_ivfpq_topk": _K + [("adc_dist_sq_micro", "bigint")] + _R,
+    "sim_ivfpq_refine_topk": _K + [("dist_sq_micro", "bigint")] + _R,
+    "sim_ivfpq_serve_topk": _K + [("adc_dist_sq_micro", "bigint")] + _R,
+    "sim_pq_refine_topk": _K + [("dist_sq_micro", "bigint")] + _R,
+}
 
 
 @pytest.fixture(scope="module")
@@ -118,18 +87,125 @@ def adversarial_dir(tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.parametrize(
-    "name,catalyst",
-    [p for p in PAIRS if p[0] not in PERSISTED],
-    ids=[p[0] for p in PAIRS if p[0] not in PERSISTED],
-)
-def test_fused_matches_catalyst_adversarial(
-    spark, adversarial_dir, name, catalyst
-):
-    from kafkatoclickhouse_spark import registry
+@pytest.fixture(scope="module")
+def index_root(tmp_path_factory):
+    """Index root for the corpus's persisted indexes (built by the
+    first serve query that runs under it)."""
+    return str(tmp_path_factory.mktemp("simfuse_index"))
 
-    fused = registry.QUERIES[name](spark, adversarial_dir)
-    cat = catalyst(spark, adversarial_dir)
-    _assert_identical(fused, cat, f"{name}[adversarial]")
-    # sanity: the adversarial corpus actually produces rows
-    assert fused.count() > 0, name
+
+@pytest.fixture(scope="module")
+def adversarial_duck(adversarial_dir):
+    return oracle.duckdb_connect(adversarial_dir)
+
+
+def _assert_matches_oracle(spark, duck, name, data_dir, tag):
+    """Pin ``name``'s column order and Spark types, require rows, and
+    compare them with the DuckDB oracle over ``data_dir``."""
+    df = registry.QUERIES[name](spark, data_dir)
+    assert [
+        (f.name, f.dataType.simpleString()) for f in df.schema.fields
+    ] == SCHEMAS[name], name
+    assert df.count() > 0, f"{name}[{tag}]: no rows"
+    problems = oracle.compare_query(spark, duck, name, data_dir)
+    assert not problems, f"{name}[{tag}]: {'; '.join(problems)}"
+
+
+@pytest.mark.parametrize("name", sorted(SCHEMAS))
+def test_fused_matches_catalyst_on_fixture(spark, duck, sf_dir, name):
+    """The fused path on the real fixture, schema pinned. (The name is
+    kept from when the reference was a Catalyst builder of the same
+    query; the reference is now its DuckDB oracle.)"""
+    _assert_matches_oracle(spark, duck, name, sf_dir, "fixture")
+
+
+@pytest.mark.parametrize("name", sorted(SCHEMAS))
+def test_fused_matches_oracle_adversarial(
+    spark, adversarial_dir, adversarial_duck, index_root, monkeypatch, name
+):
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", index_root)
+    _assert_matches_oracle(
+        spark, adversarial_duck, name, adversarial_dir, "adversarial"
+    )
+
+
+def test_duckdb_connect_partial_dir(adversarial_dir, adversarial_duck):
+    """A directory holding only ``embeddings.parquet`` connects; a
+    query over a table it lacks fails when it runs."""
+    assert adversarial_duck.execute(
+        "SELECT COUNT(*) FROM embeddings"
+    ).fetchone() == (130,)
+    with pytest.raises(duckdb.CatalogException, match="lineitem"):
+        adversarial_duck.execute("SELECT COUNT(*) FROM lineitem")
+
+
+def _replace(parquet_dir: str, table: pa.Table) -> None:
+    """Replace the Spark-written ``parquet_dir`` by one file holding
+    ``table``."""
+    shutil.rmtree(parquet_dir)
+    os.makedirs(parquet_dir)
+    pq.write_table(table, os.path.join(parquet_dir, "part-0.parquet"))
+
+
+def _set_first(parquet_dir: str, col: str, value: int) -> None:
+    """Rewrite ``col`` of the first stored row to ``value``."""
+    t = pq.read_table(parquet_dir)
+    vals = t.column(col).to_pylist()
+    vals[0] = value
+    i = t.schema.get_field_index(col)
+    _replace(
+        parquet_dir,
+        t.set_column(i, col, pa.array(vals, type=t.schema.field(col).type)),
+    )
+
+
+@pytest.fixture
+def index_copy(spark, adversarial_dir, index_root, tmp_path, monkeypatch):
+    """A private copy of the corpus's built indexes, served from."""
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", index_root)
+    PQ.embedding_pq_index_build(spark, adversarial_dir)
+    SIM.embedding_ivf_index_append(spark, adversarial_dir)
+    root = str(tmp_path / "idx")
+    shutil.copytree(index_root, root)
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", root)
+    return root
+
+
+def test_appended_serve_rejects_unknown_cell(
+    spark, adversarial_dir, index_copy
+):
+    """An in-range cell id that is not a centroid (9: the base slice's
+    centroids are vec_ids 0..8 and 10..16) must raise, not take cell
+    10's probe mask."""
+    path = SIM.embedding_ivf_index_append(spark, adversarial_dir)
+    cids = pq.read_table(os.path.join(path, "centroids.parquet"))["cid"]
+    assert 9 not in cids.to_pylist() and max(cids.to_pylist()) > 9
+    _set_first(os.path.join(path, "codes.parquet"), "cell", 9)
+    with pytest.raises(Exception, match=r"stored ids \[9\] are not in"):
+        registry.QUERIES["sim_ivf_appended_serve_topk"](
+            spark, adversarial_dir
+        ).collect()
+
+
+def test_pq_serve_rejects_code_of_missing_codeword(
+    spark, adversarial_dir, index_copy
+):
+    """A PQ code naming a codeword the codebook lacks (a gap below the
+    book's largest cid) must raise, not score distance 0 and rank
+    first."""
+    path = PQ.embedding_pq_index_build(spark, adversarial_dir)
+    books = pq.read_table(os.path.join(path, "codebooks.parquet"))
+    ms, cs = books["m"].to_pylist(), books["cid"].to_pylist()
+    book0 = sorted(c for m, c in zip(ms, cs) if m == 0)
+    gap = book0[len(book0) // 2]
+    keep = [not (m == 0 and c == gap) for m, c in zip(ms, cs)]
+    _replace(
+        os.path.join(path, "codebooks.parquet"), books.filter(pa.array(keep))
+    )
+    _set_first(os.path.join(path, "codes.parquet"), "code0", gap)
+    with pytest.raises(
+        Exception, match=rf"stored ids \[{gap}\] are not in"
+    ):
+        registry.QUERIES["sim_ivfpq_serve_topk"](
+            spark, adversarial_dir
+        ).collect()
