@@ -224,12 +224,6 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — warmup only
             print(f"bench: warmup {t} failed: {exc}", file=sys.stderr)
 
-    # bench-only twins (not registered — no oracle): quantify the md5
-    # portable-hash tax vs the production xxhash64 family. Excluded
-    # from "value" so round-over-round totals stay comparable.
-    from kafkatoclickhouse_spark.operators import decontam as decontam_mod
-    from kafkatoclickhouse_spark.operators import dedup as dedup_mod
-
     def _pq_index_build_forced(spark, sf_dir):
         """Bench-only BUILD twin: full cold build (train both
         quantizers + encode + persist) each round, against the timed
@@ -283,8 +277,6 @@ def main() -> None:
         return spark.range(1)
 
     extra_fns = {
-        "dedup_minhash_lsh_xxhash": dedup_mod.dedup_minhash_lsh_fast,
-        "text_decontaminate_xxhash": decontam_mod.text_decontaminate_fast,
         "embedding_pq_index_build": _pq_index_build_forced,
         "text_bm25_index_build": _bm25_index_build_forced,
     }
@@ -409,11 +401,7 @@ def main() -> None:
             "since round 6, "
             "per-query times are medians of `repeats` interleaved "
             "timed rounds (stddev alongside); earlier rounds were "
-            "single-shot. extras are bench-only twins excluded from "
-            "value: dedup_minhash_lsh_xxhash swaps the "
-            "oracle-replayable md5 hash family for JVM xxhash64 "
-            "(the documented 100TB production swap); compare with "
-            "queries.dedup_minhash_lsh for the md5 tax. "
+            "single-shot. extras are excluded from value. "
             "round 10: sim_mmr_rerank_topk was rewritten from a "
             "K-step driver-collect loop into one applyInPandas "
             "stage (VERDICT r9 #2), so the former noop-sink "

@@ -78,32 +78,6 @@ def sql_portable_hash64(expr: str, seed: int) -> str:
     return f"CAST('0x' || substring(md5('{seed}:' || {expr}), 1, 15) AS BIGINT)"
 
 
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """Array of ``num_hashes`` min-hash values over the shingle set.
-
-    Each hash function is an independent seed of the portable family;
-    the signature element k = min over shingles of hash_k(shingle).
-    Pure higher-order expressions — evaluated row-local, no shuffle.
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s, k=k: portable_hash64(s, k))
-            )
-            for k in range(num_hashes)
-        ]
-    )
-
-
-def fast_hash64(s: Column, seed: int) -> Column:
-    """Production hash family: JVM-native ``xxhash64`` seeded by
-    position — no md5 hex round-trip, no string allocation. Same plan
-    shape as :func:`portable_hash64` (swap is one argument); the cost
-    is losing DuckDB oracle replayability, so oracle-checked queries
-    keep md5 and the bench twins quantify the delta (BENCH notes)."""
-    return F.xxhash64(F.lit(seed), s)
-
-
 # -- Spark-SQL-string twins --------------------------------------------------
 #
 # Building the K-seed hash family expression-by-expression costs ~6 py4j
@@ -121,8 +95,3 @@ def spark_sql_hash64(expr: str, seed: int) -> str:
         f"CAST(CONV(SUBSTRING(MD5(CONCAT('{seed}:', {expr})), 1, 15), "
         f"16, 10) AS BIGINT)"
     )
-
-
-def spark_sql_fast_hash64(expr: str, seed: int) -> str:
-    """Spark-dialect SQL string twin of :func:`fast_hash64`."""
-    return f"XXHASH64({seed}, {expr})"

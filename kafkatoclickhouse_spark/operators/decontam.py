@@ -67,28 +67,15 @@ _SQL_BASE = hashing.sql_word_shingles(DECONTAM_N) + """,
 _r6 = stable_round6  # engine-stable 6-dp rounding (functions.exact)
 
 
-def _doc_overlap(
-    spark: SparkSession, sf_dir: str, hashed: bool = False
-) -> DataFrame:
-    """(doc_id, n_shingles, n_overlap) for every training doc.
-
-    ``hashed=True`` is the documented production swap: join on
-    ``xxhash64(shingle)`` longs instead of shingle strings — the
-    broadcast eval set shrinks from ~30 bytes to 8 per entry and the
-    probe compares int64s, at a false-positive rate of ~|eval|²/2⁶⁴
-    (immaterial). Kept out of the oracled query (xxhash64 is not
-    replayable in DuckDB) and measured as a bench extra, exactly like
-    ``dedup_minhash_lsh_fast``."""
+def _doc_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n_shingles, n_overlap) for every training doc."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    key = F.col("shingle")
-    if hashed:
-        key = F.xxhash64(F.col("shingle"))
     sh = docs.select(
         "doc_id",
         F.explode(
             hashing.word_shingles(F.col("text"), DECONTAM_N)
-        ).alias("shingle"),
-    ).select("doc_id", key.alias("k"))
+        ).alias("k"),
+    )
     evals = (
         sh.where(F.col("doc_id") % EVAL_MOD == 0)
         .select("k")
@@ -103,19 +90,6 @@ def _doc_overlap(
             F.count("*").alias("n_shingles"),
             F.count("_hit").alias("n_overlap"),
         )
-    )
-
-
-def text_decontaminate_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only xxhash64 twin of ``text_decontaminate`` — same
-    plan, int64 join keys. See ``_doc_overlap(hashed=True)``."""
-    d = _doc_overlap(spark, sf_dir, hashed=True)
-    return d.select(
-        "doc_id",
-        "n_shingles",
-        "n_overlap",
-        (F.col("n_overlap") > 0).alias("contaminated"),
-        _r6(F.col("n_overlap") / F.col("n_shingles")).alias("overlap_frac"),
     )
 
 

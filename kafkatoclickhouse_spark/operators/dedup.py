@@ -129,7 +129,7 @@ def dedup_exact_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(shingled: DataFrame, hash_fn=None) -> DataFrame:
+def minhash_signatures(shingled: DataFrame) -> DataFrame:
     """doc_id → one column per MinHash value (h0..h{K-1}).
 
     Shape: explode shingles → hash each shingle once per seed →
@@ -143,35 +143,25 @@ def minhash_signatures(shingled: DataFrame, hash_fn=None) -> DataFrame:
     exploded = shingled.select(
         "doc_id", F.explode("shingles").alias("shingle")
     )
-    # Known hash families go through one parsed SQL string per seed
-    # instead of a Column-builder chain — same Catalyst operators,
-    # ~6× fewer py4j round trips per build (see hashing.py).
-    if hash_fn is None:
-        sql_fn = hashing.spark_sql_hash64
-    elif hash_fn is hashing.fast_hash64:
-        sql_fn = hashing.spark_sql_fast_hash64
-    else:
-        sql_fn = None
-    if sql_fn is not None:
-        aggs = [
-            F.expr(f"MIN({sql_fn('shingle', k)})").alias(f"h{k}")
-            for k in range(NUM_HASHES)
-        ]
-    else:
-        aggs = [
-            F.min(hash_fn(F.col("shingle"), k)).alias(f"h{k}")
-            for k in range(NUM_HASHES)
-        ]
+    # One parsed SQL string per seed instead of a Column-builder
+    # chain — same Catalyst operators, ~6× fewer py4j round trips per
+    # build (see hashing.py).
+    aggs = [
+        F.expr(f"MIN({hashing.spark_sql_hash64('shingle', k)})").alias(
+            f"h{k}"
+        )
+        for k in range(NUM_HASHES)
+    ]
     return exploded.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_bands(shingled: DataFrame, hash_fn=None) -> DataFrame:
+def minhash_bands(shingled: DataFrame) -> DataFrame:
     """doc_id → exploded (band, band_key) rows.
 
     band_key = md5 of the comma-joined r signature values of that
     band; grouping docs on (band, band_key) is the LSH bucket join.
     """
-    sigs = minhash_signatures(shingled, hash_fn=hash_fn)
+    sigs = minhash_signatures(shingled)
     bands = F.array(
         *[
             F.struct(
@@ -283,22 +273,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     above random-pair similarity (~0.1)."""
     shingled = _shingled(spark, sf_dir).cache()
     pairs = candidate_pairs(minhash_bands(shingled))
-    return exact_jaccard(pairs, shingled).filter(
-        F.col("jaccard") >= JACCARD_THRESHOLD
-    )
-
-
-def dedup_minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only twin of ``dedup_minhash_lsh`` on the production
-    hash family (``hashing.fast_hash64`` = JVM xxhash64) instead of
-    the oracle-replayable md5. Identical plan shape and semantics
-    (different hash values ⇒ different — equally valid — LSH buckets);
-    deliberately NOT registered: it has no DuckDB twin, and its only
-    job is quantifying the md5 portability tax in BENCH notes."""
-    shingled = _shingled(spark, sf_dir).cache()
-    pairs = candidate_pairs(
-        minhash_bands(shingled, hash_fn=hashing.fast_hash64)
-    )
     return exact_jaccard(pairs, shingled).filter(
         F.col("jaccard") >= JACCARD_THRESHOLD
     )

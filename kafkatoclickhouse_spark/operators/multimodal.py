@@ -3,39 +3,41 @@
 LLM-pipeline surface (north star). Images/audio/video are carried as
 ``binary`` columns with a typed metadata struct; decode / feature
 extraction runs as Arrow-batched pandas over ``mapInPandas``.
-``decode_image`` really decodes binary PPM P6, 24-bit BMP, baseline
-JPEG (full Huffman + dequant + iDCT pipeline, ``operators/jpeg.py``)
-AND PNG — sequential and Adam7 interlaced — (chunk walk + CRC +
-inflate + all five row unfilters, ``operators/png.py``) with
-dependency-free numpy parsers — exercised end-to-end by
-``multimodal_decode_stats`` / ``multimodal_decode_jpeg_stats`` /
-``multimodal_decode_png_stats`` /
-``multimodal_decode_png_interlaced_stats`` — while remaining codecs
-(subsampled/deep JPEG, deep PNG) fall through to PIL when present
-and fail loudly otherwise (none in this container).
+``decode_image`` decodes with dependency-free numpy codecs: binary
+PPM P6 and 24-bit BMP (here); JPEG — baseline and progressive, 4:4:4
+or chroma-subsampled, restart intervals on sequential frames
+(``operators/jpeg.py``); PNG at 8 and 16 bits, sequential and Adam7
+interlaced (``operators/png.py``); GIF87a/89a (``operators/gif.py``)
+and lossless WebP (VP8L, ``operators/webp.py``). ``operators/wav.py``
+decodes PCM WAV. Streams outside those subsets (12-bit JPEG,
+sub-byte PNG, lossy WebP, compressed BMP) fall through to PIL when it
+is importable and fail loudly otherwise.
 
 Since the fixtures ship no binary columns, payloads are synthesized
 deterministically — from ``documents.text`` (utf-8 bytes) for the
-byte/frame/resize queries, and as real PPM/BMP images from a
-closed-form pixel rule for the decode queries — the same derivations
-the oracles apply.
+byte/frame/resize queries, and for the decode queries as real encoded
+files from a closed-form pixel or sample rule, one
+``_<codec>_payload(doc_id)`` per fixture, whose constants the oracles
+read from the same tables (``RGB_RULES``, ``JPEG_BLOCKS``).
 
-Production swap for the remaining codecs (PNG, non-baseline JPEG —
-what a real multimodal corpus also holds): install pillow (or use
-spark-image / opencv) on the cluster and the PIL fallback in
-``decode_image`` activates with NO plumbing change — the kernel
-signature
-(``bytes -> (h, w, 3) uint8 RGB array``), the Arrow mapInPandas
-batch shape, the output schema, and the partitioning are identical;
-only the per-payload parser body differs. Everything Spark-side that
-this module pins (schema, batching, map-only plan) is the part that
-carries to 100 TB.
+Production swap: on a real corpus the payload function is the
+object-store fetch, and PIL (or spark-image / opencv) takes the
+streams the pure codecs reject with NO plumbing change — the kernel
+signature (``bytes -> (h, w, 3) uint8 RGB array``), the Arrow
+mapInPandas batch shape, the output schema, and the partitioning are
+identical; only the per-payload parser body differs. Everything
+Spark-side that this module pins (schema, batching, map-only plan) is
+the part that carries to 100 TB.
 """
 
 from __future__ import annotations
 
+import functools
+import struct
 from collections.abc import Iterator
+from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,9 +45,8 @@ from pyspark.sql import functions as F
 from kafkatoclickhouse_spark.registry import query
 from kafkatoclickhouse_spark.tables import fan_out, load_table
 
-# Compressed-codec libraries (PIL/cv2/librosa) are absent in this
-# environment; the built-in pure-numpy decoder below handles the
-# uncompressed container formats (PPM P6, 24-bit BMP).
+# PIL is optional: when importable, it decodes the streams the
+# dependency-free codecs reject (see ``decode_image``).
 DECODERS_AVAILABLE = False
 try:  # pragma: no cover - environment-dependent
     from PIL import Image as _PIL_Image  # noqa: F401
@@ -75,8 +76,6 @@ def _decode_ppm_p6(payload: bytes):
     """Binary PPM (P6): ASCII header ``P6 <w> <h> <maxval>`` with
     ``#`` comments, one whitespace after maxval, then w*h*3 raw RGB
     bytes. Returns an (h, w, 3) uint8 numpy array."""
-    import numpy as np
-
     if not payload.startswith(b"P6"):
         raise ValueError("not a P6 PPM payload")
     # header tokenizer: whitespace-separated ints, '#' to EOL skipped
@@ -104,10 +103,6 @@ def _decode_bmp24(payload: bytes):
     """Uncompressed 24-bit BMP (BITMAPINFOHEADER): little-endian
     header, BGR pixel order, rows bottom-up and padded to 4 bytes.
     Returns an (h, w, 3) uint8 RGB numpy array."""
-    import struct
-
-    import numpy as np
-
     if not payload.startswith(b"BM"):
         raise ValueError("not a BMP payload")
     data_offset = struct.unpack_from("<I", payload, 10)[0]
@@ -136,13 +131,15 @@ def _decode_bmp24(payload: bytes):
 def decode_image(payload: bytes) -> "object":
     """Decode an image payload to an (h, w, 3) uint8 RGB array.
 
-    Dependency-free decoders cover the uncompressed container
-    formats — binary PPM (P6) and 24-bit BMP — which is what the
-    fixture-synthesized payloads use; when PIL is importable
-    (real deployments), any other format falls through to it.
-    Raises ValueError for formats no available decoder handles, so
-    unsupported compressed codecs fail loudly rather than silently
-    fake pixels."""
+    Dependency-free decoders cover binary PPM (P6), 24-bit BMP,
+    8-bit JPEG (baseline and progressive, any supported sampling,
+    restart intervals on sequential frames), 8/16-bit PNG (sequential
+    and Adam7), GIF and lossless WebP (VP8L) — every format the
+    fixture-synthesized payloads use. A stream one of them rejects
+    falls through to PIL when it is importable (real deployments).
+    Raises ValueError for streams no available decoder handles, so
+    unsupported codecs fail loudly rather than silently fake
+    pixels."""
     if payload[:2] == b"P6":
         return _decode_ppm_p6(payload)
     if payload[:2] == b"BM":
@@ -160,9 +157,11 @@ def decode_image(payload: bytes) -> "object":
             if _PIL_Image is None:
                 raise
     if payload[:2] == b"\xff\xd8":
-        # dependency-free baseline-JPEG decoder (operators/jpeg.py);
-        # non-baseline streams (progressive, subsampled, 12-bit)
-        # raise there and fall through to PIL when present.
+        # dependency-free JPEG decoder (operators/jpeg.py): baseline
+        # and progressive, 4:4:4 or subsampled, restart intervals on
+        # sequential frames; 12-bit, lossless/hierarchical,
+        # arithmetic-coded and progressive-with-restart streams raise
+        # there and fall through to PIL when present.
         from kafkatoclickhouse_spark.operators.jpeg import decode_jpeg
 
         try:
@@ -194,12 +193,11 @@ def decode_image(payload: bytes) -> "object":
     if _PIL_Image is not None:  # pragma: no cover - not in container
         import io
 
-        import numpy as np
-
         return np.asarray(_PIL_Image.open(io.BytesIO(payload)).convert("RGB"))
     raise ValueError(
         "unsupported image format (built-in decoders: PPM P6, 24-bit "
-        "BMP; compressed codecs need PIL, unavailable here)"
+        "BMP, 8-bit JPEG, 8/16-bit PNG, GIF, lossless WebP; other "
+        "streams need PIL, which is not installed)"
     )
 
 
@@ -209,8 +207,6 @@ def _byte_feature_batches(
     """mapInPandas kernel: deterministic per-payload byte statistics
     (what a real feature extractor's output shape looks like).
     Vectorized numpy over each Arrow batch."""
-    import numpy as np
-
     for pdf in batches:
         arrs = [np.frombuffer(b, dtype=np.uint8) for b in pdf["payload"]]
         yield pd.DataFrame(
@@ -358,8 +354,6 @@ def _resize_batches(
     ``pos_i = i*(n-1) // (RESIZE_TO-1)`` — so the exact same positions
     are reproducible in any engine (the DuckDB oracle recomputes them
     with integer division; float ``linspace`` would not hash-match)."""
-    import numpy as np
-
     steps = None
     for pdf in batches:
         if steps is None:
@@ -429,8 +423,6 @@ def _frame_energy_batches(
     per-frame energy (sum of squared samples) over fixed-size windows
     of the payload. Integer arithmetic end-to-end so the statistics
     are exact in any engine."""
-    import numpy as np
-
     for pdf in batches:
         doc_ids, idxs, sums, ns = [], [], [], []
         for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
@@ -494,108 +486,62 @@ def multimodal_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- image decode (real pure-numpy decoder over synthesized PPMs) -----------
+# -- decode fixtures ---------------------------------------------------------
 #
-# The fixtures ship no image payloads, so the pipeline synthesizes a
-# deterministic binary PPM (P6) per document — REAL image bytes with
-# header + raw RGB raster — then decodes them back with the
-# dependency-free decoder in ``decode_image`` and reports per-channel
-# statistics. Synthesis and decode are separate Arrow mapInPandas
-# stages, so the payload crosses the executor boundary as a genuine
-# binary column; a bug in either the PPM writer or the parser breaks
-# the oracle match. Pixel values are closed-form in (doc_id, x, y) so
-# DuckDB can recompute the statistics without touching any binary.
-
-PPM_W_BASE, PPM_W_MOD = 8, 5  # width  = 8 + doc_id % 5
-PPM_H_BASE, PPM_H_MOD = 6, 4  # height = 6 + doc_id % 4
-
-
-def _ppm_pixel_exprs(doc_id, x, y):
-    """The shared pixel rule: channel = linear(doc_id, x, y) mod 256.
-    One definition used by the synthesizer (numpy), mirrored textually
-    in the DuckDB oracle below."""
-    return (
-        (doc_id * 7 + x * 3 + y * 5) % 256,
-        (doc_id * 11 + x * 2 + y * 3) % 256,
-        (doc_id * 13 + x * 5 + y * 7) % 256,
-    )
+# The fixtures ship no media payloads, so each decode query
+# synthesizes a REAL encoded file per document (header, raster or
+# entropy-coded stream, whatever the format carries) whose pixels or
+# samples are closed-form in (doc_id, x, y), decodes it back with the
+# dependency-free codecs and reports exact integer statistics. A
+# fixture is one module-level ``_<codec>_payload(doc_id) -> bytes``
+# (module level, so cloudpickle ships it by reference). Synthesis and
+# decode compose inside ONE mapInPandas, yet a bug in either the
+# writer or the parser breaks the oracle match: DuckDB recomputes the
+# statistics from the same closed-form rule without seeing a byte.
+# The rule families several fixtures share are tables (``RGB_RULES``,
+# ``JPEG_BLOCKS``) read by both the synthesizer and the oracle
+# builder, so a constant is written once.
 
 
-def _synthesize_ppm_batches(
-    batches: Iterator[pd.DataFrame],
+def _payload_batches(
+    batches: Iterator[pd.DataFrame], payload
 ) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
+    """mapInPandas kernel: ``(doc_id, payload(doc_id))`` for every
+    document of every Arrow batch."""
     for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w = PPM_W_BASE + d % PPM_W_MOD
-            h = PPM_H_BASE + d % PPM_H_MOD
-            y, x = np.mgrid[0:h, 0:w]
-            r, g, b = _ppm_pixel_exprs(d, x, y)
-            raster = np.stack([r, g, b], axis=-1).astype(np.uint8)
-            payloads.append(
-                b"P6\n%d %d\n255\n" % (w, h) + raster.tobytes()
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "payload": [payload(int(d)) for d in pdf["doc_id"]],
+            }
+        )
 
 
-def synthesize_ppm_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a deterministic binary-PPM payload per
-    document. Map-only; at scale this stage stands in for the object-
-    store fetch that materializes the image bytes."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_ppm_batches, schema="doc_id long, payload binary"
-    )
-
-
-def _bmp24_bytes(raster) -> bytes:
-    """Serialize an (h, w, 3) uint8 RGB array as an uncompressed
-    24-bit BMP: 54-byte BITMAPINFOHEADER, BGR order, rows bottom-up,
-    stride padded to 4 bytes — the exact layout ``_decode_bmp24``
-    parses back."""
-    import struct
-
-    import numpy as np
-
-    h, w, _ = raster.shape
-    stride = (w * 3 + 3) & ~3
-    body = np.zeros((h, stride), dtype=np.uint8)
-    body[:, : w * 3] = raster[::-1, :, ::-1].reshape(h, w * 3)
-    size = 54 + stride * h
-    header = struct.pack(
-        "<2sIHHI", b"BM", size, 0, 0, 54
-    ) + struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h, 2835, 2835, 0, 0
-    )
-    return header + body.tobytes()
-
-
-def synthesize_bmp_images(docs: DataFrame, w: int, h: int) -> DataFrame:
-    """(doc_id, payload) with a 24-bit BMP at FIXED larger dims per
-    document (same closed-form pixel rule as the PPM fixture) —
-    extends the media fixture beyond the tiny PPMs so the decoder's
-    stride-padding / bottom-up / BGR paths run on realistic image
-    sizes (VERDICT r6 #7). Map-only like the PPM synthesizer."""
-    import numpy as np
+def synthesize(docs: DataFrame, payload) -> DataFrame:
+    """(doc_id, payload) with ``payload(doc_id)`` bytes per document.
+    Map-only; at scale this stage stands in for the object-store fetch
+    that materializes the media bytes."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                yy, xx = np.mgrid[0:h, 0:w]
-                r, g, b = _ppm_pixel_exprs(d, xx, yy)
-                raster = np.stack([r, g, b], axis=-1).astype(np.uint8)
-                payloads.append(_bmp24_bytes(raster))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+        return _payload_batches(batches, payload)
 
     return docs.select("doc_id").mapInPandas(
         gen, schema="doc_id long, payload binary"
     )
+
+
+def _fused(docs: DataFrame, payload, kernel, schema: str) -> DataFrame:
+    """``kernel`` over ``payload(doc_id)`` bytes in ONE Arrow crossing:
+    the payloads never round-trip Python → JVM → Python between
+    synthesis and decode (measured ~0.4 s/key at sf0.1 against the
+    chained two-stage form, which gives the same rows). On a real
+    corpus the payload slot is the object-store fetch and the same
+    fusion applies."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return kernel(_payload_batches(batches, payload))
+
+    return docs.select("doc_id").mapInPandas(gen, schema=schema)
 
 
 def _decode_stats_batches(
@@ -631,40 +577,110 @@ _STATS_SCHEMA = (
 )
 
 
-def decode_stats(images: DataFrame) -> DataFrame:
-    """Decode every payload with ``decode_image`` and emit exact
-    integer per-channel statistics — the canonical 'decode then
-    featurize' stage. Arrow-batched, map-only, no shuffle."""
-    return images.select("doc_id", "payload").mapInPandas(
-        _decode_stats_batches,
-        schema=_STATS_SCHEMA,
-    )
+def decode_stats_fused(docs: DataFrame, payload) -> DataFrame:
+    """Synthesize ``payload(doc_id)`` per document, decode it with
+    ``decode_image`` and emit exact integer per-channel statistics —
+    the canonical 'decode then featurize' stage, fused with the
+    synthesis into one Arrow-batched, map-only stage (``_fused``)."""
+    return _fused(docs, payload, _decode_stats_batches, _STATS_SCHEMA)
 
 
-def decode_stats_fused(docs: DataFrame, synth_batches) -> DataFrame:
-    """Synthesize + decode in ONE Arrow crossing (r14): the two batch
-    generators compose inside a single ``mapInPandas``, so the
-    payloads never round-trip Python → JVM → Python between the
-    stages. Row-identical to ``decode_stats(synth(docs))`` — the
-    exact same per-doc code runs, only the boundary count changes
-    (measured ~0.4 s/key at sf0.1). On a real corpus the synthesizer
-    slot is the object-store fetch and the same fusion applies."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _decode_stats_batches(synth_batches(batches))
-
-    return docs.select("doc_id").mapInPandas(gen, schema=_STATS_SCHEMA)
+def _linear(coef, d, x, y, mod):
+    """The closed-form rule every linear fixture draws from:
+    ``(doc_id*a + x*b + y*c) % mod`` for ``coef = (a, b, c)``; numpy
+    arrays or ints."""
+    a, b, c = coef
+    return (d * a + x * b + y * c) % mod
 
 
-@query(
-    "multimodal_decode_stats",
-    oracle=f"""
-    WITH dims AS (
+def _sql_linear(coef, x: str, y: str, mod: int) -> str:
+    """DuckDB text of ``_linear`` over ``doc_id`` and SQL ``x``/``y``."""
+    a, b, c = coef
+    return f"((doc_id * {a} + {x} * {b} + {y} * {c}) % {mod})"
+
+
+def _dims(spec, d: int) -> tuple[int, int]:
+    """(w, h) of document ``d``: ``base + d % mod`` per axis."""
+    return spec.w[0] + d % spec.w[1], spec.h[0] + d % spec.h[1]
+
+
+def _sql_dims(spec) -> str:
+    """The oracles' ``dims`` CTE: ``_dims`` per document."""
+    return f"""dims AS (
       SELECT doc_id,
-             {PPM_W_BASE} + doc_id % {PPM_W_MOD} AS w,
-             {PPM_H_BASE} + doc_id % {PPM_H_MOD} AS h
+             {spec.w[0]} + doc_id % {spec.w[1]} AS w,
+             {spec.h[0]} + doc_id % {spec.h[1]} AS h
       FROM documents
+    )"""
+
+
+# --- linear-RGB fixtures: PPM/BMP, PNG, Adam7 PNG, 16-bit PNG --------
+#
+# Lossless formats, so no carve-out is needed: any closed-form pixel
+# rule round-trips bit-exactly, and the oracle replays it. Pixel
+# POSITION enters every rule, so raster order, row unfiltering and
+# Adam7's pass scatter are load-bearing; the coefficients differ per
+# fixture, so a cross-wired fixture cannot silently pass
+# (``tests/test_sources.py`` checks that they stay distinct).
+
+
+class _Rgb(NamedTuple):
+    """Linear-RGB fixture: width ``w[0] + doc_id % w[1]``, height
+    likewise, channel k = ``_linear(coef[k], doc_id, x, y, 2**depth)``.
+    A 16-bit sample decodes to its high byte."""
+
+    w: tuple[int, int]
+    h: tuple[int, int]
+    coef: tuple[tuple[int, int, int], ...]
+    depth: int = 8
+
+
+RGB_RULES = {
+    # tiny PPMs; the BMP fixture draws the same rule at fixed dims
+    "ppm": _Rgb((8, 5), (6, 4), ((7, 3, 5), (11, 2, 3), (13, 5, 7))),
+    # h >= 5, so the encoder's cycling row filters (y % 5) run all
+    # five unfilter paths inside the oracled query
+    "png": _Rgb((7, 6), (5, 5), ((19, 4, 9), (23, 6, 2), (29, 8, 11))),
+    # w >= 6, h >= 5, so all seven Adam7 passes are non-empty
+    "png_interlaced": _Rgb(
+        (6, 7), (5, 6), ((13, 7, 3), (31, 5, 17), (37, 2, 13))
     ),
+    # Adam7 again, with the rule in 16-bit space
+    "png16": _Rgb(
+        (6, 5),
+        (5, 7),
+        ((101, 257, 509), (103, 263, 521), (107, 269, 523)),
+        16,
+    ),
+}
+
+
+def _rgb_channels(rule: _Rgb, d, x, y) -> tuple:
+    """The rule's channels at (x, y), at full sample depth."""
+    return tuple(_linear(k, d, x, y, 1 << rule.depth) for k in rule.coef)
+
+
+def _rgb_raster(rule: _Rgb, d: int, w: int, h: int):
+    """(h, w, 3) raster of ``rule`` for document ``d``."""
+    y, x = np.mgrid[0:h, 0:w]
+    dtype = np.uint8 if rule.depth == 8 else np.uint16
+    return np.stack(_rgb_channels(rule, d, x, y), axis=-1).astype(dtype)
+
+
+def _sql_rgb_channels(rule: _Rgb, x: str, y: str) -> list[str]:
+    """DuckDB text of the DECODED 8-bit channels: a 16-bit sample is
+    reduced by the decoder's ``v >> 8`` in closed form."""
+    shift = f" // {1 << (rule.depth - 8)}" if rule.depth > 8 else ""
+    return [
+        _sql_linear(k, x, y, 1 << rule.depth) + shift for k in rule.coef
+    ]
+
+
+def _sql_rgb_stats(rule: _Rgb) -> str:
+    """Oracle of ``decode_stats_fused`` over a linear-RGB fixture."""
+    r, g, b = _sql_rgb_channels(rule, "(i % w)", "(i // w)")
+    return f"""
+    WITH {_sql_dims(rule)},
     px AS (
       SELECT doc_id, w, h, unnest(range(w * h)) AS i FROM dims
     )
@@ -672,15 +688,46 @@ def decode_stats_fused(docs: DataFrame, synth_batches) -> DataFrame:
            CAST(MAX(w) AS INTEGER) AS width,
            CAST(MAX(h) AS INTEGER) AS height,
            3 AS channels,
-           CAST(SUM((doc_id * 7 + (i % w) * 3 + (i // w) * 5) % 256)
-                AS BIGINT) AS sum_r,
-           CAST(SUM((doc_id * 11 + (i % w) * 2 + (i // w) * 3) % 256)
-                AS BIGINT) AS sum_g,
-           CAST(SUM((doc_id * 13 + (i % w) * 5 + (i // w) * 7) % 256)
-                AS BIGINT) AS sum_b
+           CAST(SUM({r}) AS BIGINT) AS sum_r,
+           CAST(SUM({g}) AS BIGINT) AS sum_g,
+           CAST(SUM({b}) AS BIGINT) AS sum_b
     FROM px GROUP BY doc_id
-    """,
-)
+    """
+
+
+def _ppm_payload(d: int) -> bytes:
+    """Binary PPM (P6): ASCII header, then the raw RGB raster."""
+    rule = RGB_RULES["ppm"]
+    w, h = _dims(rule, d)
+    return b"P6\n%d %d\n255\n" % (w, h) + _rgb_raster(rule, d, w, h).tobytes()
+
+
+def _bmp24_bytes(raster) -> bytes:
+    """Serialize an (h, w, 3) uint8 RGB array as an uncompressed
+    24-bit BMP: 54-byte BITMAPINFOHEADER, BGR order, rows bottom-up,
+    stride padded to 4 bytes — the exact layout ``_decode_bmp24``
+    parses back."""
+    h, w, _ = raster.shape
+    stride = (w * 3 + 3) & ~3
+    body = np.zeros((h, stride), dtype=np.uint8)
+    body[:, : w * 3] = raster[::-1, :, ::-1].reshape(h, w * 3)
+    size = 54 + stride * h
+    header = struct.pack(
+        "<2sIHHI", b"BM", size, 0, 0, 54
+    ) + struct.pack(
+        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h, 2835, 2835, 0, 0
+    )
+    return header + body.tobytes()
+
+
+def _bmp_payload(d: int, w: int = 32, h: int = 16) -> bytes:
+    """24-bit BMP of the PPM rule at FIXED larger dims, so the
+    decoder's stride padding, bottom-up rows and BGR swap run on
+    realistic image sizes (VERDICT r6 #7)."""
+    return _bmp24_bytes(_rgb_raster(RGB_RULES["ppm"], d, w, h))
+
+
+@query("multimodal_decode_stats", oracle=_sql_rgb_stats(RGB_RULES["ppm"]))
 def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize a binary PPM per document, decode it back with the
     pure-numpy P6 parser, and report exact per-channel pixel sums.
@@ -688,91 +735,185 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     never sees the binary — so header layout, raster order, and
     channel order are all load-bearing: any decoder bug is a hash
     mismatch, not a silent skew. (Closes the r3-brief decode-stub
-    item: ``decode_image`` now really parses PPM P6 and 24-bit BMP;
-    compressed codecs still require PIL and fail loudly without it.)"""
+    item: ``decode_image`` now really parses PPM P6 and 24-bit BMP.)"""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_ppm_batches)
+    return decode_stats_fused(docs, _ppm_payload)
 
 
-# --- baseline-JPEG fixture + oracled decode (VERDICT r7 #9) ----------
+def _png_payload(d: int) -> bytes:
+    """RGB PNG: signature, CRC-framed chunks, rows filtered with all
+    five filter types, zlib-deflated IDAT."""
+    from kafkatoclickhouse_spark.operators.png import encode_png
+
+    rule = RGB_RULES["png"]
+    return encode_png(_rgb_raster(rule, d, *_dims(rule, d)), color_type=2)
+
+
+@query("multimodal_decode_png_stats", oracle=_sql_rgb_stats(RGB_RULES["png"]))
+def multimodal_decode_png_stats(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Synthesize an RGB PNG per document, decode it back through the
+    full chunk-walk + CRC + inflate + unfilter pipeline, and report
+    exact per-channel pixel sums. PNG is lossless, so the oracle
+    replays the closed-form pixel rule with NO carve-out — every
+    stage of the decoder (signature, chunk framing, CRC, zlib
+    inflate, all five row unfilters, RGB expansion) is load-bearing
+    for the hash match. Same mapInPandas kernel slot as PPM/BMP/JPEG;
+    a real corpus swaps the synthesizer for an object-store fetch."""
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return decode_stats_fused(docs, _png_payload)
+
+
+def _png_interlaced_payload(d: int) -> bytes:
+    """Adam7-interlaced RGB PNG: seven-pass serialization, per-pass
+    cycling row filters (r11; real crawls carry interlaced PNGs)."""
+    from kafkatoclickhouse_spark.operators.png import encode_png
+
+    rule = RGB_RULES["png_interlaced"]
+    return encode_png(
+        _rgb_raster(rule, d, *_dims(rule, d)), color_type=2, interlace=True
+    )
+
+
+@query(
+    "multimodal_decode_png_interlaced_stats",
+    oracle=_sql_rgb_stats(RGB_RULES["png_interlaced"]),
+)
+def multimodal_decode_png_interlaced_stats(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Synthesize an Adam7-INTERLACED RGB PNG per document, decode it
+    back through the full chunk-walk + CRC + inflate + seven-pass
+    unfilter-and-scatter pipeline, and report exact per-channel pixel
+    sums. Pixel position enters the rule, so the pass lattice
+    (x0/y0/dx/dy per pass), per-pass filter restart, and the scatter
+    into the full raster are all load-bearing for the hash match.
+    Same mapInPandas kernel slot as the other decode queries."""
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return decode_stats_fused(docs, _png_interlaced_payload)
+
+
+def _png16_payload(d: int) -> bytes:
+    """Adam7-interlaced 16-BIT RGB PNG (VERDICT r11 #6): big-endian
+    samples, byte-level filtering at bpp = 6, so the deep path and the
+    interlace path compose in one oracled query."""
+    from kafkatoclickhouse_spark.operators.png import encode_png
+
+    rule = RGB_RULES["png16"]
+    return encode_png(
+        _rgb_raster(rule, d, *_dims(rule, d)),
+        color_type=2,
+        depth=16,
+        interlace=True,
+    )
+
+
+@query(
+    "multimodal_decode_png16_stats", oracle=_sql_rgb_stats(RGB_RULES["png16"])
+)
+def multimodal_decode_png16_stats(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Synthesize an Adam7-interlaced 16-BIT RGB PNG per document,
+    decode it back through the full chunk-walk + CRC + inflate +
+    byte-level unfilter (bpp=6) + big-endian u16 parse + high-byte
+    reduction + seven-pass scatter pipeline, and report exact
+    per-channel pixel sums. PNG is lossless and the >>8 reduction is
+    closed-form, so the oracle replays rule and reduction without
+    seeing a byte — every deep-path stage is load-bearing for the
+    hash match. Same mapInPandas kernel slot as the other decode
+    queries (VERDICT r11 #6 — the last PIL-fallback route, closed)."""
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    return decode_stats_fused(docs, _png16_payload)
+
+
+# --- block-constant JPEG fixtures (VERDICT r7 #9, r11, r13, r14) ------
 #
 # JPEG is lossy in general, so an exact oracle needs the exactness
 # carve-out the codec provides (operators/jpeg.py docstring): images
 # that are CONSTANT per 8x8 tile have only a DC coefficient, and with
 # the DC quantizer at 8 the quantized DC is exactly v-128 — decode
 # reproduces the pixels bit-for-bit, and the per-document statistics
-# are closed-form in the block rule. The lossy general path (live AC
-# coefficients, color transform) is bounded by tests/test_jpeg.py.
-
-JPEG_BW_BASE, JPEG_BW_MOD = 2, 3  # blocks across = 2 + doc_id % 3
-JPEG_BH_BASE, JPEG_BH_MOD = 2, 2  # blocks down   = 2 + doc_id % 2
-
-
-def _jpeg_block_value(doc_id, bx, by):
-    """Shared block-luma rule, mirrored textually in the oracle."""
-    return (doc_id * 17 + bx * 29 + by * 31) % 256
-
-
-def _synthesize_jpeg_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from kafkatoclickhouse_spark.operators.jpeg import encode_jpeg_gray
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            bw = JPEG_BW_BASE + d % JPEG_BW_MOD
-            bh = JPEG_BH_BASE + d % JPEG_BH_MOD
-            by, bx = np.mgrid[0:bh, 0:bw]
-            blocks = _jpeg_block_value(d, bx, by)
-            img = np.kron(
-                blocks, np.ones((8, 8), dtype=np.int64)
-            ).astype(np.uint8)
-            payloads.append(encode_jpeg_gray(img))
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
+# are closed-form in the block rule. The carve-out extends to color:
+# GRAY-VALUED tiles in a 3-component 4:2:0 stream have block-constant
+# Y and chroma exactly 128 (all-zero coefficients), and in progressive
+# scripts the DC-first scan at Al=1 plus the refinement bit
+# reassemble the exact DC while the AC scans are pure EOB runs. The
+# lossy general path (live AC coefficients, color transform) is
+# bounded by tests/test_jpeg.py. Each fixture has its own rule
+# coefficients, so a cross-wired fixture (or a decoder falling back
+# to another path) cannot silently pass.
 
 
-def synthesize_jpeg_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a REAL baseline grayscale JPEG per
-    document — full marker structure, Annex-K Huffman tables, DCT,
-    entropy coding — synthesized from the block-constant rule.
-    Map-only, like the PPM/BMP synthesizers."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_jpeg_batches, schema="doc_id long, payload binary"
-    )
+class _Blocks(NamedTuple):
+    """Block-constant JPEG fixture: ``w[0] + doc_id % w[1]`` 8x8 blocks
+    across, ``h`` likewise down; block (bx, by) has luma
+    ``_linear(coef, doc_id, bx, by, 256)``."""
+
+    w: tuple[int, int]
+    h: tuple[int, int]
+    coef: tuple[int, int, int]
 
 
-@query(
-    "multimodal_decode_jpeg_stats",
-    oracle=f"""
-    WITH dims AS (
-      SELECT doc_id,
-             {JPEG_BW_BASE} + doc_id % {JPEG_BW_MOD} AS bw,
-             {JPEG_BH_BASE} + doc_id % {JPEG_BH_MOD} AS bh
-      FROM documents
-    ),
-    blk AS (
-      SELECT doc_id, bw, bh, unnest(range(bw * bh)) AS i FROM dims
-    ),
+JPEG_BLOCKS = {
+    "jpeg": _Blocks((2, 3), (2, 2), (17, 29, 31)),
+    "jpeg_progressive": _Blocks((3, 2), (2, 3), (41, 19, 23)),
+    # odd luma block counts for most docs: not MCU-aligned, so the
+    # encoder's edge-replicate pad and the decoder's crop are
+    # load-bearing
+    "jpeg420": _Blocks((3, 3), (3, 2), (37, 13, 11)),
+    "jpeg420_progressive": _Blocks((2, 3), (2, 2), (47, 19, 23)),
+    "jpeg_restart": _Blocks((2, 4), (2, 3), (43, 21, 17)),
+}
+
+
+def _block_gray(spec: _Blocks, d: int):
+    """(8*bh, 8*bw) uint8 gray image of ``spec`` for document ``d``."""
+    bw, bh = _dims(spec, d)
+    by, bx = np.mgrid[0:bh, 0:bw]
+    blocks = _linear(spec.coef, d, bx, by, 256)
+    return np.kron(blocks, np.ones((8, 8), dtype=np.int64)).astype(np.uint8)
+
+
+def _block_gray_rgb(spec: _Blocks, d: int):
+    """``_block_gray`` as a gray-valued (h, w, 3) color image."""
+    gray = _block_gray(spec, d)
+    return np.stack([gray, gray, gray], axis=-1)
+
+
+def _sql_block_stats(spec: _Blocks) -> str:
+    """Oracle of ``decode_stats_fused`` over a block-constant JPEG
+    fixture: every channel sums 64 × each block's value."""
+    val = _sql_linear(spec.coef, "(i % w)", "(i // w)", 256)
+    return f"""
+    WITH {_sql_dims(spec)},
     v AS (
-      SELECT doc_id, bw, bh,
-             (doc_id * 17 + (i % bw) * 29 + (i // bw) * 31) % 256 AS val
-      FROM blk
+      SELECT doc_id, w, h, {val} AS val
+      FROM (SELECT doc_id, w, h, unnest(range(w * h)) AS i FROM dims)
     )
     SELECT doc_id,
-           CAST(MAX(bw) * 8 AS INTEGER) AS width,
-           CAST(MAX(bh) * 8 AS INTEGER) AS height,
+           CAST(MAX(w) * 8 AS INTEGER) AS width,
+           CAST(MAX(h) * 8 AS INTEGER) AS height,
            3 AS channels,
            CAST(SUM(val) * 64 AS BIGINT) AS sum_r,
            CAST(SUM(val) * 64 AS BIGINT) AS sum_g,
            CAST(SUM(val) * 64 AS BIGINT) AS sum_b
     FROM v GROUP BY doc_id
-    """,
+    """
+
+
+def _jpeg_payload(d: int) -> bytes:
+    """Baseline grayscale JPEG: full marker structure, Annex-K Huffman
+    tables, DCT, entropy coding."""
+    from kafkatoclickhouse_spark.operators.jpeg import encode_jpeg_gray
+
+    return encode_jpeg_gray(_block_gray(JPEG_BLOCKS["jpeg"], d))
+
+
+@query(
+    "multimodal_decode_jpeg_stats",
+    oracle=_sql_block_stats(JPEG_BLOCKS["jpeg"]),
 )
 def multimodal_decode_jpeg_stats(
     spark: SparkSession, sf_dir: str
@@ -788,94 +929,26 @@ def multimodal_decode_jpeg_stats(
     match. Same mapInPandas kernel slot as the PPM/BMP decode; a
     real corpus swaps the synthesizer for an object-store fetch."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_jpeg_batches)
+    return decode_stats_fused(docs, _jpeg_payload)
 
 
-# --- progressive-JPEG fixture + oracled decode (r11) ------------------
-#
-# Real crawls are majority-PROGRESSIVE JPEG; until r11 those streams
-# took the PIL-fallback route. The codec now decodes SOF2 natively
-# (all four T.81 Annex G kernels, operators/jpeg.py), and this query
-# certifies the full multi-scan path end-to-end under the same
-# exactness carve-out as baseline: block-constant tiles have only a
-# DC coefficient, the DC-first scan at Al=1 plus the refinement bit
-# reassemble the exact DC, and the AC scans are pure EOB runs —
-# decode is bit-exact, and the oracle replays the closed-form block
-# rule without seeing a byte of JPEG. Distinct rule constants and
-# dims from the baseline JPEG fixture so a cross-wired fixture (or a
-# decoder falling back to the baseline path) cannot silently pass.
-
-JPP_BW_BASE, JPP_BW_MOD = 3, 2  # blocks across = 3 + doc_id % 2
-JPP_BH_BASE, JPP_BH_MOD = 2, 3  # blocks down   = 2 + doc_id % 3
-
-
-def _jpeg_prog_block_value(doc_id, bx, by):
-    """Shared block-luma rule, mirrored textually in the oracle."""
-    return (doc_id * 41 + bx * 19 + by * 23) % 256
-
-
-def _synthesize_jpeg_progressive_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
+def _jpeg_progressive_payload(d: int) -> bytes:
+    """Progressive (SOF2) grayscale JPEG: four-scan script (DC first
+    and AC first at Al=1, DC refine, AC refine), flat progressive AC
+    Huffman table in DHT (r11; real crawls are majority
+    progressive)."""
     from kafkatoclickhouse_spark.operators.jpeg import (
         encode_jpeg_gray_progressive,
     )
 
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            bw = JPP_BW_BASE + d % JPP_BW_MOD
-            bh = JPP_BH_BASE + d % JPP_BH_MOD
-            by, bx = np.mgrid[0:bh, 0:bw]
-            blocks = _jpeg_prog_block_value(d, bx, by)
-            img = np.kron(
-                blocks, np.ones((8, 8), dtype=np.int64)
-            ).astype(np.uint8)
-            payloads.append(encode_jpeg_gray_progressive(img))
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
-
-
-def synthesize_jpeg_progressive_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a REAL progressive (SOF2) grayscale
-    JPEG per document — four-scan script (DC first/AC first at Al=1,
-    DC refine, AC refine), flat progressive AC Huffman table in DHT.
-    Map-only, like the other synthesizers."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_jpeg_progressive_batches, schema="doc_id long, payload binary"
+    return encode_jpeg_gray_progressive(
+        _block_gray(JPEG_BLOCKS["jpeg_progressive"], d)
     )
 
 
 @query(
     "multimodal_decode_jpeg_progressive_stats",
-    oracle=f"""
-    WITH dims AS (
-      SELECT doc_id,
-             {JPP_BW_BASE} + doc_id % {JPP_BW_MOD} AS bw,
-             {JPP_BH_BASE} + doc_id % {JPP_BH_MOD} AS bh
-      FROM documents
-    ),
-    blk AS (
-      SELECT doc_id, bw, bh, unnest(range(bw * bh)) AS i FROM dims
-    ),
-    v AS (
-      SELECT doc_id, bw, bh,
-             (doc_id * 41 + (i % bw) * 19 + (i // bw) * 23) % 256 AS val
-      FROM blk
-    )
-    SELECT doc_id,
-           CAST(MAX(bw) * 8 AS INTEGER) AS width,
-           CAST(MAX(bh) * 8 AS INTEGER) AS height,
-           3 AS channels,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_r,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_g,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_b
-    FROM v GROUP BY doc_id
-    """,
+    oracle=_sql_block_stats(JPEG_BLOCKS["jpeg_progressive"]),
 )
 def multimodal_decode_jpeg_progressive_stats(
     spark: SparkSession, sf_dir: str
@@ -889,103 +962,26 @@ def multimodal_decode_jpeg_progressive_stats(
     dequant/iDCT tail — and report exact per-channel pixel sums.
     Every progressive kernel is load-bearing for the hash match."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_jpeg_progressive_batches)
+    return decode_stats_fused(docs, _jpeg_progressive_payload)
 
 
-# --- 4:2:0 chroma-subsampled JPEG fixture + oracled decode (r13) ------
-#
-# Real-world color JPEGs are overwhelmingly 4:2:0; until r13 those
-# streams took the PIL-fallback route (VERDICT r12 #2). The codec now
-# decodes subsampled BASELINE natively (MCU interleave at mixed
-# sampling factors + nearest chroma upsample, operators/jpeg.py),
-# certified here under the carve-out's color extension: GRAY-VALUED
-# tiles in a REAL 3-component 4:2:0 stream have Y block-constant
-# (exact DC-only luma) and chroma constant 128 (exactly zero
-# coefficients), so the full interleaved decode — 4 Y blocks + Cb +
-# Cr per MCU, per-component DC prediction chains, chroma upsample,
-# color transform — is bit-exact and the oracle replays the
-# closed-form block rule. Lossy color content is bounded in
-# tests/test_jpeg.py (16×16 color tiles decode within ±1).
-
-J420_BW_BASE, J420_BW_MOD = 3, 3  # luma blocks across = 3 + d % 3
-J420_BH_BASE, J420_BH_MOD = 3, 2  # luma blocks down   = 3 + d % 2
-
-
-def _jpeg420_block_value(doc_id, bx, by):
-    """Shared block-luma rule, mirrored textually in the oracle —
-    distinct constants from the other JPEG fixtures so a cross-wired
-    fixture (or a decoder ignoring the sampled path) cannot pass."""
-    return (doc_id * 37 + bx * 13 + by * 11) % 256
-
-
-def _synthesize_jpeg420_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
+def _jpeg420_payload(d: int) -> bytes:
+    """Baseline 4:2:0 color JPEG (r13; real color JPEGs are
+    overwhelmingly 4:2:0): luma 2×2 and chroma 1×1 sampling,
+    MCU-interleaved entropy stream, chroma Huffman tables, box-average
+    chroma downsample."""
     from kafkatoclickhouse_spark.operators.jpeg import (
         encode_jpeg_rgb_subsampled,
     )
 
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            bw = J420_BW_BASE + d % J420_BW_MOD
-            bh = J420_BH_BASE + d % J420_BH_MOD
-            by, bx = np.mgrid[0:bh, 0:bw]
-            blocks = _jpeg420_block_value(d, bx, by)
-            gray = np.kron(
-                blocks, np.ones((8, 8), dtype=np.int64)
-            ).astype(np.uint8)
-            img = np.stack([gray, gray, gray], axis=-1)
-            payloads.append(
-                encode_jpeg_rgb_subsampled(img, (2, 2))
-            )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
-
-
-def synthesize_jpeg420_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a REAL baseline 4:2:0 color JPEG per
-    document — three components at mixed sampling factors (luma 2×2,
-    chroma 1×1), MCU-interleaved entropy stream, chroma Huffman
-    tables, box-average chroma downsample. Dims are deliberately NOT
-    MCU-aligned for every doc (odd luma block counts), so the
-    encoder's edge-replicate pad and the decoder's component crop
-    are load-bearing. Map-only, like the other synthesizers."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_jpeg420_batches, schema="doc_id long, payload binary"
+    return encode_jpeg_rgb_subsampled(
+        _block_gray_rgb(JPEG_BLOCKS["jpeg420"], d), (2, 2)
     )
 
 
 @query(
     "multimodal_decode_jpeg420_stats",
-    oracle=f"""
-    WITH dims AS (
-      SELECT doc_id,
-             {J420_BW_BASE} + doc_id % {J420_BW_MOD} AS bw,
-             {J420_BH_BASE} + doc_id % {J420_BH_MOD} AS bh
-      FROM documents
-    ),
-    blk AS (
-      SELECT doc_id, bw, bh, unnest(range(bw * bh)) AS i FROM dims
-    ),
-    v AS (
-      SELECT doc_id, bw, bh,
-             (doc_id * 37 + (i % bw) * 13 + (i // bw) * 11) % 256 AS val
-      FROM blk
-    )
-    SELECT doc_id,
-           CAST(MAX(bw) * 8 AS INTEGER) AS width,
-           CAST(MAX(bh) * 8 AS INTEGER) AS height,
-           3 AS channels,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_r,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_g,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_b
-    FROM v GROUP BY doc_id
-    """,
+    oracle=_sql_block_stats(JPEG_BLOCKS["jpeg420"]),
 )
 def multimodal_decode_jpeg420_stats(
     spark: SparkSession, sf_dir: str
@@ -1004,99 +1000,26 @@ def multimodal_decode_jpeg420_stats(
     before the synth+decode map stage (input-layout guard — a no-op
     on real multi-split inputs)."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_jpeg420_batches)
+    return decode_stats_fused(docs, _jpeg420_payload)
 
 
-# --- progressive 4:2:0 JPEG fixture + oracled decode (r14) ------------
-#
-# VERDICT r13 #5: large web progressive JPEGs are typically ALSO
-# 4:2:0 — the intersection, not the union, is what a crawl actually
-# contains. Both kernels existed separately since r13 (4:2:0 MCU
-# interleave; 4-kernel Annex G progressive); r14 composes them:
-# interleaved DC scans walk the MCU grid over MCU-padded component
-# grids (pad blocks decoded and discarded), non-interleaved AC scans
-# walk each component's TRUE grid. Certified under the same
-# exactness carve-out as the baseline 4:2:0 query: gray-valued
-# block-constant tiles keep chroma flat (DC-only) at any sampling,
-# so decode is bit-exact and the oracle is closed-form.
-
-J420P_BW_BASE, J420P_BW_MOD = 2, 3  # luma blocks across = 2 + d % 3
-J420P_BH_BASE, J420P_BH_MOD = 2, 2  # luma blocks down   = 2 + d % 2
-
-
-def _jpeg420p_block_value(doc_id, bx, by):
-    """Shared block-luma rule, mirrored textually in the oracle —
-    distinct constants from every other JPEG fixture."""
-    return (doc_id * 47 + bx * 19 + by * 23) % 256
-
-
-def _synthesize_jpeg420_progressive_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
+def _jpeg420_progressive_payload(d: int) -> bytes:
+    """Progressive (SOF2) 4:2:0 color JPEG (r14; large web progressive
+    JPEGs are typically also 4:2:0): interleaved DC scans walk the MCU
+    grid over MCU-padded component grids, non-interleaved AC scans
+    walk each component's TRUE grid."""
     from kafkatoclickhouse_spark.operators.jpeg import (
         encode_jpeg_rgb_progressive_subsampled,
     )
 
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            bw = J420P_BW_BASE + d % J420P_BW_MOD
-            bh = J420P_BH_BASE + d % J420P_BH_MOD
-            by, bx = np.mgrid[0:bh, 0:bw]
-            blocks = _jpeg420p_block_value(d, bx, by)
-            gray = np.kron(
-                blocks, np.ones((8, 8), dtype=np.int64)
-            ).astype(np.uint8)
-            img = np.stack([gray, gray, gray], axis=-1)
-            payloads.append(
-                encode_jpeg_rgb_progressive_subsampled(img, (2, 2))
-            )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
-
-
-def synthesize_jpeg420_progressive_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a REAL progressive (SOF2) 4:2:0 color
-    JPEG per document — mixed sampling factors AND a 4-kernel
-    Annex G scan script (DC first interleaved over MCUs, AC first
-    per component, DC refine, AC refine). Odd luma block counts make
-    the MCU pad blocks and the true-grid AC walk load-bearing.
-    Map-only, like the other synthesizers."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_jpeg420_progressive_batches, schema="doc_id long, payload binary"
+    return encode_jpeg_rgb_progressive_subsampled(
+        _block_gray_rgb(JPEG_BLOCKS["jpeg420_progressive"], d), (2, 2)
     )
 
 
 @query(
     "multimodal_decode_jpeg420_progressive_stats",
-    oracle=f"""
-    WITH dims AS (
-      SELECT doc_id,
-             {J420P_BW_BASE} + doc_id % {J420P_BW_MOD} AS bw,
-             {J420P_BH_BASE} + doc_id % {J420P_BH_MOD} AS bh
-      FROM documents
-    ),
-    blk AS (
-      SELECT doc_id, bw, bh, unnest(range(bw * bh)) AS i FROM dims
-    ),
-    v AS (
-      SELECT doc_id, bw, bh,
-             (doc_id * 47 + (i % bw) * 19 + (i // bw) * 23) % 256 AS val
-      FROM blk
-    )
-    SELECT doc_id,
-           CAST(MAX(bw) * 8 AS INTEGER) AS width,
-           CAST(MAX(bh) * 8 AS INTEGER) AS height,
-           3 AS channels,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_r,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_g,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_b
-    FROM v GROUP BY doc_id
-    """,
+    oracle=_sql_block_stats(JPEG_BLOCKS["jpeg420_progressive"]),
 )
 def multimodal_decode_jpeg420_progressive_stats(
     spark: SparkSession, sf_dir: str
@@ -1111,92 +1034,25 @@ def multimodal_decode_jpeg420_progressive_stats(
     fan-out guard as the baseline 4:2:0 query (the per-doc codec
     loop is the expensive part, not the scan)."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_jpeg420_progressive_batches)
+    return decode_stats_fused(docs, _jpeg420_progressive_payload)
 
 
-# --- restart-interval JPEG fixture + oracled decode (r13) -------------
-#
-# Camera and libjpeg output commonly carries DRI/RSTn restart markers
-# (error-resilience framing); until r13 those streams were rejected
-# to the PIL fallback. The codec now decodes restart intervals for
-# sequential frames (segment split at RSTn on raw bytes — safe
-# because true 0xFF data bytes are always stuffed — byte re-align +
-# DC-predictor reset per segment, T.81 F.2.1.3.1). Certified under
-# the same carve-out as baseline: block-constant tiles decode
-# bit-exactly across MANY restart segments (interval 1..4 MCUs), so
-# the predictor resets and segment boundaries are load-bearing.
-
-JRS_BW_BASE, JRS_BW_MOD = 2, 4  # blocks across = 2 + doc_id % 4
-JRS_BH_BASE, JRS_BH_MOD = 2, 3  # blocks down   = 2 + doc_id % 3
-
-
-def _jpeg_restart_block_value(doc_id, bx, by):
-    """Shared block-luma rule, mirrored textually in the oracle."""
-    return (doc_id * 43 + bx * 21 + by * 17) % 256
-
-
-def _synthesize_jpeg_restart_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
+def _jpeg_restart_payload(d: int) -> bytes:
+    """Baseline grayscale JPEG with a DRI segment and RSTn markers
+    every 1 + doc_id % 4 MCUs (r13), so most images span several
+    restart segments and the RST index wraps past 7 on the larger
+    ones."""
     from kafkatoclickhouse_spark.operators.jpeg import encode_jpeg_gray
 
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            bw = JRS_BW_BASE + d % JRS_BW_MOD
-            bh = JRS_BH_BASE + d % JRS_BH_MOD
-            by, bx = np.mgrid[0:bh, 0:bw]
-            blocks = _jpeg_restart_block_value(d, bx, by)
-            img = np.kron(
-                blocks, np.ones((8, 8), dtype=np.int64)
-            ).astype(np.uint8)
-            payloads.append(
-                encode_jpeg_gray(img, restart_interval=1 + d % 4)
-            )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
-
-
-def synthesize_jpeg_restart_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a REAL restart-interval grayscale JPEG
-    per document — DRI segment + RSTn markers every 1 + doc_id % 4
-    MCUs (so most images span several restart segments and the RST
-    index wraps past 7 on the larger ones). Map-only."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_jpeg_restart_batches, schema="doc_id long, payload binary"
+    return encode_jpeg_gray(
+        _block_gray(JPEG_BLOCKS["jpeg_restart"], d),
+        restart_interval=1 + d % 4,
     )
 
 
 @query(
     "multimodal_decode_jpeg_restart_stats",
-    oracle=f"""
-    WITH dims AS (
-      SELECT doc_id,
-             {JRS_BW_BASE} + doc_id % {JRS_BW_MOD} AS bw,
-             {JRS_BH_BASE} + doc_id % {JRS_BH_MOD} AS bh
-      FROM documents
-    ),
-    blk AS (
-      SELECT doc_id, bw, bh, unnest(range(bw * bh)) AS i FROM dims
-    ),
-    v AS (
-      SELECT doc_id, bw, bh,
-             (doc_id * 43 + (i % bw) * 21 + (i // bw) * 17) % 256 AS val
-      FROM blk
-    )
-    SELECT doc_id,
-           CAST(MAX(bw) * 8 AS INTEGER) AS width,
-           CAST(MAX(bh) * 8 AS INTEGER) AS height,
-           3 AS channels,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_r,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_g,
-           CAST(SUM(val) * 64 AS BIGINT) AS sum_b
-    FROM v GROUP BY doc_id
-    """,
+    oracle=_sql_block_stats(JPEG_BLOCKS["jpeg_restart"]),
 )
 def multimodal_decode_jpeg_restart_stats(
     spark: SparkSession, sf_dir: str
@@ -1209,7 +1065,7 @@ def multimodal_decode_jpeg_restart_stats(
     closed-form rule, so a wrong segment boundary or a missed
     predictor reset is a hash mismatch."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_jpeg_restart_batches)
+    return decode_stats_fused(docs, _jpeg_restart_payload)
 
 
 # --- GIF fixture + oracled decode (r13 — VERDICT r12 #6) --------------
@@ -1226,59 +1082,29 @@ GIF_H_BASE, GIF_H_MOD = 4, 4  # height = 4 + doc_id % 4
 GIF_NCOL_BASE, GIF_NCOL_MOD = 4, 13  # palette = 4 + doc_id % 13
 
 
-def _synthesize_gif_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
+def _gif_payload(d: int) -> bytes:
+    """GIF: logical screen descriptor, global color table, genuine
+    variable-width LZW stream, interlacing on odd doc_ids."""
     from kafkatoclickhouse_spark.operators.gif import encode_gif
 
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w = GIF_W_BASE + d % GIF_W_MOD
-            h = GIF_H_BASE + d % GIF_H_MOD
-            ncol = GIF_NCOL_BASE + d % GIF_NCOL_MOD
-            y, x = np.mgrid[0:h, 0:w]
-            idx = ((d * 3 + x * 7 + y * 5) % ncol).astype(np.uint8)
-            i = np.arange(ncol)
-            pal = np.stack(
-                [
-                    (d * 11 + i * 31) % 256,
-                    (d * 13 + i * 37) % 256,
-                    (d * 17 + i * 41) % 256,
-                ],
-                axis=-1,
-            ).astype(np.uint8)
-            payloads.append(
-                encode_gif(
-                    idx,
-                    pal,
-                    interlace=bool(d % 2),
-                    # (d // 13) % 3: orthogonal to the coverage
-                    # fixture's doc_id % 13 class selector, so
-                    # BOTH version tags appear in every class
-                    version=(
-                        b"GIF89a"
-                        if (d // 13) % 3 == 0
-                        else b"GIF87a"
-                    ),
-                )
-            )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
-
-
-def synthesize_gif_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a REAL GIF per document — logical
-    screen descriptor, global color table, genuine variable-width
-    LZW stream, interlacing on odd doc_ids. Map-only, like the other
-    synthesizers."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_gif_batches, schema="doc_id long, payload binary"
-    )
+    w = GIF_W_BASE + d % GIF_W_MOD
+    h = GIF_H_BASE + d % GIF_H_MOD
+    ncol = GIF_NCOL_BASE + d % GIF_NCOL_MOD
+    y, x = np.mgrid[0:h, 0:w]
+    idx = ((d * 3 + x * 7 + y * 5) % ncol).astype(np.uint8)
+    i = np.arange(ncol)
+    pal = np.stack(
+        [
+            (d * 11 + i * 31) % 256,
+            (d * 13 + i * 37) % 256,
+            (d * 17 + i * 41) % 256,
+        ],
+        axis=-1,
+    ).astype(np.uint8)
+    # (d // 13) % 3 is independent of the coverage fixture's
+    # doc_id % 15 class, so BOTH version tags appear in its GIF class
+    version = b"GIF89a" if (d // 13) % 3 == 0 else b"GIF87a"
+    return encode_gif(idx, pal, interlace=bool(d % 2), version=version)
 
 
 @query(
@@ -1318,203 +1144,85 @@ def multimodal_decode_gif_stats(
     palette rules in SQL — every decoder stage is load-bearing for
     the hash match."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_gif_batches)
+    return decode_stats_fused(docs, _gif_payload)
 
 
-# --- PNG fixture + oracled decode (VERDICT r8 #2) --------------------
+# --- VP8L (lossless WebP) fixture + oracled decode (r14) --------------
 #
-# PNG is lossless, so no carve-out is needed: any closed-form pixel
-# rule round-trips bit-exactly through deflate + filtering, and the
-# oracle replays the rule in SQL without seeing a byte of PNG. The
-# dims rule keeps every image >=5 rows tall so the encoder's cycling
-# row filters (y % 5) exercise ALL five unfilter paths inside the
-# oracled query itself, not just in pytest.
+# VERDICT r13 #7: WebP was classified by magic only. operators/webp.py
+# now decodes the VP8L subset natively; the fixture turns on EVERY
+# supported decoder path at once — subtract-green transform, color
+# cache, distance-1 LZ77 runs (cells are 4px-wide horizontal bands),
+# full code-length-coded prefix tables — and VP8L is lossless, so the
+# closed-form pixel rule is exact with no carve-out needed.
 
-PNG_W_BASE, PNG_W_MOD = 7, 6  # width  = 7 + doc_id % 6
-PNG_H_BASE, PNG_H_MOD = 5, 5  # height = 5 + doc_id % 5
-
-
-def _png_pixel_exprs(doc_id, x, y):
-    """Shared pixel rule (distinct constants from the PPM/BMP rule so
-    a cross-wired fixture cannot silently pass), mirrored textually
-    in the oracle below."""
-    return (
-        (doc_id * 19 + x * 4 + y * 9) % 256,
-        (doc_id * 23 + x * 6 + y * 2) % 256,
-        (doc_id * 29 + x * 8 + y * 11) % 256,
-    )
+WEBP_W_BASE, WEBP_W_MOD = 16, 5
+WEBP_H_BASE, WEBP_H_MOD = 8, 4
+WEBP_NCELL = 6
+WEBP_CELL_W = 4
 
 
-def _synthesize_png_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
+def _webp_payload(d: int) -> bytes:
+    """VP8L lossless WebP: subtract-green, 5-bit color cache, run
+    back-references."""
+    from kafkatoclickhouse_spark.operators.webp import encode_webp
 
-    from kafkatoclickhouse_spark.operators.png import encode_png
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w = PNG_W_BASE + d % PNG_W_MOD
-            h = PNG_H_BASE + d % PNG_H_MOD
-            y, x = np.mgrid[0:h, 0:w]
-            r, g, b = _png_pixel_exprs(d, x, y)
-            raster = np.stack([r, g, b], axis=-1).astype(np.uint8)
-            payloads.append(encode_png(raster, color_type=2))
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
-
-
-def synthesize_png_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a REAL RGB PNG per document — signature,
-    CRC-framed chunks, per-row filtering across all five filter
-    types, zlib-deflated IDAT. Map-only, like the other
-    synthesizers."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_png_batches, schema="doc_id long, payload binary"
-    )
+    w = WEBP_W_BASE + d % WEBP_W_MOD
+    h = WEBP_H_BASE + d % WEBP_H_MOD
+    y, x = np.mgrid[0:h, 0:w]
+    cell = (d * 7 + (x // WEBP_CELL_W) * 3 + y * 5) % WEBP_NCELL
+    img = np.stack(
+        [
+            (d * 11 + cell * 37) % 256,
+            (d * 13 + cell * 41) % 256,
+            (d * 17 + cell * 43) % 256,
+        ],
+        axis=-1,
+    ).astype(np.uint8)
+    return encode_webp(img, subtract_green=True, cache_bits=5, lz77_runs=True)
 
 
 @query(
-    "multimodal_decode_png_stats",
+    "multimodal_decode_webp_stats",
     oracle=f"""
     WITH dims AS (
       SELECT doc_id,
-             {PNG_W_BASE} + doc_id % {PNG_W_MOD} AS w,
-             {PNG_H_BASE} + doc_id % {PNG_H_MOD} AS h
+             {WEBP_W_BASE} + doc_id % {WEBP_W_MOD} AS w,
+             {WEBP_H_BASE} + doc_id % {WEBP_H_MOD} AS h
       FROM documents
     ),
     px AS (
       SELECT doc_id, w, h, unnest(range(w * h)) AS i FROM dims
+    ),
+    c AS (
+      SELECT doc_id, w, h,
+             (doc_id * 7 + ((i % w) // {WEBP_CELL_W}) * 3
+              + (i // w) * 5) % {WEBP_NCELL} AS cell
+      FROM px
     )
     SELECT doc_id,
            CAST(MAX(w) AS INTEGER) AS width,
            CAST(MAX(h) AS INTEGER) AS height,
            3 AS channels,
-           CAST(SUM((doc_id * 19 + (i % w) * 4 + (i // w) * 9) % 256)
-                AS BIGINT) AS sum_r,
-           CAST(SUM((doc_id * 23 + (i % w) * 6 + (i // w) * 2) % 256)
-                AS BIGINT) AS sum_g,
-           CAST(SUM((doc_id * 29 + (i % w) * 8 + (i // w) * 11) % 256)
-                AS BIGINT) AS sum_b
-    FROM px GROUP BY doc_id
+           CAST(SUM((doc_id * 11 + cell * 37) % 256) AS BIGINT) AS sum_r,
+           CAST(SUM((doc_id * 13 + cell * 41) % 256) AS BIGINT) AS sum_g,
+           CAST(SUM((doc_id * 17 + cell * 43) % 256) AS BIGINT) AS sum_b
+    FROM c GROUP BY doc_id
     """,
 )
-def multimodal_decode_png_stats(
+def multimodal_decode_webp_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Synthesize an RGB PNG per document, decode it back through the
-    full chunk-walk + CRC + inflate + unfilter pipeline, and report
-    exact per-channel pixel sums. PNG is lossless, so the oracle
-    replays the closed-form pixel rule with NO carve-out — every
-    stage of the decoder (signature, chunk framing, CRC, zlib
-    inflate, all five row unfilters, RGB expansion) is load-bearing
-    for the hash match. Same mapInPandas kernel slot as PPM/BMP/JPEG;
-    a real corpus swaps the synthesizer for an object-store fetch."""
+    """Synthesize a VP8L lossless WebP per document and decode it
+    back through the full pipeline — RIFF walk, LSB bit reader,
+    code-length-coded canonical prefix tables, color-cache
+    hits/inserts, distance-1 back-references through the plain-
+    distance escape, inverse subtract-green — and report exact
+    per-channel pixel sums. Lossless means the oracle replays the
+    cell rule with no carve-out: ANY decoder bug is a hash
+    mismatch."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_png_batches)
-
-
-# --- Adam7 interlaced PNG fixture + oracled decode (r11) --------------
-#
-# Interlaced PNGs were the larger half of the r10 'fallback' residual
-# (real crawls carry them; the pure decoder used to reject them). The
-# codec now decodes Adam7 natively (operators/png.py), and this query
-# certifies it the same way the sequential query does: lossless
-# format, closed-form pixel rule, oracle never sees a byte. Distinct
-# rule constants AND distinct dims from the sequential PNG fixture so
-# a cross-wired fixture (or a decoder that ignores the interlace flag
-# and mis-places pixels) cannot silently pass — pixel POSITION enters
-# the rule, so Adam7's scatter layout is load-bearing for the hash.
-# Dims keep w>=6, h>=5 so all seven passes are non-empty.
-
-PNGI_W_BASE, PNGI_W_MOD = 6, 7  # width  = 6 + doc_id % 7
-PNGI_H_BASE, PNGI_H_MOD = 5, 6  # height = 5 + doc_id % 6
-
-
-def _png_interlaced_pixel_exprs(doc_id, x, y):
-    """Shared pixel rule for the Adam7 fixture, mirrored textually in
-    the oracle below."""
-    return (
-        (doc_id * 13 + x * 7 + y * 3) % 256,
-        (doc_id * 31 + x * 5 + y * 17) % 256,
-        (doc_id * 37 + x * 2 + y * 13) % 256,
-    )
-
-
-def _synthesize_png_interlaced_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from kafkatoclickhouse_spark.operators.png import encode_png
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w = PNGI_W_BASE + d % PNGI_W_MOD
-            h = PNGI_H_BASE + d % PNGI_H_MOD
-            y, x = np.mgrid[0:h, 0:w]
-            r, g, b = _png_interlaced_pixel_exprs(d, x, y)
-            raster = np.stack([r, g, b], axis=-1).astype(np.uint8)
-            payloads.append(
-                encode_png(raster, color_type=2, interlace=True)
-            )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
-
-
-def synthesize_png_interlaced_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a REAL Adam7-interlaced RGB PNG per
-    document — seven-pass serialization, per-pass cycling row
-    filters, CRC-framed chunks. Map-only, like the other
-    synthesizers."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_png_interlaced_batches, schema="doc_id long, payload binary"
-    )
-
-
-@query(
-    "multimodal_decode_png_interlaced_stats",
-    oracle=f"""
-    WITH dims AS (
-      SELECT doc_id,
-             {PNGI_W_BASE} + doc_id % {PNGI_W_MOD} AS w,
-             {PNGI_H_BASE} + doc_id % {PNGI_H_MOD} AS h
-      FROM documents
-    ),
-    px AS (
-      SELECT doc_id, w, h, unnest(range(w * h)) AS i FROM dims
-    )
-    SELECT doc_id,
-           CAST(MAX(w) AS INTEGER) AS width,
-           CAST(MAX(h) AS INTEGER) AS height,
-           3 AS channels,
-           CAST(SUM((doc_id * 13 + (i % w) * 7 + (i // w) * 3) % 256)
-                AS BIGINT) AS sum_r,
-           CAST(SUM((doc_id * 31 + (i % w) * 5 + (i // w) * 17) % 256)
-                AS BIGINT) AS sum_g,
-           CAST(SUM((doc_id * 37 + (i % w) * 2 + (i // w) * 13) % 256)
-                AS BIGINT) AS sum_b
-    FROM px GROUP BY doc_id
-    """,
-)
-def multimodal_decode_png_interlaced_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Synthesize an Adam7-INTERLACED RGB PNG per document, decode it
-    back through the full chunk-walk + CRC + inflate + seven-pass
-    unfilter-and-scatter pipeline, and report exact per-channel pixel
-    sums. Pixel position enters the rule, so the pass lattice
-    (x0/y0/dx/dy per pass), per-pass filter restart, and the scatter
-    into the full raster are all load-bearing for the hash match.
-    Same mapInPandas kernel slot as the other decode queries."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_png_interlaced_batches)
+    return decode_stats_fused(docs, _webp_payload)
 
 
 # -- perceptual-hash image dedup --------------------------------------------
@@ -1537,8 +1245,6 @@ PH_ROWS = 4  # grid rows
 def _phash_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
     for pdf in batches:
         hashes = []
         for b in pdf["payload"]:
@@ -1566,15 +1272,12 @@ def _phash_batches(
         yield pd.DataFrame({"doc_id": pdf["doc_id"], "phash": hashes})
 
 
-@query(
-    "multimodal_phash_groups",
-    oracle=f"""
-    WITH dims AS (
-      SELECT doc_id,
-             {PPM_W_BASE} + doc_id % {PPM_W_MOD} AS w,
-             {PPM_H_BASE} + doc_id % {PPM_H_MOD} AS h
-      FROM documents
-    ),
+def _sql_phash() -> str:
+    """Oracle of ``multimodal_phash_groups``: the dHash of the PPM
+    rule's gray means, recomputed per grid cell."""
+    gray = " + ".join(_sql_rgb_channels(RGB_RULES["ppm"], "x", "y"))
+    return f"""
+    WITH {_sql_dims(RGB_RULES["ppm"])},
     px AS (
       SELECT doc_id, w, h,
              unnest(range(w * h)) % w AS x,
@@ -1583,10 +1286,7 @@ def _phash_batches(
     ),
     cells AS (
       SELECT doc_id, (y * {PH_ROWS}) // h AS cy, (x * {PH_COLS}) // w AS cx,
-             SUM(((doc_id * 7 + x * 3 + y * 5) % 256
-                  + (doc_id * 11 + x * 2 + y * 3) % 256
-                  + (doc_id * 13 + x * 5 + y * 7) % 256) // 3)
-               // COUNT(*) AS m
+             SUM(({gray}) // 3) // COUNT(*) AS m
       FROM px GROUP BY doc_id, cy, cx
     ),
     bits AS (
@@ -1602,8 +1302,10 @@ def _phash_batches(
            CAST(COUNT(*) OVER (PARTITION BY phash) AS BIGINT)
              AS group_size
     FROM bits
-    """,
-)
+    """
+
+
+@query("multimodal_phash_groups", oracle=_sql_phash())
 def multimodal_phash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate grouping by perceptual difference-hash:
     synthesize each document's PPM payload, DECODE it through the real
@@ -1618,13 +1320,8 @@ def multimodal_phash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     means use floor division so both engines compare exact integers.
     """
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-
-    # fused synth+decode+hash, one Arrow crossing (decode_stats_fused)
-    def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _phash_batches(_synthesize_ppm_batches(batches))
-
-    hashed = docs.select("doc_id").mapInPandas(
-        _fused, schema="doc_id long, phash long"
+    hashed = _fused(
+        docs, _ppm_payload, _phash_batches, "doc_id long, phash long"
     )
     from pyspark.sql import Window as W
 
@@ -1839,165 +1536,47 @@ def _classify_batches(
         )
 
 
-# --- 16-bit (deep) PNG fixture + oracled decode (VERDICT r11 #6) -----
-#
-# The last PIL-fallback image route closed: depth-16 PNGs decode
-# natively (operators/png.py — byte-level filtering at bpp = 2·ch,
-# big-endian sample parse, high-byte reduction to the uint8 RGB
-# contract). The fixture is Adam7-INTERLACED 16-bit RGB so the deep
-# path composes with the interlace path in one oracled query; the
-# pixel rule lives in 16-bit space and the oracle applies the same
-# v >> 8 reduction in closed form ((expr % 65536) // 256), so the
-# 2-byte sample parse, byte-level unfilter distance, pass scatter
-# AND the reduction rule are all load-bearing for the hash. Dims
-# keep w>=6, h>=5 so all seven Adam7 passes are non-empty and the
-# cycling row filters hit all five unfilter paths.
-
-PNG16_W_BASE, PNG16_W_MOD = 6, 5  # width  = 6 + doc_id % 5
-PNG16_H_BASE, PNG16_H_MOD = 5, 7  # height = 5 + doc_id % 7
+def _deep_jpeg_header_payload(d: int) -> bytes:
+    """A minimal 12-bit-precision JPEG header stream (SOI +
+    SOF0[precision=12] + EOI) — the coverage fixture's PIL-fallback
+    exemplar now that deep PNG decodes natively (r12). 12-bit JPEG is
+    a real format the pure codec rejects by contract (T.81 extended
+    precision), and the triage must route it 'fallback' from the SOF
+    precision byte without attempting a decode."""
+    w, h = 8 + d % 8, 8 + d % 4
+    sof = struct.pack(">HHBHHB", 0xFFC0, 11, 12, h, w, 1) + bytes([1, 0x11, 0])
+    return b"\xff\xd8" + sof + b"\xff\xd9"
 
 
-def _png16_pixel_exprs(doc_id, x, y):
-    """Shared 16-BIT pixel rule (constants distinct from every 8-bit
-    fixture), mirrored textually in the oracle below."""
-    return (
-        (doc_id * 101 + x * 257 + y * 509) % 65536,
-        (doc_id * 103 + x * 263 + y * 521) % 65536,
-        (doc_id * 107 + x * 269 + y * 523) % 65536,
-    )
+def _webp_header_payload(d: int) -> bytes:
+    """A minimal WebP container header (RIFF size WEBP + a stub VP8
+    chunk tag) — the coverage fixture's second PIL-fallback exemplar:
+    a real format the pure codecs never attempt (VP8 bitstream), which
+    the triage must route 'fallback' from the RIFF/WEBP magic
+    alone."""
+    body = b"WEBPVP8 " + struct.pack("<I", 4) + bytes([d % 256, 1, 2, 3])
+    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def _synthesize_png16_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from kafkatoclickhouse_spark.operators.png import encode_png
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w = PNG16_W_BASE + d % PNG16_W_MOD
-            h = PNG16_H_BASE + d % PNG16_H_MOD
-            y, x = np.mgrid[0:h, 0:w]
-            r, g, b = _png16_pixel_exprs(d, x, y)
-            raster = np.stack([r, g, b], axis=-1).astype(np.uint16)
-            payloads.append(
-                encode_png(
-                    raster, color_type=2, depth=16, interlace=True
-                )
-            )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
-
-
-def synthesize_png16_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a REAL Adam7-interlaced 16-BIT RGB PNG
-    per document — big-endian samples, per-pass cycling row filters,
-    CRC-framed chunks. Map-only, like the other synthesizers."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_png16_batches, schema="doc_id long, payload binary"
-    )
-
-
-@query(
-    "multimodal_decode_png16_stats",
-    oracle=f"""
-    WITH dims AS (
-      SELECT doc_id,
-             {PNG16_W_BASE} + doc_id % {PNG16_W_MOD} AS w,
-             {PNG16_H_BASE} + doc_id % {PNG16_H_MOD} AS h
-      FROM documents
-    ),
-    px AS (
-      SELECT doc_id, w, h, unnest(range(w * h)) AS i FROM dims
-    )
-    SELECT doc_id,
-           CAST(MAX(w) AS INTEGER) AS width,
-           CAST(MAX(h) AS INTEGER) AS height,
-           3 AS channels,
-           CAST(SUM(((doc_id * 101 + (i % w) * 257 + (i // w) * 509)
-                     % 65536) // 256) AS BIGINT) AS sum_r,
-           CAST(SUM(((doc_id * 103 + (i % w) * 263 + (i // w) * 521)
-                     % 65536) // 256) AS BIGINT) AS sum_g,
-           CAST(SUM(((doc_id * 107 + (i % w) * 269 + (i // w) * 523)
-                     % 65536) // 256) AS BIGINT) AS sum_b
-    FROM px GROUP BY doc_id
-    """,
+# Payload by coverage class (doc_id % 15); class 5 is non-image text
+# bytes, a Spark expression in ``multimodal_codec_coverage``.
+_COVERAGE_PAYLOADS = (
+    _ppm_payload,
+    _bmp_payload,
+    _jpeg_payload,
+    _png_payload,
+    _jpeg_progressive_payload,
+    None,
+    _png_interlaced_payload,
+    _png16_payload,
+    _deep_jpeg_header_payload,
+    _jpeg420_payload,
+    _gif_payload,
+    _webp_header_payload,
+    _jpeg_restart_payload,
+    _jpeg420_progressive_payload,
+    _webp_payload,
 )
-def multimodal_decode_png16_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Synthesize an Adam7-interlaced 16-BIT RGB PNG per document,
-    decode it back through the full chunk-walk + CRC + inflate +
-    byte-level unfilter (bpp=6) + big-endian u16 parse + high-byte
-    reduction + seven-pass scatter pipeline, and report exact
-    per-channel pixel sums. PNG is lossless and the >>8 reduction is
-    closed-form, so the oracle replays rule and reduction without
-    seeing a byte — every deep-path stage is load-bearing for the
-    hash match. Same mapInPandas kernel slot as the other decode
-    queries (VERDICT r11 #6 — the last PIL-fallback route, closed)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_png16_batches)
-
-
-def _synthesize_deep_jpeg_headers(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a minimal 12-bit-precision JPEG header
-    stream (SOI + SOF0[precision=12] + EOI) per document — the
-    coverage fixture's PIL-fallback exemplar now that deep PNG
-    decodes natively (r12). 12-bit JPEG is a real format the pure
-    codec rejects by contract (T.81 extended precision), and the
-    triage must route it 'fallback' from the SOF precision byte
-    without attempting a decode."""
-    import struct as _struct
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 + d % 8, 8 + d % 4
-                sof = _struct.pack(
-                    ">HHBHHB", 0xFFC0, 11, 12, h, w, 1
-                ) + bytes([1, 0x11, 0])
-                payloads.append(b"\xff\xd8" + sof + b"\xff\xd9")
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
-
-
-def _synthesize_webp_headers(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a minimal WebP container header
-    (RIFF size WEBP + a stub VP8 chunk tag) — the coverage fixture's
-    second PIL-fallback exemplar: a real format the pure codecs
-    never attempt (VP8 bitstream), which the triage must route
-    'fallback' from the RIFF/WEBP magic alone."""
-    import struct as _struct
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                body = b"WEBPVP8 " + _struct.pack("<I", 4) + bytes(
-                    [d % 256, 1, 2, 3]
-                )
-                payloads.append(
-                    b"RIFF" + _struct.pack("<I", len(body)) + body
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
 
 
 @query(
@@ -2068,36 +1647,21 @@ def multimodal_codec_coverage(
     # union legs run as independent single-split tasks concurrently;
     # the ONE fan_out below spreads the decode-heavy classify stage.
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    cls = F.col("doc_id") % 15
-    branches = [
-        synthesize_ppm_images(docs.filter(cls == 0)),
-        synthesize_bmp_images(docs.filter(cls == 1), w=32, h=16),
-        synthesize_jpeg_images(docs.filter(cls == 2)),
-        synthesize_png_images(docs.filter(cls == 3)),
-        synthesize_jpeg_progressive_images(docs.filter(cls == 4)),
-        docs.filter(cls == 5).select(
-            "doc_id",
-            F.encode(
-                F.concat(
-                    F.lit("TEXT:doc:"), F.col("doc_id").cast("string")
-                ),
-                "utf-8",
-            ).alias("payload"),
-        ),
-        synthesize_png_interlaced_images(docs.filter(cls == 6)),
-        synthesize_png16_images(docs.filter(cls == 7)),
-        _synthesize_deep_jpeg_headers(docs.filter(cls == 8)),
-        synthesize_jpeg420_images(docs.filter(cls == 9)),
-        synthesize_gif_images(docs.filter(cls == 10)),
-        _synthesize_webp_headers(docs.filter(cls == 11)),
-        synthesize_jpeg_restart_images(docs.filter(cls == 12)),
-        synthesize_jpeg420_progressive_images(docs.filter(cls == 13)),
-        synthesize_webp_images(docs.filter(cls == 14)),
-    ]
-    mixed = branches[0]
-    for b in branches[1:]:
-        mixed = mixed.unionByName(b)
-    classified = fan_out(mixed).mapInPandas(
+    text = F.encode(
+        F.concat(F.lit("TEXT:doc:"), F.col("doc_id").cast("string")),
+        "utf-8",
+    )
+    legs = []
+    for cls, payload in enumerate(_COVERAGE_PAYLOADS):
+        part = docs.filter(F.col("doc_id") % 15 == cls)
+        legs.append(
+            part.select("doc_id", text.alias("payload"))
+            if payload is None
+            else synthesize(part, payload)
+        )
+    classified = fan_out(
+        functools.reduce(DataFrame.unionByName, legs)
+    ).mapInPandas(
         _classify_batches,
         schema="doc_id long, format string, path string, detail string",
     )
@@ -2106,173 +1670,49 @@ def multimodal_codec_coverage(
     )
 
 
-# --- VP8L (lossless WebP) fixture + oracled decode (r14) --------------
-#
-# VERDICT r13 #7: WebP was classified by magic only. operators/webp.py
-# now decodes the VP8L subset natively; the fixture turns on EVERY
-# supported decoder path at once — subtract-green transform, color
-# cache, distance-1 LZ77 runs (cells are 4px-wide horizontal bands),
-# full code-length-coded prefix tables — and VP8L is lossless, so the
-# closed-form pixel rule is exact with no carve-out needed.
-
-WEBP_W_BASE, WEBP_W_MOD = 16, 5
-WEBP_H_BASE, WEBP_H_MOD = 8, 4
-WEBP_NCELL = 6
-WEBP_CELL_W = 4
-
-
-def _webp_cell_exprs(doc_id, x, y):
-    """Shared palette-cell rule, mirrored textually in the oracle."""
-    return (doc_id * 7 + (x // WEBP_CELL_W) * 3 + y * 5) % WEBP_NCELL
-
-
-def _synthesize_webp_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from kafkatoclickhouse_spark.operators.webp import encode_webp
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w = WEBP_W_BASE + d % WEBP_W_MOD
-            h = WEBP_H_BASE + d % WEBP_H_MOD
-            y, x = np.mgrid[0:h, 0:w]
-            cell = _webp_cell_exprs(d, x, y)
-            img = np.stack(
-                [
-                    (d * 11 + cell * 37) % 256,
-                    (d * 13 + cell * 41) % 256,
-                    (d * 17 + cell * 43) % 256,
-                ],
-                axis=-1,
-            ).astype(np.uint8)
-            payloads.append(
-                encode_webp(
-                    img,
-                    subtract_green=True,
-                    cache_bits=5,
-                    lz77_runs=True,
-                )
-            )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
-
-
-def synthesize_webp_images(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a REAL VP8L lossless WebP per document
-    — subtract-green + 5-bit color cache + run back-references.
-    Map-only, like the other synthesizers."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_webp_batches, schema="doc_id long, payload binary"
-    )
-
-
-@query(
-    "multimodal_decode_webp_stats",
-    oracle=f"""
-    WITH dims AS (
-      SELECT doc_id,
-             {WEBP_W_BASE} + doc_id % {WEBP_W_MOD} AS w,
-             {WEBP_H_BASE} + doc_id % {WEBP_H_MOD} AS h
-      FROM documents
-    ),
-    px AS (
-      SELECT doc_id, w, h, unnest(range(w * h)) AS i FROM dims
-    ),
-    c AS (
-      SELECT doc_id, w, h,
-             (doc_id * 7 + ((i % w) // {WEBP_CELL_W}) * 3
-              + (i // w) * 5) % {WEBP_NCELL} AS cell
-      FROM px
-    )
-    SELECT doc_id,
-           CAST(MAX(w) AS INTEGER) AS width,
-           CAST(MAX(h) AS INTEGER) AS height,
-           3 AS channels,
-           CAST(SUM((doc_id * 11 + cell * 37) % 256) AS BIGINT) AS sum_r,
-           CAST(SUM((doc_id * 13 + cell * 41) % 256) AS BIGINT) AS sum_g,
-           CAST(SUM((doc_id * 17 + cell * 43) % 256) AS BIGINT) AS sum_b
-    FROM c GROUP BY doc_id
-    """,
-)
-def multimodal_decode_webp_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Synthesize a VP8L lossless WebP per document and decode it
-    back through the full pipeline — RIFF walk, LSB bit reader,
-    code-length-coded canonical prefix tables, color-cache
-    hits/inserts, distance-1 back-references through the plain-
-    distance escape, inverse subtract-green — and report exact
-    per-channel pixel sums. Lossless means the oracle replays the
-    cell rule with no carve-out: ANY decoder bug is a hash
-    mismatch."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return decode_stats_fused(docs, _synthesize_webp_batches)
-
-
 # --- PCM WAV audio fixture + oracled decode (VERDICT r10 #8) ----------
 #
 # The audio twin of the image decode queries: synthesize a REAL
-# RIFF/WAVE byte stream per document (closed-form int16 samples,
+# RIFF/WAVE byte stream per document (closed-form integer samples,
 # interleaved channels), decode it back with the dependency-free PCM
 # parser in operators/wav.py, and run the frame-energy kernel over
 # the DECODED samples. The oracle recomputes the sample rule in SQL —
 # it never sees the binary — so the RIFF chunk walk, fmt validation,
-# little-endian int16 read and channel interleave are all
+# little-endian sample read and channel interleave are all
 # load-bearing: any parser bug is a hash mismatch.
 
 WAV_FRAMES_BASE, WAV_FRAMES_MOD, WAV_FRAMES_STEP = 200, 7, 37
 WAV_RATE_BASE, WAV_RATE_MOD, WAV_RATE_STEP = 8000, 3, 4000
-WAV_SAMPLE_MOD, WAV_SAMPLE_OFF = 4001, 2000  # samples in [-2000, 2000]
+WAV_SAMPLE_MOD = 4001  # 16-bit samples in [-2000, 2000]
 WAV_WINDOW = 64  # interleaved samples per energy window
+_WAV_SCHEMA = (
+    "doc_id long, sample_rate int, n_channels int,"
+    " frame_idx long, energy long, n_samples long"
+)
 
 
-def _wav_sample_exprs(doc_id, f, c):
-    """Shared sample rule s(doc, frame, channel), mirrored textually
-    in the oracle below."""
-    return (
-        doc_id * 31 + f * 17 + c * 23
-    ) % WAV_SAMPLE_MOD - WAV_SAMPLE_OFF
-
-
-def _synthesize_wav_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
+def _wav_pcm(d: int, bits: int, mod: int) -> bytes:
+    """PCM WAV of the sample rule ``s(f, c) = (doc_id*31 + f*17 +
+    c*23) % mod - mod // 2`` for frame f and channel c, with 1 +
+    doc_id % 2 channels and a frame count and rate varying with
+    doc_id."""
     from kafkatoclickhouse_spark.operators.wav import encode_wav
 
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            n_frames = WAV_FRAMES_BASE + (d % WAV_FRAMES_MOD) * WAV_FRAMES_STEP
-            n_ch = 1 + d % 2
-            rate = WAV_RATE_BASE + (d % WAV_RATE_MOD) * WAV_RATE_STEP
-            f, c = np.mgrid[0:n_frames, 0:n_ch]
-            samples = _wav_sample_exprs(d, f, c).astype(np.int16)
-            payloads.append(encode_wav(samples, rate))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    n_frames = WAV_FRAMES_BASE + (d % WAV_FRAMES_MOD) * WAV_FRAMES_STEP
+    rate = WAV_RATE_BASE + (d % WAV_RATE_MOD) * WAV_RATE_STEP
+    f, c = np.mgrid[0:n_frames, 0 : 1 + d % 2]
+    samples = (d * 31 + f * 17 + c * 23) % mod - mod // 2
+    return encode_wav(samples, rate, bits=bits)
 
 
-def synthesize_wav_audio(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) with a deterministic PCM-16 WAV per document
-    — real RIFF bytes with header, fmt and data chunks. Map-only; at
-    scale this stands in for the object-store fetch."""
-    return docs.select("doc_id").mapInPandas(
-        _synthesize_wav_batches, schema="doc_id long, payload binary"
-    )
+def _wav_payload(d: int) -> bytes:
+    """PCM-16 WAV: real RIFF bytes with header, fmt and data chunks."""
+    return _wav_pcm(d, 16, WAV_SAMPLE_MOD)
 
 
 def _decode_wav_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
     from kafkatoclickhouse_spark.operators.wav import decode_wav
 
     for pdf in batches:
@@ -2315,7 +1755,7 @@ def _decode_wav_batches(
       SELECT doc_id, n_channels, sample_rate, j,
              (doc_id * 31 + (j // n_channels) * 17
               + (j % n_channels) * 23) % {WAV_SAMPLE_MOD}
-               - {WAV_SAMPLE_OFF} AS smp
+               - {WAV_SAMPLE_MOD // 2} AS smp
       FROM par, LATERAL (SELECT unnest(range(n_frames * n_channels)) AS j)
     )
     SELECT doc_id,
@@ -2334,26 +1774,14 @@ def multimodal_decode_wav_stats(
     rates and frame counts), decode it back through the REAL
     RIFF/WAVE parser, and report exact windowed frame energy
     (Σ sample² per {WAV_WINDOW} interleaved samples) plus the decoded
-    header fields. Both mapInPandas stages are map-only; the oracle
+    header fields. The fused mapInPandas stage is map-only; the oracle
     replays the closed-form sample rule and never touches the binary
     — the same discipline as the PPM/BMP/JPEG/PNG decode queries.
     Round-trip across bit depths, odd-length data chunks (RIFF pad
     byte) and channel counts is Hypothesis-pinned in
     tests/test_wav.py."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-
-    # synth + decode fused into one Arrow crossing (decode_stats_fused
-    # rationale); row-identical to the chained two-stage form
-    def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _decode_wav_batches(_synthesize_wav_batches(batches))
-
-    return docs.select("doc_id").mapInPandas(
-        _fused,
-        schema=(
-            "doc_id long, sample_rate int, n_channels int,"
-            " frame_idx long, energy long, n_samples long"
-        ),
-    )
+    return _fused(docs, _wav_payload, _decode_wav_batches, _WAV_SCHEMA)
 
 
 # --- multi-depth WAV sweep (r14, VERDICT r13 #8) ----------------------
@@ -2371,30 +1799,9 @@ WAVD_BITS = (16, 8, 24, 32)  # by doc_id % 4
 WAVD_MODS = (4001, 256, 8_000_001, 65_536)
 
 
-def _synthesize_wav_depth_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    from kafkatoclickhouse_spark.operators.wav import encode_wav
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            n_frames = (
-                WAV_FRAMES_BASE + (d % WAV_FRAMES_MOD) * WAV_FRAMES_STEP
-            )
-            n_ch = 1 + d % 2
-            rate = WAV_RATE_BASE + (d % WAV_RATE_MOD) * WAV_RATE_STEP
-            bits = WAVD_BITS[d % 4]
-            mod = WAVD_MODS[d % 4]
-            f, c = np.mgrid[0:n_frames, 0:n_ch]
-            samples = (
-                (d * 31 + f * 17 + c * 23) % mod - mod // 2
-            ).astype(np.int64)
-            payloads.append(encode_wav(samples, rate, bits=bits))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+def _wav_depth_payload(d: int) -> bytes:
+    """8/16/24-bit integer or float32 WAV, depth by doc_id % 4."""
+    return _wav_pcm(d, WAVD_BITS[d % 4], WAVD_MODS[d % 4])
 
 
 @query(
@@ -2442,16 +1849,8 @@ def multimodal_decode_wav_depths_stats(
     a sign-extension bug at the 24-bit boundary or a float
     requantization drift is a hash mismatch, not a silent skew."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # fused synth+decode, one Arrow crossing (see decode_stats_fused)
-    def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _decode_wav_batches(_synthesize_wav_depth_batches(batches))
-
-    decoded = docs.select("doc_id").mapInPandas(
-        _fused,
-        schema=(
-            "doc_id long, sample_rate int, n_channels int,"
-            " frame_idx long, energy long, n_samples long"
-        ),
+    decoded = _fused(
+        docs, _wav_depth_payload, _decode_wav_batches, _WAV_SCHEMA
     )
     return decoded.select(
         "doc_id",

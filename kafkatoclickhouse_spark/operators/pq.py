@@ -726,46 +726,29 @@ def embedding_pq_index_build(
     return artifacts.build(sf_dir, "embeddings", "pq", key, write, path, force)
 
 
-_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
 def _load_index(
     spark: SparkSession, path: str
 ) -> tuple[list[tuple[int, list[int]]], list[list[tuple[int, list[int]]]], DataFrame]:
     """(coarse centroids, per-subspace codebooks, codes DataFrame)
-    from persisted artifacts. The centroid/codebook collects are
+    from persisted artifacts. The centroid/codebook tables are
     K·DIM scalars — the same literal-shipping driver sync training
-    uses; the codes table is NEVER collected. The two kilobyte-sized
-    metadata collects are memoized per (path, committed marker
-    content): a rebuild under a different key commits a different
-    marker, so it is never served from the memo; the data-sized codes
-    DataFrame is re-created per call."""
-    import json
+    uses — read with pyarrow on every call (no Spark job), so a
+    rewritten ``codebooks.parquet`` or ``coarse.parquet`` is what the
+    id checks see; the codes table is NEVER collected."""
     import os
 
-    key = (path, json.dumps(artifacts.read_meta(path), sort_keys=True))
-    if key in _INDEX_CACHE:
-        coarse, books = _INDEX_CACHE[key]
-        return coarse, books, spark.read.parquet(
-            os.path.join(path, "codes.parquet")
-        )
+    import pyarrow.parquet as papq
 
-    brows = spark.read.parquet(
-        os.path.join(path, "codebooks.parquet")
-    ).collect()
+    def rows(name: str) -> list[dict]:
+        return papq.read_table(os.path.join(path, name)).to_pylist()
+
     books: list[list[tuple[int, list[int]]]] = [[] for _ in range(PQ_M)]
-    for r in brows:
-        books[r["m"]].append((int(r["cid"]), list(r["cq"])))
+    for r in rows("codebooks.parquet"):
+        books[r["m"]].append((r["cid"], r["cq"]))
     for b in books:
         b.sort(key=lambda t: t[0])
-    coarse = sorted(
-        (int(r["cid"]), list(r["cq"]))
-        for r in spark.read.parquet(
-            os.path.join(path, "coarse.parquet")
-        ).collect()
-    )
+    coarse = sorted((r["cid"], r["cq"]) for r in rows("coarse.parquet"))
     codes = spark.read.parquet(os.path.join(path, "codes.parquet"))
-    _INDEX_CACHE[key] = (coarse, books)
     return coarse, books, codes
 
 

@@ -186,17 +186,6 @@ def text_winnow_index_build(
     )
 
 
-def winnow_fingerprints_served(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SERVE half: the persisted (doc_id, fp_hash, fp_pos) table,
-    built iff absent/stale."""
-    import os
-
-    path = text_winnow_index_build(spark, sf_dir)
-    return spark.read.parquet(os.path.join(path, "wfp.parquet"))
-
-
 def winnow_candidates_served(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -5,8 +5,8 @@ holds every entry of the build's key, otherwise marker removed first,
 artifacts written, marker written last and atomically. The tests here
 pin that each of the eleven builds states its full key (a changed
 build constant rebuilds instead of serving the old artifact), that an
-unreadable marker reads as not built, and that the PQ serve memo is
-keyed on the marker's content.
+unreadable marker reads as not built, and that the PQ serve path reads
+the index files as they are on disk.
 """
 
 from __future__ import annotations
@@ -158,10 +158,10 @@ def test_unreadable_marker_rebuilds_and_append_flip_is_atomic(
     assert not [f for f in os.listdir(path) if f.endswith(".tmp")]
 
 
-def test_pq_index_memo_keyed_on_marker_content(spark, tmp_path):
-    """``pq._load_index`` memoizes the codebook/centroid collects. A
-    rebuild under a changed key must be served fresh even when the
-    new marker has the old marker's size and mtime."""
+def test_pq_index_serves_current_files(spark, tmp_path):
+    """A rebuild under a changed key is served fresh by
+    ``pq._load_index``, even when the new marker has the old marker's
+    size and mtime."""
     path = str(tmp_path / "pq")
 
     def writer(cq: int):
@@ -195,6 +195,58 @@ def test_pq_index_memo_keyed_on_marker_content(spark, tmp_path):
     assert os.stat(_marker(path)).st_size == st.st_size
     coarse, books, _ = PQ._load_index(spark, path)
     assert coarse == [(0, [8])] and books[0] == [(0, [8])]
+
+
+def test_pq_serve_sees_codebook_rewritten_under_same_marker(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """After a served call, drop codeword 3 of book 0 from
+    ``codebooks.parquet`` (and point one ``code0`` at it) without
+    touching ``meta.json``: the next ``sim_ivfpq_serve_topk`` in the
+    same process must raise the missing-codeword error, not serve the
+    books it read before."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from kafkatoclickhouse_spark import registry
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
+    serve = registry.QUERIES["sim_ivfpq_serve_topk"]
+    assert serve(spark, sf_dir).count() > 0
+    path = PQ.embedding_pq_index_build(spark, sf_dir)
+    with open(_marker(path)) as fh:
+        marker = fh.read()
+    t0 = os.stat(_marker(path)).st_mtime_ns
+
+    def rewrite(name: str, table) -> None:
+        d = os.path.join(path, name)
+        for f in os.listdir(d):
+            os.remove(os.path.join(d, f))
+        papq.write_table(table, os.path.join(d, "part-0.parquet"))
+
+    books = papq.read_table(os.path.join(path, "codebooks.parquet"))
+    keep = [
+        not (m == 0 and c == 3)
+        for m, c in zip(books["m"].to_pylist(), books["cid"].to_pylist())
+    ]
+    assert not all(keep), "book 0 has no codeword 3"
+    rewrite("codebooks.parquet", books.filter(pa.array(keep)))
+    codes = papq.read_table(os.path.join(path, "codes.parquet"))
+    code0 = codes["code0"].to_pylist()
+    code0[0] = 3
+    i = codes.schema.get_field_index("code0")
+    rewrite(
+        "codes.parquet",
+        codes.set_column(
+            i, "code0", pa.array(code0, type=codes.schema.field(i).type)
+        ),
+    )
+
+    with open(_marker(path)) as fh:
+        assert fh.read() == marker
+    assert os.stat(_marker(path)).st_mtime_ns == t0
+    with pytest.raises(Exception, match=r"stored ids \[3\] are not in"):
+        serve(spark, sf_dir).collect()
 
 
 def test_build_protocol(tmp_path, monkeypatch):

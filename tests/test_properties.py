@@ -391,31 +391,6 @@ def test_jaccard_size_ratio_prune_is_lossless(spark, sf_dir, monkeypatch):
     assert pruned, "fixture produced no jaccard pairs — vacuous test"
 
 
-def test_minhash_fast_twin_finds_same_verified_pairs(spark, sf_dir):
-    """The xxhash64 bench twin must emit the same verified pairs as
-    the md5 family: candidates differ (different — equally valid —
-    LSH buckets) but exact-Jaccard verification at 0.8 is the same
-    filter, and at fixture similarity (~0.99 planted dups vs ~0.63
-    s-curve threshold) both families catch every true pair with
-    P(miss) < 1e-6."""
-    from kafkatoclickhouse_spark.operators.dedup import (
-        dedup_minhash_lsh_fast,
-    )
-
-    slow = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in registry.QUERIES["dedup_minhash_lsh"](
-            spark, sf_dir
-        ).collect()
-    }
-    fast = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup_minhash_lsh_fast(spark, sf_dir).collect()
-    }
-    assert slow
-    assert fast == slow
-
-
 def test_funnel_steps_are_ordered(spark, sf_dir):
     """Funnel invariants: whenever a later step exists its timestamp
     is strictly after the previous step's, and steps_completed
@@ -848,8 +823,9 @@ def test_classify_image_routes_off_fixture_variants():
     JPEG, odd-depth BMP, and header junk to 'fallback'/'undecodable'
     WITHOUT attempting (and failing) a pure decode."""
     from kafkatoclickhouse_spark.operators.multimodal import (
+        _png_payload,
         classify_image,
-        synthesize_png_images,
+        synthesize,
     )
 
     # a real synthesized PNG, then patch IHDR fields
@@ -858,8 +834,8 @@ def test_classify_image_routes_off_fixture_variants():
 
     spark = get_spark("classify_test")
     png = bytes(
-        synthesize_png_images(
-            spark.range(1).select(F.col("id").alias("doc_id"))
+        synthesize(
+            spark.range(1).select(F.col("id").alias("doc_id")), _png_payload
         ).collect()[0]["payload"]
     )
     assert classify_image(png) == ("png", "pure", "png8_noninterlaced")

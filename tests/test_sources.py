@@ -3,6 +3,8 @@ multimodal resize kernel's exact behavior."""
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -321,15 +323,34 @@ def test_ppm_synthesize_decode_roundtrip():
     """The synthesizer's bytes through the decoder reproduce the
     closed-form pixel rule exactly."""
     pdf = pd.DataFrame({"doc_id": [7]})
-    out = pd.concat(multimodal._synthesize_ppm_batches(iter([pdf])))
+    out = pd.concat(
+        multimodal._payload_batches(iter([pdf]), multimodal._ppm_payload)
+    )
     arr = multimodal.decode_image(bytes(out["payload"].iloc[0]))
     d = 7
-    w = multimodal.PPM_W_BASE + d % multimodal.PPM_W_MOD
-    h = multimodal.PPM_H_BASE + d % multimodal.PPM_H_MOD
+    rule = multimodal.RGB_RULES["ppm"]
+    w = rule.w[0] + d % rule.w[1]
+    h = rule.h[0] + d % rule.h[1]
     assert arr.shape == (h, w, 3)
     x, y = 3, 2
-    r, g, b = multimodal._ppm_pixel_exprs(d, x, y)
+    r, g, b = multimodal._rgb_channels(rule, d, x, y)
     assert arr[y, x].tolist() == [r, g, b]
+
+
+@pytest.mark.parametrize("table", ["RGB_RULES", "JPEG_BLOCKS"])
+def test_decode_fixture_rules_are_distinct(table):
+    """No two fixtures of a rule family share their rule: the
+    coefficients differ for every pair (so do (dims, coefficients)),
+    and within the RGB family no channel's coefficients recur. A
+    fixture cross-wired to another's rule, or a decoder that takes
+    another fixture's path, then cannot match that query's oracle."""
+    specs = list(getattr(multimodal, table).values())
+    assert len(specs) >= 4
+    assert len({(s.w, s.h, s.coef) for s in specs}) == len(specs)
+    assert len({s.coef for s in specs}) == len(specs)
+    if table == "RGB_RULES":
+        channels = [k for s in specs for k in s.coef]
+        assert len(set(channels)) == len(channels)
 
 
 def test_decode_roundtrip_property():
@@ -685,16 +706,18 @@ def test_bmp_fixture_larger_dims_decode_roundtrip(spark, sf_dir):
 
     w, h = 97, 64
     docs = load_table(spark, sf_dir, "documents").limit(20)
-    images = mm.synthesize_bmp_images(docs, w, h)
+    bmp = functools.partial(mm._bmp_payload, w=w, h=h)
     got = {
         r["doc_id"]: r
-        for r in mm.decode_stats(images).collect()
+        for r in mm.decode_stats_fused(docs, bmp).collect()
     }
     assert len(got) == 20
     yy, xx = np.mgrid[0:h, 0:w]
     for doc_id, r in got.items():
         assert (r["width"], r["height"], r["channels"]) == (w, h, 3)
-        er, eg, eb = mm._ppm_pixel_exprs(int(doc_id), xx, yy)
+        er, eg, eb = mm._rgb_channels(
+            mm.RGB_RULES["ppm"], int(doc_id), xx, yy
+        )
         assert r["sum_r"] == int(er.sum())
         assert r["sum_g"] == int(eg.sum())
         assert r["sum_b"] == int(eb.sum())
