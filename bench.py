@@ -324,21 +324,7 @@ def main() -> None:
     # query that errors is recorded under "errors" and skipped in the
     # remaining rounds; the JSON line is always emitted.
     errors: dict[str, str] = {}
-    # Context-accumulation probe (VERDICT r14 #7): 139 keys × 4
-    # rounds leave un-collected py4j plan references, per-query
-    # localCheckpoint RDDs and shuffle files behind; ContextCleaner
-    # only reclaims them on a JVM GC. SPARK_GRAFT_BENCH_GC=1 forces a
-    # Python+JVM GC BETWEEN rounds (never inside a timed window) so
-    # the cleaner runs; off by default — the timing protocol and
-    # round-over-round comparability are unchanged unless explicitly
-    # probed. Findings recorded in OPTIMIZATION_r15.md §9.
-    force_gc = bool(os.environ.get("SPARK_GRAFT_BENCH_GC"))
     for rnd in range(repeats + 1):  # round 0 = untimed warmup
-        if force_gc:
-            import gc as _gc
-
-            _gc.collect()
-            spark.sparkContext._jvm.System.gc()
         for name, fn in all_fns.items():
             if name in errors:
                 continue

@@ -80,6 +80,16 @@ def read_meta(path: str) -> dict:
     return meta
 
 
+def read_rows(path: str, name: str) -> list[dict]:
+    """Rows of the parquet file (or directory of part files) ``name``
+    of the artifact at ``path``, read with pyarrow: no Spark job, for
+    the bounded tables (codebooks, merge tables) a serve path ships
+    to its tasks."""
+    import pyarrow.parquet as papq
+
+    return papq.read_table(os.path.join(path, name)).to_pylist()
+
+
 def write_meta(path: str, meta: dict) -> None:
     """Replace the marker atomically: readers see the old marker or the
     new one, never a truncated file."""

@@ -1,35 +1,40 @@
-"""Greedy BPE token counting with a frozen merge table (VERDICT r9
-#5).
+"""Greedy BPE apply: one rule, one kernel, one UDF builder and one
+DuckDB generator for every merge table in the engine.
 
-Real pipelines budget BPE tokens, not whitespace words. This module
-ships a FROZEN merge table (trained once, offline and
+A merge table is a rank dict ``{(left, right): rank}``. Two kinds
+exist: the FROZEN table below (trained once, offline and
 deterministically, by ``tools/train_bpe.py`` on the sf0.01 fixture —
 the same ship-a-merges.txt distribution model as GPT-2's public
-tokenizer) and applies it with integer ranks and zero floats, so the
-count is exactly replayable in any engine:
+tokenizer) and the tables trained in-engine and persisted by
+``operators/bpetrain.py`` (character and byte alphabets). All are
+applied with integer ranks and zero floats, so counts and ids are
+exactly replayable in any engine:
 
   apply rule (one merge per step, totally ordered): among all
   adjacent symbol pairs present in the word that appear in the merge
   table, merge the one with the LOWEST rank; ties on rank break to
-  the LEFTMOST occurrence. Repeat until no pair applies. The token
-  count is the number of surviving symbols.
+  the LEFTMOST occurrence. Repeat until no pair applies. The
+  surviving symbols are the word's tokens.
 
-One-pair-per-step with the (rank, position) total order is
-deterministic and engine-neutral — in particular it is expressible
-as a DuckDB recursive CTE (``sql_bpe_word_tokens``), which is how
-the ``corpus_budget_select_bpe`` oracle replays the Spark side's
-Arrow-batched counter bit-for-bit. Counting is per UNIQUE word
-(documents repeat words heavily), weighted by occurrence.
+:func:`apply_merges` is that rule. One-pair-per-step with the (rank,
+position) total order is deterministic and engine-neutral — in
+particular it is expressible as a DuckDB recursive CTE
+(:func:`sql_bpe_word_tokens`), which is how every tokenizer oracle
+replays the Spark side's Arrow-batched UDF bit-for-bit.
 
-Scale: the merge table is a constant (broadcast with the closure);
-the Spark counter is a pandas_udf — Arrow-batched, per-word LRU
-cache, no per-row Python dispatch; at 100 TB you'd swap the frozen
-fixture table for the production tokenizer's merges file, nothing
-else changes.
+Scale: a merge table is bounded by its budget and ships with the UDF
+closure; :func:`bpe_column` is one pandas_udf per document column —
+Arrow-batched, no per-row Python dispatch — with a per-word memo, so
+each distinct word is tokenized once per worker (the frozen table's
+memo is a module-level ``lru_cache``, which lives across tasks; a
+trained table's is a plain dict in the closure, per task). At 100 TB
+you'd swap the table for the production tokenizer's merges file,
+nothing else changes.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import lru_cache
 
 import pandas as pd  # noqa: F401 — pandas_udf resolves annotations here
@@ -83,238 +88,93 @@ RANKS: dict[tuple[str, str], int] = {
     pair: rank for rank, pair in enumerate(MERGES)
 }
 
+# per-word memo bound (distinct words per worker)
+MEMO_WORDS = 65536
 
-@lru_cache(maxsize=65536)
-def word_token_count(word: str) -> int:
-    """Number of BPE symbols of ``word`` under the frozen table and
-    the one-pair-per-step (rank, leftmost) apply rule."""
-    syms = list(word)
+
+def apply_merges(
+    word: str, ranks: dict[tuple[str, str], int], sym_width: int = 1
+) -> list[str]:
+    """The surviving symbols of ``word`` under ``ranks`` and the
+    one-pair-per-step (rank, leftmost) apply rule. ``sym_width`` is
+    the initial-symbol width: 1 for character alphabets, 2 for the
+    byte mode's hex-pair alphabet."""
+    syms = [word[i : i + sym_width] for i in range(0, len(word), sym_width)]
     while True:
         best = None
         for i in range(len(syms) - 1):
-            r = RANKS.get((syms[i], syms[i + 1]))
+            r = ranks.get((syms[i], syms[i + 1]))
             if r is not None and (best is None or (r, i) < best):
                 best = (r, i)
         if best is None:
-            return len(syms)
+            return syms
         i = best[1]
         syms[i : i + 2] = [syms[i] + syms[i + 1]]
 
 
-def text_token_count(text: str | None) -> int:
-    """BPE token count of a whole text: sum over whitespace words."""
-    if text is None:
-        return 0
-    return sum(word_token_count(w) for w in text.split())
+@lru_cache(maxsize=MEMO_WORDS)
+def word_token_count(word: str) -> int:
+    """Number of BPE symbols of ``word`` under the frozen table.
+    Module-level, so the UDF ships it by reference and each worker's
+    cache survives across tasks."""
+    return len(apply_merges(word, RANKS))
+
+
+def memo_words(
+    ranks: dict[tuple[str, str], int],
+    out: Callable[[list[str]], object],
+    sym_width: int = 1,
+) -> Callable[[str], object]:
+    """``out(apply_merges(word, ranks, sym_width))`` per word, memoized
+    in a plain dict (not lru_cache — cloudpickle cannot serialize a
+    wrapped local, and the closure ships to executors inside the
+    pandas UDF). ``out`` is ``len`` for a token count or the vocab
+    lookup for token ids."""
+    memo: dict[str, object] = {}
+
+    def word_fn(word: str) -> object:
+        hit = memo.get(word)
+        if hit is None:
+            hit = out(apply_merges(word, ranks, sym_width))
+            if len(memo) < MEMO_WORDS:
+                memo[word] = hit
+        return hit
+
+    return word_fn
+
+
+def bpe_column(col, word_fn, count: bool = False):
+    """Spark Column: Arrow-batched BPE over a document column. The
+    words of a document are Python ``str.split()`` of a text, or the
+    elements of a pre-token unit array. ``word_fn`` maps one word to
+    its token count (``count``: the column is their sum, long) or to
+    its token ids (the column is their concatenation in word order,
+    array<long>). A NULL document gives 0 or []."""
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("long" if count else "array<long>")
+    def _bpe(s: pd.Series) -> pd.Series:
+        def doc(d):
+            if d is None:
+                return 0 if count else []
+            words = d.split() if isinstance(d, str) else d
+            if count:
+                return sum(word_fn(w) for w in words)
+            out: list[int] = []
+            for w in words:
+                out.extend(word_fn(w))
+            return out
+
+        out = s.map(doc)
+        return out.astype("int64") if count else out
+
+    return _bpe(col)
 
 
 def bpe_token_count_frozen(col):
-    """Spark Column: Arrow-batched BPE token count of a text column
-    under the frozen merge table."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _count(s: pd.Series) -> pd.Series:
-        return s.map(text_token_count).astype("int64")
-
-    return _count(col)
-
-
-def make_word_token_counter(ranks: dict[tuple[str, str], int]):
-    """Per-word BPE symbol counter over an ARBITRARY rank table (the
-    r12 in-engine-trained tables serve through this) — the identical
-    one-pair-per-step (rank, leftmost) apply rule as the frozen
-    :func:`word_token_count`. Memoized with a plain dict (not
-    lru_cache — cloudpickle cannot serialize a wrapped local, and
-    the closure ships to executors inside the pandas UDF)."""
-    memo: dict[str, int] = {}
-
-    def count(word: str) -> int:
-        hit = memo.get(word)
-        if hit is not None:
-            return hit
-        syms = list(word)
-        while True:
-            best = None
-            for i in range(len(syms) - 1):
-                r = ranks.get((syms[i], syms[i + 1]))
-                if r is not None and (best is None or (r, i) < best):
-                    best = (r, i)
-            if best is None:
-                if len(memo) < 65536:
-                    memo[word] = len(syms)
-                return len(syms)
-            i = best[1]
-            syms[i : i + 2] = [syms[i] + syms[i + 1]]
-
-    return count
-
-
-def bpe_token_count_for(col, ranks: dict[tuple[str, str], int]):
-    """Spark Column: Arrow-batched BPE token count of a text column
-    under an arbitrary (e.g. persisted in-engine-trained) rank
-    table. ``ranks`` is broadcast with the UDF closure — bounded by
-    the merge count, the same constant-shipping shape as the frozen
-    table."""
-    from pyspark.sql import functions as F
-
-    count = make_word_token_counter(ranks)
-
-    @F.pandas_udf("long")
-    def _count(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda t: 0 if t is None else sum(count(w) for w in t.split())
-        ).astype("int64")
-
-    return _count(col)
-
-
-def make_word_encoder(
-    ranks: dict[tuple[str, str], int],
-    vocab: dict[str, int],
-    sym_width: int = 1,
-):
-    """Per-word encoder to TOKEN IDS under an arbitrary rank table +
-    string-keyed vocabulary (first-id-wins on duplicate strings) —
-    the apply rule of :func:`make_word_token_counter`, emitting the
-    surviving symbols' ids instead of their count. Unknown symbols
-    (impossible when the vocab was built from the same corpus) map
-    to -1 so a stale artifact fails loudly in the hash, not
-    silently. Plain-dict memo (cloudpickle-safe). ``sym_width`` is
-    the initial-symbol width: 1 for character alphabets, 2 for the
-    byte mode's hex-pair alphabet."""
-    memo: dict[str, list[int]] = {}
-
-    def encode(word: str) -> list[int]:
-        hit = memo.get(word)
-        if hit is not None:
-            return hit
-        syms = (
-            list(word)
-            if sym_width == 1
-            else [
-                word[i : i + sym_width]
-                for i in range(0, len(word), sym_width)
-            ]
-        )
-        while True:
-            best = None
-            for i in range(len(syms) - 1):
-                r = ranks.get((syms[i], syms[i + 1]))
-                if r is not None and (best is None or (r, i) < best):
-                    best = (r, i)
-            if best is None:
-                break
-            i = best[1]
-            syms[i : i + 2] = [syms[i] + syms[i + 1]]
-        ids = [vocab.get(s, -1) for s in syms]
-        if len(memo) < 65536:
-            memo[word] = ids
-        return ids
-
-    return encode
-
-
-def bpe_encode_ids_for(
-    col, ranks: dict[tuple[str, str], int], vocab: dict[str, int]
-):
-    """Spark Column: Arrow-batched token-ID encoding of a text column
-    (concatenation of per-word encodings in word order; NULL/blank
-    text encodes to an empty array)."""
-    from pyspark.sql import functions as F
-
-    encode = make_word_encoder(ranks, vocab)
-
-    @F.pandas_udf("array<long>")
-    def _encode(s: pd.Series) -> pd.Series:
-        def doc(t):
-            if t is None:
-                return []
-            out: list[int] = []
-            for w in t.split():
-                out.extend(encode(w))
-            return out
-
-        return s.map(doc)
-
-    return _encode(col)
-
-
-def bpe_encode_ids_units(
-    units_col,
-    ranks: dict[tuple[str, str], int],
-    vocab: dict[str, int],
-    sym_width: int = 2,
-):
-    """Spark Column: Arrow-batched token-ID encoding of a column of
-    PRE-TOKEN UNIT arrays (e.g. hex-encoded byte units) — the byte
-    mode's twin of :func:`bpe_encode_ids_for`: per-unit encodings
-    concatenated in unit order; NULL arrays encode to []."""
-    from pyspark.sql import functions as F
-
-    encode = make_word_encoder(ranks, vocab, sym_width)
-
-    @F.pandas_udf("array<long>")
-    def _encode(s: pd.Series) -> pd.Series:
-        def doc(units):
-            if units is None:
-                return []
-            out: list[int] = []
-            for u in units:
-                out.extend(encode(u))
-            return out
-
-        return s.map(doc)
-
-    return _encode(units_col)
-
-
-def _sql_merges_literal() -> str:
-    """DuckDB list literal of 'a b' pair keys in rank order —
-    list_position() against it IS the rank (1-based; NULL = absent)."""
-    items = ", ".join(
-        "'" + (a + " " + b).replace("'", "''") + "'" for a, b in MERGES
-    )
-    return f"[{items}]"
-
-
-def sql_bpe_word_tokens(words_rel: str) -> str:
-    """DuckDB CTE chain (``winit``/``bpe``/``bpefinal``, no WITH
-    prefix; requires the query to be WITH RECURSIVE): per unique
-    ``word`` of ``words_rel``, the frozen-table BPE symbol count
-    ``ntok`` — the exact engine-side apply rule replayed with list
-    ops. Each recursion step applies ONE merge (min (rank, pos));
-    a word's final row is the one where no pair applies."""
-    merges = _sql_merges_literal()
-    # list_position: 1-based rank, and ABSENT = 0 (older DuckDBs:
-    # NULL) — `> 0` filters both encodings
-    cand = (
-        "list_filter(list_transform(range(1, len(syms)), i -> "
-        f"{{'r': list_position({merges}, syms[i] || ' ' || syms[i + 1]),"
-        " 'p': i}), x -> x.r > 0)"
-    )
-    return f"""
-    winit AS (
-      SELECT word,
-             list_transform(range(1, length(word) + 1),
-                            i -> substring(word, i, 1)) AS syms
-      FROM (SELECT DISTINCT word FROM {words_rel})
-    ),
-    bpe AS (
-      SELECT word, syms FROM winit
-      UNION ALL
-      SELECT word,
-             syms[1:best.p - 1]
-               || [syms[best.p] || syms[best.p + 1]]
-               || syms[best.p + 2:len(syms)] AS syms
-      FROM (SELECT word, syms, list_sort({cand})[1] AS best FROM bpe)
-      WHERE best IS NOT NULL
-    ),
-    bpefinal AS (
-      SELECT word, CAST(len(syms) AS BIGINT) AS ntok
-      FROM bpe
-      WHERE len({cand}) = 0
-    )"""
+    """Spark Column: per-document BPE token count of a text column
+    under the frozen table."""
+    return bpe_column(col, word_token_count, count=True)
 
 
 def sql_init_syms_expr(sym_width: int = 1, col: str = "word") -> str:
@@ -333,31 +193,48 @@ def sql_init_syms_expr(sym_width: int = 1, col: str = "word") -> str:
     )
 
 
-def sql_bpe_word_tokens_dynamic(
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("'", "''") + "'"
+
+
+def sql_bpe_word_tokens(
     words_rel: str,
-    merges_rel: str,
+    merges_rel: str | None = None,
     prefix: str = "",
     sym_width: int = 1,
 ) -> str:
-    """Like :func:`sql_bpe_word_tokens`, but the rank table comes
-    from a CTE ``{merges_rel}`` with columns (merge_rank, left_sym,
-    right_sym) — e.g. one RETRAINED by the r12 in-engine training
-    oracle — instead of the frozen literal. The rank list rides
-    through the apply recursion as a carried column (``ml``), so no
-    lambda ever needs a correlated subquery. Emits the
-    ``{prefix}winit``/``{prefix}bpe``/``{prefix}bpefinal`` CTE
-    names (prefix defaults empty — drop-in for the frozen variant's
-    downstream fragments; the byte mode passes a prefix so both
-    alphabets can coexist in one oracle). ``sym_width`` picks the
-    initial-symbol split (2 = hex-pair byte alphabet)."""
+    """DuckDB CTE chain (no WITH prefix; requires the query to be WITH
+    RECURSIVE): per unique ``word`` of ``words_rel``, the surviving
+    symbols ``syms`` (``{prefix}bpesyms``) and their count ``ntok``
+    (``{prefix}bpefinal``) — :func:`apply_merges` replayed with list
+    ops. The rank table is the CTE ``{merges_rel}`` with columns
+    (merge_rank, left_sym, right_sym), e.g. one RETRAINED by a
+    training oracle; ``None`` applies the frozen table, emitted as the
+    CTE ``{prefix}bpefrozen``. The rank list rides through the
+    recursion as a carried column (``ml``), so no lambda needs a
+    correlated subquery; each step applies ONE merge (min (rank,
+    pos)), and a word's final row is the one where no pair applies.
+    ``prefix`` namespaces the CTEs so two alphabets can coexist in one
+    oracle; ``sym_width`` picks the initial-symbol split."""
     p = prefix
+    frozen = ""
+    if merges_rel is None:
+        merges_rel = f"{p}bpefrozen"
+        rows = ", ".join(
+            f"({r}, {_sql_str(a)}, {_sql_str(b)})"
+            for r, (a, b) in enumerate(MERGES)
+        )
+        frozen = f"""
+    {merges_rel}(merge_rank, left_sym, right_sym) AS (VALUES {rows}),"""
+    # list_position: 1-based rank, and ABSENT = 0 (older DuckDBs:
+    # NULL) — `> 0` filters both encodings
     cand = (
         "list_filter(list_transform(range(1, len(syms)), i -> "
         "{'r': list_position(ml, syms[i] || ' ' || syms[i + 1]),"
         " 'p': i}), x -> x.r > 0)"
     )
     init = sql_init_syms_expr(sym_width)
-    return f"""
+    return f"""{frozen}
     {p}mlist AS MATERIALIZED (
       SELECT list(left_sym || ' ' || right_sym ORDER BY merge_rank)
                AS ml

@@ -34,8 +34,15 @@ DuckDB oracles RETRAIN the identical table from raw text (a
 recursive CTE whose per-round state is the vocabulary as a list of
 (syms, count) structs, with the non-overlapping merge expressed in
 closed form over occurrence-run parity) and apply it through the
-dynamic twin of the frozen apply machinery, so any divergence
-between the in-engine trainer and the spec is a hash mismatch.
+one apply generator (``functions/bpe.sql_bpe_word_tokens``), so any
+divergence between the in-engine trainer and the spec is a hash
+mismatch.
+
+Both trained alphabets (characters over whitespace words, bytes over
+GPT-2-style pre-token units) are rows of one table, :class:`Alphabet`,
+which drives one trainer (:func:`train_merges`), one build
+(:func:`text_bpe_index_build`) and one loader
+(:func:`load_tokenizer`).
 
 The reference has no tokenizer (its only text handling is the
 required-field check in ``MyKafkaDeserializationSchema.scala:47``);
@@ -45,6 +52,8 @@ this is [EXT] LLM-pipeline north-star surface.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +68,7 @@ from kafkatoclickhouse_spark.registry import query
 from kafkatoclickhouse_spark.tables import fan_out, load_table
 
 BPE_TRAIN_MERGES = 40  # matches the frozen table's training budget
+BPE_BYTES_MERGES = 40  # fixture training budget for the byte mode
 
 
 # ---------------------------------------------------------------------------
@@ -84,26 +94,91 @@ def _word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _apply_merge_col(a: str, b: str):
-    """Arrow-batched column: one merge applied to a syms array,
+def _byte_unit_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(hex_unit, cnt) over GPT-2-style pre-token units — the byte
+    mode's sufficient statistic (corpus-sized aggregate, unit-
+    vocabulary-sized output)."""
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    units = docs.filter(F.col("text").isNotNull()).select(
+        F.explode(textfns.pretoken_units(F.col("text"))).alias("u")
+    )
+    return (
+        units.filter(F.col("u") != "")
+        .select(
+            F.lower(F.hex(F.encode(F.col("u"), "UTF-8"))).alias("word")
+        )
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+
+
+@dataclass(frozen=True)
+class Alphabet:
+    """One trained tokenizer alphabet: what its training, build and
+    loader need.
+
+    - ``family``: the artifact family (``artifacts.build``);
+    - ``budget``: the merge budget, part of the artifact's key;
+    - ``unit_freqs``: the (word, cnt) sufficient statistic training
+      reads;
+    - ``sym_width``: the initial-symbol width of a word;
+    - ``base``: the vocab rule's base symbols, id = position. ``None``
+      means the corpus's sorted characters, persisted in
+      ``vocab.parquet`` since they depend on the corpus. Merged
+      symbols take len(base) + rank; duplicate strings keep the
+      lowest id (two merges can form the same string — ('a','bc') and
+      ('ab','c') — and token ids key by string, the same rule the
+      oracle's list_position gives for free)."""
+
+    family: str
+    budget: int
+    unit_freqs: Callable[[SparkSession, str], DataFrame]
+    sym_width: int
+    base: tuple[str, ...] | None
+
+
+# characters over whitespace words
+CHARS = Alphabet("bpe", BPE_TRAIN_MERGES, _word_freqs, 1, None)
+# bytes (as two-char lowercase hex) over pre-token units: see the
+# byte-level section below
+BYTES = Alphabet(
+    "bpe_bytes",
+    BPE_BYTES_MERGES,
+    _byte_unit_freqs,
+    2,
+    tuple(f"{i:02x}" for i in range(256)),
+)
+
+
+def _spark_init_syms(sym_width: int) -> str:
+    """Spark SQL expression splitting ``word`` into its initial
+    symbols of ``sym_width`` characters."""
+    return (
+        f"transform(sequence(1, length(word) DIV {sym_width}),"
+        f" i -> substring(word, {sym_width} * (i - 1) + 1, {sym_width}))"
+    )
+
+
+def _merge_pair(syms, a: str, b: str) -> list[str]:
+    """The training merge: (``a``, ``b``) applied to a syms list,
     left-to-right non-overlapping (tools/train_bpe.py:58's loop)."""
+    out, i, n = [], 0, len(syms)
+    while i < n:
+        if i < n - 1 and syms[i] == a and syms[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def _apply_merge_col(a: str, b: str):
+    """Arrow-batched column: :func:`_merge_pair` over a syms array."""
 
     @F.pandas_udf("array<string>")
     def _apply(s: pd.Series) -> pd.Series:
-        merged = a + b
-
-        def ap(syms):
-            out, i, n = [], 0, len(syms)
-            while i < n:
-                if i < n - 1 and syms[i] == a and syms[i + 1] == b:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            return out
-
-        return s.map(ap)
+        return s.map(lambda syms: _merge_pair(syms, a, b))
 
     return _apply
 
@@ -140,13 +215,8 @@ def _train_local(
 
     grouped: Counter = Counter()
     for w, c in freqs.items():
-        syms0 = (
-            tuple(w)
-            if sym_width == 1
-            else tuple(
-                w[i : i + sym_width]
-                for i in range(0, len(w), sym_width)
-            )
+        syms0 = tuple(
+            w[i : i + sym_width] for i in range(0, len(w), sym_width)
         )
         grouped[syms0] += int(c)
     word_syms: list[list[str]] = [list(k) for k in grouped]
@@ -159,17 +229,6 @@ def _train_local(
             p = (syms[i], syms[i + 1])
             pair_counts[p] += c
             pair_words[p].add(idx)
-
-    def apply_one(syms: list[str], a: str, b: str) -> list[str]:
-        out, i, n = [], 0, len(syms)
-        while i < n:
-            if i < n - 1 and syms[i] == a and syms[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        return out
 
     heap: list[tuple[int, tuple[str, str]]] = [
         (-c, p) for p, c in pair_counts.items()
@@ -199,7 +258,7 @@ def _train_local(
                 p = (syms[i], syms[i + 1])
                 pair_counts[p] -= c
                 touched.add(p)
-            new = apply_one(syms, a, b)
+            new = _merge_pair(syms, a, b)
             word_syms[idx] = new
             for i in range(len(new) - 1):
                 p = (new[i], new[i + 1])
@@ -233,38 +292,30 @@ BPE_LOCAL_MAX_WORDS = 4_000_000
 def train_merges(
     spark: SparkSession,
     sf_dir: str,
-    n_merges: int = BPE_TRAIN_MERGES,
+    alphabet: Alphabet = CHARS,
+    n_merges: int | None = None,
     local_max_words: int = BPE_LOCAL_MAX_WORDS,
 ) -> list[tuple[str, str]]:
-    """Greedy BPE training, in-engine. Returns the ordered merge
-    list (rank = position). Two pinned-identical strategies:
+    """Greedy BPE training of ``alphabet``, in-engine, for ``n_merges``
+    rounds (default: the alphabet's budget). Returns the ordered merge
+    list (rank = position). One corpus-sized aggregate builds the
+    (word, cnt) table; then one of two strategies runs the rounds:
 
-    - **bounded-collect** (the production-budget default): one
-      corpus-sized word-frequency aggregate, collected iff it is
-      provably under ``local_max_words`` (LIMIT n+1 — the collect is
-      bounded by construction, never by luck), then the incremental
-      local merge loop (zero Spark jobs per merge);
-    - **distributed per-round** (the any-scale fallback): per round
-      one (symbol-pair)-keyed aggregate -> one-row argmax barrier ->
-      map-side Arrow re-tokenize.
+    - **bounded-collect** (the default): the table is collected iff
+      it is provably under ``local_max_words`` (LIMIT n+1 — the
+      collect is bounded by construction, never by luck), then the
+      incremental local merge loop runs with zero Spark jobs per
+      merge;
+    - **distributed per-round** (a larger table, or
+      ``local_max_words=0``): per round one (symbol-pair)-keyed
+      aggregate -> one-row argmax barrier -> map-side Arrow
+      re-tokenize.
 
     ``tests/test_bpetrain.py`` pins both strategies merge-for-merge
     equal to each other and to ``tools/train_bpe.py`` at the fixture
     budget."""
-    return _train_from_wf(
-        spark, _word_freqs(spark, sf_dir), n_merges, local_max_words
-    )
-
-
-def _train_from_wf(
-    spark: SparkSession,
-    wf: DataFrame,
-    n_merges: int,
-    local_max_words: int,
-    sym_width: int = 1,
-) -> list[tuple[str, str]]:
-    """Strategy dispatch over any (word, cnt) sufficient statistic —
-    shared by the character and byte alphabets."""
+    wf = alphabet.unit_freqs(spark, sf_dir)
+    n_merges = alphabet.budget if n_merges is None else n_merges
     if local_max_words and local_max_words > 0:
         # Arrow-path collect (ADVICE r13): toPandas materializes the
         # bounded word table as two flat arrays — no per-row PySpark
@@ -280,35 +331,18 @@ def _train_from_wf(
                     )
                 ),
                 n_merges,
-                sym_width,
+                alphabet.sym_width,
             )
-    return _train_distributed_from(spark, wf, n_merges, sym_width)
+    return _train_distributed(spark, wf, n_merges, alphabet.sym_width)
 
 
-def train_merges_distributed(
-    spark: SparkSession, sf_dir: str, n_merges: int = BPE_TRAIN_MERGES
-) -> list[tuple[str, str]]:
-    """The distributed per-round trainer (the r12 shape): vocabulary
-    never leaves the cluster; each round costs one pair-count
-    aggregate, a ONE-ROW argmax barrier, and an Arrow re-tokenize."""
-    return _train_distributed_from(
-        spark, _word_freqs(spark, sf_dir), n_merges, 1
-    )
-
-
-def _train_distributed_from(
+def _train_distributed(
     spark: SparkSession, wf: DataFrame, n_merges: int, sym_width: int
 ) -> list[tuple[str, str]]:
-    init = (
-        "transform(sequence(1, length(word)),"
-        " i -> substring(word, i, 1))"
-        if sym_width == 1
-        else f"transform(sequence(1, length(word) DIV {sym_width}),"
-        f" i -> substring(word, {sym_width} * (i - 1) + 1,"
-        f" {sym_width}))"
-    )
+    """The distributed per-round trainer: the vocabulary never leaves
+    the cluster."""
     state = (
-        wf.select(F.expr(init).alias("syms"), "cnt")
+        wf.select(F.expr(_spark_init_syms(sym_width)).alias("syms"), "cnt")
         .localCheckpoint()
     )
     pair_expr = F.expr(
@@ -343,101 +377,133 @@ def _train_distributed_from(
 # ---------------------------------------------------------------------------
 
 
+def _merges_df(spark: SparkSession, merges: list[tuple[str, str]]):
+    return spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(merges)],
+        "merge_rank long, left_sym string, right_sym string",
+    )
+
+
+def _vocab(
+    base: list[str] | tuple[str, ...], merges: list[tuple[str, str]]
+) -> dict[str, int]:
+    """symbol → token id under the :class:`Alphabet` vocab rule."""
+    vocab: dict[str, int] = {}
+    for i, sym in enumerate([*base, *(a + b for a, b in merges)]):
+        vocab.setdefault(sym, i)
+    return vocab
+
+
 def text_bpe_index_build(
     spark: SparkSession,
     sf_dir: str,
+    alphabet: Alphabet = CHARS,
     path: str | None = None,
     force: bool = False,
 ) -> str:
-    """BUILD half: train once and persist —
+    """BUILD half: train ``alphabet`` once and persist —
 
       - ``merges.parquet`` (merge_rank, left_sym, right_sym): the
         bounded table every serve path broadcasts;
-      - ``vocab.parquet`` (symbol, id): characters, then merged
-        symbols.
+      - ``vocab.parquet`` (symbol, id), when the alphabet's base
+        symbols come from the corpus: characters (sorted — a bounded
+        barrier like the argmax: distinct chars, not distinct words),
+        then merged symbols. A constant alphabet's vocabulary is
+        fully determined by the merge table.
 
     The key is the source fingerprint plus the merge budget; the
     marker also carries the trained merge and vocabulary counts
     (commit protocol: ``artifacts``)."""
 
     def write(path: str) -> dict:
-        merges = train_merges(spark, sf_dir)
-        spark.createDataFrame(
-            [(i, a, b) for i, (a, b) in enumerate(merges)],
-            "merge_rank long, left_sym string, right_sym string",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "merges.parquet")
-        )
-        # vocabulary: corpus characters (sorted, ids 0..C-1 — a
-        # bounded barrier like the argmax: distinct chars, not
-        # distinct words) then merged symbols at C + rank; duplicate
-        # STRINGS keep the lowest id (two merges can form the same
-        # string — ('a','bc') and ('ab','c') — and token ids key by
-        # string, first-id-wins, the same rule the oracle's
-        # list_position gives for free).
+        merges = train_merges(spark, sf_dir, alphabet)
+        _merges_df(spark, merges).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(path, "merges.parquet"))
+        if alphabet.base is not None:
+            return {
+                "n_merges": len(merges),
+                "alphabet": "bytes-hex",
+                "vocab_size": len(alphabet.base) + len(merges),
+            }
         chars = sorted(
             r["c"]
-            for r in _word_freqs(spark, sf_dir)
+            for r in alphabet.unit_freqs(spark, sf_dir)
             .select(
                 F.explode(
-                    F.expr(
-                        "transform(sequence(1, length(word)),"
-                        " i -> substring(word, i, 1))"
-                    )
+                    F.expr(_spark_init_syms(alphabet.sym_width))
                 ).alias("c")
             )
             .distinct()
             .collect()
         )
-        vocab_rows: list[tuple[str, int]] = []
-        seen: set[str] = set()
-        for i, sym in enumerate(chars + [a + b for a, b in merges]):
-            if sym not in seen:
-                seen.add(sym)
-                vocab_rows.append((sym, i))
+        vocab = _vocab(chars, merges)
         spark.createDataFrame(
-            vocab_rows, "symbol string, id long"
+            list(vocab.items()), "symbol string, id long"
         ).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(path, "vocab.parquet")
         )
         return {
             "n_merges": len(merges),
             "n_chars": len(chars),
-            "vocab_size": len(vocab_rows),
+            "vocab_size": len(vocab),
         }
 
-    key = {"budget": BPE_TRAIN_MERGES}
-    return artifacts.build(sf_dir, "documents", "bpe", key, write, path, force)
-
-
-def load_trained_ranks(
-    spark: SparkSession, sf_dir: str
-) -> dict[tuple[str, str], int]:
-    """Rank dict from the persisted artifact (building it first if
-    absent/stale) — bounded by the merge budget, broadcastable."""
-    path = text_bpe_index_build(spark, sf_dir)
-    rows = (
-        spark.read.parquet(os.path.join(path, "merges.parquet"))
-        .orderBy("merge_rank")
-        .collect()
+    key = {"budget": alphabet.budget}
+    return artifacts.build(
+        sf_dir, "documents", alphabet.family, key, write, path, force
     )
-    return {
-        (r["left_sym"], r["right_sym"]): int(r["merge_rank"])
-        for r in rows
-    }
 
 
-def load_trained_vocab(
-    spark: SparkSession, sf_dir: str
-) -> dict[str, int]:
-    """symbol → token-id dict from the persisted artifact — chars
-    first (sorted), merged symbols at n_chars + rank, duplicate
-    strings first-id-wins (deduped at build time)."""
-    path = text_bpe_index_build(spark, sf_dir)
-    rows = spark.read.parquet(
-        os.path.join(path, "vocab.parquet")
-    ).collect()
-    return {r["symbol"]: int(r["id"]) for r in rows}
+def load_tokenizer(
+    spark: SparkSession, sf_dir: str, alphabet: Alphabet = CHARS
+) -> tuple[dict[tuple[str, str], int], dict[str, int]]:
+    """(rank dict, symbol → token-id dict) of ``alphabet``'s persisted
+    tokenizer, building it first if absent or stale. Both tables are
+    bounded by the merge budget and read with pyarrow (no Spark job).
+    Raises ``ValueError`` naming the artifact when the left, right or
+    merged string of a merge has no token id: encoding would then
+    give a plausible wrong answer."""
+    path = text_bpe_index_build(spark, sf_dir, alphabet)
+    rows = sorted(
+        artifacts.read_rows(path, "merges.parquet"),
+        key=lambda r: r["merge_rank"],
+    )
+    merges = [(r["left_sym"], r["right_sym"]) for r in rows]
+    ranks = {m: r["merge_rank"] for m, r in zip(merges, rows)}
+    if alphabet.base is None:
+        vocab = {
+            r["symbol"]: r["id"]
+            for r in artifacts.read_rows(path, "vocab.parquet")
+        }
+    else:
+        vocab = _vocab(alphabet.base, merges)
+    missing = sorted(
+        {s for a, b in merges for s in (a, b, a + b)} - set(vocab)
+    )
+    if missing:
+        raise ValueError(
+            f"{path}: merge symbols {missing[:5]} have no token id in"
+            " the vocabulary"
+        )
+    return ranks, vocab
+
+
+def _trained_column(
+    spark: SparkSession,
+    sf_dir: str,
+    col,
+    alphabet: Alphabet = CHARS,
+    count: bool = False,
+):
+    """Arrow-batched BPE of the document column ``col`` (text, or the
+    byte alphabet's hex unit arrays) under ``alphabet``'s persisted
+    tokenizer: per-document token count (``count``) or token ids."""
+    ranks, vocab = load_tokenizer(spark, sf_dir, alphabet)
+    out = len if count else (lambda syms: [vocab[s] for s in syms])
+    return bpefns.bpe_column(
+        col, bpefns.memo_words(ranks, out, alphabet.sym_width), count
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -567,11 +633,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-overlapping re-tokenize is load-bearing for the hash match.
     A pin in tests/test_bpetrain.py additionally equates the result
     with ``tools/train_bpe.py``'s offline trainer on the fixture."""
-    merges = train_merges(spark, sf_dir)
-    return spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "merge_rank long, left_sym string, right_sym string",
-    )
+    return _merges_df(spark, train_merges(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -589,7 +651,7 @@ _SQL_TRAINED_NTOK = f"""
     wc AS (
       SELECT doc_id, word, COUNT(*) AS cnt FROM wd GROUP BY doc_id, word
     ),
-    {bpefns.sql_bpe_word_tokens_dynamic("wc", "bpetrained")},
+    {bpefns.sql_bpe_word_tokens("wc", "bpetrained")},
     ntok AS (
       SELECT doc_id,
              CAST(SUM(cnt) AS BIGINT) AS n_words,
@@ -630,10 +692,9 @@ def corpus_pack_chunks_bpe_trained(
     byte-shared with ``corpus_pack_chunks`` (``_pack_chunks``)."""
     from kafkatoclickhouse_spark.operators.text import _pack_chunks
 
-    ranks = load_trained_ranks(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     return _pack_chunks(
-        docs, bpefns.bpe_token_count_for(F.col("text"), ranks)
+        docs, _trained_column(spark, sf_dir, F.col("text"), count=True)
     )
 
 
@@ -674,12 +735,12 @@ def corpus_tokenizer_fertility_trained(
     replays."""
     from kafkatoclickhouse_spark.functions import textfns
 
-    ranks = load_trained_ranks(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
+    n_bpe = _trained_column(spark, sf_dir, F.col("text"), count=True)
     per_doc = docs.select(
         "source",
         textfns.ws_token_count(F.col("text")).alias("n_words"),
-        bpefns.bpe_token_count_for(F.col("text"), ranks).alias("n_bpe"),
+        n_bpe.alias("n_bpe"),
         F.length("text").cast("long").alias("n_chars"),
     )
     return per_doc.groupBy("source").agg(
@@ -710,7 +771,7 @@ def corpus_tokenizer_fertility_trained(
 # document = concatenating its words' surviving-symbol ids in word
 # order. The oracle retrains the table, rebuilds the identical
 # vocabulary, re-derives every word's surviving-symbol SEQUENCE via
-# the dynamic apply machinery, and assembles documents positionally
+# the one apply generator, and assembles documents positionally
 # — so the id assignment, the apply order, and the concatenation
 # order are all load-bearing for the hash.
 
@@ -752,7 +813,7 @@ _SQL_ENCODE_IDS = f"""
              unnest(string_split_regex(trim(text), '\\s+')) AS word
       FROM documents WHERE LENGTH(trim(text)) > 0
     ),
-    {bpefns.sql_bpe_word_tokens_dynamic("wd", "bpetrained")},
+    {bpefns.sql_bpe_word_tokens("wd", "bpetrained")},
     {_SQL_VOCAB_CTES},
     {_SQL_WPOS_CTE},
     wenc AS (
@@ -784,10 +845,8 @@ def text_bpe_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow map stage — per-word memoized apply, ids concatenated in
     word order; NULL/blank text encodes to []. The oracle retrains,
     rebuilds the vocabulary, and re-derives every id positionally."""
-    ranks = load_trained_ranks(spark, sf_dir)
-    vocab = load_trained_vocab(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    ids = bpefns.bpe_encode_ids_for(F.col("text"), ranks, vocab)
+    ids = _trained_column(spark, sf_dir, F.col("text"))
     return docs.select(
         "doc_id",
         F.size(ids).cast("long").alias("n_tokens"),
@@ -875,10 +934,8 @@ def _placed_encodings(
         exclusive_bucket_prefix,
     )
 
-    ranks = load_trained_ranks(spark, sf_dir)
-    vocab = load_trained_vocab(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    ids = bpefns.bpe_encode_ids_for(F.col("text"), ranks, vocab)
+    ids = _trained_column(spark, sf_dir, F.col("text"))
     enc = docs.select(
         "doc_id",
         ids.alias("token_ids"),
@@ -1253,11 +1310,9 @@ def corpus_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 1-row total-token aggregate, a sequence explode, and a
     broadcast cross join with the 3-row epoch table; nothing
     single-partition ever carries corpus-sized data."""
-    ranks = load_trained_ranks(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    total = docs.select(
-        bpefns.bpe_token_count_for(F.col("text"), ranks).alias("n")
-    ).agg(F.sum("n").cast("long").alias("t"))
+    n = _trained_column(spark, sf_dir, F.col("text"), count=True)
+    total = docs.select(n.alias("n")).agg(F.sum("n").cast("long").alias("t"))
     chunks = total.filter(F.col("t") > 0).select(
         F.explode(
             F.sequence(
@@ -1284,7 +1339,7 @@ def corpus_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ffd_trained_oracle() -> str:
     """Oracle for the trained-tokenizer FFD variant — retrain CTEs +
-    dynamic-rank count replay feeding the shared group-local FFD
+    trained-rank count replay feeding the shared group-local FFD
     recursion (text._sql_ffd_assign). Assembled in a function because
     it composes fragments from BOTH modules."""
     from kafkatoclickhouse_spark.operators.text import _sql_ffd_assign
@@ -1299,7 +1354,7 @@ def _ffd_trained_oracle() -> str:
     wc AS (
       SELECT doc_id, word, COUNT(*) AS cnt FROM wd GROUP BY doc_id, word
     ),
-    {bpefns.sql_bpe_word_tokens_dynamic("wc", "bpetrained")},
+    {bpefns.sql_bpe_word_tokens("wc", "bpetrained")},
     ntok AS (
       SELECT doc_id, CAST(SUM(cnt * f.ntok) AS BIGINT) AS n_toks
       FROM wc JOIN bpefinal f USING (word) GROUP BY doc_id
@@ -1323,18 +1378,13 @@ def corpus_pack_bestfit_trained(
     retraining its tokenizer: counts, bins and the oversize flag all
     move with the new table. Packing algebra is byte-shared
     (`text._ffd_pack`); the oracle retrains, replays the counts via
-    the dynamic apply machinery, and replays the identical greedy
-    bin sequence."""
+    the apply generator, and replays the identical greedy bin
+    sequence."""
     from kafkatoclickhouse_spark.operators.text import _ffd_pack
 
-    ranks = load_trained_ranks(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    tokens = docs.select(
-        "doc_id",
-        bpefns.bpe_token_count_for(F.col("text"), ranks).alias(
-            "n_toks"
-        ),
-    )
+    n_toks = _trained_column(spark, sf_dir, F.col("text"), count=True)
+    tokens = docs.select("doc_id", n_toks.alias("n_toks"))
     return _ffd_pack(tokens)
 
 
@@ -1353,8 +1403,6 @@ def corpus_pack_bestfit_trained(
 # recursive retrainer) works unchanged with sym_width=2, and token
 # id = byte value for the 256 base symbols, 256 + rank for merges.
 
-BPE_BYTES_MERGES = 40  # fixture training budget for the byte mode
-
 _SQL_BYTE_VOCAB = f"""
       SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
         SELECT lower(hex(encode(u))) AS word FROM (
@@ -1365,41 +1413,6 @@ _SQL_BYTE_VOCAB = f"""
       GROUP BY word"""
 
 
-def _byte_unit_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(hex_unit, cnt) over GPT-2-style pre-token units — the byte
-    mode's sufficient statistic (corpus-sized aggregate, unit-
-    vocabulary-sized output)."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    units = docs.filter(F.col("text").isNotNull()).select(
-        F.explode(textfns.pretoken_units(F.col("text"))).alias("u")
-    )
-    return (
-        units.filter(F.col("u") != "")
-        .select(
-            F.lower(F.hex(F.encode(F.col("u"), "UTF-8"))).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-
-
-def train_merges_bytes(
-    spark: SparkSession,
-    sf_dir: str,
-    n_merges: int = BPE_BYTES_MERGES,
-    local_max_words: int = BPE_LOCAL_MAX_WORDS,
-) -> list[tuple[str, str]]:
-    """Byte-level greedy BPE training — the same two pinned
-    strategies as :func:`train_merges`, over hex-pair symbols."""
-    return _train_from_wf(
-        spark,
-        _byte_unit_freqs(spark, sf_dir),
-        n_merges,
-        local_max_words,
-        sym_width=2,
-    )
-
-
 def sql_bpe_bytes_train_ctes(n_merges: int = BPE_BYTES_MERGES) -> str:
     """Byte-alphabet retrainer CTEs, namespaced ``b*`` so they can
     coexist with the char-mode chain in one oracle; ends in
@@ -1407,65 +1420,6 @@ def sql_bpe_bytes_train_ctes(n_merges: int = BPE_BYTES_MERGES) -> str:
     return sql_bpe_train_ctes(
         n_merges, prefix="b", vocab_sql=_SQL_BYTE_VOCAB, sym_width=2
     )
-
-
-def text_bpe_bytes_index_build(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str | None = None,
-    force: bool = False,
-) -> str:
-    """BUILD half of the byte-mode artifact: ``merges.parquet``. No
-    vocab parquet — the byte alphabet is the CONSTANT 0..255, so the
-    vocabulary is fully determined by the merge table (id = byte
-    value | 256 + rank). The key is the source fingerprint plus the
-    merge budget (commit protocol: ``artifacts``)."""
-
-    def write(path: str) -> dict:
-        merges = train_merges_bytes(spark, sf_dir)
-        spark.createDataFrame(
-            [(i, a, b) for i, (a, b) in enumerate(merges)],
-            "merge_rank long, left_sym string, right_sym string",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "merges.parquet")
-        )
-        return {
-            "n_merges": len(merges),
-            "alphabet": "bytes-hex",
-            "vocab_size": 256 + len(merges),
-        }
-
-    key = {"budget": BPE_BYTES_MERGES}
-    return artifacts.build(
-        sf_dir, "documents", "bpe_bytes", key, write, path, force
-    )
-
-
-def load_trained_ranks_bytes(
-    spark: SparkSession, sf_dir: str
-) -> dict[tuple[str, str], int]:
-    path = text_bpe_bytes_index_build(spark, sf_dir)
-    rows = (
-        spark.read.parquet(os.path.join(path, "merges.parquet"))
-        .orderBy("merge_rank")
-        .collect()
-    )
-    return {
-        (r["left_sym"], r["right_sym"]): int(r["merge_rank"])
-        for r in rows
-    }
-
-
-def load_trained_vocab_bytes(
-    spark: SparkSession, sf_dir: str
-) -> dict[str, int]:
-    """hex symbol → token id: bytes take id = value (0..255), merged
-    symbols 256 + rank, duplicate strings first-id-wins."""
-    ranks = load_trained_ranks_bytes(spark, sf_dir)
-    vocab = {f"{i:02x}": i for i in range(256)}
-    for (a, b), r in sorted(ranks.items(), key=lambda kv: kv[1]):
-        vocab.setdefault(a + b, 256 + r)
-    return vocab
 
 
 @query(
@@ -1484,11 +1438,7 @@ def text_bpe_train_bytes(
     recursive CTEs (the same argmax/tie/apply spec, hex symbols), so
     the pre-tokenizer regex, the UTF-8 byte mapping, and every merge
     decision are all load-bearing for the hash."""
-    merges = train_merges_bytes(spark, sf_dir)
-    return spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "merge_rank long, left_sym string, right_sym string",
-    )
+    return _merges_df(spark, train_merges(spark, sf_dir, BYTES))
 
 
 _SQL_FROZEN_CHAR_APPLY = bpefns.sql_bpe_word_tokens("wc")
@@ -1507,8 +1457,8 @@ _SQL_BYTES_ENCODE = f"""
                        {textfns.PRETOKEN_RE_SQL}) AS us
               FROM documents WHERE text IS NOT NULL)) u
     ),
-    {bpefns.sql_bpe_word_tokens_dynamic("bwd", "bbpetrained",
-                                        prefix="b", sym_width=2)},
+    {bpefns.sql_bpe_word_tokens("bwd", "bbpetrained",
+                                prefix="b", sym_width=2)},
     bvl AS MATERIALIZED (
       SELECT list(sym ORDER BY id) AS vl FROM (
         SELECT printf('%02x', i) AS sym, CAST(i AS BIGINT) AS id
@@ -1551,13 +1501,11 @@ def text_bpe_encode_ids_bytes(
     symbol decomposes to known bytes — and the pin test asserts all
     ids ≥ 0. The oracle retrains and re-derives every id through
     the byte-parameterized apply recursion."""
-    ranks = load_trained_ranks_bytes(spark, sf_dir)
-    vocab = load_trained_vocab_bytes(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     units = textfns.hex_units(
         textfns.pretoken_units(F.col("text"))
     )
-    ids = bpefns.bpe_encode_ids_units(units, ranks, vocab, 2)
+    ids = _trained_column(spark, sf_dir, units, BYTES)
     return docs.select(
         "doc_id",
         F.greatest(F.size(ids), F.lit(0))
@@ -1629,13 +1577,9 @@ def corpus_tokenizer_fertility_bytes(
     that source. One Arrow encode pass + one JVM count pass + one
     source-keyed aggregate; the oracle retrains the byte table AND
     replays the frozen char apply."""
-    ranks = load_trained_ranks_bytes(spark, sf_dir)
-    vocab = load_trained_vocab_bytes(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     units = textfns.pretoken_units(F.col("text"))
-    ids = bpefns.bpe_encode_ids_units(
-        textfns.hex_units(units), ranks, vocab, 2
-    )
+    ids = _trained_column(spark, sf_dir, textfns.hex_units(units), BYTES)
     per_doc = docs.select(
         "source",
         F.greatest(F.size(units), F.lit(0))

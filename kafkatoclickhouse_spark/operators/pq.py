@@ -737,17 +737,15 @@ def _load_index(
     id checks see; the codes table is NEVER collected."""
     import os
 
-    import pyarrow.parquet as papq
-
-    def rows(name: str) -> list[dict]:
-        return papq.read_table(os.path.join(path, name)).to_pylist()
-
     books: list[list[tuple[int, list[int]]]] = [[] for _ in range(PQ_M)]
-    for r in rows("codebooks.parquet"):
+    for r in artifacts.read_rows(path, "codebooks.parquet"):
         books[r["m"]].append((r["cid"], r["cq"]))
     for b in books:
         b.sort(key=lambda t: t[0])
-    coarse = sorted((r["cid"], r["cq"]) for r in rows("coarse.parquet"))
+    coarse = sorted(
+        (r["cid"], r["cq"])
+        for r in artifacts.read_rows(path, "coarse.parquet")
+    )
     codes = spark.read.parquet(os.path.join(path, "codes.parquet"))
     return coarse, books, codes
 

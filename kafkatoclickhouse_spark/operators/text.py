@@ -1526,66 +1526,73 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (broadcast), doc lengths join on the doc_id partitioning the
     per-doc agg reuses, corpus stats ride in as a broadcast scalar,
     and the final top-k is a TakeOrdered — no global sort."""
-    from pyspark.sql import Window as W
-
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("token"),
-    ).filter(F.col("token") != "")
     # r14: localCheckpoint the (doc, token, tf) sufficient statistic —
-    # the qterm-selection collect below is its own execution, so
-    # without it the tokenize + explode + tf aggregate ran once for
-    # the collect AND again for the scoring job (exchange reuse never
-    # spans executions). Narrow rows, recomputed per invocation.
-    tf = (
-        toks.groupBy("doc_id", "token")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint()
-    )
+    # the qterm-selection collect in the scoring kernel is its own
+    # execution, so without it the tokenize + explode + tf aggregate
+    # ran once for the collect AND again for the scoring job (exchange
+    # reuse never spans executions). Narrow rows, recomputed per
+    # invocation.
+    tf = _bm25_tf(spark, sf_dir).localCheckpoint()
     dlen = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dlen.agg(
         F.count("*").cast("long").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
     )
     dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
-    # query-term selection is a TakeOrdered + a QK-row driver sync
-    # (the blessed scalar-literal pattern, NOT a global window over
-    # the vocabulary): the ranked terms re-enter the plan as a tiny
-    # broadcast table.
+    return _bm25_score_topk(
+        spark, tf, dfreq, dlen, F.col("n_docs"), F.col("avgdl"), stats
+    )
+
+
+def _bm25_score_topk(
+    spark: SparkSession,
+    tf: DataFrame,
+    dfreq: DataFrame,
+    dlen: DataFrame,
+    n_docs: Column,
+    avgdl: Column,
+    stats: DataFrame | None = None,
+) -> DataFrame:
+    """The BM25 scoring kernel both ``text_bm25_topk`` and its serve
+    twin run over (doc_id, token, tf), (token, df) and (doc_id, dl):
+    query-term selection, per-(doc, term) weights, the fixed-order
+    score chain and the top-k with its rank. ``n_docs``/``avgdl`` are
+    the corpus scalars: columns of the one-row ``stats`` table, which
+    is crossed in as a broadcast, or literals.
+
+    Query-term selection is a TakeOrdered + a QK-row driver sync (the
+    blessed scalar-literal pattern, NOT a global window over the
+    vocabulary): the ranked terms re-enter the plan as a tiny
+    broadcast table."""
+    from pyspark.sql import Window as W
+
     qrows = dfreq.orderBy(F.desc("df"), "token").limit(BM25_QK).collect()
     qterms = spark.createDataFrame(
-        [
-            (r["token"], int(r["df"]), i + 1)
-            for i, r in enumerate(qrows)
-        ],
+        [(r["token"], int(r["df"]), i + 1) for i, r in enumerate(qrows)],
         schema="token string, df long, trank int",
     )
-    w = (
-        tf.join(F.broadcast(qterms), "token")
-        .join(dlen, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            "trank",
-            (
-                F.log(
-                    F.lit(1.0)
-                    + (
-                        F.col("n_docs") - F.col("df") + F.lit(0.5)
-                    ) / (F.col("df") + F.lit(0.5))
+    w = tf.join(F.broadcast(qterms), "token").join(dlen, "doc_id")
+    if stats is not None:
+        w = w.crossJoin(F.broadcast(stats))
+    w = w.select(
+        "doc_id",
+        "trank",
+        (
+            F.log(
+                F.lit(1.0)
+                + (n_docs - F.col("df") + F.lit(0.5))
+                / (F.col("df") + F.lit(0.5))
+            )
+            * (F.col("tf") * F.lit(BM25_K1 + 1.0))
+            / (
+                F.col("tf")
+                + F.lit(BM25_K1)
+                * (
+                    F.lit(1.0 - BM25_B)
+                    + F.lit(BM25_B) * F.col("dl") / avgdl
                 )
-                * (F.col("tf") * F.lit(BM25_K1 + 1.0))
-                / (
-                    F.col("tf")
-                    + F.lit(BM25_K1)
-                    * (
-                        F.lit(1.0 - BM25_B)
-                        + F.lit(BM25_B) * F.col("dl") / F.col("avgdl")
-                    )
-                )
-            ).alias("w"),
-        )
+            )
+        ).alias("w"),
     )
     parts = [
         F.coalesce(
@@ -1707,64 +1714,18 @@ def text_bm25_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB lifecycle."""
     import os
 
-    from pyspark.sql import Window as W
-
     path = text_bm25_index_build(spark, sf_dir)
     meta = artifacts.read_meta(path)
     postings = spark.read.parquet(os.path.join(path, "postings.parquet"))
     dfreq = spark.read.parquet(os.path.join(path, "dfreq.parquet"))
     dlen = spark.read.parquet(os.path.join(path, "dlen.parquet"))
-    n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
-
-    qrows = dfreq.orderBy(F.desc("df"), "token").limit(BM25_QK).collect()
-    qterms = spark.createDataFrame(
-        [(r["token"], int(r["df"]), i + 1) for i, r in enumerate(qrows)],
-        schema="token string, df long, trank int",
-    )
-    w = (
-        postings.join(F.broadcast(qterms), "token")
-        .join(dlen, "doc_id")
-        .select(
-            "doc_id",
-            "trank",
-            (
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(n_docs) - F.col("df") + F.lit(0.5))
-                    / (F.col("df") + F.lit(0.5))
-                )
-                * (F.col("tf") * F.lit(BM25_K1 + 1.0))
-                / (
-                    F.col("tf")
-                    + F.lit(BM25_K1)
-                    * (
-                        F.lit(1.0 - BM25_B)
-                        + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl)
-                    )
-                )
-            ).alias("w"),
-        )
-    )
-    parts = [
-        F.coalesce(
-            F.max(F.when(F.col("trank") == k, F.col("w"))), F.lit(0.0)
-        )
-        for k in range(1, BM25_QK + 1)
-    ]
-    score = parts[0]
-    for p in parts[1:]:
-        score = score + p
-    sc = w.groupBy("doc_id").agg(
-        score.alias("score"),
-        F.count("*").cast("long").alias("n_terms_hit"),
-    )
-    top = sc.orderBy(F.desc("score"), "doc_id").limit(BM25_TOP)
-    rw = W.orderBy(F.desc("score"), "doc_id")
-    return top.withColumn("rank", F.row_number().over(rw)).select(
-        "doc_id",
-        F.round("score", 6).alias("bm25"),
-        "n_terms_hit",
-        F.col("rank").cast("int").alias("rank"),
+    return _bm25_score_topk(
+        spark,
+        postings,
+        dfreq,
+        dlen,
+        F.lit(int(meta["n_docs"])),
+        F.lit(float(meta["avgdl"])),
     )
 
 

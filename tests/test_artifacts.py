@@ -11,6 +11,7 @@ the index files as they are on disk.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
@@ -65,9 +66,11 @@ FAMILIES = {
         bpetrain.text_bpe_index_build, "budget", (bpetrain, "train_merges")
     ),
     "bpe_bytes": (
-        bpetrain.text_bpe_bytes_index_build,
+        functools.partial(
+            bpetrain.text_bpe_index_build, alphabet=bpetrain.BYTES
+        ),
         "budget",
-        (bpetrain, "train_merges_bytes"),
+        (bpetrain, "train_merges"),
     ),
     "packds": (
         bpetrain.corpus_pack_index_build,

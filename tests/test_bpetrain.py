@@ -54,17 +54,15 @@ def test_bounded_collect_and_distributed_trainers_identical(
     """The two training strategies are pinned merge-for-merge equal
     at the fixture budget (VERDICT r12 #2): the bounded-collect path
     (the production-budget default — zero Spark jobs per merge) and
-    the distributed per-round loop (the any-scale fallback) must
-    produce the identical table, and the default `train_merges`
-    must actually take the collect path on the fixture (its word
-    table is tiny)."""
-    dist = bpetrain.train_merges_distributed(spark, sf_dir)
+    the distributed per-round loop (the any-scale fallback, forced
+    with ``local_max_words=0``) must produce the identical table,
+    and the default `train_merges` must actually take the collect
+    path on the fixture (its word table is tiny)."""
     default = bpetrain.train_merges(spark, sf_dir)
-    # force the fallback through the dispatcher too
     forced_dist = bpetrain.train_merges(
         spark, sf_dir, local_max_words=0
     )
-    assert default == dist == forced_dist
+    assert default == forced_dist
     assert len(default) > 0
 
 
@@ -164,7 +162,7 @@ def test_trained_apply_rule_matches_offline_retokenize():
 
     merges = train_bpe.train(Counter(vocab), 10)
     ranks = {m: i for i, m in enumerate(merges)}
-    count = bpefns.make_word_token_counter(ranks)
+    count = bpefns.memo_words(ranks, len)
 
     def offline(word: str) -> int:
         syms = list(word)
@@ -539,7 +537,7 @@ def test_bytes_trainer_matches_chr_mapped_offline(spark, sf_dir):
     mapped = Counter({to_chr(w): c for w, c in wf.items()})
     off = train_bpe.train(mapped, bpetrain.BPE_BYTES_MERGES)
     want = [(to_hex(a), to_hex(b)) for a, b in off]
-    got = bpetrain.train_merges_bytes(spark, sf_dir)
+    got = bpetrain.train_merges(spark, sf_dir, bpetrain.BYTES)
     assert got == want and got
 
 
@@ -563,7 +561,7 @@ def test_bytes_encode_roundtrip_no_oov(spark, sf_dir):
     pre-tokenization covers every character)."""
     from kafkatoclickhouse_spark.tables import load_table
 
-    vocab = bpetrain.load_trained_vocab_bytes(spark, sf_dir)
+    _, vocab = bpetrain.load_tokenizer(spark, sf_dir, bpetrain.BYTES)
     inv = {i: s for s, i in vocab.items()}
     assert len(inv) == len(vocab)  # ids unique (first-id-wins)
     texts = {
@@ -589,7 +587,7 @@ def test_bytes_serve_reads_only_persisted_merges(spark, sf_dir):
     change the serve output (every token collapses to one byte) —
     proving the encode path reads the persisted table, not a silent
     retrain."""
-    path = bpetrain.text_bpe_bytes_index_build(spark, sf_dir)
+    path = bpetrain.text_bpe_index_build(spark, sf_dir, bpetrain.BYTES)
     before = {
         r["doc_id"]: r["n_tokens"]
         for r in bpetrain.text_bpe_encode_ids_bytes(
@@ -611,7 +609,89 @@ def test_bytes_serve_reads_only_persisted_merges(spark, sf_dir):
         assert after != before
         assert all(after[d] >= before[d] for d in before)
     finally:
-        bpetrain.text_bpe_bytes_index_build(spark, sf_dir, force=True)
+        bpetrain.text_bpe_index_build(
+            spark, sf_dir, bpetrain.BYTES, force=True
+        )
+
+
+def _group_jobs(spark, group: str, fn) -> list[int]:
+    """Spark job ids that ``fn()`` started, read from the status
+    tracker once the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_encode_build_reads_tokenizer_without_spark_jobs(
+    spark, sf_dir
+):
+    """Once both tokenizer artifacts exist, loading them runs no Spark
+    job (pyarrow reads the kilobyte merge and vocab tables), so
+    building `text_bpe_encode_ids` and `text_bpe_encode_ids_bytes`
+    adds no job beyond the one schema-inference job that reading the
+    documents table costs."""
+    from kafkatoclickhouse_spark.tables import load_table
+
+    for alphabet in (bpetrain.CHARS, bpetrain.BYTES):
+        bpetrain.text_bpe_index_build(spark, sf_dir, alphabet)
+        assert _group_jobs(
+            spark,
+            f"load-{alphabet.family}",
+            lambda: bpetrain.load_tokenizer(spark, sf_dir, alphabet),
+        ) == []
+    docs_jobs = len(
+        _group_jobs(
+            spark,
+            "load-documents",
+            lambda: load_table(spark, sf_dir, "documents"),
+        )
+    )
+    for build in (
+        bpetrain.text_bpe_encode_ids,
+        bpetrain.text_bpe_encode_ids_bytes,
+    ):
+        jobs = _group_jobs(
+            spark, build.__name__, lambda: build(spark, sf_dir)
+        )
+        assert len(jobs) == docs_jobs, build.__name__
+
+
+def test_loader_rejects_merge_missing_from_vocab(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Drop one merged symbol's row from `vocab.parquet` under an
+    unchanged `meta.json`: the next `text_bpe_encode_ids` must raise,
+    naming the artifact, instead of encoding that symbol as a
+    plausible wrong id."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
+    path = bpetrain.text_bpe_index_build(spark, sf_dir)
+    ranks, _ = bpetrain.load_tokenizer(spark, sf_dir)
+    a, b = max(ranks, key=ranks.get)
+    marker = os.path.join(path, "meta.json")
+    before = (open(marker).read(), os.stat(marker).st_mtime_ns)
+
+    vocab_dir = os.path.join(path, "vocab.parquet")
+    table = papq.read_table(vocab_dir)
+    shutil.rmtree(vocab_dir)
+    os.makedirs(vocab_dir)
+    papq.write_table(
+        table.filter(pc.not_equal(table["symbol"], a + b)),
+        os.path.join(vocab_dir, "part-00000.parquet"),
+    )
+    assert (open(marker).read(), os.stat(marker).st_mtime_ns) == before
+    with pytest.raises(ValueError, match="no token id") as err:
+        bpetrain.text_bpe_encode_ids(spark, sf_dir).collect()
+    assert path in str(err.value) and repr(a + b) in str(err.value)
 
 
 def test_pack_dataset_artifact_lifecycle_and_poison(spark, sf_dir):

@@ -1043,7 +1043,11 @@ def test_pack_chunks_bpe_boundary_correctness(spark, sf_dir):
     checked = 0
     for doc_id, n, _, _ in rows:
         if doc_id in texts:
-            assert n == bpe.text_token_count(texts[doc_id]), doc_id
+            want = sum(
+                bpe.word_token_count(w)
+                for w in (texts[doc_id] or "").split()
+            )
+            assert n == want, doc_id
             checked += 1
     assert checked >= 10
 
