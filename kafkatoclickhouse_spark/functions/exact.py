@@ -90,7 +90,7 @@ def sql_dsum_dec(expr: str) -> str:
 # raises DATATYPE_MISMATCH at analysis time — exactly the r5 regression,
 # where a fixture re-encode (parquet timestamp[us] → Spark NTZ) killed
 # every operator doing microsecond arithmetic. The scan layer now
-# normalizes (tables.normalize_timestamps), but time math should not
+# reads time columns as TIMESTAMP (tables.SCHEMAS), but time math should not
 # depend on every input having passed through one loader: ``micros``
 # is the single door for wall-time → integer-microseconds conversion
 # and is total over both timestamp types.

@@ -851,11 +851,6 @@ def text_bpe_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(ids).cast("long").alias("n_tokens"),
         ids.alias("token_ids"),
-    ).withColumn(
-        "n_tokens",
-        F.when(F.col("n_tokens") < 0, F.lit(0)).otherwise(
-            F.col("n_tokens")
-        ),
     )
 
 
@@ -1508,12 +1503,8 @@ def text_bpe_encode_ids_bytes(
     ids = _trained_column(spark, sf_dir, units, BYTES)
     return docs.select(
         "doc_id",
-        F.greatest(F.size(ids), F.lit(0))
-        .cast("long")
-        .alias("n_tokens"),
-        F.coalesce(ids, F.array().cast("array<long>")).alias(
-            "token_ids"
-        ),
+        F.size(ids).cast("long").alias("n_tokens"),
+        ids.alias("token_ids"),
     )
 
 
@@ -1585,9 +1576,7 @@ def corpus_tokenizer_fertility_bytes(
         F.greatest(F.size(units), F.lit(0))
         .cast("long")
         .alias("n_units"),
-        F.greatest(F.size(ids), F.lit(0))
-        .cast("long")
-        .alias("n_byte"),
+        F.size(ids).cast("long").alias("n_byte"),
         bpefns.bpe_token_count_frozen(F.col("text")).alias("n_char"),
         F.coalesce(F.octet_length("text"), F.lit(0))
         .cast("long")

@@ -5,7 +5,10 @@ env switch (``KafakToClickhouse.scala:19-40``); we centralize engine
 knobs here instead. Defaults are chosen for the local[] test harness
 but every setting is the one you'd also want on a 1000-executor
 cluster (AQE, skew-join handling, partition coalescing, Arrow
-exchange for pandas UDFs).
+exchange for pandas UDFs). The whole-stage codegen class cache is
+sized to hold one pass over every registered query, and a class name
+does not carry its run-dependent stage number, so a warm re-run of a
+query compiles no new class.
 """
 
 from __future__ import annotations
@@ -52,6 +55,22 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # Spark's compiled-class LRU holds 100 entries by default. A
+        # pass of the six perfbench batch_queries compiles 101 distinct
+        # classes, and one pass over all 243 registry queries at sf0.001
+        # compiles 1,959. At 100 entries every warm pass evicted and
+        # re-ran Janino (and then the JIT) on most of them: a second
+        # registry pass compiled 2,374 classes at 100 and 19 at 4096.
+        # 4096 holds a whole registry pass for about 16 MB of metaspace.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # AQE numbers whole-stage codegen stages in the order their query
+        # stages run, which varies from run to run, and the stage id is
+        # part of the generated class name: the same stage got a new
+        # class, and was compiled again, whenever its number moved
+        # (text_bm25_topk among others). Without the id an unchanged
+        # stage always finds its class in the cache; a second registry
+        # pass compiled 63 classes with the id and 19 without.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # read INT64 TIMESTAMP(NANOS) parquet columns as raw ns longs
         # (Spark has no ns timestamp); tables.load_table converts to
         # microsecond timestamps, matching DuckDB's ns→µs truncation.

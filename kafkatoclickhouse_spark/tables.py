@@ -5,31 +5,71 @@ lineitem events documents embeddings. ``load_tables`` returns a dict
 of DataFrames and registers each as a temp view so operators can be
 written in either DataFrame or SQL form (same Catalyst plan).
 
-Scans are plain ``spark.read.parquet`` — column pruning and predicate
-pushdown reach the parquet reader automatically, which is the 100 TB
-behavior we want (verify with ``plans.assert_pushed_filters``).
+Scans are ``spark.read.schema(pin).parquet`` under the fixture schema
+pinned in ``SCHEMAS``, so building a query runs no parquet-footer
+inference job. Column pruning and predicate pushdown still reach the
+parquet reader, which is the 100 TB behavior we want (verify with
+``plans.assert_pushed_filters``). A column a file lacks reads as NULL.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# The fixture schemas (TESTDATA.md), pinned so that a scan runs no
+# schema-inference job. Time columns are TIMESTAMP: Spark reads µs
+# TIMESTAMP_NTZ and µs UTC parquet timestamps (and INT96) straight to a
+# session-zone TIMESTAMP with the same micros. tests/test_tables.py
+# checks every pin against Spark's inference on each fixture scale.
+SCHEMAS: dict[str, tuple[tuple[str, str], ...]] = {
+    "region": (("r_regionkey", "int"), ("r_name", "string")),
+    "nation": (
+        ("n_nationkey", "int"), ("n_name", "string"), ("n_regionkey", "int"),
+    ),
+    "customer": (
+        ("c_custkey", "bigint"), ("c_name", "string"),
+        ("c_nationkey", "int"), ("c_acctbal", "double"),
+        ("c_mktsegment", "string"),
+    ),
+    "supplier": (
+        ("s_suppkey", "bigint"), ("s_name", "string"),
+        ("s_nationkey", "int"), ("s_acctbal", "double"),
+    ),
+    "part": (
+        ("p_partkey", "bigint"), ("p_name", "string"), ("p_brand", "string"),
+        ("p_type", "string"), ("p_size", "int"), ("p_retailprice", "double"),
+    ),
+    "orders": (
+        ("o_orderkey", "bigint"), ("o_custkey", "bigint"),
+        ("o_orderstatus", "string"), ("o_totalprice", "double"),
+        ("o_orderdate", "timestamp"), ("o_orderpriority", "string"),
+    ),
+    "lineitem": (
+        ("l_orderkey", "bigint"), ("l_partkey", "bigint"),
+        ("l_suppkey", "bigint"), ("l_linenumber", "int"),
+        ("l_quantity", "double"), ("l_extendedprice", "double"),
+        ("l_discount", "double"), ("l_tax", "double"),
+        ("l_returnflag", "string"), ("l_linestatus", "string"),
+        ("l_shipdate", "timestamp"),
+    ),
+    "events": (
+        ("event_id", "bigint"), ("ts", "timestamp"), ("user_id", "bigint"),
+        ("event_type", "string"), ("value", "double"), ("props", "string"),
+    ),
+    "documents": (
+        ("doc_id", "bigint"), ("text", "string"), ("lang", "string"),
+        ("source", "string"), ("n_chars", "bigint"),
+    ),
+    "embeddings": (
+        ("vec_id", "bigint"), ("embedding", "array<float>"), ("label", "int"),
+    ),
+}
+
+TABLES = tuple(SCHEMAS)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -52,61 +92,70 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple:
         return (path, 0, 0)
 
 
-# columns stored as parquet TIMESTAMP(NANOS) — Spark reads them as raw
-# ns longs (spark.sql.legacy.parquet.nanosAsLong); converted here to
-# µs timestamps (floor division, same truncation DuckDB applies).
+# time columns that a fixture generation stored as parquet
+# TIMESTAMP(NANOS). Spark has no ns timestamp and cannot read one
+# through a ``timestamp`` pin; such a column is read as raw ns longs
+# (spark.sql.legacy.parquet.nanosAsLong) and converted to µs
+# timestamps (floor division, same truncation DuckDB applies).
 NANOS_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
-def normalize_timestamps(df: DataFrame) -> DataFrame:
-    """Normalize every TIMESTAMP_NTZ column to session-zone TIMESTAMP.
+def _nanos_columns(path: str, cols: tuple[str, ...]) -> set[str]:
+    """Those of ``cols`` that the parquet footer at ``path`` types
+    INT64 TIMESTAMP(NANOS). Read driver-side with pyarrow: no Spark
+    job. The physical type is checked too, because pyarrow also
+    reports INT96 (Spark's default timestamp encoding) as ns, and an
+    INT96 column reads fine through the ``timestamp`` pin."""
+    if not cols or not os.path.exists(path):
+        return set()
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
-    Parquet writers disagree on timestamp encoding: isAdjustedToUTC
-    timestamps read as TIMESTAMP, wall-clock (NTZ) ones as
-    TIMESTAMP_NTZ, and TIMESTAMP(NANOS) as raw longs under
-    ``nanosAsLong``. The engine's event-time surface (``unix_micros``,
-    ``withWatermark``, window()) requires TIMESTAMP, so the scan layer
-    converges all encodings to it. Under the engine's fixed UTC
-    session timezone (session.py) the NTZ→TIMESTAMP cast is a pure
-    reinterpretation — identical micros, byte-exact ``unix_micros``.
-    Map-only, no shuffle; at 100 TB this is a free projection fused
-    into the scan stage.
-    """
-    ntz_cols = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, T.TimestampNTZType)
-    ]
-    if ntz_cols:
-        df = df.withColumns(
-            {c: F.col(c).cast("timestamp") for c in ntz_cols}
-        )
-    return df
+    files = ds.dataset(path, format="parquet").files
+    if not files:
+        return set()
+    schema = pq.read_metadata(files[0]).schema
+    return {
+        c.path
+        for c in map(schema.column, range(len(schema)))
+        if c.path in cols
+        and c.physical_type == "INT64"
+        and json.loads(c.logical_type.to_json()).get("timeUnit")
+        == "nanoseconds"
+    }
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table.
+    """Load one fixture table under its pinned schema (0 Spark jobs).
 
-    Side effect: for tables listed in NANOS_TS_COLUMNS this sets
+    Every time column comes back as a session-zone TIMESTAMP, which
+    the event-time surface (``unix_micros``, ``withWatermark``,
+    window()) requires, whichever parquet encoding the writer chose.
+
+    Side effect: when a NANOS_TS_COLUMNS column is stored as
+    TIMESTAMP(NANOS) this sets
     ``spark.sql.legacy.parquet.nanosAsLong=true`` on the caller's
     session (runtime-settable; must happen here, not only in the
     session factory, because callers may pass an externally built
     SparkSession that never went through session.get_spark()).
-    Other tables leave the session conf untouched, so a host session
+    Other reads leave the session conf untouched, so a host session
     reading its own nanos parquet with timestamp semantics is not
     silently flipped.
     """
-    if name in NANOS_TS_COLUMNS:
+    path = table_path(sf_dir, name)
+    cols = dict(SCHEMAS[name])
+    nanos = _nanos_columns(path, NANOS_TS_COLUMNS.get(name, ()))
+    if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    for col in NANOS_TS_COLUMNS.get(name, ()):
-        if col in df.columns and isinstance(
-            df.schema[col].dataType, T.LongType
-        ):
-            df = df.withColumn(
-                col, F.timestamp_micros(F.expr(f"`{col}` div 1000"))
-            )
-    return normalize_timestamps(df)
+        cols.update((c, "bigint") for c in nanos)
+    df = spark.read.schema(
+        ", ".join(f"`{c}` {t}" for c, t in cols.items())
+    ).parquet(path)
+    if nanos:
+        df = df.withColumns(
+            {c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in nanos}
+        )
+    return df
 
 
 def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:

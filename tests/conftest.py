@@ -29,6 +29,25 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def group_jobs(spark):
+    """``group_jobs(group, fn)``: the Spark job ids that ``fn()``
+    started, read from the status tracker under job group ``group``
+    once the listener bus has delivered every event."""
+    sc = spark.sparkContext
+
+    def run(group: str, fn) -> list[int]:
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def duck():
     return oracle_mod.duckdb_connect(SF_DIR)
 

@@ -614,51 +614,26 @@ def test_bytes_serve_reads_only_persisted_merges(spark, sf_dir):
         )
 
 
-def _group_jobs(spark, group: str, fn) -> list[int]:
-    """Spark job ids that ``fn()`` started, read from the status
-    tracker once the listener bus has delivered every event."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_warm_encode_build_reads_tokenizer_without_spark_jobs(
-    spark, sf_dir
+    spark, sf_dir, group_jobs
 ):
     """Once both tokenizer artifacts exist, loading them runs no Spark
-    job (pyarrow reads the kilobyte merge and vocab tables), so
-    building `text_bpe_encode_ids` and `text_bpe_encode_ids_bytes`
-    adds no job beyond the one schema-inference job that reading the
-    documents table costs."""
-    from kafkatoclickhouse_spark.tables import load_table
-
+    job (pyarrow reads the kilobyte merge and vocab tables), and
+    neither does reading the documents table under its pinned schema,
+    so building `text_bpe_encode_ids` and `text_bpe_encode_ids_bytes`
+    runs no job at all."""
     for alphabet in (bpetrain.CHARS, bpetrain.BYTES):
         bpetrain.text_bpe_index_build(spark, sf_dir, alphabet)
-        assert _group_jobs(
-            spark,
+        assert group_jobs(
             f"load-{alphabet.family}",
             lambda: bpetrain.load_tokenizer(spark, sf_dir, alphabet),
         ) == []
-    docs_jobs = len(
-        _group_jobs(
-            spark,
-            "load-documents",
-            lambda: load_table(spark, sf_dir, "documents"),
-        )
-    )
     for build in (
         bpetrain.text_bpe_encode_ids,
         bpetrain.text_bpe_encode_ids_bytes,
     ):
-        jobs = _group_jobs(
-            spark, build.__name__, lambda: build(spark, sf_dir)
-        )
-        assert len(jobs) == docs_jobs, build.__name__
+        jobs = group_jobs(build.__name__, lambda: build(spark, sf_dir))
+        assert jobs == [], build.__name__
 
 
 def test_loader_rejects_merge_missing_from_vocab(

@@ -1,10 +1,11 @@
-"""Scan-layer timestamp normalization: the fixture generator has
-shipped ``events.ts`` as parquet TIMESTAMP(NANOS)-as-long (rounds
-1-4) and as µs TIMESTAMP_NTZ (round 5+). ``load_table`` must converge
-every encoding to a session-zone TIMESTAMP so the event-time surface
-(``unix_micros``, ``withWatermark``, ``window``) works regardless of
-which writer produced the parquet — the round-5 regression pinned
-here killed three queries and every streaming smoke."""
+"""Scan layer: ``load_table`` reads each fixture table under the
+schema pinned in ``tables.SCHEMAS``, with no Spark job. The fixture
+generator has shipped ``events.ts`` as parquet TIMESTAMP(NANOS)
+(rounds 1-4) and as µs TIMESTAMP_NTZ (round 5+); every encoding must
+load as a session-zone TIMESTAMP so the event-time surface
+(``unix_micros``, ``withWatermark``, ``window``) works whichever
+writer produced the parquet. The round-5 regression pinned here killed
+three queries and every streaming smoke."""
 
 from __future__ import annotations
 
@@ -78,20 +79,6 @@ def test_load_table_normalizes_every_ts_encoding(spark, tmp_path, encoding):
     df.withWatermark("ts", "1 minute")
 
 
-def test_normalize_timestamps_leaves_non_ntz_untouched(spark):
-    df = spark.createDataFrame(
-        [(1, "a")], T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("s", T.StringType()),
-            ]
-        )
-    )
-    out = tables.normalize_timestamps(df)
-    assert out.schema == df.schema
-    assert out is df  # no-op: no projection added when nothing to do
-
-
 # -- micros(): total over both wall-time types ------------------------------
 
 
@@ -117,54 +104,70 @@ def test_micros_accepts_both_timestamp_types(spark, dtype):
 # -- fixture-drift canary ---------------------------------------------------
 #
 # VERDICT r5: a silent fixture re-encode cost sixteen downstream test
-# failures. This canary pins the *loaded* dtype of every fixture column
-# so the next driver-side regeneration fails ONE named test instead.
+# failures. ``load_table`` no longer infers a schema, so the canary
+# checks the pins against what Spark itself infers from every fixture
+# scale present: the next driver-side regeneration fails ONE named test
+# instead of reading a drifted column through a stale pin.
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
-
-EXPECTED_SCHEMAS = {
-    "region": [("r_regionkey", "int"), ("r_name", "string")],
-    "nation": [("n_nationkey", "int"), ("n_name", "string"),
-               ("n_regionkey", "int")],
-    "customer": [("c_custkey", "bigint"), ("c_name", "string"),
-                 ("c_nationkey", "int"), ("c_acctbal", "double"),
-                 ("c_mktsegment", "string")],
-    "supplier": [("s_suppkey", "bigint"), ("s_name", "string"),
-                 ("s_nationkey", "int"), ("s_acctbal", "double")],
-    "part": [("p_partkey", "bigint"), ("p_name", "string"),
-             ("p_brand", "string"), ("p_type", "string"),
-             ("p_size", "int"), ("p_retailprice", "double")],
-    "orders": [("o_orderkey", "bigint"), ("o_custkey", "bigint"),
-               ("o_orderstatus", "string"), ("o_totalprice", "double"),
-               ("o_orderdate", "timestamp"), ("o_orderpriority", "string")],
-    "lineitem": [("l_orderkey", "bigint"), ("l_partkey", "bigint"),
-                 ("l_suppkey", "bigint"), ("l_linenumber", "int"),
-                 ("l_quantity", "double"), ("l_extendedprice", "double"),
-                 ("l_discount", "double"), ("l_tax", "double"),
-                 ("l_returnflag", "string"), ("l_linestatus", "string"),
-                 ("l_shipdate", "timestamp")],
-    "events": [("event_id", "bigint"), ("ts", "timestamp"),
-               ("user_id", "bigint"), ("event_type", "string"),
-               ("value", "double"), ("props", "string")],
-    "documents": [("doc_id", "bigint"), ("text", "string"),
-                  ("lang", "string"), ("source", "string"),
-                  ("n_chars", "bigint")],
-    "embeddings": [("vec_id", "bigint"), ("embedding", "array<float>"),
-                   ("label", "int")],
-}
+SF_ROOT = os.path.dirname(
+    os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
+)
+SF_DIRS = [
+    d
+    for d in (os.path.join(SF_ROOT, sf) for sf in ("sf0.001", "sf0.01", "sf0.1"))
+    if os.path.isdir(d)
+]
 
 
-@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="fixtures absent")
-@pytest.mark.parametrize("table", sorted(EXPECTED_SCHEMAS))
+def _inferred(spark, sf_dir: str, table: str) -> list[tuple[str, str]]:
+    """Spark's own inference of a fixture file's schema, with NTZ
+    columns mapped to TIMESTAMP (the type the pin reads them as)."""
+    schema = spark.read.parquet(tables.table_path(sf_dir, table)).schema
+    return [
+        (
+            f.name,
+            "timestamp"
+            if isinstance(f.dataType, T.TimestampNTZType)
+            else f.dataType.simpleString(),
+        )
+        for f in schema.fields
+    ]
+
+
+@pytest.mark.skipif(not SF_DIRS, reason="fixtures absent")
+@pytest.mark.parametrize("table", sorted(tables.TABLES))
 def test_fixture_dtype_canary(spark, table):
-    """Pin the post-load dtype of every fixture column. Timestamps must
-    land as session-zone TIMESTAMP whatever the parquet encoding;
-    embeddings stay array<float> (the similarity stack's Arrow kernels
-    assume float32); money/measure columns stay double. If the driver
-    regenerates fixtures with a new writer, exactly this test names
-    the drift."""
-    df = tables.load_table(spark, SF_DIR, table)
-    got = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-    assert got == EXPECTED_SCHEMAS[table], (
-        f"fixture drift in {table}: loaded schema changed"
+    """The pinned schema of every fixture table equals Spark's
+    inference at every fixture scale, and ``load_table`` returns it.
+    Timestamps land as session-zone TIMESTAMP; embeddings stay
+    array<float> (the similarity stack's Arrow kernels assume
+    float32); money/measure columns stay double."""
+    pin = list(tables.SCHEMAS[table])
+    for sf_dir in SF_DIRS:
+        assert _inferred(spark, sf_dir, table) == pin, (
+            f"fixture drift in {sf_dir}/{table}: the file no longer "
+            "matches its pinned schema"
+        )
+        df = tables.load_table(spark, sf_dir, table)
+        assert [
+            (f.name, f.dataType.simpleString()) for f in df.schema.fields
+        ] == pin
+
+
+@pytest.mark.skipif(not SF_DIRS, reason="fixtures absent")
+def test_load_table_runs_no_spark_job(spark, group_jobs, tmp_path):
+    """Building a scan of any fixture table runs no Spark job: the
+    pinned schema replaces parquet-footer inference (a one-task job per
+    read), and the TIMESTAMP(NANOS) check reads the footer with
+    pyarrow on the driver."""
+    for table in tables.TABLES:
+        assert group_jobs(
+            f"load-{table}",
+            lambda: tables.load_table(spark, SF_DIRS[0], table),
+        ) == [], table
+    ns_dir = _write_events(
+        str(tmp_path), pa.array([ts for _, ts in ROWS], pa.timestamp("ns"))
     )
+    assert group_jobs(
+        "load-events-ns", lambda: tables.load_table(spark, ns_dir, "events")
+    ) == []
